@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -49,28 +50,82 @@ class StreamingSpec extends SparkSpec {
     assert(streamOut == batchOut)
   }
 
+  /** the same rows, duplicates counted, in any order */
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean = {
+    val x = a.select(b.columns.map(col).toSeq: _*)
+    a.count() == b.count() && x.exceptAll(b).isEmpty && b.exceptAll(x).isEmpty
+  }
+
+  private def events(rows: Row*): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), EventPipeline.eventSchema)
+
+  private def viewFiles(view: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.walk(java.nio.file.Paths.get(view))
+    try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
+    finally s.close()
+  }
+
   test("foreachBatch dual sink: history appends, keyed view upserts idempotently (T3/T7)") {
     val history = tmp("hist")
     val view = tmp("view")
-    val batch = Seq(
-      (1L, "a", 10.0), (2L, "b", 20.0), (17L, "c", 30.0) // 17 ≡ 1 mod 16
-    ).toDF("event_id", "event_type", "value")
+    val dim = Enrich.customerDim(spark, Sf0001)
+    def ev(id: java.lang.Long, minute: Int, user: Long, tpe: String, value: Double): Row =
+      Row(id, ts(f"2024-01-01 00:$minute%02d:00"), user, tpe, value, s"""{"k": $minute}""")
+    val b0 = events(
+      ev(1L, 0, 1L, "play", 10.0),
+      ev(2L, 1, 2L, "pause", 20.0),
+      ev(2L, 2, 2L, "pause", 21.0), // in-batch duplicate key
+      ev(null, 3, 3L, "play", 30.0), // null key: history only
+      ev(17L, 4, 4L, "click", 40.0))
+    // a later batch updates key 1 (a larger value sorts it first under
+    // the payload-desc order too) and adds key 5; untouched keys survive
+    val b1 = events(ev(1L, 0, 1L, "play", 99.0), ev(5L, 5, 5L, "seek", 50.0))
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
 
-    EventPipeline.writeBatch(history, view)(batch, 0L)
-    EventPipeline.writeBatch(history, view)(batch, 0L) // at-least-once replay
-
-    assert(spark.read.parquet(history).count() == 6) // history: blind append
+    val batches = Seq(b0, b0, b1) // b0 twice: an at-least-once replay of the whole batch
+    batches.indices.foreach { id =>
+      EventPipeline.writeBatch(history, view)(Enrich.transform(batches(id), dim), id.toLong)
+      val expected = Enrich.transform(batches.take(id + 1).reduce(_ unionByName _), dim)
+      assert(sameRows(spark.read.parquet(history), expected), s"history after batch $id")
+      val latestFirst = org.apache.spark.sql.expressions.Window.partitionBy(col("event_id"))
+        .orderBy(expected.columns.filterNot(_ == "event_id").sorted.map(col(_).desc_nulls_last).toSeq: _*)
+      val expectedView = expected.filter(col("event_id").isNotNull)
+        .withColumn("rn", row_number().over(latestFirst)).filter(col("rn") === 1).drop("rn")
+      assert(sameRows(spark.read.parquet(view).drop("bucket"), expectedView), s"view after batch $id")
+      val files = viewFiles(view)
+      assert(files.nonEmpty && files.size <= shufflePartitions, s"view files after batch $id: $files")
+      assert(files.forall(_.getParent.getFileName.toString == "bucket=0"), files)
+    }
     val v = spark.read.parquet(view)
-    assert(v.count() == 3) // view: replay collapsed
-    assert(v.select("event_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 17L))
+    assert(v.select("event_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 5L, 17L))
+    assert(v.filter($"event_id" === 1L).select("value").as[Double].head() == 99.0)
+    assert(v.filter($"event_id" === 2L).select("value").as[Double].head() == 21.0)
+  }
 
-    // a later batch updates one key only; untouched keys survive
-    val update = Seq((1L, "a2", 99.0)).toDF("event_id", "event_type", "value")
-    EventPipeline.writeBatch(history, view)(update, 1L)
-    val v2 = spark.read.parquet(view)
-    assert(v2.count() == 3)
-    assert(v2.filter($"event_id" === 1L).select("value").as[Double].head() == 99.0)
-    assert(v2.filter($"event_id" === 2L).select("value").as[Double].head() == 20.0)
+  test("keyed view upsert leaves the session's partitionOverwriteMode unchanged") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")
+    try {
+      val (history, view) = (tmp("hist"), tmp("view"))
+      val batch = Seq((1L, "a", 10.0)).toDF("event_id", "event_type", "value")
+      EventPipeline.writeBatch(history, view)(batch, 0L)
+      EventPipeline.writeBatch(history, view)(batch, 1L) // merges into the existing view
+      assert(spark.conf.get(key).equalsIgnoreCase("static"))
+    } finally spark.conf.unset(key)
+  }
+
+  test("keyed view upsert refuses a view with partitions other than bucket=0") {
+    val view = tmp("view")
+    // the layout an earlier key-hash sink wrote: bucket = pmod(key, 16)
+    Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("event_id", "event_type", "value")
+      .withColumn("bucket", pmod($"event_id", lit(16)))
+      .write.mode("overwrite").partitionBy("bucket").parquet(view)
+    val update = Seq((2L, "b2", 21.0)).toDF("event_id", "event_type", "value")
+    val e = intercept[IllegalStateException](EventPipeline.upsertKeyedView(update, view))
+    assert(e.getMessage.contains("bucket=1") && e.getMessage.contains("rebuild"), e.getMessage)
+    // refused before writing: the old layout is untouched
+    assert(spark.read.parquet(view).count() == 2)
   }
 
   test("watermarked tumbling window: closed windows emit, late data dropped (T8)") {
