@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Interleaved same-JVM A/B for the round-13 wedge/prefix rewrites —
-  * the measurement protocol the host's cross-run variance forces: two
+/** Interleaved same-JVM A/B of a query's alternative forms — the
+  * measurement protocol the host's cross-run variance forces: two
   * back-to-back `graft.Bench` runs of UNCHANGED queries have differed
   * by ±2× on this class of machine (r11/r12 drift family;
   * BENCH_NOTES.md), so an old-run-vs-new-run comparison cannot
@@ -17,15 +17,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * for the authoritative list; families:
   *   prefix_hash / prefix_ge  — q_dedup_prefix verify:
   *     size(array_intersect) vs graft_sorted_intersect_ge early-exit
-  *   lcc_union3 / lcc_explode — q_local_cc corners: 3× unionAll
-  *     re-read of the triangle checkpoint vs one explode pass
-  *   links_hash / links_merge — scored-edge family triangle stream:
-  *     explode(array_intersect) vs explode(graft_sorted_intersect)
   *   skip_nopin / skip_pin   — q_skipping_stats base-frame pin:
   *     recompute per branch vs localCheckpoint once
-  *   lpa_* / keeperq_* / sedge_* / coedge_* — r14 ≥5 s-family trims
-  *   closure_s* / linkch_s* / hits_s*      — chain-prefix cost profiles
-  *   cc_* / dsim_* / hits_plain|ckpt / sig* — r14 second trim wave
+  *   keeperq_* / dsim_* / cc_* / sig* — text-dedup trims
+  *   closure_s*              — simhash-closure chain-prefix cost profile
+  *   stock_rec / stock_win   — q_stock_replay fold
+  *   annrec_*                — q_ann_recall sharing and model memo
+  *   prefix_*, winnow_*, *_lazy / *_ckpt / *_bckpt — text-family
+  *     materialization pairs
+  *   *_1p / *_spread, imgio_*, *nc_* — conditional scan spread and
+  *     the ImageIO stream cache
+  * The graph-family queries have no entries: each has a single form.
   *
   * Usage: SPARK_GRAFT_SF_DIR=… SPARK_GRAFT_CPUS=32
   *        sbt "runMain graft.AbWedge [passes] [variantSubstr,…]"
@@ -51,56 +53,17 @@ object AbWedge {
         graft.operators.TextOps.dedupPrefixPlan(spark, sfDir, geVerify = false)),
       "prefix_ge" -> (() =>
         graft.operators.TextOps.dedupPrefixPlan(spark, sfDir, geVerify = true)),
-      "lcc_union3" -> (() =>
-        graft.operators.GraphOps.localCcPlan(spark, sfDir, singleExplode = false)),
-      "lcc_explode" -> (() =>
-        graft.operators.GraphOps.localCcPlan(spark, sfDir, singleExplode = true)),
-      "links_hash" -> (() =>
-        graft.operators.GraphOps.linkScoresPlan(spark, sfDir, merge = false)),
-      "links_merge" -> (() =>
-        graft.operators.GraphOps.linkScoresPlan(spark, sfDir, merge = true)),
       // the r12-flagged unvalidated pin (verdict "what's wrong" #3)
       "skip_nopin" -> (() =>
         graft.operators.Functions2.skippingStatsPlan(spark, sfDir, pinBase = false)),
       "skip_pin" -> (() =>
         graft.operators.Functions2.skippingStatsPlan(spark, sfDir, pinBase = true)),
-      // r14 ≥5 s-family trim: LPA per-round winner — row_number window
-      // (sort per round) vs max(struct) hash argmax (identical winner,
-      // map-side partial agg). Timed through qModularity's full
-      // consumer chain, the heaviest LPA rider.
-      "lpa_window" -> (() =>
-        graft.operators.GraphOps.modularityPlan(spark, sfDir, argMax = false)),
-      "lpa_argmax" -> (() =>
-        graft.operators.GraphOps.modularityPlan(spark, sfDir, argMax = true)),
       // same pattern on the quality-aware keeper election (the window
       // is doc-grain there — one sort over every labeled document)
       "keeperq_window" -> (() =>
         graft.operators.TextOps.keeperQualityPlan(spark, sfDir, argMax = false)),
       "keeperq_argmax" -> (() =>
         graft.operators.TextOps.keeperQualityPlan(spark, sfDir, argMax = true)),
-      // strong-edge support counting: countDistinct over the ~36 M-row
-      // pair stream vs distinct BEFORE the pair join + plain count
-      "sedge_cd" -> (() =>
-        graft.operators.GraphOps.strongEdgesPlan(spark, sfDir, distinctFirst = false)),
-      "sedge_dc" -> (() =>
-        graft.operators.GraphOps.strongEdgesPlan(spark, sfDir, distinctFirst = true)),
-      "sedge_dcp" -> (() =>
-        graft.operators.GraphOps.strongEdgesPlan(spark, sfDir,
-          distinctFirst = true, prepart = true)),
-      // co-occurrence edge build: raw lineitem pairs vs dedup before
-      // the pair join (shrinks the quadratic product; same output)
-      "coedge_raw" -> (() =>
-        graft.operators.GraphOps.coEdgesPlan(spark, sfDir, distinctFirst = false)),
-      "coedge_dc" -> (() =>
-        graft.operators.GraphOps.coEdgesPlan(spark, sfDir, distinctFirst = true)),
-      // co-occurrence edge build, round 2: one pre-exchange shared by
-      // both join sides, and the no-join grouped in-row pair form
-      "coedge_prepart" -> (() =>
-        graft.operators.GraphOps.coEdgesPlan(spark, sfDir,
-          distinctFirst = false, mode = "prepart")),
-      "coedge_grouped" -> (() =>
-        graft.operators.GraphOps.coEdgesPlan(spark, sfDir,
-          distinctFirst = false, mode = "grouped")),
       // ---- cold chain-prefix cost profiles (r14 trim targeting):
       // each stage prices the chain cut at a memoized prefix, so
       // stage(i+1) − stage(i) locates the expensive link
@@ -112,18 +75,6 @@ object AbWedge {
         graft.operators.TextOps.simhashClosureStage(spark, sfDir, 3)),
       "closure_s4" -> (() =>
         graft.operators.TextOps.simhashClosureStage(spark, sfDir, 4)),
-      "linkch_s1" -> (() =>
-        graft.operators.GraphOps.linkChainStage(spark, sfDir, 1)),
-      "linkch_s2" -> (() =>
-        graft.operators.GraphOps.linkChainStage(spark, sfDir, 2)),
-      "linkch_s3" -> (() =>
-        graft.operators.GraphOps.linkChainStage(spark, sfDir, 3)),
-      "hits_s1" -> (() =>
-        graft.operators.GraphOps.hitsStage(spark, sfDir, 1)),
-      "hits_s2" -> (() =>
-        graft.operators.GraphOps.hitsStage(spark, sfDir, 2)),
-      "hits_s3" -> (() =>
-        graft.operators.GraphOps.hitsStage(spark, sfDir, 3)),
       // q_dedup_simhash group materialization: rely on exchange reuse
       // across the three groups consumers vs one localCheckpoint
       "dsim_plain" -> (() =>
@@ -136,21 +87,6 @@ object AbWedge {
         graft.operators.TextOps.closureCcPlan(spark, sfDir, doubleAfter = 0)),
       "cc_hybrid" -> (() =>
         graft.operators.TextOps.closureCcPlan(spark, sfDir, doubleAfter = 4)),
-      // HITS normalizer subtree duplication: lazy denominator frames
-      // vs per-iteration node-sized checkpoints
-      "hits_plain" -> (() =>
-        graft.operators.GraphOps.hitsStage(spark, sfDir, 3, ckptIters = false)),
-      "hits_ckpt" -> (() =>
-        graft.operators.GraphOps.hitsStage(spark, sfDir, 3, ckptIters = true)),
-      // modularity chain-prefix profile (r15 adjudication: the one
-      // non-stall-shaped r14 regression — 2.4x on both driver passes
-      // while q_communities, sharing stages 1-2, priced 1.05x)
-      "mod_s1" -> (() =>
-        graft.operators.GraphOps.modularityStage(spark, sfDir, 1)),
-      "mod_s2" -> (() =>
-        graft.operators.GraphOps.modularityStage(spark, sfDir, 2)),
-      "mod_s3" -> (() =>
-        graft.operators.GraphOps.modularityStage(spark, sfDir, 3)),
       // signature build form: token-grain aggregate pipeline vs the
       // one-pass per-doc scalar expression (graft_simhash_doc_*)
       "sigxx_agg" -> (() =>
@@ -162,94 +98,19 @@ object AbWedge {
       "sigmd5_expr" -> (() =>
         graft.operators.TextOps.sigBuildPlan(spark, sfDir, "md5", onePass = true)),
       // ---- r15 optimization-round pairs ----
-      // closeness BFS state: (seed, node) pair rows vs MS-BFS bitmask
-      "close_pair" -> (() =>
-        graft.operators.GraphOps.closenessPlan(spark, sfDir, msbfs = false)),
-      "close_msbfs" -> (() =>
-        graft.operators.GraphOps.closenessPlan(spark, sfDir, msbfs = true)),
       // stock replay fold: WITH RECURSIVE UnionLoop vs the Lindley
       // reflection-identity windows
       "stock_rec" -> (() =>
         graft.operators.Relational.stockReplayPlan(spark, sfDir, recursiveSim = true)),
       "stock_win" -> (() =>
         graft.operators.Relational.stockReplayPlan(spark, sfDir, recursiveSim = false)),
-      // PPR blend scaffold: deg ⋈ seeds ⋈ contrib per round vs blending
-      // directly on contrib (same node set by construction)
-      "ppr_scaffold" -> (() =>
-        graft.operators.GraphOps.pprPlan(spark, sfDir, slimBlend = false)),
-      "ppr_slim" -> (() =>
-        graft.operators.GraphOps.pprPlan(spark, sfDir, slimBlend = true)),
-      // scored-edge triangle stream: O(T) checkpoint between triangle
-      // build and the single-consumer explode+agg vs fusing it
-      "links_trickpt" -> (() =>
-        graft.operators.GraphOps.linkScoresPlan(spark, sfDir, merge = false)),
-      "links_fused" -> (() =>
-        graft.operators.GraphOps.linkScoresPlan(spark, sfDir,
-          merge = false, fuseTri = true)),
       // ---- r16 optimization-round pairs ----
-      // co-occurrence front half: split build (coEdges distinct ckpt +
-      // separate degrees exchange/ckpt) vs the fused single-exchange
-      // directed build (dedup + degrees in-stage on one node-keyed
-      // exchange)
-      "front_split" -> (() =>
-        graft.operators.GraphOps.coEdgesDegVariant(spark, sfDir, fused = false)._1),
-      "front_fused" -> (() =>
-        graft.operators.GraphOps.coEdgesDegVariant(spark, sfDir, fused = true)._1),
-      // the same A/B measured end-to-end through the heaviest consumer
-      "aa_split" -> (() =>
-        graft.operators.GraphOps.adamicAdarVariant(spark, sfDir, fused = false)),
-      "aa_fused" -> (() =>
-        graft.operators.GraphOps.adamicAdarVariant(spark, sfDir, fused = true)),
-      // and through the iterative consumers, where the directed frame's
-      // preserved node partitioning cancels a per-round exchange
-      "close_split" -> (() =>
-        graft.operators.GraphOps.closenessPlan(spark, sfDir, msbfs = true,
-          fusedFront = false)),
-      "close_fused" -> (() =>
-        graft.operators.GraphOps.closenessPlan(spark, sfDir, msbfs = true,
-          fusedFront = true)),
-      "pprf_split" -> (() =>
-        graft.operators.GraphOps.pprPlan(spark, sfDir, slimBlend = true,
-          fusedFront = false)),
-      "pprf_fused" -> (() =>
-        graft.operators.GraphOps.pprPlan(spark, sfDir, slimBlend = true,
-          fusedFront = true)),
-      // q_local_cc: O(T) triangle checkpoint before the corner agg vs
-      // streaming the triangle rows straight into it (the consumer is
-      // a hash agg, not a join — no planner to feed sizes to)
-      "lcc_ckpt" -> (() =>
-        graft.operators.GraphOps.localCcPlan(spark, sfDir,
-          singleExplode = true, fuseTri = false)),
-      "lcc_fused" -> (() =>
-        graft.operators.GraphOps.localCcPlan(spark, sfDir,
-          singleExplode = true, fuseTri = true)),
-      // LPA front half (q_communities / q_modularity): split strong-
-      // edge build (5 exchanges, 2 ckpts) vs the fused directed build
-      // (2 exchanges, 1 ckpt), timed through the heaviest rider
-      "comm_split" -> (() =>
-        graft.operators.GraphOps.modularityPlan(spark, sfDir,
-          argMax = true, fusedFront = false)),
-      "comm_fused" -> (() =>
-        graft.operators.GraphOps.modularityPlan(spark, sfDir,
-          argMax = true, fusedFront = true)),
       // q_ann_recall: four chains recomputing scoring/codes from the
       // shared model vs narrow shared cells/codes checkpoints
       "annrec_solo" -> (() =>
         graft.operators.VectorOps.annRecallPlan(spark, sfDir, shared = false)),
       "annrec_shared" -> (() =>
         graft.operators.VectorOps.annRecallPlan(spark, sfDir, shared = true)),
-      // q_hits: distinct-keyed edge build vs the p-keyed fused build
-      // (dedup + in-degree + iter-2 authority agg on one exchange)
-      "hits_edist" -> (() =>
-        graft.operators.GraphOps.hitsStage(spark, sfDir, 3, fusedE = false)),
-      "hits_efused" -> (() =>
-        graft.operators.GraphOps.hitsStage(spark, sfDir, 3, fusedE = true)),
-      // q_kcore removed-set maintenance: per-round checkpoint of the
-      // cumulative set vs a lazy union of the materialized frontiers
-      "kcore_ckpt" -> (() =>
-        graft.operators.GraphOps.kcorePlanVariant(spark, sfDir, ckptRemoved = true)),
-      "kcore_union" -> (() =>
-        graft.operators.GraphOps.kcorePlanVariant(spark, sfDir, ckptRemoved = false)),
       // q_dedup_prefix shingle stream: lazy (tokenize re-runs for the
       // doc-keyed sets aggregate) vs one localCheckpoint feeding all
       // three consumers
@@ -362,14 +223,6 @@ object AbWedge {
         graft.operators.TextOps.dedupEditPlan(spark, sfDir, keptCkpt = false)),
       "edit_ckpt" -> (() =>
         graft.operators.TextOps.dedupEditPlan(spark, sfDir, keptCkpt = true)),
-      // q_basket_lift front half: split build (distinct + one exchange
-      // per aliased pair-join side + per-consumer scan re-runs) vs one
-      // orderkey exchange with in-stage dedup + checkpoint (both join
-      // sides and the n_orders distinct read it exchange-free)
-      "basket_split" -> (() =>
-        graft.operators.GraphOps.basketLiftPlan(spark, sfDir, fusedFront = false)),
-      "basket_fused" -> (() =>
-        graft.operators.GraphOps.basketLiftPlan(spark, sfDir, fusedFront = true)),
       // ImageIO stream cache: JDK-default DISK-backed temp files per
       // encode/decode vs in-memory buffering (suite form). The toggle
       // is a JVM global, so each thunk pins it for its own timed

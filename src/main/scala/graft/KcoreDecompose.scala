@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
   * diagnostic behind SCALING.json's note on the path's measured
   * exponent (the file's highest ratio). For each corpus dir (default:
   * the ScaleProbe synthesis at /tmp/graft-scale/x4 and x16) and each
-  * shuffle-partition setting it replays the derived-K peel COLD with
-  * per-round wall times and surviving edge counts, so a super-linear
+  * shuffle-partition setting it runs q_kcore's derived-K peel
+  * (`GraphOps.kcoreWithDepth` on a cold co-occurrence build) and
+  * prints per-round wall times and frontier sizes, so a super-linear
   * TIME reading can be attributed:
   *
   *  - if the peel DEPTH grows with the multiplier, the exponent is

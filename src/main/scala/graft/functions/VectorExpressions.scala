@@ -240,113 +240,6 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** a ∩ b AS AN ARRAY for two SORTED ARRAY<BIGINT> inputs via the same
-  * two-pointer merge as [[SortedIntersectCount]] — the triangle-ROWS
-  * hot loop (the census wants the count, the row stream wants the
-  * closing corners themselves, exploded). `array_intersect` builds an
-  * OpenHashSet per row (allocation + random probes over the larger
-  * array); the merge emits the matches in one strictly-sequential pass
-  * into a primitive long buffer. Output order is ascending — identical
-  * to `array_intersect` on sorted inputs (it preserves left order), so
-  * the exploded triangle stream is row-for-row the same.
-  * PRECONDITION: both arrays sorted ascending with distinct non-null
-  * elements (orientedAdj sorts them). */
-case class SortedIntersectArray(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  // containsNull=true rejected for the same reason as
-  // [[SortedIntersectCount]]: getLong on a null slot reads garbage
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType): Boolean = t match {
-      case ArrayType(LongType, containsNull) => !containsNull
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "graft_sorted_intersect expects ARRAY<BIGINT> inputs with " +
-        s"non-nullable elements, got ${left.dataType} / ${right.dataType}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "graft_sorted_intersect"
-
-  // two merge passes — count, then fill an EXACT-size primitive array:
-  // a min(na,nb)-sized scratch buffer + copyOf would allocate ~2× the
-  // result per row, and over a ~10⁹-row triangle stream that young-gen
-  // churn is the regression class this expression exists to remove
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val (na, nb) = (a.numElements(), b.numElements())
-    var cnt = 0
-    var i = 0
-    var j = 0
-    while (i < na && j < nb) {
-      val x = a.getLong(i)
-      val y = b.getLong(j)
-      if (x == y) { cnt += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    val buf = new Array[Long](cnt)
-    var k = 0
-    i = 0
-    j = 0
-    while (k < cnt) {
-      val x = a.getLong(i)
-      val y = b.getLong(j)
-      if (x == y) { buf(k) = x; k += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(buf)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      val k = ctx.freshName("k")
-      val cnt = ctx.freshName("cnt")
-      val buf = ctx.freshName("buf")
-      s"""
-         |int $na = $a.numElements();
-         |int $nb = $b.numElements();
-         |int $cnt = 0;
-         |int $i = 0;
-         |int $j = 0;
-         |while ($i < $na && $j < $nb) {
-         |  long $x = $a.getLong($i);
-         |  long $y = $b.getLong($j);
-         |  if ($x == $y) { $cnt++; $i++; $j++; }
-         |  else if ($x < $y) { $i++; } else { $j++; }
-         |}
-         |long[] $buf = new long[$cnt];
-         |int $k = 0;
-         |$i = 0;
-         |$j = 0;
-         |while ($k < $cnt) {
-         |  long $x = $a.getLong($i);
-         |  long $y = $b.getLong($j);
-         |  if ($x == $y) { $buf[$k++] = $x; $i++; $j++; }
-         |  else if ($x < $y) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray($buf);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectArray =
-    copy(left = newLeft, right = newRight)
-}
-
 /** |a ∩ b| with a THRESHOLD EARLY-EXIT, for two SORTED ARRAY<STRING>
   * inputs — the PPJoin verify hot loop. The two-pointer merge carries
   * the lossless invariant `count_so_far + min(remaining_a,
@@ -451,8 +344,5 @@ object VectorExpressions {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_sorted_intersect_ge",
       exprs => SortedIntersectGE(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_intersect",
-      exprs => SortedIntersectArray(exprs(0), exprs(1)), "scala_udf")
   }
 }

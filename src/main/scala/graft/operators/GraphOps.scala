@@ -57,99 +57,38 @@ object GraphOps {
     graphCache.getOrElseUpdate(
       s"$kind|${System.identityHashCode(s)}|$d", build).asInstanceOf[T]
 
-  /** Distinct undirected co-occurrence edges (u < v) from lineitem.
-    * Suite path is mode = "prepart" since the r14 A/B (1.52 vs 2.71 s
-    * median, 5/5 pairwise): the plain join form exchanges the lineitem
-    * scan once PER SIDE (the aliased projections canonicalize
-    * differently, so ReuseExchange cannot dedup them); one shared
-    * repartition + checkpoint halves the pre-join exchange volume at
-    * any scale. The "grouped" no-join form (C(k,2) pairs generated
-    * in-row) also beat the raw join (2.21, 5/5) but lost to prepart —
-    * its HOF expansion is interpreted. */
-  private def coEdges(s: SparkSession, d: String): DataFrame =
-    coEdgesPlan(s, d, distinctFirst = false, mode = "prepart")
-
-  /** [[coEdges]] with the input dedup parametrized (AbWedge pair
-    * coedge_raw / coedge_dc). distinctFirst = true dedups
-    * (l_orderkey, l_partkey) BEFORE the intra-order pair join — a part
-    * appearing in j lineitems of one order multiplies every pair it
-    * joins by j on the raw stream, so the narrow upfront distinct
-    * shrinks the quadratic product itself; the trailing distinct-pairs
-    * output is identical. The SUITE path stays distinctFirst = false
-    * (r14 A/B: a wash — 2/5 pairwise, medians 2.543 vs 2.529 s):
-    * unlike [[strongEdgesPlan]] there is no countDistinct to remove,
-    * and TPC-H-shaped orders rarely repeat a part, so the upfront
-    * shuffle buys no pair-stream reduction here. On a corpus whose
-    * orders DO repeat keys heavily, flip to true — the plan is kept
-    * for exactly that re-adjudication. */
-  private[graft] def coEdgesPlan(s: SparkSession, d: String,
-      distinctFirst: Boolean, mode: String = "join"): DataFrame = {
-    val li0 = Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
-    if (mode == "grouped") {
-      // one exchange total before the trailing distinct: group each
-      // order's distinct parts into a sorted array and generate the
-      // C(k,2) ascending pairs IN-ROW — no self-join, no second
-      // lineitem exchange. k is small (TPC-H ~4 lineitems/order), so
-      // the per-row HOF expansion is a handful of lambda frames.
-      return li0.groupBy(col("l_orderkey"))
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-        .select(explode(expr(
-          """flatten(transform(ps, (x, i) ->
-               transform(slice(ps, i + 2, size(ps) - i - 1),
-                 y -> struct(x AS u, y AS v))))""")).as("p"))
-        .select(col("p.u").as("u"), col("p.v").as("v"))
-        .distinct()
-    }
-    val li1 = if (distinctFirst) li0.distinct() else li0
-    // "prepart": exchange lineitem by orderkey ONCE and let the hash
-    // partitioning propagate through both aliased projections — the
-    // plain join form exchanges the scan separately per side because
-    // the renamed projections canonicalize differently
-    val li = if (mode == "prepart")
-      li1.repartition(col("l_orderkey")).localCheckpoint()
-    else li1
-    val a = li.select(col("l_orderkey").as("k"), col("l_partkey").as("u"))
-    val b = li.select(col("l_orderkey").as("k"), col("l_partkey").as("v"))
-    a.join(b, Seq("k")).filter(col("u") < col("v"))
-      .select("u", "v").distinct()
-  }
-
-  /** Fused co-occurrence front half (r16, guide §2.4 — share one
-    * exchange): ONE node-keyed exchange builds the DIRECTED half-edge
-    * frame `dir` = every adjacent ordered pair (a, b), a ≠ b, deduped —
-    * and edges, degrees AND the doubled adjacency view all read it
-    * with NO further shuffle:
+  /** Fused co-occurrence front half: ONE node-keyed exchange builds the
+    * DIRECTED half-edge frame `dir` = every adjacent ordered pair
+    * (a, b), a ≠ b, deduped — and edges, degrees and the doubled
+    * adjacency view all read it with no further shuffle:
     *
+    *  - lineitem is exchanged once on l_orderkey and checkpointed, so
+    *    both aliased pair-join sides read that one partitioning (the
+    *    renamed projections canonicalize differently, so ReuseExchange
+    *    could not share two per-side exchanges);
     *  - the intra-order pair join emits BOTH directions (filter a ≠ b
-    *    instead of a < b — no extra pass, the join product already
-    *    contains them);
+    *    instead of a < b — the join product already contains them);
     *  - `repartition(a)` + dropDuplicates(a, b): HashPartitioning(a)
     *    satisfies the dedup's ClusteredDistribution(a, b), so the
     *    dedup runs IN-STAGE on the one exchange;
     *  - deg = groupBy(a).count — ClusteredDistribution(a) is satisfied
     *    by the checkpoint's preserved partitioning: a single-stage,
-    *    exchange-free aggregate (the split form paid a third exchange
-    *    plus two re-reads of the edge checkpoint here);
-    *  - e (u < v) is a filter over `dir`, and consumers that DOUBLED e
-    *    anyway (closeness adjacency, PPR sym, brand mixing) read `dir`
-    *    itself instead of a union of two checkpoint scans.
+    *    exchange-free aggregate;
+    *  - e (u < v) is a filter over `dir`, and consumers that double the
+    *    edge list (closeness adjacency, PPR sym, brand mixing) read
+    *    `dir` itself.
     *
-    * The preserved HashPartitioning(a) then cancels downstream
-    * exchanges outright: orientedAdj's first degree join and the
-    * adjacency groupBy see both sides already partitioned by the join
-    * key, and the per-round BFS/PPR edge joins no longer re-exchange
-    * the adjacency side every round. vs the split build: 2 exchanges
-    * instead of 3 and one fewer materialization, at the cost of the
-    * pair stream crossing its exchange doubled (narrow 16-byte rows;
-    * the old distinct's map-side partial bought almost nothing — the
-    * pair stream is ~96% unique). Old form kept as
-    * [[coEdgesDegVariant]](fused = false) for the AbWedge pair. */
-  /** INVARIANT (relied on by pprPlan's slim blend, ADVICE r15 #2):
-    * every node in `deg` has degree ≥ 1 — a node exists here only by
-    * appearing in a pair row, and the symmetric `dir` frame then gives
-    * it ≥ 1 incoming edge. Graph construction admits no degree-0
-    * nodes; if that ever changes, the slim blend must regain the
-    * deg-scaffold left_outer or it will silently drop rows. */
+    * The preserved HashPartitioning(a) also cancels downstream
+    * exchanges: orientedAdj's first degree join and the adjacency
+    * groupBy see both sides already partitioned by the join key, and
+    * the per-round BFS/PPR edge joins do not re-exchange the adjacency
+    * side every round.
+    *
+    * INVARIANT (relied on by qPpr's blend): every node in `deg` has
+    * degree ≥ 1 — a node exists here only by appearing in a pair row,
+    * and the symmetric `dir` frame then gives it ≥ 1 incoming edge. If
+    * graph construction ever admits degree-0 nodes, qPpr's blend must
+    * regain a deg-scaffold left_outer or it will silently drop rows. */
   private[graft] def coEdgesDegFused(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val li = Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
@@ -167,19 +106,6 @@ object GraphOps {
       .select(col("a").as("u"), col("b").as("v"))
     (e, deg, dir)
   }
-
-  /** (edges, degrees) with the front-half build parametrized (AbWedge
-    * pair front_split / front_fused; suite path fused = true since
-    * r16). fused = false is the pre-r16 split build: coEdges distinct
-    * + its own checkpoint, degrees as a separate union + groupBy +
-    * checkpoint. */
-  private[graft] def coEdgesDegVariant(s: SparkSession, d: String,
-      fused: Boolean): (DataFrame, DataFrame) =
-    if (fused) { val t = coEdgesDegFused(s, d); (t._1, t._2) }
-    else {
-      val e = coEdges(s, d).localCheckpoint()
-      (e, degrees(e).localCheckpoint())
-    }
 
   /** Memoized (edges, degrees, directed) over `d`'s co-occurrence
     * graph — one fused build per (session, dataset). */
@@ -225,48 +151,24 @@ object GraphOps {
     * (at the triangle's lowest edge, with w its highest corner — for
     * the other two sides w is NOT an out-neighbor of both endpoints).
     *
-    * Why arrays instead of the classic wedge self-join (which this
-    * replaced): the wedge join MATERIALIZES AND SHUFFLES Σ outdeg²/2
-    * rows (~36 M at sf0.1, and growing superlinearly with SF) just to
-    * anti-filter most of them against the closing edge. The
-    * intersection form exchanges only O(|E|) rows — two node-keyed
-    * joins whose array payload totals |E| ids per side — and does the
-    * same Σ outdeg² work INSIDE a codegen'd `array_intersect`
-    * (hash-set build + probe per row, no shuffle, no 36 M-row
-    * hash-join build). Worst-case row width is the max out-degree —
-    * O(√m) ids ≈ 14 MB at m = 3×10¹² — where the wedge join would
-    * instead emit outdeg² ≈ 10¹² rows for that one hub. */
-  def triangleRows(edges: DataFrame, deg: DataFrame): DataFrame =
-    triangleRowsImpl(edges, deg, merge = false)
-
-  /** [[triangleRows]] with the intersection form parametrized (the
-    * AbWedge interleaved A/B drives both in one JVM): merge = true
-    * uses the native two-pointer merge (same swap the census made for
-    * its count form) in place of array_intersect's per-row OpenHashSet
-    * build, with identical ascending output on the sorted adjacency
-    * arrays — row-for-row the same exploded stream.
-    *
-    * The SUITE path is merge = false (r14 adjudication): the only
-    * driver artifact of the merge form priced the scored-edge family
-    * 2.7–5× over its r12 array_intersect record (q_link_scores 37.45
-    * vs 7.55), and the r14 COLD interleaved A/B — run first-thing in a
-    * fresh JVM, 5 passes — measured a wash (links_hash median 9.48 s
-    * vs links_merge 8.91 s, 3/5 pairwise, spreads fully overlapping).
-    * The r13 late-session verdict (23.8 → 10.1) was JVM-state
-    * inflation of the BASELINE, not a real win: with no reproducible
-    * advantage, the driver-confirmed form keeps the suite. The count
-    * form ([[triangleCount]]) and the prefix-verify early-exit are
-    * unaffected — both hold driver-confirmed wins. */
-  private[graft] def triangleRowsImpl(edges: DataFrame, deg: DataFrame,
-      merge: Boolean): DataFrame = {
-    graft.functions.VectorExpressions.register(edges.sparkSession)
+    * Why arrays instead of the classic wedge self-join: the wedge join
+    * MATERIALIZES AND SHUFFLES Σ outdeg²/2 rows (~36 M at sf0.1, and
+    * growing superlinearly with SF) just to anti-filter most of them
+    * against the closing edge. The intersection form exchanges only
+    * O(|E|) rows — two node-keyed joins whose array payload totals |E|
+    * ids per side — and does the same Σ outdeg² work INSIDE a
+    * codegen'd `array_intersect` (hash-set build + probe per row, no
+    * shuffle, no 36 M-row hash-join build). Worst-case row width is
+    * the max out-degree — O(√m) ids ≈ 14 MB at m = 3×10¹² — where the
+    * wedge join would instead emit outdeg² ≈ 10¹² rows for that one
+    * hub. The census's two-pointer merge ([[triangleCount]]) is not
+    * used for the row stream: emitting the corners that way measured
+    * no faster than `array_intersect` (BENCH_NOTES.md). */
+  def triangleRows(edges: DataFrame, deg: DataFrame): DataFrame = {
     val (oriented, adj) = orientedAdj(edges, deg)
-    val corners =
-      if (merge) call_function("graft_sorted_intersect", col("nu"), col("nv"))
-      else array_intersect(col("nu"), col("nv"))
     joinedNbrs(oriented, adj)
       .select(col("src").as("n1"), col("dst").as("n2"),
-        explode(corners).as("n3"))
+        explode(array_intersect(col("nu"), col("nv"))).as("n3"))
   }
 
   /** Exact triangle COUNT (1-row frame `n_triangles`) — Σ over
@@ -329,79 +231,55 @@ object GraphOps {
       .join(adj.select(col("src").as("dst"), col("nbrs").as("nv")).hint("shuffle_hash"),
         Seq("dst"))
 
+
   /** Global triangle census over an undirected edge list (u < v, no
     * duplicates): node/edge/wedge counts, exact triangle count, and
-    * the global clustering coefficient 3·T/W. The closing-edge join
-    * runs over ORIENTED edges only, so the whole count is one wedge
-    * join + one closing join over frames no larger than the edge
-    * list. */
+    * the global clustering coefficient 3·T/W. */
   def triangleCensus(edges: DataFrame): DataFrame = {
     val deg = degrees(edges)
-    val tri = triangleCount(edges, deg)
-    val nodesEdges = deg.agg(
+    census(deg, triangleCount(edges, deg))
+  }
+
+  /** Node/edge/wedge counts over the degree table `deg`, crossed with
+    * the 1-row `n_triangles` frame `tri`, plus global_cc = 3·T/W. */
+  private def census(deg: DataFrame, tri: DataFrame): DataFrame =
+    deg.agg(
       count(lit(1)).as("n_nodes"),
       expr("CAST(SUM(deg) / 2 AS BIGINT)").as("n_edges"),
       expr("CAST(SUM(deg * (deg - 1)) / 2 AS BIGINT)").as("n_wedges"))
-    nodesEdges.crossJoin(tri)
+      .crossJoin(tri)
       .withColumn("global_cc",
         lit(3.0) * col("n_triangles").cast("double") / col("n_wedges").cast("double"))
       .select("n_nodes", "n_edges", "n_wedges", "n_triangles", "global_cc")
-  }
 
   private def qTriangles(s: SparkSession, d: String): DataFrame = {
     val (e, deg) = coEdgesDegM(s, d)
     // pipeline-shaped runs that already materialized the triangle rows
-    // (local_cc / link scores ran first) count them for free; a cold
-    // run counts via the row-free sum — never paying the O(T)
-    // checkpoint just to produce one number
+    // (link scores ran first) count them for free; a cold run counts
+    // via the row-free sum — never paying the O(T) checkpoint just to
+    // produce one number
     val tri = graphCache.get(s"tri|${System.identityHashCode(s)}|$d") match {
       case Some(rows) => rows.asInstanceOf[DataFrame]
         .agg(count(lit(1)).as("n_triangles"))
       case None => triangleCount(e, deg)
     }
-    val nodesEdges = deg.agg(
-      count(lit(1)).as("n_nodes"),
-      expr("CAST(SUM(deg) / 2 AS BIGINT)").as("n_edges"),
-      expr("CAST(SUM(deg * (deg - 1)) / 2 AS BIGINT)").as("n_wedges"))
-    nodesEdges.crossJoin(tri)
-      .withColumn("global_cc",
-        lit(3.0) * col("n_triangles").cast("double") / col("n_wedges").cast("double"))
-      .select("n_nodes", "n_edges", "n_wedges", "n_triangles", "global_cc")
+    census(deg, tri)
   }
 
   // Per-node triangle participation + local clustering coefficient —
-  // the "how clique-ish is each hub's neighborhood" profile. Triangle
-  // rows explode to their three corners (3T rows, linear in the
-  // census output), one hash aggregate per node, then a top-k that
-  // compiles to TakeOrderedAndProject — no global sort at any scale.
-  private def qLocalCc(s: SparkSession, d: String): DataFrame =
-    localCcPlan(s, d, singleExplode = true, fuseTri = true)
-
-  /** [[qLocalCc]] with the corner expansion parametrized (AbWedge
-    * A/B; the suite path is singleExplode = true): ONE explode pass
-    * over the triangle frame — the 3-branch unionAll form re-read it
-    * three times per timed pass.
-    *
-    * fuseTri (suite path true since r16): stream the triangle rows
-    * STRAIGHT into the corner aggregate instead of localCheckpointing
-    * the O(T) frame first. The r15 linkScores adjudication kept that
-    * checkpoint because its consumer is a JOIN whose planner needs the
-    * materialized size; here the only consumer is a hash aggregate —
-    * there is no join to misplan, so the checkpoint's O(T) write+read
-    * and job barrier are pure overhead (guide §5: don't materialize
-    * what a single consumer streams through). */
-  private[graft] def localCcPlan(s: SparkSession, d: String,
-      singleExplode: Boolean, fuseTri: Boolean = false): DataFrame = {
+  // the "how clique-ish is each hub's neighborhood" profile. ONE
+  // explode pass turns the triangle rows into their three corners (3T
+  // rows, linear in the census output), one hash aggregate per node,
+  // then a top-k that compiles to TakeOrderedAndProject — no global
+  // sort at any scale. The triangle rows stream straight into the
+  // corner aggregate with no O(T) checkpoint: the only consumer is a
+  // hash aggregate, so there is no join whose planner needs the
+  // materialized size (contrast linkScoresM).
+  private def qLocalCc(s: SparkSession, d: String): DataFrame = {
     val (e, deg) = coEdgesDegM(s, d)
-    val tri = if (fuseTri) triangleRows(e, deg) else triangleRowsM(s, d)
-    val corners = (
-      if (singleExplode)
-        tri.select(explode(array(col("n1"), col("n2"), col("n3"))).as("node"))
-      else
-        tri.select(col("n1").as("node"))
-          .unionAll(tri.select(col("n2").as("node")))
-          .unionAll(tri.select(col("n3").as("node")))
-      ).groupBy("node").agg(count(lit(1)).as("n_tri"))
+    val corners = triangleRows(e, deg)
+      .select(explode(array(col("n1"), col("n2"), col("n3"))).as("node"))
+      .groupBy("node").agg(count(lit(1)).as("n_tri"))
     deg.join(corners, Seq("node"))
       .withColumn("local_cc",
         lit(2.0) * col("n_tri").cast("double")
@@ -411,174 +289,99 @@ object GraphOps {
       .limit(20)
   }
 
-  // Market-basket association over orders: pair support, per-item
-  // support, and lift = P(u,v) / (P(u)·P(v)) — the classic
-  // "co-purchase strength" mining query. Same bounded intra-order
-  // pair join as the edge build, but counting DISTINCT co-orders per
-  // pair instead of collapsing to one edge; supports are one hash
-  // aggregate each, joined back pair→item twice (node-keyed shuffles).
-  // The lift arithmetic is a single double mul/div chain over exact
-  // integers, parenthesized identically in both engines.
-  private val MinPairSupport = 3
-
   /** Multi-source BFS centrality — closeness, harmonic centrality and
-    * eccentricity from 8 hash-elected seed nodes. The per-seed BFS is
-    * the level-synchronous frontier iteration (the Pregel shape): each
-    * round joins the current frontier with the adjacency list, drops
-    * already-visited (seed, node) pairs with an anti join, and cuts
-    * lineage per round; it stops when a frontier comes back empty and
-    * FAILS LOUD at [[BfsMaxRounds]] (a half-explored graph must never
-    * ship as a centrality figure). Seeds are md5-elected so the probe
-    * set is deterministic and unbiased by id assignment.
+    * eccentricity from 8 hash-elected seed nodes, run as MS-BFS (Then
+    * et al., VLDB 2015, "The More the Merrier: Efficient Multi-Source
+    * BFS"): the per-round state is ONE row per NODE carrying a
+    * BfsSeeds-wide bitmask, not one row per (seed, node) pair, so the
+    * frontier×degree expansion — the dominant round's join product —
+    * shrinks by up to the seed count (the dense mid-BFS rounds are
+    * where all seeds' frontiers overlap). Per round: one node-keyed
+    * join frontier ⋈ adjacency, one bit_or hash aggregate, one
+    * left_outer against the node-sized visited-mask table (new bits =
+    * m & ~vmask), one node-sized checkpoint. A node's bit is set in
+    * exactly the round BFS first reaches it from that seed, so the
+    * distances are exact. The loop stops when a frontier comes back
+    * empty and FAILS LOUD at [[BfsMaxRounds]] (a half-explored graph
+    * must never ship as a centrality figure). Seeds are md5-elected so
+    * the probe set is deterministic and unbiased by id assignment.
     *
-    * Scale shape: each round is one node-keyed equi join (frontier ⋈
-    * adjacency) plus an anti join against visited — all O(frontier ×
-    * avg-degree) rows, never all-pairs; rounds ≤ graph diameter. At
-    * 100 TB the visited set is the big operand (k·|V| rows); it stays
-    * partitioned by node and is only ever anti-joined, never sorted.
-    * Exact-landmark closeness over k seeds is the standard scale
-    * substitute for all-pairs shortest paths (O(k·|E|) vs O(|V|·|E|)).
+    * Scale shape: rounds ≤ graph diameter, each O(frontier ×
+    * avg-degree) rows, never all-pairs; the visited-mask table is
+    * node-sized, partitioned by node and only ever joined, never
+    * sorted. The adjacency is the memoized directed frame, whose node
+    * partitioning spares the per-round join an adjacency-side
+    * exchange. Exact-landmark closeness over k seeds is the standard
+    * scale substitute for all-pairs shortest paths (O(k·|E|) vs
+    * O(|V|·|E|)).
     *
     * Determinism: distances are exact BIGINTs; closeness is one IEEE
     * division; harmonic sums DECIMAL(18,9)-pinned 1/d terms (1/d is a
     * single IEEE op on exact integers — bit-identical cross-engine). */
   private val BfsMaxRounds = 32
   private val BfsSeeds = 8
-  private def qCloseness(s: SparkSession, d: String): DataFrame =
-    closenessPlan(s, d, msbfs = true)
-
-  /** [[qCloseness]] with the BFS state representation parametrized
-    * (AbWedge pair close_pair / close_msbfs; suite path msbfs = true
-    * since r15).
-    *
-    * msbfs = true is MS-BFS (Then et al., VLDB 2015, "The More the
-    * Merrier: Efficient Multi-Source BFS"): the per-round state is ONE
-    * row per NODE carrying a BfsSeeds-wide bitmask instead of one row
-    * per (seed, node) pair, so the frontier×degree expansion — the
-    * dominant round's join product — shrinks by up to the seed count
-    * (the dense mid-BFS rounds are exactly where all seeds' frontiers
-    * overlap; guide §2.3 — shuffle fewer bytes by shuffling metadata,
-    * here 1 mask long instead of k seed rows). Per round: one
-    * node-keyed join frontier ⋈ adjacency, one bit_or hash aggregate,
-    * one left_outer against the node-sized visited-mask table (new
-    * bits = m & ~vmask), one node-sized checkpoint. Distances are
-    * identical by construction — a node's bit is set in exactly the
-    * round BFS first reaches it from that seed — and OperatorsSpec
-    * pins row-for-row equality of both forms at two SFs.
-    *
-    * msbfs = false is the pre-r15 (seed, node)-pair form: same rounds,
-    * k× the expansion rows, a distinct + anti-join per round. */
-  private[graft] def closenessPlan(s: SparkSession, d: String,
-      msbfs: Boolean, fusedFront: Boolean = true): DataFrame = {
-    // the doubled adjacency IS the memoized directed frame — reading
-    // it directly (r16) keeps its node partitioning, so the per-round
-    // frontier ⋈ adjacency join no longer re-exchanges the adjacency
-    // side every round (the union of two edge-checkpoint scans had
-    // unknown partitioning and re-shuffled each of the ~20 rounds).
-    // fusedFront = false replays the split front half (AbWedge pair).
-    val (deg, adj) = if (fusedFront) {
-      val (_, dg) = coEdgesDegM(s, d)
-      (dg, coEdgesDirM(s, d).select(col("a"), col("b")))
-    } else {
-      val (e, dg) = coEdgesDegVariant(s, d, fused = false)
-      (dg, e.select(col("u").as("a"), col("v").as("b"))
-        .unionAll(e.select(col("v").as("a"), col("u").as("b"))))
-    }
+  private def qCloseness(s: SparkSession, d: String): DataFrame = {
+    val (_, deg) = coEdgesDegM(s, d)
+    val adj = coEdgesDirM(s, d).select(col("a"), col("b"))
     val seedOrder = org.apache.spark.sql.expressions.Window
       .orderBy(md5(col("node").cast("string")), col("node"))
     val seeds = deg.select(col("node"))
       .orderBy(md5(col("node").cast("string")), col("node")).limit(BfsSeeds)
-    val visited = if (msbfs) {
-      // (node, bit) for the BfsSeeds elected seeds — the 8-row window
-      // is model-sized; bit order = the same md5 election order
-      val seedBits = seeds
-        .withColumn("bit", (row_number().over(seedOrder) - 1))
+    // (node, bit) for the BfsSeeds elected seeds — the 8-row window
+    // is model-sized; bit order = the same md5 election order
+    val seedBits = seeds
+      .withColumn("bit", (row_number().over(seedOrder) - 1))
+      .localCheckpoint()
+    var vmasks = seedBits
+      .select(col("node"), expr("shiftleft(CAST(1 AS BIGINT), bit)").as("vmask"))
+      .localCheckpoint()
+    var frontier = vmasks.select(col("node"), col("vmask").as("fmask"))
+    var levels = Vector(
+      vmasks.select(col("node"), col("vmask").as("nm"), lit(0L).as("dist")))
+    var n = frontier.count()
+    var round = 0
+    while (n > 0 && round < BfsMaxRounds) {
+      round += 1
+      val gathered = frontier.join(adj, col("node") === col("a"))
+        .groupBy(col("b").as("node")).agg(expr("bit_or(fmask)").as("m"))
+      val newbits = gathered
+        .join(vmasks, Seq("node"), "left_outer")
+        .withColumn("nm", expr("m & ~coalesce(vmask, CAST(0 AS BIGINT))"))
+        .filter(col("nm") =!= 0L)
+        .select(col("node"), col("nm"))
         .localCheckpoint()
-      var vmasks = seedBits
-        .select(col("node"), expr("shiftleft(CAST(1 AS BIGINT), bit)").as("vmask"))
-        .localCheckpoint()
-      var frontier = vmasks.select(col("node"), col("vmask").as("fmask"))
-      var levels = Vector(
-        vmasks.select(col("node"), col("vmask").as("nm"), lit(0L).as("dist")))
-      var n = frontier.count()
-      var round = 0
-      while (n > 0 && round < BfsMaxRounds) {
-        round += 1
-        val gathered = frontier.join(adj, col("node") === col("a"))
-          .groupBy(col("b").as("node")).agg(expr("bit_or(fmask)").as("m"))
-        val newbits = gathered
-          .join(vmasks, Seq("node"), "left_outer")
-          .withColumn("nm", expr("m & ~coalesce(vmask, CAST(0 AS BIGINT))"))
-          .filter(col("nm") =!= 0L)
-          .select(col("node"), col("nm"))
-          .localCheckpoint()
-        n = newbits.count()
-        if (n > 0) {
-          levels :+= newbits.withColumn("dist", lit(round.toLong))
-          vmasks = vmasks.join(newbits, Seq("node"), "full_outer")
-            .select(col("node"),
-              expr("coalesce(vmask, CAST(0 AS BIGINT)) | coalesce(nm, CAST(0 AS BIGINT))")
-                .as("vmask"))
-            .localCheckpoint()
-        }
-        frontier = newbits.select(col("node"), col("nm").as("fmask"))
-      }
+      n = newbits.count()
       if (n > 0) {
-        // loop exited on the round cap with a live frontier;
-        // eccentricity == cap is a COMPLETE result. Probe one more
-        // expansion and fail only if it finds an unreached (seed, node).
-        val probe = frontier.join(adj, col("node") === col("a"))
-          .groupBy(col("b").as("node")).agg(expr("bit_or(fmask)").as("m"))
-          .join(vmasks, Seq("node"), "left_outer")
-          .filter(expr("(m & ~coalesce(vmask, CAST(0 AS BIGINT))) != 0"))
-        if (!probe.isEmpty)
-          throw new IllegalStateException(
-            s"BFS did not exhaust the graph in $BfsMaxRounds rounds — " +
-              "eccentricity exceeds the cap; raise BfsMaxRounds deliberately " +
-              "rather than shipping truncated centralities")
-      }
-      levels.reduce(_ unionAll _)
-        .select(col("node"), col("dist"),
-          explode(expr(s"""filter(sequence(0, ${BfsSeeds - 1}),
-            b -> (shiftright(nm, b) & 1) = 1)""")).as("bit"))
-        .join(broadcast(seedBits.select(col("node").as("seed"), col("bit"))),
-          Seq("bit"))
-        .select(col("seed"), col("node"), col("dist"))
-    } else {
-      var visited = seeds
-        .select(col("node").as("seed"), col("node"), lit(0L).as("dist"))
-        .localCheckpoint()
-      var frontier = visited
-      var n = frontier.count()
-      var round = 0
-      while (n > 0 && round < BfsMaxRounds) {
-        val expanded = frontier.join(adj, col("node") === col("a"))
-          .select(col("seed"), col("b").as("node"), (col("dist") + 1L).as("dist"))
-          .distinct()
-          .join(visited.select(col("seed").as("vs"), col("node").as("vn")),
-            col("seed") === col("vs") && col("node") === col("vn"), "left_anti")
+        levels :+= newbits.withColumn("dist", lit(round.toLong))
+        vmasks = vmasks.join(newbits, Seq("node"), "full_outer")
+          .select(col("node"),
+            expr("coalesce(vmask, CAST(0 AS BIGINT)) | coalesce(nm, CAST(0 AS BIGINT))")
+              .as("vmask"))
           .localCheckpoint()
-        n = expanded.count()
-        if (n > 0) visited = visited.unionAll(expanded).localCheckpoint()
-        frontier = expanded
-        round += 1
       }
-      if (n > 0) {
-        // the loop exits on the round cap with the dist-32 frontier still
-        // in hand; eccentricity == cap is a COMPLETE result. Probe one
-        // more expansion and fail only if it finds an unvisited node.
-        val probe = frontier.join(adj, col("node") === col("a"))
-          .select(col("seed"), col("b").as("node"))
-          .join(visited.select(col("seed").as("vs"), col("node").as("vn")),
-            col("seed") === col("vs") && col("node") === col("vn"), "left_anti")
-        if (!probe.isEmpty)
-          throw new IllegalStateException(
-            s"BFS did not exhaust the graph in $BfsMaxRounds rounds — " +
-              "eccentricity exceeds the cap; raise BfsMaxRounds deliberately " +
-              "rather than shipping truncated centralities")
-      }
-      visited
+      frontier = newbits.select(col("node"), col("nm").as("fmask"))
     }
+    if (n > 0) {
+      // loop exited on the round cap with a live frontier;
+      // eccentricity == cap is a COMPLETE result. Probe one more
+      // expansion and fail only if it finds an unreached (seed, node).
+      val probe = frontier.join(adj, col("node") === col("a"))
+        .groupBy(col("b").as("node")).agg(expr("bit_or(fmask)").as("m"))
+        .join(vmasks, Seq("node"), "left_outer")
+        .filter(expr("(m & ~coalesce(vmask, CAST(0 AS BIGINT))) != 0"))
+      if (!probe.isEmpty)
+        throw new IllegalStateException(
+          s"BFS did not exhaust the graph in $BfsMaxRounds rounds — " +
+            "eccentricity exceeds the cap; raise BfsMaxRounds deliberately " +
+            "rather than shipping truncated centralities")
+    }
+    val visited = levels.reduce(_ unionAll _)
+      .select(col("node"), col("dist"),
+        explode(expr(s"""filter(sequence(0, ${BfsSeeds - 1}),
+          b -> (shiftright(nm, b) & 1) = 1)""")).as("bit"))
+      .join(broadcast(seedBits.select(col("node").as("seed"), col("bit"))),
+        Seq("bit"))
+      .select(col("seed"), col("node"), col("dist"))
     visited.groupBy(col("seed"))
       .agg(
         count(lit(1)).as("n_reached"),
@@ -593,34 +396,27 @@ object GraphOps {
       .orderBy("seed")
   }
 
-  private def qBasketLift(s: SparkSession, d: String): DataFrame =
-    basketLiftPlan(s, d, fusedFront = true)
+  // Market-basket association over orders: pair support, per-item
+  // support, and lift = P(u,v) / (P(u)·P(v)) — the classic
+  // "co-purchase strength" mining query. Same bounded intra-order
+  // pair join as the edge build, but counting DISTINCT co-orders per
+  // pair instead of collapsing to one edge; supports are one hash
+  // aggregate each, joined back pair→item twice (node-keyed shuffles).
+  // The lift arithmetic is a single double mul/div chain over exact
+  // integers, parenthesized identically in both engines.
+  private val MinPairSupport = 3
 
-  /** [[qBasketLift]] with the front half parametrized (AbWedge pair
-    * basket_split / basket_fused; suite path fusedFront = true since
-    * r16 — the same single-exchange device as coEdgesDegFused /
-    * lpaLabelsPlan, guide §2.4). The split form paid one exchange for
-    * the (l_orderkey, l_partkey) distinct, then one MORE exchange per
-    * aliased pair-join side (the renamed projections canonicalize
-    * differently, so ReuseExchange cannot dedup them) and re-ran the
-    * scan+distinct for every consumer. The fused form exchanges
-    * lineitem ONCE on l_orderkey, dedups IN-STAGE on that exchange
-    * (HashPartitioning(l_orderkey) satisfies the (l_orderkey,
-    * l_partkey) clustering) and checkpoints; both pair-join sides then
-    * read the preserved partitioning with NO exchange, and the
-    * n_orders distinct is exchange-free on the same partitioning. Only
-    * itemSup (partkey-keyed) and the (u, v) pair aggregate still
-    * exchange — 3 node/pair-keyed exchanges total instead of 6, and
-    * the lineitem scan runs once. Rows are identical by construction
-    * (dropDuplicates == distinct on the two columns). */
-  private[graft] def basketLiftPlan(s: SparkSession, d: String,
-      fusedFront: Boolean): DataFrame = {
-    val li0 = Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
-    val li = if (fusedFront)
-      li0.repartition(col("l_orderkey"))
-        .dropDuplicates("l_orderkey", "l_partkey")
-        .localCheckpoint()
-    else li0.distinct()
+  private def qBasketLift(s: SparkSession, d: String): DataFrame = {
+    // lineitem is exchanged ONCE on l_orderkey, deduped IN-STAGE on
+    // that exchange (HashPartitioning(l_orderkey) satisfies the
+    // (l_orderkey, l_partkey) clustering) and checkpointed: both
+    // pair-join sides and the n_orders distinct read the preserved
+    // partitioning with no exchange, and the scan runs once. Only
+    // itemSup (partkey-keyed) and the (u, v) pair aggregate exchange.
+    val li = Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
+      .repartition(col("l_orderkey"))
+      .dropDuplicates("l_orderkey", "l_partkey")
+      .localCheckpoint()
     val nOrders = li.select("l_orderkey").distinct()
       .agg(count(lit(1)).as("n_orders"))
     val itemSup = li.groupBy(col("l_partkey").as("item"))
@@ -658,54 +454,29 @@ object GraphOps {
     * both shuffling on the node key — O(|E|) rows, no all-pairs
     * anywhere, linear to 100 TB. Decimal-cast magnitudes stay ≤ ~10³
     * (scores are L1-normalized ≤ 1 before every pinned sum), so the
-    * ≤2⁵³-unscaled exact-double-cast precondition holds at any SF. */
-  private def qHits(s: SparkSession, d: String): DataFrame =
-    hitsStage(s, d, stage = 3)
-
-  /** [[qHits]] cut at chain prefixes for the AbWedge cost profile:
-    * stage 1 = the distinct bipartite edge checkpoint, stage 2 = the
-    * first full hub iteration (edge join + agg + normalize), stage 3 =
-    * the whole query. Differences between cold stage timings locate
-    * the expensive half of the chain.
+    * ≤2⁵³-unscaled exact-double-cast precondition holds at any SF.
     *
-    * ckptIters (suite path true since r14): every L1 normalization is
-    * `scores ⋈ broadcast(scores.agg(sum))` — with the un-normalized
-    * score frame left lazy, both sides of that pattern re-reference
-    * the upstream edge join, and the duplication compounds across the
-    * four half-iterations (~8 edge-join executions vs 3; exchange
-    * reuse recovers some). Checkpointing each node-sized denominator
-    * frame (h1d/a2d/h2d — ≤|V| rows of (id, decimal)) makes every
-    * subtree linear: each edge join runs exactly once per iteration
-    * at ANY scale. The r14 sf0.1 cold A/B was a WASH (hits_ckpt
-    * 9.22 s vs hits_plain 9.09 s median, 3/5 pairwise, spreads
-    * overlapping — iteration wall here is per-stage overhead, not the
-    * ~550 k-row joins), so this ships on the scale argument, not a
-    * suite win: at 100 TB the edge frame dominates and 3 passes vs 8
-    * is the difference that matters, while the checkpoints it adds
-    * stay node-sized at every SF. */
-  private[graft] def hitsStage(s: SparkSession, d: String, stage: Int,
-      ckptIters: Boolean = true, fusedE: Boolean = true): DataFrame = {
-    def iterCkpt(df: DataFrame): DataFrame =
-      if (ckptIters) df.localCheckpoint() else df
-    // fusedE (suite path true since r16, guide §2.4): key the edge
-    // checkpoint by p instead of letting distinct() pick (c, p). The
-    // dedup runs IN-STAGE on the one p-keyed exchange
-    // (HashPartitioning(p) satisfies the (c, p) clustering), the
-    // in-degree aggregate reads the preserved partitioning with NO
-    // exchange, and iteration 2's authority aggregate (groupBy p after
-    // the broadcast hub join, which keeps e's partitioning) is
-    // exchange-free too — three exchanges removed per execution with
-    // byte-identical scores (every aggregate here is decimal-exact and
-    // partition-order-independent by construction).
-    val e0 = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
+    * The edge checkpoint is keyed by p: the (c, p) dedup runs IN-STAGE
+    * on the one p-keyed exchange (HashPartitioning(p) satisfies the
+    * (c, p) clustering), and the in-degree aggregate and iteration 2's
+    * authority aggregate (groupBy p after the broadcast hub join,
+    * which keeps e's partitioning) read it with no exchange.
+    *
+    * Every L1 normalization is `scores ⋈ broadcast(scores.agg(sum))`;
+    * left lazy, both sides of that pattern re-run the upstream edge
+    * join and the duplication compounds across the four
+    * half-iterations (~8 edge-join executions instead of 3). Each
+    * node-sized denominator frame (h1d/a2d/h2d) is therefore
+    * checkpointed, so every edge join runs exactly once per iteration
+    * at any scale. */
+  private def qHits(s: SparkSession, d: String): DataFrame = {
+    val e = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
       .join(Tables.lineitem(s, d)
         .select(col("l_orderkey").as("o_orderkey"), col("l_partkey")),
         Seq("o_orderkey"))
       .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-    val e = (if (fusedE) e0.repartition(col("p")).dropDuplicates("c", "p")
-             else e0.distinct())
+      .repartition(col("p")).dropDuplicates("c", "p")
       .localCheckpoint()
-    if (stage == 1) return e
     val mRow = e.agg(count(lit(1)).as("m"))
     val inDeg = e.groupBy("p").agg(count(lit(1)).as("in_deg")).localCheckpoint()
     val outDeg = e.groupBy("c").agg(count(lit(1)).as("out_deg"))
@@ -713,24 +484,26 @@ object GraphOps {
     val a1 = inDeg.crossJoin(broadcast(mRow))
       .withColumn("a1", col("in_deg").cast("double") / col("m").cast("double"))
       .select("p", "a1")
-    val h1d = iterCkpt(e.join(a1, Seq("p"))
+    val h1d = e.join(a1, Seq("p"))
       .withColumn("t", expr("CAST(a1 AS DECIMAL(18,12))"))
-      .groupBy("c").agg(sum(col("t")).as("h1d")))
+      .groupBy("c").agg(sum(col("t")).as("h1d"))
+      .localCheckpoint()
     val h1 = h1d.crossJoin(broadcast(h1d.agg(sum(col("h1d")).as("h1t"))))
       .withColumn("h1", col("h1d").cast("double") / col("h1t").cast("double"))
       .select("c", "h1")
-    if (stage == 2) return h1
     // iteration 2
-    val a2d = iterCkpt(e.join(h1, Seq("c"))
+    val a2d = e.join(h1, Seq("c"))
       .withColumn("t", expr("CAST(h1 AS DECIMAL(18,12))"))
-      .groupBy("p").agg(sum(col("t")).as("a2d")))
+      .groupBy("p").agg(sum(col("t")).as("a2d"))
+      .localCheckpoint()
     val a2 = a2d.crossJoin(broadcast(a2d.agg(sum(col("a2d")).as("a2t"))))
       .withColumn("a2", col("a2d").cast("double") / col("a2t").cast("double"))
       .select("p", "a2")
       .localCheckpoint()
-    val h2d = iterCkpt(e.join(a2, Seq("p"))
+    val h2d = e.join(a2, Seq("p"))
       .withColumn("t", expr("CAST(a2 AS DECIMAL(18,12))"))
-      .groupBy("c").agg(sum(col("t")).as("h2d")))
+      .groupBy("c").agg(sum(col("t")).as("h2d"))
+      .localCheckpoint()
     val h2 = h2d.crossJoin(broadcast(h2d.agg(sum(col("h2d")).as("h2t"))))
       .withColumn("h2", col("h2d").cast("double") / col("h2t").cast("double"))
       .select("c", "h2")
@@ -758,7 +531,7 @@ object GraphOps {
   private def qBrandMixing(s: SparkSession, d: String): DataFrame = {
     val brands = Tables.part(s, d)
       .select(col("p_partkey").as("node"), col("p_brand").as("brand"))
-    // the doubled directed view is the memoized frame itself (r16)
+    // the doubled directed view is the memoized frame itself
     val dir = coEdgesDirM(s, d).select(col("a"), col("b"))
     val lab = dir
       .join(brands.select(col("node").as("a"), col("brand").as("ba")), Seq("a"))
@@ -793,58 +566,32 @@ object GraphOps {
   // same two rounds and matches bit for bit. The seed election is a
   // model-sized TakeOrdered broadcast back into the plan, never a
   // driver literal.
-  private def qPpr(s: SparkSession, d: String): DataFrame =
-    pprPlan(s, d, slimBlend = true)
-
-  /** [[qPpr]] with the blend scaffold parametrized (AbWedge pair
-    * ppr_scaffold / ppr_slim). slimBlend = false is the pre-r15 form:
-    * deg ⋈ seeds ⋈ contrib, both left_outer, per iteration. */
-  private[graft] def pprPlan(s: SparkSession, d: String,
-      slimBlend: Boolean, fusedFront: Boolean = true): DataFrame = {
-    val splitFront =
-      if (fusedFront) None else Some(coEdgesDegVariant(s, d, fused = false))
-    val deg = splitFront.map(_._2).getOrElse(coEdgesDegM(s, d)._2)
+  private def qPpr(s: SparkSession, d: String): DataFrame = {
+    val deg = coEdgesDegM(s, d)._2
     // hoist the loop-INVARIANT degree join out of the iterations: each
     // directed edge carries its source degree once (one O(|E|) join +
     // checkpoint total), so every power iteration is exactly ONE edge
-    // equi-join with the rank table + one node agg — not two edge-list
-    // shuffles per round. r16: the doubled edge view is the memoized
-    // directed frame itself, already partitioned by src — the degree
-    // join here and the per-round rank join reuse that partitioning
+    // equi-join with the rank table + one node agg. The doubled edge
+    // view is the memoized directed frame, already partitioned by src,
+    // so this join and the per-round rank join reuse that partitioning
     // instead of re-exchanging the fat side.
-    val dirView = splitFront match {
-      case None => coEdgesDirM(s, d)
-        .select(col("a").as("src"), col("b").as("dst"))
-      case Some((e, _)) =>
-        e.select(col("u").as("src"), col("v").as("dst"))
-          .unionAll(e.select(col("v").as("src"), col("u").as("dst")))
-    }
-    val sym = dirView
+    val sym = coEdgesDirM(s, d)
+      .select(col("a").as("src"), col("b").as("dst"))
       .join(deg.select(col("node").as("src"), col("deg")), Seq("src"))
       .localCheckpoint()
     val seeds = deg.orderBy(col("deg").desc, col("node")).limit(4)
       .select(col("node"), lit(1L).as("seed")).localCheckpoint()
-    // contrib's key set IS deg's node set — every deg node has degree
-    // ≥ 1 by construction, the symmetrized edge list therefore gives it
+    // blend directly on contrib, with no deg scaffold join: contrib's
+    // key set IS deg's node set — every deg node has degree ≥ 1 (see
+    // coEdgesDegFused), the symmetrized edge list therefore gives it
     // ≥ 1 incoming edge, and rank covers every node each round, so the
-    // per-node sum exists (non-null) for exactly the deg nodes. The old
-    // scaffold (deg ⋈ seeds ⋈ contrib, both left_outer) re-scanned and
-    // re-joined the node table once per iteration for rows that are
-    // never missing; blending directly on contrib drops one node-keyed
-    // join + node-table scan per iteration (guide §2.4 — remove
-    // shuffles outright) with identical output.
-    def blend(contrib: DataFrame): DataFrame = {
-      val base = if (slimBlend)
-        contrib.join(broadcast(seeds), Seq("node"), "left_outer")
-      else deg.select(col("node"))
-        .join(broadcast(seeds), Seq("node"), "left_outer")
-        .join(contrib, Seq("node"), "left_outer")
-      base
+    // per-node sum exists (non-null) for exactly the deg nodes
+    def blend(contrib: DataFrame): DataFrame =
+      contrib.join(broadcast(seeds), Seq("node"), "left_outer")
         .withColumn("r",
           when(col("seed") === 1L, lit(0.15) * lit(0.25)).otherwise(lit(0.0))
             + lit(0.85) * coalesce(col("sc").cast("double"), lit(0.0)))
         .select("node", "r")
-    }
     var rank = deg.select(col("node"))
       .join(broadcast(seeds), Seq("node"), "left_outer")
       .withColumn("r", when(col("seed") === 1L, lit(0.25)).otherwise(lit(0.0)))
@@ -927,43 +674,41 @@ object GraphOps {
     * the cap corresponds to a ~700 M-node graph. */
   private val CoreBroadcastCap = 20000000L
 
+
   /** Nodes of the `k`-core of an undirected (u < v, distinct) edge
     * list, with their within-core degree. Loops to the true fixpoint
     * (the peel frontier is empty — peeling is monotone decreasing, so
     * an empty frontier IS convergence) and throws past `CoreMaxRounds`
     * instead of returning a half-peeled subgraph. */
-  def kcore(edges0: DataFrame, k: Int): DataFrame = kcoreWithDepth(edges0, k)._1
+  def kcore(edges0: DataFrame, k: Int): DataFrame =
+    kcoreWithDepth(edges0, degrees(edges0), k)._1
 
-  /** `kcore` plus the measured peel depth (rounds to reach the
-    * fixpoint, counting the final empty-frontier confirmation round).
-    * Exposed so CoreDepthSpec can assert depth ≤ CoreOracleRounds —
-    * the invariant that keeps the 12-round unrolled DuckDB oracle an
-    * exact replay rather than a half-peeled graph. */
-  private[graft] def kcoreWithDepth(edges0: DataFrame, k: Int): (DataFrame, Int) =
-    kcoreWithDepth(edges0, degrees(edges0), k)
-
-  /** Delta-peel from a precomputed degree table (reuses the memoized
-    * coEdgesDegM degrees in the q_kcore path — the full-graph degree
-    * aggregation happens ONCE per corpus, not once per kcore call). */
+  /** Delta-peel from a precomputed degree table (the q_kcore path
+    * reuses the memoized coEdgesDegM degrees, so the full-graph degree
+    * aggregation happens once per corpus). Returns the core and one
+    * (frontier size, seconds) entry per round, counting the final
+    * empty-frontier confirmation round — the peel depth is the entry
+    * count. OperatorsSpec asserts depth ≤ CoreOracleRounds, the
+    * invariant that keeps the unrolled DuckDB oracle an exact replay. */
   private[graft] def kcoreWithDepth(edges0: DataFrame, deg0: DataFrame,
-      k: Int, ckptRemoved: Boolean = false): (DataFrame, Int) = {
+      k: Int): (DataFrame, Seq[(Long, Double)]) = {
     val edges = edges0.localCheckpoint()
     var deg = deg0.localCheckpoint()
     // cumulative removed set — kept as a DataFrame (never collected:
     // at scale it is data-sized, ~3% of nodes) and broadcast-hinted
-    // while it plausibly fits an executor. r16: the set is a LAZY
-    // union of the per-round frontier checkpoints — each frontier is
-    // already materialized, so re-checkpointing their union every
-    // round was one redundant node-sized write + job barrier per round
-    // (the union depth is bounded by the peel depth, ≤ CoreMaxRounds).
+    // while it plausibly fits an executor. It is a LAZY union of the
+    // per-round frontier checkpoints: each frontier is already
+    // materialized, so checkpointing their union would only add a
+    // node-sized write + job barrier per round (the union depth is
+    // bounded by the peel depth, ≤ CoreMaxRounds).
     var removedAll = deg.select("node").limit(0)
     var nRemovedAll = 0L
     var converged = false
-    var round = 0
+    val rounds = scala.collection.mutable.ArrayBuffer[(Long, Double)]()
     def hint(df: DataFrame): DataFrame =
       if (nRemovedAll < CoreBroadcastCap) broadcast(df) else df
-    while (!converged && round < CoreMaxRounds) {
-      round += 1
+    while (!converged && rounds.size < CoreMaxRounds) {
+      val t0 = System.nanoTime()
       val frontier = deg.filter(col("deg") < k).select("node").localCheckpoint()
       val nF = frontier.count()
       if (nF == 0) converged = true
@@ -990,11 +735,10 @@ object GraphOps {
           .select(col("node"),
             (col("deg") - coalesce(col("lost"), lit(0L))).as("deg"))
           .localCheckpoint()
-        removedAll =
-          if (ckptRemoved) removedAll.unionAll(frontier).localCheckpoint()
-          else removedAll.unionAll(frontier)
+        removedAll = removedAll.unionAll(frontier)
         nRemovedAll += nF
       }
+      rounds += ((nF, (System.nanoTime() - t0) / 1e9))
     }
     if (!converged)
       throw new IllegalStateException(
@@ -1004,82 +748,41 @@ object GraphOps {
     val core = deg
       .select(col("node"), col("deg").as("core_deg"), lit(k.toLong).as("k"))
       .orderBy("node")
-    (core, round)
+    (core, rounds.toSeq)
   }
 
-  /** Instrumented replay of the q_kcore path for graft.KcoreDecompose:
-    * builds the co-occurrence graph COLD (memo bypassed), derives K,
-    * and runs the DELTA peel with per-round wall times and frontier
-    * sizes — the evidence that attributes the path's measured scaling
-    * exponent to per-round cost vs peel-depth growth. Returns
-    * (nEdges0, k, rounds: Seq[(frontierSize, seconds)]). */
+  /** The derived K = ⌊CoreFrac·median degree⌋ — the exact interpolated
+    * median of BIGINT degrees is a one-double model fetch (like the
+    * Lloyd centroid collects), never a data collect. */
+  private def coreK(deg: DataFrame): Int =
+    math.floor(CoreFrac.toDouble *
+      deg.agg(expr("percentile(deg, 0.5d)").as("med")).head.getDouble(0)).toInt
+
+  /** The q_kcore peel for graft.KcoreDecompose, with the co-occurrence
+    * graph built COLD (memo bypassed): (edge count, derived K, one
+    * (frontier size, seconds) entry per round) — the evidence that
+    * attributes the path's measured scaling exponent to per-round cost
+    * vs peel-depth growth. */
   private[graft] def kcorePeelProfile(s: SparkSession, d: String)
       : (Long, Int, Seq[(Long, Double)]) = {
-    val edges = coEdges(s, d).localCheckpoint()
-    var deg = degrees(edges).localCheckpoint()
-    val n0 = edges.count()
-    val med = deg.agg(expr("percentile(deg, 0.5d)").as("med")).head.getDouble(0)
-    val k = math.floor(CoreFrac.toDouble * med).toInt
-    var removedAll = deg.select("node").limit(0).localCheckpoint()
-    var converged = false
-    val rounds = scala.collection.mutable.ArrayBuffer[(Long, Double)]()
-    while (!converged && rounds.size < CoreMaxRounds) {
-      val t0 = System.nanoTime()
-      val frontier = deg.filter(col("deg") < k).select("node").localCheckpoint()
-      val nF = frontier.count()
-      if (nF == 0) converged = true
-      else {
-        val cur = edges
-          .join(broadcast(removedAll.withColumnRenamed("node", "u")), Seq("u"), "left_anti")
-          .join(broadcast(removedAll.withColumnRenamed("node", "v")), Seq("v"), "left_anti")
-        val losses = cur
-          .join(broadcast(frontier.withColumnRenamed("node", "u")), Seq("u"), "left_semi")
-          .select(col("v").as("node"))
-          .unionAll(cur
-            .join(broadcast(frontier.withColumnRenamed("node", "v")), Seq("v"), "left_semi")
-            .select(col("u").as("node")))
-          .join(broadcast(frontier), Seq("node"), "left_anti")
-          .groupBy("node").agg(count(lit(1)).as("lost"))
-        deg = deg
-          .join(broadcast(frontier), Seq("node"), "left_anti")
-          .join(losses, Seq("node"), "left_outer")
-          .select(col("node"),
-            (col("deg") - coalesce(col("lost"), lit(0L))).as("deg"))
-          .localCheckpoint()
-        removedAll = removedAll.unionAll(frontier).localCheckpoint()
-      }
-      rounds += ((nF, (System.nanoTime() - t0) / 1e9))
-    }
-    (n0, k, rounds.toSeq)
+    val (edges, deg, _) = coEdgesDegFused(s, d)
+    val k = coreK(deg)
+    (edges.count(), k, kcoreWithDepth(edges, deg, k)._2)
   }
 
   /** The derived-K q_kcore path with its measured peel depth — the
-    * oracle-validity probe for CoreDepthSpec. */
+    * oracle-validity probe for OperatorsSpec. */
   private[graft] def kcoreDepthAt(s: SparkSession, d: String): Int = {
     val (edges, deg) = coEdgesDegM(s, d)
-    val med = deg
-      .agg(expr("percentile(deg, 0.5d)").as("med")).head.getDouble(0)
-    kcoreWithDepth(edges, deg, math.floor(CoreFrac.toDouble * med).toInt)._2
+    kcoreWithDepth(edges, deg, coreK(deg))._2.size
   }
 
-  private def qKcore(s: SparkSession, d: String): DataFrame =
-    kcorePlanVariant(s, d, ckptRemoved = false)
-
-  /** [[qKcore]] with the removed-set maintenance parametrized (AbWedge
-    * pair kcore_ckpt / kcore_union; suite path ckptRemoved = false
-    * since r16 — lazy union of the materialized frontiers). */
-  private[graft] def kcorePlanVariant(s: SparkSession, d: String,
-      ckptRemoved: Boolean): DataFrame = {
+  private def qKcore(s: SparkSession, d: String): DataFrame = {
     // memoized checkpoint: the edge list feeds the median probe AND
     // every peel round — recomputing the intra-order pair join per
     // round would multiply the dominant shuffle by the peel depth
     val (edges, deg) = coEdgesDegM(s, d)
-    // exact interpolated median of BIGINT degrees — a one-double model
-    // fetch (like the Lloyd centroid collects), never a data collect
-    val med = deg
-      .agg(expr("percentile(deg, 0.5d)").as("med")).head.getDouble(0)
-    kcoreWithDepth(edges, deg,
-      math.floor(CoreFrac.toDouble * med).toInt, ckptRemoved)._1
+    kcoreWithDepth(edges, deg, coreK(deg))._1
   }
 
   /** Minimum shared-order support for a strong-tie LPA edge — the
@@ -1094,126 +797,63 @@ object GraphOps {
     * construction, converged or not. */
   private[graft] val LpaRounds = 4
 
-  /** Strong-tie co-occurrence edges: (u < v) appearing together in at
-    * least LpaSupport distinct orders. Same intra-order pair join as
-    * coEdges plus a support count — one l_orderkey shuffle, one
-    * (u, v) hash agg. */
-  private def strongEdges(s: SparkSession, d: String): DataFrame =
-    strongEdgesPlan(s, d, distinctFirst = true)
-
-  /** [[strongEdges]] with the support counting parametrized (AbWedge
-    * pair sedge_cd / sedge_dc). distinctFirst = true (the suite path)
-    * dedups (l_orderkey, l_partkey) BEFORE the intra-order pair join:
-    * each unordered pair then appears exactly once per containing
-    * order, so a plain `count(1)` equals `countDistinct(l_orderkey)`
-    * — and the expensive form's Expand + two-phase distinct aggregate
-    * over the ~36 M-row pair stream becomes one narrow distinct over
-    * the |lineitem| rows that FEED the quadratic blowup. Dedup before
-    * the explosion, not after — the shape that survives 100×. */
-  private[graft] def strongEdgesPlan(s: SparkSession, d: String,
-      distinctFirst: Boolean, prepart: Boolean = false): DataFrame = {
-    val li0 = Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
-    val li1 = if (distinctFirst) li0.distinct() else li0
-    // same shared-exchange device as coEdges mode = "prepart": one
-    // orderkey repartition feeds both aliased join sides
-    val li = if (prepart) li1.repartition(col("l_orderkey")).localCheckpoint()
-    else li1
-    val a = li.select(col("l_orderkey").as("k"), col("l_partkey").as("u"))
-    val b = li.select(col("l_orderkey").as("k"), col("l_partkey").as("v"))
-    val support =
-      if (distinctFirst) count(lit(1)) else countDistinct(col("k"))
-    a.join(b, Seq("k")).filter(col("u") < col("v"))
-      .groupBy("u", "v").agg(support.as("support"))
-      .filter(col("support") >= LpaSupport).select("u", "v")
-  }
-
   /** Community detection by synchronous label propagation over the
-    * strong-tie graph — LpaRounds rounds of "adopt the most frequent
-    * neighbor label, ties to the smallest", which is deterministic
-    * (synchronous updates + total tie order) unlike classic
-    * asynchronous LPA, so it can be hash-gated. Scale shape: each
-    * round is one edge-keyed join + one (node, label) hash agg + one
-    * per-node top-1 window — all node/edge-keyed shuffles, rounds
-    * bounded by the constant LpaRounds, lineage cut per round the
-    * same way the k-core peel does. 349 communities (max 81 members)
-    * over 1 880 nodes at sf0.01. */
-  /** Memoized LPA state: (strong edges, final labels) — shared by
-    * q_communities and q_modularity exactly like the co-occurrence
-    * memo; Bench/ScaleProbe clear it so published times stay cold. */
+    * strong-tie graph — (u < v) pairs appearing together in at least
+    * LpaSupport distinct orders. LpaRounds rounds of "adopt the most
+    * frequent neighbor label, ties to the smallest", which is
+    * deterministic (synchronous updates + total tie order) unlike
+    * classic asynchronous LPA, so it can be hash-gated. Memoized as
+    * (strong edges, final labels), shared by q_communities and
+    * q_modularity; Bench/ScaleProbe clear it so published times stay
+    * cold. 349 communities (max 81 members) over 1 880 nodes at
+    * sf0.01.
+    *
+    * Front half — two exchanges and one checkpoint before the first
+    * round: lineitem is exchanged once on l_orderkey with the
+    * (l_orderkey, l_partkey) dedup IN-STAGE (HashPartitioning(k)
+    * satisfies its clustering). After that dedup each pair appears
+    * exactly once per containing order, so a plain count(1) is its
+    * distinct-order support — the dedup runs before the quadratic pair
+    * explosion, not after. The pair join emits both directions, and
+    * the support count + LpaSupport filter run in-stage on one
+    * node-keyed exchange whose partitioning the `und` checkpoint
+    * keeps, so the label-init distinct is exchange-free too. The
+    * undirected (u < v) edge list is a filter over `und`.
+    *
+    * Each round is one edge-keyed join + one (node, label) hash agg +
+    * one node-keyed winner aggregate, lineage cut per round. The
+    * winner is `max(struct(c, -lbl))` — struct ordering compares c
+    * first, then −lbl, so the max is (highest count, lowest label) —
+    * a hash aggregate with map-side partial aggregation, not a
+    * per-node sort. Labels are node ids ≥ 0, so −lbl cannot
+    * overflow. */
   private[graft] def lpaLabels(s: SparkSession, d: String): (DataFrame, DataFrame) =
     cachedGraph[(DataFrame, DataFrame)](s, d, "lpa") {
-      lpaLabelsPlan(s, d, argMax = true, fusedFront = true)
-    }
-
-  /** The LPA build with the per-round winner selection parametrized
-    * (AbWedge drives both forms in one JVM). The winner per node is
-    * "most frequent neighbor label, lowest label on ties" — the
-    * row_number window (argMax = false) computes it by SORTING each
-    * node's label counts; the argmax aggregate (argMax = true, the
-    * suite path) computes the IDENTICAL winner as
-    * `max(struct(c, -lbl))` — struct ordering compares c first, then
-    * −lbl, so the max is (highest count, lowest label) — which runs
-    * as a hash aggregate WITH map-side partial aggregation instead of
-    * a per-round partition sort: the (node, lbl) count rows combine
-    * locally before the node-keyed exchange, and no sort buffer is
-    * built per round. Same exchange keys, one fewer sort per round ×
-    * LpaRounds rounds. Labels are node ids ≥ 0, so −lbl cannot
-    * overflow. */
-  private[graft] def lpaLabelsPlan(s: SparkSession, d: String,
-      argMax: Boolean, fusedFront: Boolean = false): (DataFrame, DataFrame) = {
-      import org.apache.spark.sql.expressions.Window
-      // fusedFront (suite path true since r16, guide §2.4): the split
-      // build paid FIVE exchanges and two checkpoints before the first
-      // LPA round — distinct(l_orderkey, l_partkey), one exchange per
-      // aliased pair-join side, the (u, v) support aggregate, and the
-      // label-init distinct over the und checkpoint (whose union had
-      // discarded the partitioning). The fused build pays TWO: dedup
-      // runs IN-STAGE on the orderkey prepartition (HashPartitioning(k)
-      // satisfies the (k, partkey) dedup clustering), the pair join
-      // emits both directions straight off that one exchange, and the
-      // support count + >=LpaSupport filter run in-stage on a single
-      // node-keyed exchange whose partitioning the und checkpoint
-      // keeps — so the label-init distinct is exchange-free too. The
-      // undirected (u < v) edge list is a filter over und, not its own
-      // materialization.
-      val (edges, und) = if (fusedFront) {
-        val li = Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
-          .repartition(col("l_orderkey"))
-          .dropDuplicates("l_orderkey", "l_partkey")
-          .localCheckpoint()
-        val a = li.select(col("l_orderkey").as("k"), col("l_partkey").as("a"))
-        val b = li.select(col("l_orderkey").as("k"), col("l_partkey").as("b"))
-        val undF = a.join(b, Seq("k")).filter(col("a") =!= col("b"))
-          .select("a", "b")
-          .repartition(col("a"))
-          .groupBy("a", "b").agg(count(lit(1)).as("support"))
-          .filter(col("support") >= LpaSupport).select("a", "b")
-          .localCheckpoint()
-        (undF.filter(col("a") < col("b"))
-          .select(col("a").as("u"), col("b").as("v")), undF)
-      } else {
-        val e = strongEdges(s, d).localCheckpoint()
-        (e, e.select(col("u").as("a"), col("v").as("b"))
-          .unionAll(e.select(col("v").as("a"), col("u").as("b")))
-          .localCheckpoint())
-      }
+      val li = Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
+        .repartition(col("l_orderkey"))
+        .dropDuplicates("l_orderkey", "l_partkey")
+        .localCheckpoint()
+      val a = li.select(col("l_orderkey").as("k"), col("l_partkey").as("a"))
+      val b = li.select(col("l_orderkey").as("k"), col("l_partkey").as("b"))
+      val und = a.join(b, Seq("k")).filter(col("a") =!= col("b"))
+        .select("a", "b")
+        .repartition(col("a"))
+        .groupBy("a", "b").agg(count(lit(1)).as("support"))
+        .filter(col("support") >= LpaSupport).select("a", "b")
+        .localCheckpoint()
       var lbl = und.select(col("a").as("node")).distinct()
         .withColumn("lbl", col("node")).localCheckpoint()
       for (_ <- 1 to LpaRounds) {
-        val cnt = und.join(lbl.withColumnRenamed("node", "b"), Seq("b"))
+        lbl = und.join(lbl.withColumnRenamed("node", "b"), Seq("b"))
           .groupBy(col("a").as("node"), col("lbl"))
           .agg(count(lit(1)).as("c"))
-        lbl =
-          (if (argMax)
-            cnt.groupBy(col("node"))
-              .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
-              .select(col("node"), (-col("m.nl")).as("lbl"))
-          else
-            cnt.withColumn("rn", row_number().over(
-                Window.partitionBy("node").orderBy(col("c").desc, col("lbl"))))
-              .filter(col("rn") === 1).select("node", "lbl"))
+          .groupBy(col("node"))
+          .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
+          .select(col("node"), (-col("m.nl")).as("lbl"))
           .localCheckpoint()
       }
+      val edges = und.filter(col("a") < col("b"))
+        .select(col("a").as("u"), col("b").as("v"))
       (edges, lbl)
     }
 
@@ -1235,34 +875,6 @@ object GraphOps {
     * model-sized community aggregates, a 1-row broadcast. */
   private def qModularity(s: SparkSession, d: String): DataFrame = {
     val (edges, lbl) = lpaLabels(s, d)
-    modularityFrom(edges, lbl)
-  }
-
-  /** Cold modularity plan with the LPA winner selection parametrized —
-    * AbWedge's A/B entry for the lpa_window/lpa_argmax pair (the suite
-    * path is [[lpaLabels]], argMax = true since the r14 trim). */
-  private[graft] def modularityPlan(s: SparkSession, d: String,
-      argMax: Boolean, fusedFront: Boolean = false): DataFrame = {
-    val (edges, lbl) = lpaLabelsPlan(s, d, argMax, fusedFront)
-    modularityFrom(edges, lbl)
-  }
-
-  /** Cold chain-prefix stage prices for the modularity chain (AbWedge
-    * mod_s1/s2/s3, the r14 trim-targeting device): stage 1 = strong
-    * edges built and materialized; stage 2 = + LpaRounds synchronous
-    * label propagation (≈ q_communities' whole front half); stage 3 =
-    * the full suite plan (+ the [[modularityFrom]] back half). The
-    * pairwise deltas locate the expensive link — r14's driver priced
-    * q_modularity 2.4× its record on BOTH passes while q_communities,
-    * sharing everything through stage 2, priced 1.05×. */
-  private[graft] def modularityStage(s: SparkSession, d: String,
-      stage: Int): DataFrame = stage match {
-    case 1 => strongEdges(s, d).localCheckpoint()
-    case 2 => lpaLabelsPlan(s, d, argMax = true)._2
-    case _ => modularityPlan(s, d, argMax = true)
-  }
-
-  private def modularityFrom(edges: DataFrame, lbl: DataFrame): DataFrame = {
     val deg = degrees(edges)
     val eLbl = edges
       .join(lbl.select(col("node").as("u"), col("lbl").as("lu")), Seq("u"))
@@ -1333,44 +945,15 @@ object GraphOps {
   // both scores together. The consumers are projections + top-k
   // (TakeOrderedAndProject). At 100 TB the whole family costs one pass
   // over the 3T-row triangle stream — not one per score.
+  //
+  // The triangle rows come materialized (triangleRowsM): the
+  // checkpoint gives the sides-join planner honest runtime sizes,
+  // where a triangle subtree streamed into the agg plans blind — that
+  // fused form measured slower (OPTIMIZATION_r15.md).
   private def linkScoresM(s: SparkSession, d: String): DataFrame =
     cachedGraph[DataFrame](s, d, "links") {
       val (_, deg) = coEdgesDegM(s, d)
-      // r15 adjudication: fusing the triangle stream into the scored
-      // agg (skipping this checkpoint — the stream has one consumer
-      // here) LOST the cold interleaved A/B 2/5 with a worse median
-      // (links_trickpt 8.10 s vs links_fused 9.23, spreads [6.5, 9.3]
-      // vs [5.2, 16.5]): the materialized frame gives the sides-join
-      // planner honest runtime sizes where the fused subtree plans
-      // blind, and the checkpoint's write+read is cheaper than the
-      // misplanned join. The fuse stays available as
-      // linkScoresPlan(fuseTri = true) for re-adjudication.
-      linkScoresFrom(deg, triangleRowsM(s, d))
-    }
-
-  /** Scored-edge chain cut at its memoized prefixes for the AbWedge
-    * cost profile (memos are cleared before each timed pass, so each
-    * stage prices its full cold build): 1 = co-occurrence edges +
-    * degrees, 2 = + triangle rows, 3 = the full scored-edge frame. */
-  private[graft] def linkChainStage(s: SparkSession, d: String,
-      stage: Int): DataFrame = stage match {
-    case 1 => coEdgesDegM(s, d)._1
-    case 2 => triangleRowsM(s, d)
-    case _ => linkScoresM(s, d)
-  }
-
-  /** Cold link-score plan with the triangle intersection form
-    * parametrized — AbWedge's interleaved A/B entry (the suite path is
-    * linkScoresM, whose triangle stream uses merge = false since the
-    * r14 adjudication — see [[triangleRowsImpl]]). */
-  private[graft] def linkScoresPlan(s: SparkSession, d: String,
-      merge: Boolean, fuseTri: Boolean = false): DataFrame = {
-    val (e, deg) = coEdgesDegM(s, d)
-    val tri = triangleRowsImpl(e, deg, merge)
-    linkScoresFrom(deg, if (fuseTri) tri else tri.localCheckpoint())
-  }
-
-  private def linkScoresFrom(deg: DataFrame, tri: DataFrame): DataFrame = {
+      val tri = triangleRowsM(s, d)
       val degT = deg.withColumn("term",
         expr("CAST(1.0 / ln(CAST(deg AS DOUBLE)) AS DECIMAL(18,9))"))
       val sides = tri.select(explode(array(
@@ -1406,18 +989,6 @@ object GraphOps {
       .select("u", "v", "common", "aa_score")
       .orderBy(col("aa_score").desc, col("u"), col("v"))
       .limit(20)
-
-  /** Cold q_adamic_adar with the front-half build parametrized —
-    * AbWedge's end-to-end entry for the r16 fused-front A/B (memos
-    * bypassed so each pass prices its full cold chain). */
-  private[graft] def adamicAdarVariant(s: SparkSession, d: String,
-      fused: Boolean): DataFrame = {
-    val (e, deg) = coEdgesDegVariant(s, d, fused)
-    linkScoresFrom(deg, triangleRows(e, deg).localCheckpoint())
-      .select("u", "v", "common", "aa_score")
-      .orderBy(col("aa_score").desc, col("u"), col("v"))
-      .limit(20)
-  }
 
   // The combined scored-edge surface itself — what a link-prediction
   // consumer would actually materialize (both scores, both degrees,

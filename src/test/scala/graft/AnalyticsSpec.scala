@@ -14,6 +14,19 @@ class AnalyticsSpec extends SparkSpec {
 
   private def q(name: String) = SparkEntry.queries(name)(spark, Sf0001)
 
+  /** The sf0.001 co-occurrence graph as a driver adjacency map: parts
+    * u ≠ v are neighbors when some order holds both. */
+  private def coAdjacency(): Map[Long, Set[Long]] =
+    graft.sources.Tables.lineitem(spark, Sf0001)
+      .select($"l_orderkey", $"l_partkey").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+      .groupBy(_._1).values.toSeq
+      .flatMap { grp =>
+        val parts = grp.map(_._2).distinct.toSeq
+        for (a <- parts; b <- parts if a != b) yield (a, b)
+      }
+      .groupBy(_._1).map { case (a, ps) => a -> ps.map(_._2).toSet }
+
   test("q_cusum: telescopes to zero, one peak elected, running sum reconciles") {
     val rows = q("q_cusum").collect()
     assert(rows.nonEmpty)
@@ -374,15 +387,7 @@ class AnalyticsSpec extends SparkSpec {
       assert(math.abs(j - c.toDouble / (du + dv - 2 - c)) < 1e-12)
     }
     // independent recount of the top edge's intersection from lineitem
-    val li = graft.sources.Tables.lineitem(spark, Sf0001)
-      .select($"l_orderkey", $"l_partkey").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val adj = scala.collection.mutable.Map.empty[Long, Set[Long]]
-    li.groupBy(_._1).values.foreach { grp =>
-      val parts = grp.map(_._2).distinct
-      for (a <- parts; b <- parts if a != b)
-        adj(a) = adj.getOrElse(a, Set.empty) + b
-    }
+    val adj = coAdjacency()
     val top = rows.head
     val (u, v) = (top.getAs[Long]("u"), top.getAs[Long]("v"))
     val expected = (adj(u) & adj(v)).size
@@ -402,15 +407,7 @@ class AnalyticsSpec extends SparkSpec {
     // driver replay: adjacency from lineitem, then the exact same
     // DECIMAL(18,9)-quantized 1/ln(deg w) terms summed over the true
     // common-neighbor set of the top edge
-    val li = graft.sources.Tables.lineitem(spark, Sf0001)
-      .select($"l_orderkey", $"l_partkey").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val adj = scala.collection.mutable.Map.empty[Long, Set[Long]]
-    li.groupBy(_._1).values.foreach { grp =>
-      val parts = grp.map(_._2).distinct
-      for (a <- parts; b <- parts if a != b)
-        adj(a) = adj.getOrElse(a, Set.empty) + b
-    }
+    val adj = coAdjacency()
     val top = rows.head
     val (u, v) = (top.getAs[Long]("u"), top.getAs[Long]("v"))
     val commons = adj(u) & adj(v)
@@ -421,6 +418,54 @@ class AnalyticsSpec extends SparkSpec {
     }.sum.toDouble
     assert(top.getAs[Double]("aa_score") == expected,
       s"edge ($u,$v): aa ${top.getAs[Double]("aa_score")} vs replay $expected")
+  }
+
+  test("q_local_cc: per-node triangle counts and local_cc replay from a driver adjacency walk") {
+    val rows = q("q_local_cc").collect()
+    assert(rows.length == 20)
+    val adj = coAdjacency()
+    // triangles at n = edges among n's neighbors (each seen from both ends)
+    val nTri = adj.map { case (n, nb) =>
+      n -> nb.toSeq.map(w => (adj(w) & nb).size.toLong).sum / 2
+    }
+    val top = nTri.toSeq.filter(_._2 > 0).sortBy { case (n, t) => (-t, n) }.take(20)
+    assert(rows.map(r => (r.getAs[Long]("node"), r.getAs[Long]("n_tri"))).toSeq == top)
+    for (r <- rows) {
+      val n = r.getAs[Long]("node")
+      val d = adj(n).size.toLong
+      assert(r.getAs[Long]("deg") == d, s"node $n")
+      assert(r.getAs[Double]("local_cc") == 2.0 * nTri(n).toDouble / (d * (d - 1)).toDouble,
+        s"node $n")
+    }
+  }
+
+  test("q_basket_lift: supports, order count and lift recounted from distinct (order, part) rows") {
+    val rows = q("q_basket_lift").collect()
+    assert(rows.nonEmpty)
+    val li = graft.sources.Tables.lineitem(spark, Sf0001)
+      .select($"l_orderkey", $"l_partkey").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).distinct
+    val nOrders = li.map(_._1).distinct.length.toLong
+    val sup = li.groupBy(_._2).view.mapValues(_.length.toLong).toMap
+    val pairSup = li.groupBy(_._1).values.toVector.flatMap { g =>
+      val ps = g.map(_._2).toSeq
+      for (a <- ps; b <- ps if a < b) yield (a, b)
+    }.groupBy(identity).view.mapValues(_.size.toLong).toMap
+    def lift(u: Long, v: Long): Double =
+      (pairSup((u, v)).toDouble * nOrders.toDouble) / (sup(u).toDouble * sup(v).toDouble)
+    // MinPairSupport = 3; top 20 by lift desc, then (u, v)
+    val top = pairSup.filter(_._2 >= 3).keys.toSeq
+      .sortBy { case (u, v) => (-lift(u, v), u, v) }(
+        Ordering.Tuple3(Ordering.Double.TotalOrdering, Ordering.Long, Ordering.Long))
+      .take(20)
+    assert(rows.map(r => (r.getAs[Long]("u"), r.getAs[Long]("v"))).toSeq == top)
+    for (r <- rows) {
+      val (u, v) = (r.getAs[Long]("u"), r.getAs[Long]("v"))
+      assert(r.getAs[Long]("pair_sup") == pairSup((u, v)), s"pair ($u,$v)")
+      assert(r.getAs[Long]("sup_u") == sup(u) && r.getAs[Long]("sup_v") == sup(v))
+      assert(r.getAs[Long]("n_orders") == nOrders)
+      assert(r.getAs[Double]("lift") == lift(u, v), s"pair ($u,$v)")
+    }
   }
 
   test("q_link_scores: the one-pass frame agrees edge-for-edge with both single-score queries") {

@@ -12,79 +12,31 @@ class OperatorsSpec extends SparkSpec {
 
   private def q(name: String) = SparkEntry.queries(name)(spark, Sf0001)
 
-  test("coEdges alternate builds (prepart/grouped) equal the join form") {
-    // the r14 AbWedge candidates must be drop-in: identical distinct
-    // (u < v) edge sets at both test SFs
-    for (sf <- Seq(Sf0001, Sf001)) {
-      val base = graft.operators.GraphOps.coEdgesPlan(spark, sf,
-        distinctFirst = false)
-      for (m <- Seq("prepart", "grouped")) {
-        val alt = graft.operators.GraphOps.coEdgesPlan(spark, sf,
-          distinctFirst = false, mode = m)
-        assert(alt.exceptAll(base).count() == 0 &&
-          base.exceptAll(alt).count() == 0, s"mode=$m sf=$sf")
-      }
-    }
-  }
-
-  test("fused co-occurrence front half equals the split build") {
-    // r16 optimization: edges + degrees + the doubled directed view
-    // all come out of ONE node-keyed exchange. Pin set equality of
-    // edges and degrees vs the pre-r16 split build, and that the
-    // directed frame is exactly edges ∪ flip(edges). sf0.001 only
-    // (driver test budget); the oracle covers sf0.01 on the suite path.
-    val sf = Sf0001
-    val (eS, degS) = graft.operators.GraphOps.coEdgesDegVariant(spark, sf,
-      fused = false)
-    val (eF, degF, dirF) = graft.operators.GraphOps.coEdgesDegFused(spark, sf)
-    assert(eF.exceptAll(eS).count() == 0 && eS.exceptAll(eF).count() == 0,
-      "edges differ")
-    assert(degF.exceptAll(degS).count() == 0 && degS.exceptAll(degF).count() == 0,
-      "degrees differ")
-    val dirS = eS.select(col("u").as("a"), col("v").as("b"))
-      .unionAll(eS.select(col("v").as("a"), col("u").as("b")))
-    assert(dirF.exceptAll(dirS).count() == 0 && dirS.exceptAll(dirF).count() == 0,
-      "directed view differs")
-    // the consumers that switched to the directed view stay
-    // row-identical INCLUDING order
-    for (q <- Seq("q_closeness", "q_ppr", "q_brand_mixing")) {
-      val fused = SparkEntry.queries(q)(spark, sf).collect().toSeq
-      val split = q match {
-        case "q_closeness" => graft.operators.GraphOps.closenessPlan(spark, sf,
-          msbfs = true, fusedFront = false).collect().toSeq
-        case "q_ppr" => graft.operators.GraphOps.pprPlan(spark, sf,
-          slimBlend = true, fusedFront = false).collect().toSeq
-        case _ => Seq.empty
-      }
-      if (split.nonEmpty) assert(fused == split, s"$q differs")
-    }
-  }
-
-  test("fused LPA front half equals the split strong-edge build") {
-    // r16: one orderkey exchange (in-stage dedup) + one node-keyed
-    // exchange (in-stage support count) replace the split build's five
-    // exchanges. Labels and edges must be identical sets. sf0.001 only
-    // (driver test budget); oracle covers sf0.01 on the suite path.
-    val (eS, lS) = graft.operators.GraphOps.lpaLabelsPlan(spark, Sf0001,
-      argMax = true, fusedFront = false)
-    val (eF, lF) = graft.operators.GraphOps.lpaLabelsPlan(spark, Sf0001,
-      argMax = true, fusedFront = true)
-    assert(eF.exceptAll(eS).count() == 0 && eS.exceptAll(eF).count() == 0,
-      "strong edges differ")
-    assert(lF.exceptAll(lS).count() == 0 && lS.exceptAll(lF).count() == 0,
-      "labels differ")
-  }
-
-  test("basket_lift fused front equals the split build") {
-    // r16 continuation: one orderkey exchange with in-stage dedup +
-    // checkpoint replaces the split distinct + per-side re-exchanges.
-    // All columns are exact integers or one IEEE division of exact
-    // casts, so the output must be row-identical incl. order.
-    val sp = graft.operators.GraphOps.basketLiftPlan(spark, Sf0001,
-      fusedFront = false).collect().toSeq
-    val fu = graft.operators.GraphOps.basketLiftPlan(spark, Sf0001,
-      fusedFront = true).collect().toSeq
-    assert(fu == sp)
+  test("co-occurrence front half: edges, directed view and degrees match a recount") {
+    // coEdgesDegFused feeds every co-occurrence graph query; recount
+    // all three frames on the driver from the raw sf0.001 lineitem rows
+    val (e, deg, dir) = graft.operators.GraphOps.coEdgesDegFused(spark, Sf0001)
+    val li = graft.sources.Tables.lineitem(spark, Sf0001)
+      .select("l_orderkey", "l_partkey").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val want = li.groupBy(_._1).values.flatMap { g =>
+      val ps = g.map(_._2).distinct.toSeq
+      for (u <- ps; v <- ps if u < v) yield (u, v)
+    }.toSet
+    val wantDir = want ++ want.map(_.swap)
+    val eRows = e.collect().map(r => (r.getAs[Long]("u"), r.getAs[Long]("v"))).toSeq
+    assert(eRows.size == eRows.toSet.size, "duplicate edge rows")
+    assert(eRows.toSet == want, "edges differ from the distinct intra-order pairs")
+    val dirRows = dir.collect().map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"))).toSeq
+    assert(dirRows.size == dirRows.toSet.size, "duplicate directed rows")
+    assert(dirRows.toSet == wantDir, "directed view is not e ∪ flip(e)")
+    val degRows = deg.collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("deg")).toSeq
+    assert(degRows.size == degRows.toMap.size, "duplicate degree rows")
+    assert(degRows.toMap ==
+      wantDir.groupBy(_._1).map { case (n, out) => n -> out.size.toLong },
+      "deg is not the out-degree over the directed view")
+    // qPpr blends without a deg scaffold join, which relies on this
+    assert(degRows.forall(_._2 >= 1), "a node with degree 0")
   }
 
   test("dedup_prefix shingle checkpoint and winnow fp-keyed checkpoint change nothing") {
@@ -170,65 +122,6 @@ class OperatorsSpec extends SparkSpec {
       assert(aD == aM, "ahash differs across cache settings")
       assert(pD == pM, "phash differs across cache settings")
     } finally graft.operators.Multimodal.setImgDiskCache(false)
-  }
-
-  test("hits p-keyed fused edge build equals the distinct-keyed build") {
-    // r16: dedup + in-degree + iter-2 authority agg ride one p-keyed
-    // exchange. Scores are decimal-pinned (partition-order-free), so
-    // the whole output must be row-identical incl. order.
-    val di = graft.operators.GraphOps.hitsStage(spark, Sf0001, 3,
-      fusedE = false).collect().toSeq
-    val fu = graft.operators.GraphOps.hitsStage(spark, Sf0001, 3,
-      fusedE = true).collect().toSeq
-    assert(fu == di)
-  }
-
-  test("local_cc fused triangle stream equals the checkpointed form") {
-    // r16: the cold path streams triangle rows straight into the
-    // corner aggregate (no O(T) checkpoint). Row-identical incl. order.
-    val ck = graft.operators.GraphOps.localCcPlan(spark, Sf0001,
-      singleExplode = true, fuseTri = false).collect().toSeq
-    val fu = graft.operators.GraphOps.localCcPlan(spark, Sf0001,
-      singleExplode = true, fuseTri = true).collect().toSeq
-    assert(fu == ck)
-  }
-
-  test("closeness MS-BFS bitmask form equals the (seed,node)-pair form") {
-    // r15 optimization: the suite path rewrites the 8-seed BFS as
-    // MS-BFS (one row per node, seed-bitmask state). Distances are
-    // identical by construction; pin row-for-row INCLUDING output
-    // order. sf0.001 ONLY (r15 ran both SFs and blew the driver's
-    // ~30-min test budget — VERIFY_r15 tests_ok false; the sf0.01 leg
-    // is covered end-to-end by the DuckDB oracle on the suite path).
-    for (sf <- Seq(Sf0001)) {
-      val pair = graft.operators.GraphOps.closenessPlan(spark, sf, msbfs = false)
-        .collect().toSeq
-      val msb = graft.operators.GraphOps.closenessPlan(spark, sf, msbfs = true)
-        .collect().toSeq
-      assert(msb == pair, s"sf=$sf")
-    }
-  }
-
-  test("PPR slim blend equals the deg-scaffold blend") {
-    // sf0.001 only — driver test budget; oracle covers sf0.01
-    for (sf <- Seq(Sf0001)) {
-      val a = graft.operators.GraphOps.pprPlan(spark, sf, slimBlend = false)
-        .collect().toSeq
-      val b = graft.operators.GraphOps.pprPlan(spark, sf, slimBlend = true)
-        .collect().toSeq
-      assert(a == b, s"sf=$sf")
-    }
-  }
-
-  test("scored-edge fused triangle stream equals the checkpointed form") {
-    // sf0.001 only — driver test budget; oracle covers sf0.01
-    for (sf <- Seq(Sf0001)) {
-      val ck = graft.operators.GraphOps.linkScoresPlan(spark, sf, merge = false)
-      val fu = graft.operators.GraphOps.linkScoresPlan(spark, sf,
-        merge = false, fuseTri = true)
-      assert(fu.exceptAll(ck).count() == 0 && ck.exceptAll(fu).count() == 0,
-        s"sf=$sf")
-    }
   }
 
   test("ann_recall shared cells/codes frames equal the solo chains") {

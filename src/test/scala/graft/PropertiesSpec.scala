@@ -352,27 +352,6 @@ class PropertiesSpec extends SparkSpec {
     }
   }
 
-  test("graft_sorted_intersect == array_intersect element-for-element on " +
-      "random sorted arrays") {
-    graft.functions.VectorExpressions.register(spark)
-    val arrGen = for {
-      na <- Gen.choose(0, 30)
-      nb <- Gen.choose(0, 30)
-      a <- Gen.listOfN(na, Gen.choose(0L, 40L))
-      b <- Gen.listOfN(nb, Gen.choose(0L, 40L))
-    } yield (a.distinct.sorted, b.distinct.sorted)
-    forAllSampled(arrGen, trials = 30) { case (a, b) =>
-      val row = Seq((a, b)).toDF("a", "b")
-        .select(
-          call_function("graft_sorted_intersect", col("a"), col("b")).as("merge"),
-          array_intersect(col("a"), col("b")).as("hash"))
-        .head()
-      assert(row.getSeq[Long](0) == row.getSeq[Long](1),
-        s"merge=${row.getSeq[Long](0)} hash=${row.getSeq[Long](1)} a=$a b=$b")
-      assert(row.getSeq[Long](0) == a.filter(b.toSet))
-    }
-  }
-
   test("graft_sorted_intersect_ge: exact count for pairs reaching alpha; any " +
       "early-exit value agrees with the truth on which side of alpha it falls") {
     graft.functions.VectorExpressions.register(spark)
@@ -435,11 +414,6 @@ class PropertiesSpec extends SparkSpec {
         col("a"), col("b"))).head()
     }
     assert(cnt.getMessage.contains("non-nullable"))
-    val arr = intercept[org.apache.spark.sql.AnalysisException] {
-      longNullable.select(call_function("graft_sorted_intersect",
-        col("a"), col("b"))).head()
-    }
-    assert(arr.getMessage.contains("non-nullable"))
   }
 
   test("triangleCount == triangleRows count == brute force on random graphs") {
