@@ -66,12 +66,21 @@ class StreamingSpec extends SparkSpec {
     finally s.close()
   }
 
+  private def ev(id: java.lang.Long, minute: Int, user: Long, tpe: String, value: Double): Row =
+    Row(id, ts(f"2024-01-01 00:$minute%02d:00"), user, tpe, value, s"""{"k": $minute}""")
+
+  /** the keyed view's contract: the latest row per non-null event_id */
+  private def latestPerKey(rows: DataFrame): DataFrame = {
+    val latestFirst = org.apache.spark.sql.expressions.Window.partitionBy(col("event_id"))
+      .orderBy(rows.columns.filterNot(_ == "event_id").sorted.map(col(_).desc_nulls_last).toSeq: _*)
+    rows.filter(col("event_id").isNotNull)
+      .withColumn("rn", row_number().over(latestFirst)).filter(col("rn") === 1).drop("rn")
+  }
+
   test("foreachBatch dual sink: history appends, keyed view upserts idempotently (T3/T7)") {
     val history = tmp("hist")
     val view = tmp("view")
     val dim = Enrich.customerDim(spark, Sf0001)
-    def ev(id: java.lang.Long, minute: Int, user: Long, tpe: String, value: Double): Row =
-      Row(id, ts(f"2024-01-01 00:$minute%02d:00"), user, tpe, value, s"""{"k": $minute}""")
     val b0 = events(
       ev(1L, 0, 1L, "play", 10.0),
       ev(2L, 1, 2L, "pause", 20.0),
@@ -88,11 +97,8 @@ class StreamingSpec extends SparkSpec {
       EventPipeline.writeBatch(history, view)(Enrich.transform(batches(id), dim), id.toLong)
       val expected = Enrich.transform(batches.take(id + 1).reduce(_ unionByName _), dim)
       assert(sameRows(spark.read.parquet(history), expected), s"history after batch $id")
-      val latestFirst = org.apache.spark.sql.expressions.Window.partitionBy(col("event_id"))
-        .orderBy(expected.columns.filterNot(_ == "event_id").sorted.map(col(_).desc_nulls_last).toSeq: _*)
-      val expectedView = expected.filter(col("event_id").isNotNull)
-        .withColumn("rn", row_number().over(latestFirst)).filter(col("rn") === 1).drop("rn")
-      assert(sameRows(spark.read.parquet(view).drop("bucket"), expectedView), s"view after batch $id")
+      assert(sameRows(spark.read.parquet(view).drop("bucket"), latestPerKey(expected)),
+        s"view after batch $id")
       val files = viewFiles(view)
       assert(files.nonEmpty && files.size <= shufflePartitions, s"view files after batch $id: $files")
       assert(files.forall(_.getParent.getFileName.toString == "bucket=0"), files)
@@ -126,6 +132,65 @@ class StreamingSpec extends SparkSpec {
     assert(e.getMessage.contains("bucket=1") && e.getMessage.contains("rebuild"), e.getMessage)
     // refused before writing: the old layout is untouched
     assert(spark.read.parquet(view).count() == 2)
+  }
+
+  test("keyed view upsert refuses a view whose schema differs from the batch") {
+    val batch = Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("event_id", "event_type", "value")
+    val update = Seq((2L, "b2", 21.0)).toDF("event_id", "event_type", "value")
+    val drifted = Seq(
+      "an extra column" -> batch.withColumn("note", lit("kept")),
+      "a changed column type" -> batch.withColumn("value", $"value".cast("string")))
+    drifted.foreach { case (what, old) =>
+      val view = tmp("view")
+      EventPipeline.upsertKeyedView(old, view)
+      val files = viewFiles(view).map(f => f -> Files.getLastModifiedTime(f))
+      val rows = spark.read.parquet(view).collect().toSet
+      // read by name with the batch's schema, the extra column would be
+      // dropped and the rewrite would lose it: the footer check refuses
+      val e = intercept[IllegalStateException](EventPipeline.upsertKeyedView(update, view))
+      assert(e.getMessage.contains("stores columns") && e.getMessage.contains("rebuild"),
+        s"$what: ${e.getMessage}")
+      // refused before writing: same files, same rows, still readable
+      assert(viewFiles(view).map(f => f -> Files.getLastModifiedTime(f)) == files, what)
+      assert(spark.read.parquet(view).collect().toSet == rows, what)
+    }
+  }
+
+  test("concurrent sinks: a failed history append fails the batch, leaves nothing cached, " +
+      "and a replay converges") {
+    val dim = Enrich.customerDim(spark, Sf0001)
+    val batch = Enrich.transform(events(
+      ev(1L, 0, 1L, "play", 10.0),
+      ev(1L, 1, 1L, "play", 11.0), // in-batch duplicate key
+      ev(2L, 2, 2L, "pause", 20.0)), dim)
+    val view = tmp("view")
+    // a regular file where the history directory should be: the append fails
+    val notADir = Files.createTempFile("hist", ".file").toString
+    val e = intercept[Exception](EventPipeline.writeBatch(notADir, view)(batch, 0L))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains(notADir)), e)
+    assert(batch.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    // the view may or may not have committed; replaying the batch into
+    // good sinks converges either way
+    val history = tmp("hist")
+    EventPipeline.writeBatch(history, view)(batch, 0L)
+    assert(sameRows(spark.read.parquet(history), batch))
+    assert(sameRows(spark.read.parquet(view).drop("bucket"), latestPerKey(batch)))
+  }
+
+  test("the enrichment dimension is scanned once per query, not once per micro-batch") {
+    val src = tmp("dsrc")
+    Tables.events(spark, Sf0001).repartition(3).write.mode("overwrite").parquet(src)
+    // every row the dimension's scan produces passes this counter
+    val dimRowsRead = spark.sparkContext.longAccumulator("dimension rows read")
+    val counted = udf { (name: String) => dimRowsRead.add(1L); name }
+    val dim = Enrich.customerDim(spark, Sf0001).withColumn("c_name", counted($"c_name"))
+    val dimRows = Enrich.customerDim(spark, Sf0001).count()
+    val q = EventPipeline.startEnrichment(EventPipeline.readEventStream(spark, src), dim,
+      tmp("dhist"), tmp("dview"), tmp("dchk"), Trigger.AvailableNow())
+    try q.awaitTermination(120000) finally dim.unpersist()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 3) // one file per micro-batch
+    assert(dimRowsRead.value == dimRows, s"${dimRowsRead.value / dimRows.toDouble} dimension scans")
   }
 
   test("watermarked tumbling window: closed windows emit, late data dropped (T8)") {
