@@ -69,6 +69,35 @@ import org.apache.spark.sql.SparkSession
   * far — a clean artifact instead of a driver rc-124 kill.
   */
 object Bench {
+  /** The cold-pass barrier every timed pass starts behind (Bench,
+    * AbWedge, ScaleProbe). It drops cross-query residue BEFORE the
+    * clock starts: the queries using localCheckpoint leave their
+    * blocks registered until the ContextCleaner catches up, and ~200
+    * executions of residue in one JVM turn into GC churn that lands on
+    * whichever query runs when the heap fills (measured: a 1.3 s query
+    * spiking to 16 s mid-suite). The memos go FIRST: unpersisting
+    * would orphan their localCheckpoint blocks anyway, and clearing
+    * them keeps every timed repetition COLD-path — the cross-query
+    * sharing speeds up pipeline runs (graft.Verify), never the
+    * published numbers.
+    *
+    * `settle` adds the GC → settle → GC step: the first collection
+    * queues the now-unreferenced checkpoint/shuffle blocks to the
+    * async ContextCleaner, the settle gives the cleaner thread a beat
+    * to actually drop them (block files included), and the second
+    * collection reclaims the freed heap — so the timed pass starts
+    * from a quiet heap instead of paying the PREVIOUS query's full GC
+    * mid-flight (the documented ±30%-plus swing class on the heavy
+    * graph lines: same binary, 15 vs 31 s across artifacts). */
+  private[graft] def clearResidue(spark: SparkSession, settle: Boolean = true): Unit = {
+    graft.operators.TextOps.clearGraphCache()
+    graft.operators.GraphOps.clearGraphCache()
+    graft.operators.VectorOps.clearModelCache()
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    if (settle) { System.gc(); Thread.sleep(150); System.gc() }
+  }
+
   def main(args: Array[String]): Unit = {
     val wall0 = System.nanoTime()
     def wallSec: Double = (System.nanoTime() - wall0) / 1e9
@@ -94,37 +123,8 @@ object Bench {
     // tripwire only fires on slower): record the failure, keep it out
     // of the JSON numbers, and exit nonzero at the end
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    def clearResidue(): Unit = {
-      // drop cross-query residue BEFORE the clock starts: the several
-      // queries using localCheckpoint leave their blocks
-      // registered until the ContextCleaner catches up, and ~200
-      // executions of residue in one JVM turns into GC churn that lands
-      // on whichever query runs when the heap fills (measured: a 1.3 s
-      // query spiking to 16 s mid-suite)
-      // the graph memo must go FIRST: unpersisting would orphan its
-      // localCheckpoint blocks anyway, and clearing it keeps every
-      // timed repetition COLD-path — the cross-query sharing speeds up
-      // pipeline runs (graft.Verify), never the published numbers
-      graft.operators.TextOps.clearGraphCache()
-      graft.operators.GraphOps.clearGraphCache()
-      graft.operators.VectorOps.clearModelCache()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    }
-    def gcSettle(): Unit = {
-      // GC → settle → GC barrier: the first collection queues the
-      // now-unreferenced checkpoint/shuffle blocks to the async
-      // ContextCleaner, the settle gives the cleaner thread a beat to
-      // actually drop them (block files included), and the second
-      // collection reclaims the freed heap — so the timed pass starts
-      // from a quiet heap instead of paying the PREVIOUS query's full
-      // GC mid-flight (the documented ±30%-plus swing class on the
-      // heavy graph lines: same binary, 15 vs 31 s across artifacts)
-      System.gc(); Thread.sleep(150); System.gc()
-    }
     def run(name: String, barrier: Boolean): Option[Double] = {
-      clearResidue()
-      if (barrier) gcSettle()
+      clearResidue(spark, settle = barrier)
       val t0 = System.nanoTime()
       try {
         SparkEntry.queries(name)(spark, sfDir)

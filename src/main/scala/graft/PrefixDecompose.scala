@@ -6,13 +6,15 @@ import org.apache.spark.sql.SparkSession
   * the diagnostic behind SCALING.json's note on the path's measured
   * exponent. For each corpus dir (default: the ScaleProbe synthesis
   * at /tmp/graft-scale/x4 and x16) and each shuffle-partition setting,
-  * it prices three cumulative plans:
+  * it prices three cumulative plans over the suite's shingle stream
+  * (TextOps.prefixShingles):
   *
   *   shingles   — the distinct 3-shingle explode (narrow, no shuffle)
   *   candidates — + df agg, canonical-order window, prefix join,
   *                pair groupBy and the lossless filters
   *   full       — + the per-doc sorted-array build and the
-  *                array_intersect verify join (the suite query)
+  *                graft_sorted_intersect_ge verify join (the suite
+  *                query)
   *
   * and counts the shingle stream and surviving candidates, so a
   * super-linear TIME reading can be attributed: if the counts scale

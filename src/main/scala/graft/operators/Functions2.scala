@@ -538,24 +538,17 @@ object Functions2 {
   // bounds, skippable ⇔ max < lo OR min > hi. Scale shape: two
   // bucket-partitioned parallel rank passes over part, one 32-key agg
   // per layout, a 4-row output.
-  private def qSkippingStats(s: SparkSession, d: String): DataFrame =
-    skippingStatsPlan(s, d, pinBase = true)
-
-  /** [[qSkippingStats]] with the base pin parametrized (AbWedge A/B —
-    * the r12 verdict flagged the pin as unvalidated-by-measurement;
-    * the suite path is pinBase = true pending that verdict). */
-  private[graft] def skippingStatsPlan(s: SparkSession, d: String,
-      pinBase: Boolean): DataFrame = {
+  private def qSkippingStats(s: SparkSession, d: String): DataFrame = {
     val z = zValueSql("p_size", "(p_partkey % 64)")
     // pin the interleaved base: it feeds TWO ScaleRank calls, each of
     // whose model passes (min/max agg + bucket counts) plus output
     // plan replays the upstream lineage — without the pin the part
     // scan + 16-term Morton interleave recompute ~6× (the q_bm25
     // multi-consumer discipline)
-    val base0 = Tables.part(s, d)
+    val base = Tables.part(s, d)
       .withColumn("pmod", (col("p_partkey") % 64).cast("long"))
       .withColumn("z", expr(z))
-    val base = if (pinBase) base0.localCheckpoint() else base0
+      .localCheckpoint()
     val arrival = ScaleRank.withGlobalRank(base,
         col("p_partkey"), Seq(col("p_partkey")), "__rk", "__n")
       .withColumn("layout", lit("arrival"))

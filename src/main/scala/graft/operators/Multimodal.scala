@@ -45,18 +45,13 @@ object Multimodal {
   // single-threaded and serialize concurrent decoders on filesystem
   // locks (quiet-host probe, 20k encode+decode+ahash roundtrips:
   // 2.30 → 1.03 s on 1 thread; 1.19 → 0.21 s for 2× the work on 16
-  // threads — the disk cache was the "shared codec state" that made
-  // the first image-spread A/B lose). Set in the object initializer so
-  // ANY JVM that touches the codec path (every call routes through
-  // this object, driver or executor) flips it before the first codec
-  // call.
+  // threads). Set in the object initializer so ANY JVM that touches
+  // the codec path (every call routes through this object, driver or
+  // executor) flips it before the first codec call.
   ImageIO.setUseCache(false)
 
-  /** A/B-only toggle (AbWedge / OperatorsSpec): restores the JDK
-    * default so the old disk-cache form stays measurable in one JVM.
-    * Local-mode harness device — never called on a suite path. */
-  private[graft] def setImgDiskCache(on: Boolean): Unit =
-    ImageIO.setUseCache(on)
+  private def docIds(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d).select(col("doc_id"))
 
   /** Doc-id scan floored at the session's default parallelism (guide
     * §2.5 — an input smaller than one split serializes the whole
@@ -66,12 +61,10 @@ object Multimodal {
     * the scan actually under-splitting: at real corpus sizes the scan
     * is already parallel and this is a no-op — no constant tuned for
     * local mode, and the shuffled rows are bare 8-byte ids. */
-  private def docIdsSpread(s: SparkSession, d: String,
-      spread: Boolean): DataFrame = {
-    val ids = Tables.documents(s, d).select(col("doc_id"))
+  private def docIdsSpread(s: SparkSession, d: String): DataFrame = {
+    val ids = docIds(s, d)
     val want = s.sparkContext.defaultParallelism
-    if (spread && ids.rdd.getNumPartitions < want)
-      ids.repartition(want, col("doc_id"))
+    if (ids.rdd.getNumPartitions < want) ids.repartition(want, col("doc_id"))
     else ids
   }
 
@@ -197,17 +190,11 @@ object Multimodal {
   // Scale shape: narrow decode map (bytes dropped immediately), one
   // 64-bit-key hash aggregate via window — no pairwise join; a
   // hamming-band refine (SimHash machinery) is the documented next
-  // stage for near-dups at distance > 0.
-  // spread = true ADJUDICATED r16 s4 (ahashnc_spread 5/7, median
-  // 1.134 → 1.026 under the no-cache codec; the s3 rejection was an
-  // artifact of the ImageIO disk cache serializing the decoders).
-  private def qImageAhash(s: SparkSession, d: String): DataFrame =
-    imageAhashPlan(s, d, spread = true)
-
-  private[graft] def imageAhashPlan(s: SparkSession, d: String,
-      spread: Boolean): DataFrame = {
+  // stage for near-dups at distance > 0. The doc-id scan is spread:
+  // the decode map is the whole cost and nothing loops behind it.
+  private def qImageAhash(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val hashes = docIdsSpread(s, d, spread).as[Long]
+    val hashes = docIdsSpread(s, d).as[Long]
       .mapPartitions(it => it.map(id => ahash(MediaRow(id, synthPng(id)))))
       .toDF()
     val byHash = org.apache.spark.sql.expressions.Window.partitionBy("ahash")
@@ -291,18 +278,11 @@ object Multimodal {
   // the full frequency-domain chain exact. Scale shape: narrow decode
   // map, one hash-key window; the DCT is O(16²·64) integer ops per
   // image inside the map — no shuffle sees anything but the 64-char
-  // hash.
-  // spread ADJUDICATED A WASH r16 s4 under the no-cache codec
-  // (phashnc_spread 3/7, medians 0.871/0.870) — the DCT map is cheap
-  // enough post-nocache that the extra exchange buys nothing; stays
-  // unspread.
-  private def qImagePhash(s: SparkSession, d: String): DataFrame =
-    imagePhashPlan(s, d, spread = false)
-
-  private[graft] def imagePhashPlan(s: SparkSession, d: String,
-      spread: Boolean): DataFrame = {
+  // hash. The doc-id scan is not spread: the DCT map is cheap enough
+  // that an extra exchange buys nothing.
+  private def qImagePhash(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val hashes = docIdsSpread(s, d, spread).as[Long]
+    val hashes = docIds(s, d).as[Long]
       .mapPartitions(it => it.map(id => phash(MediaRow(id, synthPng(id)))))
       .toDF()
     val byHash = org.apache.spark.sql.expressions.Window.partitionBy("phash")
@@ -329,23 +309,13 @@ object Multimodal {
   // CC all under one hash gate. Scale shape: decode is a narrow map
   // (pinned once — it is the expensive stage at real image sizes),
   // the band join runs over DISTINCT signatures, CC over keepers.
-  // spread = false RE-ADJUDICATED r16 s4 (imgnc_1p 5.181 vs
-  // imgnc_spread 6.675 median, spread 1/7) — the s3 rejection blamed
-  // "shared codec state", which turned out to be ImageIO's disk-backed
-  // stream cache (now off, see the object init); with that gone the
-  // decode map is ~1 s and the loss moved to the REAL cost: spreading
-  // the checkpointed hash frame to defaultParallelism partitions makes
-  // every downstream tiny round (banded Hamming join + pointer-doubling
-  // CC over keepers) pay more per-task overhead than the decode saves.
-  // The single-pass consumers with no loop behind them (ahash,
-  // features) DO ship spread = true.
-  private def qImageDedup(s: SparkSession, d: String): DataFrame =
-    imageDedupPlan(s, d, spread = false)
-
-  private[graft] def imageDedupPlan(s: SparkSession, d: String,
-      spread: Boolean): DataFrame = {
+  // The doc-id scan is not spread: spreading the checkpointed hash
+  // frame to defaultParallelism partitions makes every downstream tiny
+  // round (banded Hamming join + pointer-doubling CC over keepers) pay
+  // more per-task overhead than the ~1 s decode map saves.
+  private def qImageDedup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val hashes = docIdsSpread(s, d, spread).as[Long]
+    val hashes = docIds(s, d).as[Long]
       .mapPartitions(it => it.map(id => ahash(MediaRow(id, synthPng(id)))))
       .toDF()
       .localCheckpoint() // decode feeds sigs AND the final join — pay it once
@@ -380,17 +350,12 @@ object Multimodal {
   // Partition-batched encode→decode→feature-extract over the typed
   // Dataset — the mapInPandas-shaped path, with a REAL codec on both
   // sides. ORACLED: DuckDB computes the same features analytically
-  // from the pixel formula (see the object doc).
-  // spread = true ADJUDICATED r16 s4 (mmfnc_spread 6/7, median 1.436
-  // → 1.164 under the no-cache codec — decode here reads every pixel
-  // into an md5 string, the heaviest per-image map in the family).
-  private def qMultimodalFeatures(s: SparkSession, d: String): DataFrame =
-    multimodalFeaturesPlan(s, d, spread = true)
-
-  private[graft] def multimodalFeaturesPlan(s: SparkSession, d: String,
-      spread: Boolean): DataFrame = {
+  // from the pixel formula (see the object doc). The doc-id scan is
+  // spread: decode here reads every pixel into an md5 string, the
+  // heaviest per-image map in the family.
+  private def qMultimodalFeatures(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val media = docIdsSpread(s, d, spread).as[Long]
+    val media = docIdsSpread(s, d).as[Long]
       .mapPartitions(it => it.map(id => MediaRow(id, synthPng(id))))
     media
       .mapPartitions(it => it.map(decode))
@@ -476,13 +441,9 @@ object Multimodal {
   // the pack→bytes→parse roundtrip is sample-exact. Scale shape:
   // synthesis and parse are narrow maps (no shuffle); bytes drop at
   // the project; the only ordering is the oracle-mandated final sort.
-  private def qAudioStats(s: SparkSession, d: String): DataFrame =
-    audioStatsPlan(s, d, spread = true)
-
-  private[graft] def audioStatsPlan(s: SparkSession, d: String,
-      spread: Boolean): DataFrame = {
+  private def qAudioStats(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val media = docIdsSpread(s, d, spread).as[Long]
+    val media = docIdsSpread(s, d).as[Long]
       .mapPartitions(it => it.map(id => MediaRow(id, synthPcm(id))))
       .toDF()
     media
@@ -514,13 +475,9 @@ object Multimodal {
     * The oracle replays frames ANALYTICALLY from the waveform formula
     * — bytes never cross engines, so a green hash re-proves the
     * pack→parse roundtrip at frame granularity. */
-  private def qAudioFrames(s: SparkSession, d: String): DataFrame =
-    audioFramesPlan(s, d, spread = true)
-
-  private[graft] def audioFramesPlan(s: SparkSession, d: String,
-      spread: Boolean): DataFrame = {
+  private def qAudioFrames(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val media = docIdsSpread(s, d, spread).as[Long]
+    val media = docIdsSpread(s, d).as[Long]
       .mapPartitions(it => it.map(id => MediaRow(id, synthPcm(id))))
       .toDF()
     val byDoc = org.apache.spark.sql.expressions.Window

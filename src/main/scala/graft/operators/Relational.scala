@@ -346,7 +346,7 @@ object Relational {
     * model-sized grid do the same fold in two stages (guide §1.2 —
     * pick the algorithm with fewer passes before tuning anything).
     * The recursive Spark form stays as [[stockReplayPlan]]
-    * (recursiveSim = true) for the AbWedge A/B and the parity spec;
+    * (recursiveSim = true) as the parity spec's reference;
     * q_month_spine keeps exercising WITH RECURSIVE in the declared
     * suite.
     *
@@ -430,11 +430,11 @@ object Relational {
   private def qStockReplay(s: SparkSession, d: String): DataFrame =
     stockReplayPlan(s, d, recursiveSim = false)
 
-  /** [[qStockReplay]] with the fold form parametrized (AbWedge pair
-    * stock_rec / stock_win; suite path recursiveSim = false since r15
-    * — see the reflection-identity note above). The recursive variant
-    * also swaps the spine back to its WITH RECURSIVE form, so it
-    * prices the full pre-r15 plan. */
+  /** [[qStockReplay]] with the fold form parametrized (the query runs
+    * recursiveSim = false — see the reflection-identity note above;
+    * RelationalShapesSpec compares it against recursiveSim = true). The
+    * recursive variant also swaps the spine back to its WITH RECURSIVE
+    * form. */
   private[graft] def stockReplayPlan(s: SparkSession, d: String,
       recursiveSim: Boolean): DataFrame = {
     Tables.orders(s, d).createOrReplaceTempView("orders_stock")

@@ -304,22 +304,11 @@ object ScaleProbe {
       useMin: Boolean = false,
       sink: Seq[Double] => Unit = _ => ())(f: => DataFrame): Double = {
     val ts = Seq.fill(passes) {
-      // memo first (as in Bench): unpersist would orphan its
-      // checkpoint blocks, and the probe's exponents must price the
-      // full COLD build per pass — a memo hit on pass 2+ would fake a
-      // sub-linear exponent for the md5-family paths
-      TextOps.clearGraphCache()
-      GraphOps.clearGraphCache()
-      VectorOps.clearModelCache()
-      s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      // GC → settle → GC, not a single collection: unpersist only
-      // QUEUES block drops to the async ContextCleaner; without the
-      // settle the next pass starts with the previous paths' checkpoint
-      // blocks still resident and pays their eviction + full GC
-      // mid-flight — the documented random-victim spike class (Bench's
-      // barrier rationale; observed here as one heavy path per probe
-      // run spiking 4-20× with a different victim each run)
-      System.gc(); Thread.sleep(150); System.gc()
+      // the probe's exponents must price the full COLD build per pass —
+      // a memo hit on pass 2+ would fake a sub-linear exponent for the
+      // md5-family paths; without the GC settle one heavy path per
+      // probe run spiked 4-20× with a different victim each run
+      graft.Bench.clearResidue(s)
       val t0 = System.nanoTime()
       f.write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9

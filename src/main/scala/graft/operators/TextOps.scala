@@ -40,9 +40,6 @@ object TextOps {
 
   private def tokens(c: String = "text") = split(col(c), " ")
 
-  /** Corpus with a replayed copy (ids shifted by 1,000,000) — the
-    * dedup fixture. Mirrored exactly in the oracle SQL CTE.
-    */
   /** Conditional scan spread (guide §2.5): floor a doc frame's
     * partitioning at the session's default parallelism before
     * CPU-heavy per-row extraction. The 594 KB sf0.1 documents.parquet
@@ -57,6 +54,9 @@ object TextOps {
     else df
   }
 
+  /** Corpus with a replayed copy (ids shifted by 1,000,000) — the
+    * dedup fixture. Mirrored exactly in the oracle SQL CTE.
+    */
   private def doubled(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select("doc_id", "text", "lang", "source", "n_chars")
     docs.union(docs.withColumn("doc_id", col("doc_id") + lit(1000000L))
@@ -760,25 +760,15 @@ object TextOps {
 
   /** Candidate pairs of the shingle join (pre-Jaccard-threshold),
     * exposed so the skew guard test can prove the DF cap bounds the
-    * pair blowup. `docs` needs (doc_id, text).
+    * pair blowup. `docs` needs (doc_id, text). The kept stream is
+    * keyed by sh and checkpointed: the tokenize + 3-shingle transform
+    * + both windows run ONCE per execution instead of once per join
+    * side, and both pair-join sides read the preserved sh partitioning
+    * exchange-free (the q_dedup_prefix / q_winnow_pairs device).
     */
-  def ngramCandidates(docs: DataFrame, dfCap: Int = ShingleDfCap): DataFrame =
-    ngramCandidatesPlan(docs, dfCap, keptCkpt = true, spread = true)
-
-  /** [[ngramCandidates]] with the kept-shingle materialization
-    * parametrized (AbWedge pairs ngram_lazy / ngram_ckpt and
-    * edit_lazy / edit_ckpt — the latter timed through q_dedup_edit,
-    * the heaviest consumer). keptCkpt = true keys the kept stream by
-    * sh and checkpoints it: the tokenize + 3-shingle transform + both
-    * windows run ONCE per execution instead of once per join side,
-    * and both pair-join sides read the preserved sh partitioning
-    * exchange-free (the q_dedup_prefix / q_winnow_pairs device). */
-  private[graft] def ngramCandidatesPlan(docs: DataFrame, dfCap: Int,
-      keptCkpt: Boolean, spread: Boolean = false): DataFrame = {
-    val kept0 = keptShingleHashes(
-      if (spread) spreadDocs(docs) else docs, dfCap)
-    val kept = if (keptCkpt) kept0.repartition(col("sh")).localCheckpoint()
-      else kept0
+  def ngramCandidates(docs: DataFrame, dfCap: Int = ShingleDfCap): DataFrame = {
+    val kept = keptShingleHashes(spreadDocs(docs), dfCap)
+      .repartition(col("sh")).localCheckpoint()
     val a = kept.select(col("doc_id").as("a_id"), col("n_sh").as("a_n"), col("sh"))
     val b = kept.select(col("doc_id").as("b_id"), col("n_sh").as("b_n"), col("sh"))
     a.join(b, Seq("sh")).filter(col("a_id") < col("b_id"))
@@ -794,13 +784,7 @@ object TextOps {
   // sharing a kept shingle (never the full cross product), compute
   // |A∩B| / |A∪B| from exact counts over the kept sets.
   private def qDedupNgram(s: SparkSession, d: String): DataFrame =
-    dedupNgramPlan(s, d, keptCkpt = true, spread = true)
-
-  /** [[qDedupNgram]] with the kept-shingle materialization exposed for
-    * the AbWedge pair (the suite path follows [[ngramCandidates]]). */
-  private[graft] def dedupNgramPlan(s: SparkSession, d: String,
-      keptCkpt: Boolean, spread: Boolean = false): DataFrame =
-    ngramCandidatesPlan(doubled(s, d), ShingleDfCap, keptCkpt, spread)
+    ngramCandidates(doubled(s, d), ShingleDfCap)
       .filter(col("jaccard") >= 0.5)
       .select("a_id", "b_id", "common", "jaccard")
       .orderBy("a_id", "b_id")
@@ -840,6 +824,16 @@ object TextOps {
     * into both engines so α is bit-identical. */
   private val PrefixAlpha = PrefixJaccard / (1 + PrefixJaccard)
 
+  /** The distinct 3-shingle stream q_dedup_prefix runs on — exposed so
+    * the PrefixDecompose diagnostic can price the PPJoin stages
+    * (index, candidates, verify) separately against scaled corpora. */
+  private[graft] def prefixShingles(s: SparkSession, d: String): DataFrame =
+    spreadDocs(doubled(s, d))
+      .withColumn("toks", tokens())
+      .select(col("doc_id"), explode(array_distinct(
+        expr("transform(sequence(1, greatest(size(toks) - 2, 1)), i -> concat_ws(' ', slice(toks, i, 3)))")))
+        .as("sh"))
+
   /** Prefix-filtered set-similarity join (PPJoin-style) — the LOSSLESS
     * alternative to q_dedup_ngram's DF cap: sort every doc's distinct
     * 3-shingle set in one GLOBAL canonical order (rarest shingle
@@ -855,64 +849,38 @@ object TextOps {
     * shape: df agg + per-doc window for the canonical order, a
     * prefix-token equi-join bounded by prefix length × per-shingle
     * prefix frequency, and a candidate-bounded refine join — measured
-    * near-linear by the scale probe alongside the capped path. */
-  /** The distinct 3-shingle stream q_dedup_prefix runs on — exposed so
-    * the PrefixDecompose diagnostic can price the PPJoin stages
-    * (index, candidates, verify) separately against scaled corpora. */
-  private[graft] def prefixShingles(s: SparkSession, d: String,
-      spread: Boolean = false): DataFrame =
-    (if (spread) spreadDocs(doubled(s, d)) else doubled(s, d))
-      .withColumn("toks", tokens())
-      .select(col("doc_id"), explode(array_distinct(
-        expr("transform(sequence(1, greatest(size(toks) - 2, 1)), i -> concat_ws(' ', slice(toks, i, 3)))")))
-        .as("sh"))
-
-  private def qDedupPrefix(s: SparkSession, d: String): DataFrame =
-    dedupPrefixPlan(s, d, geVerify = true, shCkpt = true, spread = true)
-
-  /** q_dedup_prefix with the verify stage parametrized (the AbWedge
-    * interleaved A/B drives both forms in one JVM; the suite query is
-    * geVerify = true). Verify: exact intersection via per-doc sorted
-    * shingle ARRAYS — the pair stream stays |candidates| rows (each
-    * carrying two ~|doc|-shingle payloads) instead of re-exploding to
+    * near-linear by the scale probe alongside the capped path.
+    *
+    * The shingle stream has THREE consumers — the df aggregate, the
+    * canonical-order join's probe side, and the per-doc sets
+    * aggregate — so it is checkpointed once: lazily the tokenize +
+    * 3-shingle transform would re-run for the doc-keyed sets aggregate.
+    * Verify: exact intersection via per-doc sorted shingle ARRAYS — the
+    * pair stream stays |candidates| rows (each carrying two
+    * ~|doc|-shingle payloads) instead of re-exploding to
     * |candidates|×|doc| narrow rows through two shuffle joins + a
     * groupBy. The graft_sorted_intersect_ge merge carries the lossless
     * bound count + min(remaining) ≥ overlap and bails to −1 the moment
     * a pair provably can't reach α = ⌈t/(1+t)·(|A|+|B|)⌉ (jaccard ≥ t
     * ⟺ overlap ≥ α, so −1 fails the final filter exactly when the
     * true count would) — survivors finish the merge and get the EXACT
-    * count, bit-identical to the size(array_intersect(..)) form it
-    * replaced, with no per-row hash-set build. */
-  private[graft] def dedupPrefixPlan(s: SparkSession, d: String,
-      geVerify: Boolean, shCkpt: Boolean = false,
-      spread: Boolean = false): DataFrame = {
+    * count, with no per-row hash-set build. */
+  private def qDedupPrefix(s: SparkSession, d: String): DataFrame = {
     graft.functions.VectorExpressions.register(s)
-    // shCkpt (AbWedge pair prefix_lazy / prefix_shckpt): the shingle
-    // explode stream has THREE consumers — the df aggregate, the
-    // canonical-order join's probe side, and the per-doc sets
-    // aggregate. Lazy, the tokenize + 3-shingle transform re-runs per
-    // consumer (ReuseExchange dedups the two sh-keyed subtrees but the
-    // doc-keyed sets aggregate re-scans); a localCheckpoint pays one
-    // O(|shingles|) materialization to run the extraction exactly once.
-    val sh0 = prefixShingles(s, d, spread)
-    val sh = if (shCkpt) sh0.localCheckpoint() else sh0
+    val sh = prefixShingles(s, d).localCheckpoint()
     val cand = ppjoinCandidates(sh)
     val sets = sh.groupBy(col("doc_id")).agg(
       sort_array(collect_list(col("sh"))).as("shs"),
       count(lit(1)).as("sz"))
-    val common =
-      if (geVerify)
-        call_function("graft_sorted_intersect_ge",
-          col("a_shs"), col("b_shs"),
-          ceil(lit(PrefixAlpha) * (col("a_sz") + col("b_sz")).cast("double"))
-            .cast("long"))
-      else expr("CAST(size(array_intersect(a_shs, b_shs)) AS BIGINT)")
     cand
       .join(sets.select(col("doc_id").as("a_id"),
         col("shs").as("a_shs"), col("sz").as("a_sz")), Seq("a_id"))
       .join(sets.select(col("doc_id").as("b_id"),
         col("shs").as("b_shs"), col("sz").as("b_sz")), Seq("b_id"))
-      .withColumn("common", common)
+      .withColumn("common", call_function("graft_sorted_intersect_ge",
+        col("a_shs"), col("b_shs"),
+        ceil(lit(PrefixAlpha) * (col("a_sz") + col("b_sz")).cast("double"))
+          .cast("long")))
       .withColumn("jaccard", col("common").cast("double")
         / (col("a_sz") + col("b_sz") - col("common")).cast("double"))
       .filter(col("jaccard") >= PrefixJaccard)
@@ -1044,13 +1012,7 @@ object TextOps {
     * levenshtein() over [[EditPrefix]]-char prefixes — integer dynamic
     * programming, bit-identical across engines, so the whole query is
     * hash-gated. edit_ratio = 1 − lev/max(prefix len): 1.0 = exact. */
-  private def qDedupEdit(s: SparkSession, d: String): DataFrame =
-    dedupEditPlan(s, d, keptCkpt = true, spread = true)
-
-  /** [[qDedupEdit]] with the kept-shingle materialization exposed for
-    * the AbWedge pair — the heaviest ngramCandidates consumer. */
-  private[graft] def dedupEditPlan(s: SparkSession, d: String,
-      keptCkpt: Boolean, spread: Boolean = false): DataFrame = {
+  private def qDedupEdit(s: SparkSession, d: String): DataFrame = {
     val docs = doubled(s, d)
       .select(col("doc_id"), substring(col("text"), 1, EditPrefix).as("pfx"))
     // checkpoint the (pair, prefixes) frame BEFORE the DP projection:
@@ -1060,7 +1022,7 @@ object TextOps {
     // 4.1 s at sf0.1 (the residual is the shared candidate blocking,
     // which q_dedup_ngram prices identically). The frame is id pairs
     // + two short prefixes, trivially small next to the DP it guards.
-    val cand = ngramCandidatesPlan(doubled(s, d), ShingleDfCap, keptCkpt, spread)
+    val cand = ngramCandidates(doubled(s, d), ShingleDfCap)
       .filter(col("jaccard") >= 0.5)
       .join(docs.select(col("doc_id").as("a_id"), col("pfx").as("a_pfx")), Seq("a_id"))
       .join(docs.select(col("doc_id").as("b_id"), col("pfx").as("b_pfx")), Seq("b_id"))
@@ -1092,17 +1054,13 @@ object TextOps {
     * instead of 32 string-concat+hash passes per document, and free
     * of the long-multiply overflow ANSI mode rejects.
     * localCheckpoint: the signature frame feeds the band join (both
-    * sides) AND the verify-stage rejoins in BOTH consumers
-    * (q_dedup_minhash, q_decontaminate_fuzzy) — without
+    * sides) AND the verify-stage rejoins in every consumer
+    * (q_dedup_minhash, q_decontaminate_fuzzy, q_minhash_recall) — without
     * materialization the shingle explode + window + agg would re-run
-    * per branch. */
+    * per branch. The doc scan is spread (see [[spreadDocs]]): the
+    * shingle extraction runs below the first exchange. */
   private def minhashSigFrame(s: SparkSession, d: String): DataFrame =
-    minhashSigFramePlan(s, d, spread = true)
-
-  private[graft] def minhashSigFramePlan(s: SparkSession, d: String,
-      spread: Boolean): DataFrame =
-    keptShingleHashes(
-      if (spread) spreadDocs(doubled(s, d)) else doubled(s, d), ShingleDfCap)
+    keptShingleHashes(spreadDocs(doubled(s, d)), ShingleDfCap)
       .groupBy(col("doc_id"))
       .agg(array_sort(collect_list(col("sh"))).as("sh_hash"))
       .withColumn("sig",
@@ -1136,17 +1094,12 @@ object TextOps {
     * float compare; recall/precision are each ONE IEEE division of
     * exact BIGINTs. This is the measurement behind the banding
     * parameters' recall claim — the tuning loop a deployment runs
-    * before committing band/row counts at 100 TB. */
-  private def qMinhashRecall(s: SparkSession, d: String): DataFrame =
-    minhashRecallPlan(s, d, bandCkpt = true)
-
-  /** [[qMinhashRecall]] with the banded-stream materialization
-    * parametrized (AbWedge pair mrec_lazy / mrec_bckpt): the banded
-    * rows feed the corpus side of the candidate join AND the
-    * probe-side projection — lazily the full banding posexplode runs
-    * twice (the probe filter joins AFTER the explode). */
-  private[graft] def minhashRecallPlan(s: SparkSession, d: String,
-      bandCkpt: Boolean): DataFrame = {
+    * before committing band/row counts at 100 TB. The banded rows
+    * feed the corpus side of the candidate join AND the probe-side
+    * projection, so they are keyed by (band, band_hash) and
+    * checkpointed — lazily the full banding posexplode would run twice
+    * (the probe filter joins AFTER the explode). */
+  private def qMinhashRecall(s: SparkSession, d: String): DataFrame = {
     val docs = minhashSigFrame(s, d)
     val probes = docs.select(col("doc_id")).orderBy("doc_id").limit(16)
     val sh = docs.select(col("doc_id"), explode(col("sh_hash")).as("h"))
@@ -1164,10 +1117,8 @@ object TextOps {
       .select(least(col("p_id"), col("o_id")).as("a"),
         greatest(col("p_id"), col("o_id")).as("b"))
       .distinct().localCheckpoint() // two consumers: count + hits semi-join
-    val banded0 = minhashBands(docs)
-    val banded = if (bandCkpt)
-      banded0.repartition(col("band"), col("band_hash")).localCheckpoint()
-    else banded0
+    val banded = minhashBands(docs)
+      .repartition(col("band"), col("band_hash")).localCheckpoint()
     val pBand = banded.join(broadcast(probes), Seq("doc_id"))
       .select(col("doc_id").as("p_id"), col("band"), col("band_hash"))
     val cand = banded.join(broadcast(pBand), Seq("band", "band_hash"))
@@ -1186,21 +1137,13 @@ object TextOps {
         col("n_hits").cast("double") / col("n_cand").cast("double"))
   }
 
-  private def qDedupMinhash(s: SparkSession, d: String): DataFrame =
-    dedupMinhashPlan(s, d, bandCkpt = true)
-
-  /** [[qDedupMinhash]] with the banded-stream materialization
-    * parametrized (AbWedge pair dminh_lazy / dminh_bckpt): the banded
-    * rows feed BOTH candidate-join sides; bandCkpt = true keys them by
-    * (band, band_hash) and checkpoints, so the banding runs once and
+  /** The banded rows feed BOTH candidate-join sides, so they are keyed
+    * by (band, band_hash) and checkpointed: the banding runs once and
     * the self-join reads the preserved partitioning exchange-free. */
-  private[graft] def dedupMinhashPlan(s: SparkSession, d: String,
-      bandCkpt: Boolean, spread: Boolean = false): DataFrame = {
-    val docs = minhashSigFramePlan(s, d, spread)
-    val banded0 = minhashBands(docs)
-    val banded = if (bandCkpt)
-      banded0.repartition(col("band"), col("band_hash")).localCheckpoint()
-    else banded0
+  private def qDedupMinhash(s: SparkSession, d: String): DataFrame = {
+    val docs = minhashSigFrame(s, d)
+    val banded = minhashBands(docs)
+      .repartition(col("band"), col("band_hash")).localCheckpoint()
     val cand = banded.select(col("band"), col("band_hash"), col("doc_id").as("a_id"))
       .join(banded.select(col("band"), col("band_hash"), col("doc_id").as("b_id")),
         Seq("band", "band_hash"))
@@ -1233,29 +1176,16 @@ object TextOps {
     * differ). One row per NON-train doc: candidate-verified
     * contaminator count, the worst contaminator (rank 1 by jaccard
     * desc, train_id asc — deterministic under the exact tie), and the
-    * flag. Fully oracled via XxOracleSql (production hash family). */
-  // bandCkpt = false ADJUDICATED (r16 session 2, 1/7 pairwise, median
-  // 3.79 -> 4.07): the asymmetric eval/train split halves each join
-  // side and the repartition of the full banded stream costs more than
-  // the duplicated banding; the variant stays for re-adjudication.
-  private def qDecontaminateFuzzy(s: SparkSession, d: String): DataFrame =
-    decontaminateFuzzyPlan(s, d, bandCkpt = false)
-
-  /** [[qDecontaminateFuzzy]] with the banded-stream materialization
-    * parametrized (AbWedge pair dfuzz_lazy / dfuzz_bckpt): `bands`
-    * feeds BOTH the eval and train sides of the asymmetric candidate
-    * join, so lazily the banding posexplode AND its split join run
-    * twice; bandCkpt = true keys one checkpoint by (band, band_hash)
-    * that both sides read exchange-free. */
-  private[graft] def decontaminateFuzzyPlan(s: SparkSession, d: String,
-      bandCkpt: Boolean): DataFrame = {
+    * flag. Fully oracled via XxOracleSql (production hash family).
+    * `bands` feeds both the eval and the train side of the candidate
+    * join and stays lazy: the asymmetric split halves each join side,
+    * and repartitioning + checkpointing the full banded stream costs
+    * more than running the banding twice. */
+  private def qDecontaminateFuzzy(s: SparkSession, d: String): DataFrame = {
     val sigs = minhashSigFrame(s, d)
       .withColumn("split", Sampling.splitOf(Sampling.hexKey(col("doc_id"))))
-    val bands0 = minhashBands(sigs.select("doc_id", "sig"))
+    val bands = minhashBands(sigs.select("doc_id", "sig"))
       .join(sigs.select("doc_id", "split"), Seq("doc_id"))
-    val bands = if (bandCkpt)
-      bands0.repartition(col("band"), col("band_hash")).localCheckpoint()
-    else bands0
     val evalB = bands.filter(col("split") =!= "train")
       .select(col("doc_id").as("eval_id"), col("band"), col("band_hash"))
     val trainB = bands.filter(col("split") === "train")
@@ -1313,17 +1243,12 @@ object TextOps {
   private val MinhashSlots = 16
   private val MinhashBands = 4
 
-  private def qMinhashEstimate(s: SparkSession, d: String): DataFrame =
-    minhashEstimatePlan(s, d, bandCkpt = true, spread = true)
-
-  /** [[qMinhashEstimate]] with the banded-stream materialization
-    * parametrized (AbWedge pair mest_lazy / mest_bckpt) — same device
-    * as dedupMinhashPlan; the md5-family banding concatenates string
-    * slots per row, so the duplicated pass is pricier here. */
-  private[graft] def minhashEstimatePlan(s: SparkSession, d: String,
-      bandCkpt: Boolean, spread: Boolean = false): DataFrame = {
+  /** The banded stream is keyed by (band, band_key) and checkpointed —
+    * q_dedup_minhash's device; the md5-family banding concatenates
+    * string slots per row, so a duplicated pass would be pricier here. */
+  private def qMinhashEstimate(s: SparkSession, d: String): DataFrame = {
     val rows = MinhashSlots / MinhashBands
-    val kept = (if (spread) spreadDocs(doubled(s, d)) else doubled(s, d))
+    val kept = spreadDocs(doubled(s, d))
       .withColumn("toks", tokens())
       .withColumn("shingles", array_distinct(
         expr("transform(sequence(1, greatest(size(toks) - 2, 1)), i -> concat_ws(' ', slice(toks, i, 3)))")))
@@ -1342,13 +1267,11 @@ object TextOps {
               k -> array_min(transform(shs,
                 s2 -> substring(md5(concat(CAST(k AS STRING), ':', s2)), 1, 15))))"""))
       .localCheckpoint()
-    val banded0 = sigs.select(col("doc_id"), posexplode(expr(
+    val banded = sigs.select(col("doc_id"), posexplode(expr(
       s"""transform(sequence(0, ${MinhashBands - 1}),
             b -> concat_ws('|', slice(sig, b * $rows + 1, $rows)))""")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
-    val banded = if (bandCkpt)
-      banded0.repartition(col("band"), col("band_key")).localCheckpoint()
-    else banded0
+      .repartition(col("band"), col("band_key")).localCheckpoint()
     val cand = banded.select(col("band"), col("band_key"), col("doc_id").as("a_id"))
       .join(banded.select(col("band"), col("band_key"), col("doc_id").as("b_id")),
         Seq("band", "band_key"))
@@ -1374,29 +1297,21 @@ object TextOps {
 
   /** 64-bit SimHash signature per document over whitespace tokens —
     * public so planted-fixture tests drive the exact production
-    * signature path. Term frequencies via explode + hash agg
-    * (vectorized, linear), then one signature per doc via the NATIVE
-    * graft_simhash_agg aggregate — the hash is computed once per
-    * distinct token, and the 64 weighted bit-sums accumulate directly
-    * in the aggregation buffer (map-side partials; no per-document
-    * token ARRAY is ever materialized, unlike the earlier
-    * collect_list + graft_simhash scalar form — OperatorsSpec pins the
-    * two bit-identical, and SimHashAgg's scaladoc states the 100 TB
-    * rationale). Input needs (doc_id, text); returns
+    * signature path: one scalar map per document (the one-pass form
+    * of [[simhashSigsPlan]]). Input needs (doc_id, text); returns
     * (doc_id, simhash). */
   def simhashSigs(docs: DataFrame): DataFrame =
     simhashSigsPlan(docs, onePass = true)
 
-  /** [[simhashSigs]] with the build form parametrized (AbWedge pair
-    * sigxx_agg / sigxx_expr). onePass = true (the suite path since
-    * r14) computes each signature as ONE scalar map over the token
-    * array ([[graft.functions.SimHashDoc]] — bit-parity with the
-    * aggregate form pinned by a ScalaCheck property): the aggregate
-    * form exchanges the corpus at token grain twice (explode →
-    * groupBy(doc_id, tok) → groupBy(doc_id)) before a signature
-    * exists; the one-pass form is a shuffle-free projection of the
-    * corpus scan — the difference between two corpus-scale shuffles
-    * and none at 100 TB. */
+  /** [[simhashSigs]] in either build form. onePass = true (every query)
+    * computes each signature as ONE scalar map over the token array
+    * ([[graft.functions.SimHashDoc]]): the aggregate form exchanges the
+    * corpus at token grain twice (explode → groupBy(doc_id, tok) →
+    * groupBy(doc_id)) before a signature exists; the one-pass form is
+    * a shuffle-free projection of the corpus scan — the difference
+    * between two corpus-scale shuffles and none at 100 TB. The
+    * aggregate form stays as the reference the ScalaCheck bit-parity
+    * property compares the one-pass form against. */
   private[graft] def simhashSigsPlan(docs: DataFrame,
       onePass: Boolean): DataFrame =
     if (onePass) {
@@ -1419,21 +1334,13 @@ object TextOps {
     * identical). Bounded by distinct-signature cardinality, never doc
     * count. Input: one `simhash` column (pre-grouped); returns
     * (a_sig, b_sig) with a_sig < b_sig. */
-  private def nearSigPairs(sigs: DataFrame): DataFrame =
-    nearSigPairsPlan(sigs, bandCkpt = false)
-
-  /** [[nearSigPairs]] with the banded-stream materialization
-    * parametrized (AbWedge pair nsp_lazy / nsp_bckpt, timed through
-    * q_simhash_clusters and q_image_dedup — the minhash-band device
-    * on the 4×16-bit Hamming banding). */
-  private[graft] def nearSigPairsPlan(sigs: DataFrame,
-      bandCkpt: Boolean): DataFrame = {
-    val banded0 = sigs.select(col("simhash"), posexplode(expr(
+  private def nearSigPairs(sigs: DataFrame): DataFrame = {
+    // the banded stream feeds both join sides and stays lazy: it runs
+    // over DISTINCT signatures, too few rows for the duplicated
+    // posexplode to outweigh an extra exchange + checkpoint
+    val banded = sigs.select(col("simhash"), posexplode(expr(
       "transform(sequence(0, 3), b -> shiftright(simhash, b * 16) & 65535)")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_bits")
-    val banded = if (bandCkpt)
-      banded0.repartition(col("band"), col("band_bits")).localCheckpoint()
-    else banded0
     val l = banded.select(col("band"), col("band_bits"), col("simhash").as("a_sig"))
     val r = banded.select(col("band"), col("band_bits"), col("simhash").as("b_sig"))
     // Hamming filter BEFORE the distinct: a pair colliding in k bands
@@ -1445,23 +1352,15 @@ object TextOps {
       .select("a_sig", "b_sig").distinct()
   }
 
-  private def qDedupSimhash(s: SparkSession, d: String): DataFrame =
-    dedupSimhashPlan(s, d, ckpt = true)
-
-  /** [[qDedupSimhash]] with the signature-group materialization
-    * parametrized (AbWedge pair dsim_plain / dsim_ckpt). groups feeds
-    * three consumers (both band-join sides and the final join); ckpt =
-    * true (the suite path since the r14 A/B: 2.27 vs 3.75 s median,
-    * 3/3 pairwise in the quiet window and 4/5 in the noisy rerun)
-    * localCheckpoints it so the doc-grain signature build runs once
-    * instead of relying on exchange reuse across the three
+  /** groups feeds three consumers (both band-join sides and the final
+    * join), so it is checkpointed: the doc-grain signature build runs
+    * once instead of relying on exchange reuse across the three
     * subtrees. */
-  private[graft] def dedupSimhashPlan(s: SparkSession, d: String,
-      ckpt: Boolean): DataFrame = {
+  private def qDedupSimhash(s: SparkSession, d: String): DataFrame = {
     val sigs = simhashSigs(doubled(s, d))
-    val groups0 = sigs.groupBy(col("simhash"))
+    val groups = sigs.groupBy(col("simhash"))
       .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("n_members"))
-    val groups = if (ckpt) groups0.localCheckpoint() else groups0
+      .localCheckpoint()
     // symmetrize the ordered pairs back so each signature counts ALL
     // its near neighbors, exactly as the pre-refactor both-direction
     // band join did
@@ -1493,11 +1392,10 @@ object TextOps {
   private def md5SimhashSigs(s: SparkSession, docs: DataFrame): DataFrame =
     md5SimhashSigsPlan(s, docs, onePass = true)
 
-  /** [[md5SimhashSigs]] with the build form parametrized (AbWedge
-    * pair sigmd5_agg / sigmd5_expr) — same one-pass rationale as
-    * [[simhashSigsPlan]]; the md5-family DuckDB oracles recompute the
-    * weighted bit sums from tokens in SQL, so the hash gate pins the
-    * two forms to the same signatures end-to-end. */
+  /** [[md5SimhashSigs]] in either build form — same one-pass rationale
+    * and same parity reference as [[simhashSigsPlan]]; the md5-family
+    * DuckDB oracles recompute the weighted bit sums from tokens in
+    * SQL, so the hash gate pins the one-pass form end-to-end. */
   private[graft] def md5SimhashSigsPlan(s: SparkSession, docs: DataFrame,
       onePass: Boolean): DataFrame =
     if (onePass) {
@@ -1618,8 +1516,7 @@ object TextOps {
     * WITHOUT touching per-doc rows.
     * @return (sigsM, groups(simhash, keeper_id, n_members, max_member),
     *          keeperLabels(keeper_id, label)) */
-  private def sigComponents(sigs: DataFrame,
-      bandCkpt: Boolean = false): (DataFrame, DataFrame, DataFrame) = {
+  private def sigComponents(sigs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val sigsM = sigs.localCheckpoint()
     val groups = sigsM.groupBy(col("simhash"))
       .agg(min(col("doc_id")).as("keeper_id"),
@@ -1629,7 +1526,7 @@ object TextOps {
     // near-signature blocks connect keeper-to-keeper: one edge per
     // signature PAIR, not per doc pair — a 10⁶-copy boilerplate block
     // adds zero near edges beyond its two keepers' link
-    val nearEdges = nearSigPairsPlan(groups.select("simhash"), bandCkpt)
+    val nearEdges = nearSigPairs(groups.select("simhash"))
       .join(groups.select(col("simhash").as("a_sig"), col("keeper_id").as("src")), Seq("a_sig"))
       .join(groups.select(col("simhash").as("b_sig"), col("keeper_id").as("dst")), Seq("b_sig"))
       .select("src", "dst")
@@ -1660,30 +1557,13 @@ object TextOps {
     * hash-family-agnostic core of simhashClusters; the md5-family
     * q_simhash_closure runs the same composition through the
     * cross-query memo instead. */
-  def simhashClustersFromSigs(sigs: DataFrame): DataFrame =
-    simhashClustersFromSigsPlan(sigs, bandCkpt = false)
-
-  /** [[simhashClustersFromSigs]] with the Hamming-band materialization
-    * exposed (AbWedge pairs scl_lazy / scl_bckpt via
-    * [[simhashClustersPlan]]). */
-  private[graft] def simhashClustersFromSigsPlan(sigs: DataFrame,
-      bandCkpt: Boolean): DataFrame = {
-    val (sigsM, groups, keeperLabels) = sigComponents(sigs, bandCkpt)
+  def simhashClustersFromSigs(sigs: DataFrame): DataFrame = {
+    val (sigsM, groups, keeperLabels) = sigComponents(sigs)
     clusterLabelJoin(sigsM, groups, keeperLabels)
   }
 
-  /** Cold q_simhash_clusters with the band materialization exposed. */
-  private[graft] def simhashClustersPlan(s: SparkSession, d: String,
-      bandCkpt: Boolean): DataFrame =
-    simhashClustersFromSigsPlan(simhashSigs(doubled(s, d)), bandCkpt)
-      .orderBy("doc_id")
-
-  // bandCkpt = false ADJUDICATED (r16 session 2, 3/7 pairwise, medians
-  // 3.605 vs 3.707 overlapping): unlike the doc-grain minhash bands,
-  // this banding runs over DISTINCT signatures — too few rows for the
-  // duplicated posexplode to outweigh the extra exchange + checkpoint.
   private def qSimhashClusters(s: SparkSession, d: String): DataFrame =
-    simhashClustersPlan(s, d, bandCkpt = false)
+    simhashClusters(doubled(s, d)).orderBy("doc_id")
 
   // The clustering composition's ORACLED twin: md5-family signatures
   // (cross-engine, q_simhash_estimate's family) through the SAME
@@ -1697,48 +1577,12 @@ object TextOps {
     clusterLabelJoin(sigsM, groups, md5KeeperLabels(s, d)).orderBy("doc_id")
   }
 
-  /** md5-family cluster chain cut at its memoized prefixes for the
-    * AbWedge cost profile (memos are cleared before each timed pass,
-    * so each stage prices its full cold build): 1 = signatures +
-    * keeper groups, 2 = + Hamming-≤3 signature pairs, 3 = + keeper CC
-    * labels, 4 = the full q_simhash_closure (per-doc label join +
-    * order). */
-  /** The closure chain's CC stage with the doubling deferral
-    * parametrized (AbWedge pair cc_dbl / cc_hybrid): groups and near
-    * edges ride the memo, the CC labels are built fresh with the
-    * given `doubleAfter`. Output identical either way (both converge
-    * to the component-min fixpoint). */
-  private[graft] def closureCcPlan(s: SparkSession, d: String,
-      doubleAfter: Int): DataFrame = {
-    val groups = md5SigsGroups(s, d)._2
-    connectedComponents(
-      groups.select(col("keeper_id").as("doc_id")), md5NearEdges(s, d),
-      doubleAfter = doubleAfter)
-  }
-
-  /** Cold signature-build plan over the doubled corpus for the
-    * AbWedge sig pairs (family = "xx" | "md5"). */
-  private[graft] def sigBuildPlan(s: SparkSession, d: String,
-      family: String, onePass: Boolean,
-      spread: Boolean = false): DataFrame =
-    sigBuildPlanForTest(s,
-      if (spread) spreadDocs(doubled(s, d)) else doubled(s, d),
-      family, onePass)
-
   /** Signature build over an arbitrary (doc_id, text) frame — the
     * parity property's entry point. */
   private[graft] def sigBuildPlanForTest(s: SparkSession, docs: DataFrame,
       family: String, onePass: Boolean): DataFrame =
     if (family == "md5") md5SimhashSigsPlan(s, docs, onePass)
     else simhashSigsPlan(docs, onePass)
-
-  private[graft] def simhashClosureStage(s: SparkSession, d: String,
-      stage: Int): DataFrame = stage match {
-    case 1 => md5SigsGroups(s, d)._2
-    case 2 => md5SigPairs(s, d)
-    case 3 => md5KeeperLabels(s, d)
-    case _ => qSimhashClosure(s, d)
-  }
 
   // Per-CLUSTER aggregate over the same md5-family CC labels — the
   // keep/drop accounting a dedup stage reports (cluster size, last
@@ -1770,37 +1614,21 @@ object TextOps {
     * hash gate: the oracle re-runs the recursive-CTE closure AND the
     * quality chain and must elect the same keeper row for row. Cost:
     * cluster labels come from the memoized graph build, z is a narrow
-    * map, and the election is one cluster-partitioned window. */
-  private def qKeeperQuality(s: SparkSession, d: String): DataFrame =
-    keeperQualityPlan(s, d, argMax = true)
-
-  /** [[qKeeperQuality]] with the per-cluster election parametrized
-    * (AbWedge pair keeperq_window / keeperq_argmax). The winner is
-    * "highest z, lowest doc_id on ties"; argMax = true (the suite
-    * path) computes the IDENTICAL winner as `max(struct(z, -doc_id))`
-    * — struct order compares z first, then −doc_id — running as a
-    * hash aggregate with map-side partial aggregation instead of a
-    * doc-grain partition sort (the LPA trim's pattern). z is non-null
+    * map, and the election is one cluster-level argmax. The winner is
+    * "highest z, lowest doc_id on ties", computed as
+    * `max(struct(z, -doc_id))` — struct order compares z first, then
+    * −doc_id — so it runs as a hash aggregate with map-side partial
+    * aggregation instead of a doc-grain partition sort. z is non-null
     * (a computed score) and doc_id ≥ 0, so neither field perturbs the
     * struct ordering. */
-  private[graft] def keeperQualityPlan(s: SparkSession, d: String,
-      argMax: Boolean): DataFrame = {
+  private def qKeeperQuality(s: SparkSession, d: String): DataFrame = {
     val (sigsM, groups) = md5SigsGroups(s, d)
     val labels = clusterLabelJoin(sigsM, groups, md5KeeperLabels(s, d))
     val z = withQualityZ(doubled(s, d)).select(col("doc_id"), col("z"))
     val lab = labels.join(z, Seq("doc_id"))
-    val best =
-      if (argMax)
-        lab.groupBy(col("cluster_keeper"))
-          .agg(max(struct(col("z"), (-col("doc_id")).as("nd"))).as("m"))
-          .select(col("cluster_keeper"), (-col("m.nd")).as("best_id"))
-      else {
-        val byQ = Window.partitionBy(col("cluster_keeper"))
-          .orderBy(col("z").desc, col("doc_id"))
-        lab.withColumn("rk", row_number().over(byQ))
-          .filter(col("rk") === 1)
-          .select(col("cluster_keeper"), col("doc_id").as("best_id"))
-      }
+    val best = lab.groupBy(col("cluster_keeper"))
+      .agg(max(struct(col("z"), (-col("doc_id")).as("nd"))).as("m"))
+      .select(col("cluster_keeper"), (-col("m.nd")).as("best_id"))
     lab.join(best, Seq("cluster_keeper"))
       .select(col("doc_id"), col("cluster_keeper"), col("z"),
         col("best_id"), (col("doc_id") === col("best_id")).as("is_best"))
@@ -1885,19 +1713,22 @@ object TextOps {
       .orderBy("keeper_id")
   }
 
+  /** Plain min-propagation rounds before [[connectedComponents]] adds
+    * its pointer-doubling hop. */
+  private val CcDoubleAfter = 4
+
   /** Distributed connected components over a near-dup edge set:
     * iterative min-label propagation with DEFERRED pointer doubling —
-    * the first `doubleAfter` rounds run plain min propagation (one
+    * the first [[CcDoubleAfter]] rounds run plain min propagation (one
     * edge join + one min agg), and only rounds after that add the
-    * label(u) ← label(label(u)) self-join hop. Rationale (r14 cold
-    * A/B over the md5 keeper graph: cc_hybrid 6.45 s vs cc_dbl
-    * 11.26 s median, 5/5 pairwise): near-dup components are star/clique
-    * shaped — banded Hamming blocks and exact-digest stars have
-    * diameter 1–3 — so unconditional doubling paid an extra
-    * node-keyed self-join (two more exchanges) EVERY round to save
-    * rounds that shallow graphs never run. A pathological chain still
-    * converges in O(doubleAfter + log D) total rounds once doubling
-    * kicks in, so the asymptotic guarantee survives. The loop is
+    * label(u) ← label(label(u)) self-join hop. Rationale: near-dup
+    * components are star/clique shaped — banded Hamming blocks and
+    * exact-digest stars have diameter 1–3 — so unconditional doubling
+    * would pay an extra node-keyed self-join (two more exchanges)
+    * EVERY round to save rounds that shallow graphs never run. A
+    * pathological chain still converges in O(CcDoubleAfter + log D)
+    * total rounds once doubling kicks in, so the asymptotic guarantee
+    * survives. The loop is
     * driver-coordinated but every round is a distributed join+agg;
     * localCheckpoint truncates the growing lineage; the only
     * driver-side action per round is a one-row label-sum fetch (the
@@ -1905,18 +1736,16 @@ object TextOps {
     *
     * Fails LOUDLY if the round cap is hit — silently returning
     * unconverged labels would split real clusters and leak duplicates
-    * into a training corpus. With doubling from round `doubleAfter`,
+    * into a training corpus. With doubling from round [[CcDoubleAfter]],
     * 25 rounds still cover diameters up to ~2²⁰, so the throw is a
     * defect signal, never a data path.
     *
     * @param nodes (doc_id)   — one row per document
     * @param edges (src, dst) — near-dup pairs, symmetrized internally
-    * @param doubleAfter rounds of plain propagation before the
-    *   doubling hop joins in (0 = always double, the pre-r14 form)
     * @return (doc_id, label) — label = min doc_id of the component
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
-      maxIter: Int = 25, doubleAfter: Int = 4): DataFrame = {
+      maxIter: Int = 25): DataFrame = {
     val sym = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint()
@@ -1965,7 +1794,7 @@ object TextOps {
       // one hop (labels are always doc_ids, so the hop is a
       // self-join) — halves remaining depth on deep components
       val next = (
-        if (iter < doubleAfter) propagated
+        if (iter < CcDoubleAfter) propagated
         else propagated
           .join(propagated.select(col("doc_id").as("label"), col("label").as("hop")),
             Seq("label"), "left_outer")
@@ -3865,28 +3694,20 @@ object TextOps {
     * candidate join is keyed by fingerprint with the df-cap bounding
     * any hot fingerprint's fan-out — the exact posture of the shingle
     * and LSH dedup paths, never all-pairs. */
-  private def qWinnowPairs(s: SparkSession, d: String): DataFrame =
-    winnowPairsPlan(s, d, fpPart = true, spread = true)
-
-  /** [[qWinnowPairs]] with the fingerprint-stream checkpoint keying
-    * parametrized (AbWedge pair winnow_plain / winnow_fppart).
-    * fpPart = true keys the checkpoint by fp — the single-exchange
-    * device: the df aggregate then runs IN-STAGE on the preserved
-    * partitioning, the cap join and the pair join's both sides are
-    * already fp-partitioned (no further exchange before the final
-    * (a_id, b_id) aggregate). Rows identical either way. */
-  private[graft] def winnowPairsPlan(s: SparkSession, d: String,
-      fpPart: Boolean, spread: Boolean = false): DataFrame = {
+  private def qWinnowPairs(s: SparkSession, d: String): DataFrame = {
     // checkpoint: the fingerprint stream feeds the df agg AND both
     // sides of the pair join — without the pin the O(tokens) md5
     // extraction re-runs per consumer (same device as qKcore's edge
     // pin; priced inside this query's own clock, never memoized).
-    // spread: the md5 sweep runs BELOW the first exchange, i.e. on the
-    // raw scan's ≤2 partitions — see [[spreadDocs]].
-    val src = if (spread) spreadDocs(doubled(s, d)) else doubled(s, d)
-    val sel0 = winnowFrame(src)
+    // Keyed by fp — the single-exchange device: the df aggregate then
+    // runs IN-STAGE on the preserved partitioning, and the cap join
+    // and both pair-join sides are already fp-partitioned (no further
+    // exchange before the final (a_id, b_id) aggregate).
+    // The md5 sweep runs BELOW the first exchange, i.e. on the raw
+    // scan's ≤2 partitions, hence the spread — see [[spreadDocs]].
+    val sel = winnowFrame(spreadDocs(doubled(s, d)))
       .select(col("doc_id"), col("n_fps"), explode(col("fps")).as("fp"))
-    val sel = (if (fpPart) sel0.repartition(col("fp")) else sel0)
+      .repartition(col("fp"))
       .localCheckpoint()
     val fpd = sel.groupBy("fp").agg(count(lit(1)).as("df"))
       .filter(col("df") <= WinnowDfCap)

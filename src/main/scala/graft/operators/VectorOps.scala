@@ -31,31 +31,26 @@ object VectorOps {
     * a driver-blocking collect ladder (seeds + LloydIters assign/mean
     * rounds), so the duplicate rebuild is pure repeated work inside ONE
     * query's clock (guide §1.2: don't compute things you throw away).
-    * Keyed by (session identity, data dir); graft.Bench / AbWedge /
-    * ScaleProbe CLEAR this memo before every timed repetition, so each
-    * timed pass still trains cold — the memo dedups consumers WITHIN a
-    * pass, never across runs. */
+    * Keyed by (kind, data dir); graft.Bench.clearResidue CLEARS this
+    * memo before every timed repetition (Bench, AbWedge, ScaleProbe),
+    * so each timed pass still trains cold — the memo dedups consumers
+    * WITHIN a pass, never across runs. */
   private val modelCache =
     scala.collection.concurrent.TrieMap.empty[String, AnyRef]
 
   /** Drop all memoized models (bench/probe isolation). */
   def clearModelCache(): Unit = modelCache.clear()
 
-  /** AbWedge's A/B switch (annrec_dup / annrec_memo): false replays the
-    * pre-r15 duplicate-training form. Always true in the suite path. */
-  @volatile private[graft] var modelMemoEnabled = true
-
+  // keyed by (kind, dataset) ONLY: an identityHashCode(session)
+  // component could collide and a GC'd session's slot be reused, so it
+  // never actually isolated sessions. The invariant that makes the
+  // dataset key sufficient: the cached model depends ONLY on `d` —
+  // every caller projects the identical (vec_id, vec) corpus
+  // (OperatorsSpec pins it) — and the cache is cleared before every
+  // timed pass.
   private def cachedModel[T <: AnyRef](s: SparkSession, d: String,
       kind: String)(build: => T): T =
-    if (!modelMemoEnabled) build
-    // keyed by (kind, dataset) ONLY (ADVICE r15: the old
-    // identityHashCode(session) component could collide and a GC'd
-    // session's slot be reused, so it never actually isolated
-    // sessions). The invariant that makes the dataset key sufficient:
-    // the cached model depends ONLY on `d` — every caller projects the
-    // identical (vec_id, vec) corpus — and Bench/AbWedge/ScaleProbe
-    // clear the cache before every timed pass.
-    else modelCache.getOrElseUpdate(s"$kind|$d", build).asInstanceOf[T]
+    modelCache.getOrElseUpdate(s"$kind|$d", build).asInstanceOf[T]
 
   /** Memoized [[lloydModel]] over dataset `d`'s full embeddings corpus
     * (all full-corpus consumers train the identical model — the model
@@ -922,146 +917,133 @@ object VectorOps {
   // recall is one exact IEEE division — fully hash-gated; the oracle
   // embeds the SAME per-method SQL chains as the solo queries, so the
   // recall table and the per-method results can never drift apart.
-  private def qAnnRecall(s: SparkSession, d: String): DataFrame =
-    annRecallPlan(s, d, shared = true)
-
-  /** [[qAnnRecall]] with the cross-chain frame sharing parametrized
-    * (AbWedge pair annrec_solo / annrec_shared; suite path shared =
-    * true since r16). The r15 model memo already dedups TRAINING
-    * inside one execution; shared = true additionally dedups the
-    * DERIVED frames the four chains recompute from the shared model
-    * (guide §1.2 — don't compute things twice):
-    *
-    *  - the corpus (vec_id, vec) projection, re-scanned from parquet
-    *    by every chain plus the brute-force baseline, is checkpointed
-    *    once;
-    *  - the Lloyd scoring pass (corpus × K crossJoin + per-vector rank
-    *    window) ran once in the ivf chain and once in ivfpq — it runs
-    *    once, checkpointed as the NARROW (vec_id, cell, p_rank ≤
-    *    IvfProbes) cells frame (3 longs/row; the fat scored frame with
-    *    both vector payloads is never materialized), and the ivf
-    *    chain re-attaches vectors by joining the checkpointed corpus;
-    *  - the PQ code assignment (4-subspace crossJoin + rank window)
-    *    ran once in pq and once in ivfpq — it runs once, checkpointed
-    *    as the narrow (c_id, m, cell) codes frame.
-    *
-    * Every checkpoint is built INSIDE this query's own clock (the
-    * model/graph memos are cleared before every timed pass); solo
-    * q_sim_* queries keep their unchanged single-consumer plans. */
-  private[graft] def annRecallPlan(s: SparkSession, d: String,
-      shared: Boolean): DataFrame = {
-    val methods: Seq[(String, DataFrame)] = if (!shared) Seq(
-      "ivf" -> qSimIvf(s, d), "ivfpq" -> qSimIvfpq(s, d),
-      "lsh" -> qSimLsh(s, d), "pq" -> qSimPq(s, d))
-    else {
-      VectorExpressions.register(s)
-      import s.implicits._
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), asDouble("embedding").as("vec"))
-        .localCheckpoint()
-      val model = lloydModelM(s, d, e)
-      val cells = scoreAgainst(s, e, model)
-        .filter(col("p_rank") <= IvfProbes)
-        .select(col("vec_id"), col("cell"), col("p_rank"))
-        .localCheckpoint()
-      val sub = pqSub(e)
-      val codebook = pqCodebookM(s, d, e, sub)
-      val codes = pqAssign(s, sub, codebook).filter(col("rk") === 1)
-        .select(col("vec_id").as("c_id"), col("m"), col("cell"))
-        .localCheckpoint()
-      // ---- ivf: same rows as qSimIvf, vectors re-attached from the
-      // checkpointed corpus instead of riding the fat scored frame
-      val assignedIvf = cells.filter(col("p_rank") === 1)
-        .join(e, Seq("vec_id"))
-        .select(col("vec_id").as("c_id"), col("vec").as("c_vec"), col("cell"))
-      val probesIvf = cells.filter(col("vec_id") < 10 && col("p_rank") <= IvfProbes)
-        .join(e, Seq("vec_id"))
-        .select(col("vec_id").as("q_id"), col("vec").as("q_vec"), col("cell"))
-      val wIvf = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id"))
-      val ivf = probesIvf.join(assignedIvf, Seq("cell"))
-        .filter(col("q_id") =!= col("c_id"))
-        .withColumn("cosine", cosine("q_vec", "c_vec"))
-        .withColumn("rank", row_number().over(wIvf))
-        .filter(col("rank") <= 5)
-        .select("q_id", "rank", "c_id", "cell", "cosine")
-      // ---- pq: qSimPq over the shared codes/sub frames
-      val qdPq = sub.filter(col("vec_id") < 10)
-        .join(broadcast(codebook.toDF("m", "cell", "cent")), Seq("m"))
-        .select(col("vec_id").as("q_id"), col("m"), col("cell"),
-          dot("sv", "cent").as("pdot"))
-      val adcPq = qdPq.join(codes, Seq("m", "cell"))
-        .filter(col("q_id") =!= col("c_id"))
-        .groupBy(col("q_id"), col("c_id"))
-        .agg(adcPartialCols.head, adcPartialCols.tail: _*)
-        .withColumn("approx", adcSum)
-      val byApproxPq = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("approx").desc, col("c_id"))
-      val candPq = adcPq.withColumn("ark", row_number().over(byApproxPq))
-        .filter(col("ark") <= PqRefine)
-        .select("q_id", "c_id")
-      val byCosPq = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id"))
-      val pq = candPq
-        .join(e.select(col("vec_id").as("q_id"), col("vec").as("q_vec")), Seq("q_id"))
-        .join(e.select(col("vec_id").as("c_id"), col("vec").as("c_vec")), Seq("c_id"))
-        .withColumn("cosine", cosine("q_vec", "c_vec"))
-        .withColumn("rank", row_number().over(byCosPq))
-        .filter(col("rank") <= 5)
-        .select("q_id", "rank", "c_id", "cosine")
-      // ---- ivfpq: qSimIvfpq over the shared cells/codes frames
-      val assignedPq = cells.filter(col("p_rank") === 1)
-        .select(col("vec_id").as("c_id"), col("cell"))
-      val probesPq = cells.filter(col("vec_id") < 10 && col("p_rank") <= IvfProbes)
-        .select(col("vec_id").as("q_id"), col("cell"))
-      val codesI = codes.select(col("c_id"), col("m"), col("cell").as("code"))
-      val qdI = sub.filter(col("vec_id") < 10)
-        .join(broadcast(codebook.toDF("m", "code", "cent")), Seq("m"))
-        .select(col("vec_id").as("q_id"), col("m"), col("code"),
-          dot("sv", "cent").as("pdot"))
-      val cand0 = probesPq.join(assignedPq, Seq("cell"))
-        .filter(col("q_id") =!= col("c_id"))
-        .select("q_id", "c_id", "cell")
-      val adcI = cand0.join(codesI, Seq("c_id"))
-        .join(broadcast(qdI), Seq("q_id", "m", "code"))
-        .groupBy(col("q_id"), col("c_id"), col("cell"))
-        .agg(adcPartialCols.head, adcPartialCols.tail: _*)
-        .withColumn("approx", adcSum)
-      val byApproxI = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("approx").desc, col("c_id"))
-      val candI = adcI.withColumn("ark", row_number().over(byApproxI))
-        .filter(col("ark") <= PqRefine)
-        .select("q_id", "c_id", "cell")
-      val byCosI = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id"))
-      val ivfpq = candI
-        .join(e.select(col("vec_id").as("q_id"), col("vec").as("q_vec")), Seq("q_id"))
-        .join(e.select(col("vec_id").as("c_id"), col("vec").as("c_vec")), Seq("c_id"))
-        .withColumn("cosine", cosine("q_vec", "c_vec"))
-        .withColumn("rank", row_number().over(byCosI))
-        .filter(col("rank") <= 5)
-        .select("q_id", "rank", "c_id", "cell", "cosine")
-      // ---- lsh: qSimLsh over the checkpointed corpus
-      val bucketed = withBandBuckets(e, AnnLsh)
-      val qLsh = bucketed.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("vec").as("q_vec"), col("band"),
-          explode(expr(s"""array_union(array(bucket),
-            transform(sequence(0, ${AnnLsh.planesPerBand - 1}), j -> bucket ^ shiftleft(1L, j)))"""))
-            .as("bucket"))
-      val cLsh = bucketed
-        .select(col("band"), col("bucket"), col("vec_id").as("c_id"), col("vec").as("c_vec"))
-      val wLsh = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id"))
-      val lsh = broadcast(qLsh).join(cLsh, Seq("band", "bucket"))
-        .filter(col("q_id") =!= col("c_id"))
-        .select("q_id", "q_vec", "c_id", "c_vec")
-        .dropDuplicates("q_id", "c_id")
-        .withColumn("cosine", cosine("q_vec", "c_vec"))
-        .withColumn("rank", row_number().over(wLsh))
-        .filter(col("rank") <= 5)
-        .select("q_id", "rank", "c_id", "cosine")
-      Seq("ivf" -> ivf, "ivfpq" -> ivfpq, "lsh" -> lsh, "pq" -> pq)
-    }
+  //
+  // The four chains share the frames they would otherwise each derive
+  // from the shared model (the model memo already dedups TRAINING;
+  // guide §1.2 — don't compute things twice):
+  //  - the corpus (vec_id, vec) projection, re-scanned from parquet
+  //    by every chain plus the brute-force baseline, is checkpointed
+  //    once;
+  //  - the Lloyd scoring pass (corpus × K crossJoin + per-vector rank
+  //    window) is needed by the ivf and ivfpq chains — it runs once,
+  //    checkpointed as the NARROW (vec_id, cell, p_rank ≤ IvfProbes)
+  //    cells frame (3 longs/row; the fat scored frame with both vector
+  //    payloads is never materialized), and the ivf chain re-attaches
+  //    vectors by joining the checkpointed corpus;
+  //  - the PQ code assignment (4-subspace crossJoin + rank window) is
+  //    needed by pq and ivfpq — it runs once, checkpointed as the
+  //    narrow (c_id, m, cell) codes frame.
+  // Every checkpoint is built INSIDE this query's own clock (the
+  // model/graph memos are cleared before every timed pass); solo
+  // q_sim_* queries keep their single-consumer plans.
+  private def qAnnRecall(s: SparkSession, d: String): DataFrame = {
+    VectorExpressions.register(s)
+    import s.implicits._
+    val e = Tables.embeddings(s, d)
+      .select(col("vec_id"), asDouble("embedding").as("vec"))
+      .localCheckpoint()
+    val model = lloydModelM(s, d, e)
+    val cells = scoreAgainst(s, e, model)
+      .filter(col("p_rank") <= IvfProbes)
+      .select(col("vec_id"), col("cell"), col("p_rank"))
+      .localCheckpoint()
+    val sub = pqSub(e)
+    val codebook = pqCodebookM(s, d, e, sub)
+    val codes = pqAssign(s, sub, codebook).filter(col("rk") === 1)
+      .select(col("vec_id").as("c_id"), col("m"), col("cell"))
+      .localCheckpoint()
+    // ---- ivf: same rows as qSimIvf, vectors re-attached from the
+    // checkpointed corpus instead of riding the fat scored frame
+    val assignedIvf = cells.filter(col("p_rank") === 1)
+      .join(e, Seq("vec_id"))
+      .select(col("vec_id").as("c_id"), col("vec").as("c_vec"), col("cell"))
+    val probesIvf = cells.filter(col("vec_id") < 10 && col("p_rank") <= IvfProbes)
+      .join(e, Seq("vec_id"))
+      .select(col("vec_id").as("q_id"), col("vec").as("q_vec"), col("cell"))
+    val wIvf = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id"))
+    val ivf = probesIvf.join(assignedIvf, Seq("cell"))
+      .filter(col("q_id") =!= col("c_id"))
+      .withColumn("cosine", cosine("q_vec", "c_vec"))
+      .withColumn("rank", row_number().over(wIvf))
+      .filter(col("rank") <= 5)
+      .select("q_id", "rank", "c_id", "cell", "cosine")
+    // ---- pq: qSimPq over the shared codes/sub frames
+    val qdPq = sub.filter(col("vec_id") < 10)
+      .join(broadcast(codebook.toDF("m", "cell", "cent")), Seq("m"))
+      .select(col("vec_id").as("q_id"), col("m"), col("cell"),
+        dot("sv", "cent").as("pdot"))
+    val adcPq = qdPq.join(codes, Seq("m", "cell"))
+      .filter(col("q_id") =!= col("c_id"))
+      .groupBy(col("q_id"), col("c_id"))
+      .agg(adcPartialCols.head, adcPartialCols.tail: _*)
+      .withColumn("approx", adcSum)
+    val byApproxPq = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("q_id")).orderBy(col("approx").desc, col("c_id"))
+    val candPq = adcPq.withColumn("ark", row_number().over(byApproxPq))
+      .filter(col("ark") <= PqRefine)
+      .select("q_id", "c_id")
+    val byCosPq = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id"))
+    val pq = candPq
+      .join(e.select(col("vec_id").as("q_id"), col("vec").as("q_vec")), Seq("q_id"))
+      .join(e.select(col("vec_id").as("c_id"), col("vec").as("c_vec")), Seq("c_id"))
+      .withColumn("cosine", cosine("q_vec", "c_vec"))
+      .withColumn("rank", row_number().over(byCosPq))
+      .filter(col("rank") <= 5)
+      .select("q_id", "rank", "c_id", "cosine")
+    // ---- ivfpq: qSimIvfpq over the shared cells/codes frames
+    val assignedPq = cells.filter(col("p_rank") === 1)
+      .select(col("vec_id").as("c_id"), col("cell"))
+    val probesPq = cells.filter(col("vec_id") < 10 && col("p_rank") <= IvfProbes)
+      .select(col("vec_id").as("q_id"), col("cell"))
+    val codesI = codes.select(col("c_id"), col("m"), col("cell").as("code"))
+    val qdI = sub.filter(col("vec_id") < 10)
+      .join(broadcast(codebook.toDF("m", "code", "cent")), Seq("m"))
+      .select(col("vec_id").as("q_id"), col("m"), col("code"),
+        dot("sv", "cent").as("pdot"))
+    val cand0 = probesPq.join(assignedPq, Seq("cell"))
+      .filter(col("q_id") =!= col("c_id"))
+      .select("q_id", "c_id", "cell")
+    val adcI = cand0.join(codesI, Seq("c_id"))
+      .join(broadcast(qdI), Seq("q_id", "m", "code"))
+      .groupBy(col("q_id"), col("c_id"), col("cell"))
+      .agg(adcPartialCols.head, adcPartialCols.tail: _*)
+      .withColumn("approx", adcSum)
+    val byApproxI = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("q_id")).orderBy(col("approx").desc, col("c_id"))
+    val candI = adcI.withColumn("ark", row_number().over(byApproxI))
+      .filter(col("ark") <= PqRefine)
+      .select("q_id", "c_id", "cell")
+    val byCosI = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id"))
+    val ivfpq = candI
+      .join(e.select(col("vec_id").as("q_id"), col("vec").as("q_vec")), Seq("q_id"))
+      .join(e.select(col("vec_id").as("c_id"), col("vec").as("c_vec")), Seq("c_id"))
+      .withColumn("cosine", cosine("q_vec", "c_vec"))
+      .withColumn("rank", row_number().over(byCosI))
+      .filter(col("rank") <= 5)
+      .select("q_id", "rank", "c_id", "cell", "cosine")
+    // ---- lsh: qSimLsh over the checkpointed corpus
+    val bucketed = withBandBuckets(e, AnnLsh)
+    val qLsh = bucketed.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("vec").as("q_vec"), col("band"),
+        explode(expr(s"""array_union(array(bucket),
+          transform(sequence(0, ${AnnLsh.planesPerBand - 1}), j -> bucket ^ shiftleft(1L, j)))"""))
+          .as("bucket"))
+    val cLsh = bucketed
+      .select(col("band"), col("bucket"), col("vec_id").as("c_id"), col("vec").as("c_vec"))
+    val wLsh = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id"))
+    val lsh = broadcast(qLsh).join(cLsh, Seq("band", "bucket"))
+      .filter(col("q_id") =!= col("c_id"))
+      .select("q_id", "q_vec", "c_id", "c_vec")
+      .dropDuplicates("q_id", "c_id")
+      .withColumn("cosine", cosine("q_vec", "c_vec"))
+      .withColumn("rank", row_number().over(wLsh))
+      .filter(col("rank") <= 5)
+      .select("q_id", "rank", "c_id", "cosine")
+    val methods = Seq("ivf" -> ivf, "ivfpq" -> ivfpq, "lsh" -> lsh, "pq" -> pq)
     // pin the ground truth ONCE: the union has four branches and each
     // would otherwise replay the full brute-force chain (the same
     // multi-consumer trap as the winnowing fingerprint stream)

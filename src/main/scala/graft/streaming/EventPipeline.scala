@@ -101,9 +101,9 @@ object EventPipeline {
 
   /** Micro-batch dual-sink writer (reference `write_batch`,
     * `stream-processor.py:283-324`, minus its inefficiencies):
-    * persist once, then append history (K1 analog) and upsert the
-    * keyed view (K2 analog) at the same time, unpersist once both are
-    * done. The batch is persisted before the empty guard so the
+    * persist once and guard on the persisted frame ([[guardedSink]]),
+    * then append history (K1 analog) and upsert the keyed view (K2
+    * analog) at the same time, and unpersist once both are done. The
     * guard's scan fills the cache instead of running the parse +
     * dimension join an extra time.
     *
@@ -113,14 +113,23 @@ object EventPipeline {
     * idempotent, and history, an at-least-once append, gets the batch
     * again if its first append had committed.
     */
-  def writeBatch(historyDir: String, viewDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    batch.persist()
-    try {
-      if (!batch.isEmpty) // P9 guard — df.isEmpty, not rdd.isEmpty
-        writeConcurrently(batch.sparkSession)(
-          batch.write.mode("append").parquet(historyDir),
-          upsertKeyedView(batch, viewDir))
-    } finally batch.unpersist()
+  def writeBatch(historyDir: String, viewDir: String)(batch: DataFrame, batchId: Long): Unit =
+    guardedSink(batch) { batch =>
+      writeConcurrently(batch.sparkSession)(
+        batch.write.mode("append").parquet(historyDir),
+        upsertKeyedView(batch, viewDir))
+    }
+
+  /** The P9 empty-batch guard every `foreachBatch` sink goes through:
+    * persist `frame`, check `isEmpty` on the persisted frame (df.isEmpty,
+    * not rdd.isEmpty), write it unless empty, and unpersist even when
+    * the write throws. The guard's scan fills the cache, so the sink's
+    * upstream (a micro-batch's parse, join or stateful dedup) runs
+    * once per row, not once for the guard and again for the write. */
+  private def guardedSink(frame: DataFrame)(write: DataFrame => Unit): Unit = {
+    frame.persist()
+    try if (!frame.isEmpty) write(frame)
+    finally frame.unpersist()
   }
 
   /** Daemon threads for [[writeConcurrently]]: one per pooled sink in
@@ -270,7 +279,7 @@ object EventPipeline {
     * against the live database).
     */
   def writeJdbcServing(url: String)(batch: DataFrame, batchId: Long): Unit =
-    if (!batch.isEmpty) {
+    guardedSink(batch) { batch =>
       val keyed = batch.filter(col("event_id").isNotNull)
       val tieBreakers = keyed.columns.filterNot(_ == "event_id")
         .sorted.map(col(_).desc_nulls_last)
@@ -426,17 +435,13 @@ object EventPipeline {
     * is_keep). */
   def routeDocumentsBatch(acceptDir: String, quarantineDir: String,
       minZ: Double = 0.0)(batch: DataFrame, id: Long): Unit = {
-    val scored = graft.operators.TextOps.withQualityZ(batch).persist()
-    try {
-      // P9 empty-batch guard on the persisted frame: its scan fills the
-      // cache, so the upstream (stateful dedup included) runs once
-      if (!scored.isEmpty)
-        writeConcurrently(batch.sparkSession)(
-          scored.filter(col("z") >= minZ)
-            .write.mode("overwrite").parquet(s"$acceptDir/batch=$id"),
-          scored.filter(col("z") < minZ)
-            .write.mode("overwrite").parquet(s"$quarantineDir/batch=$id"))
-    } finally scored.unpersist()
+    guardedSink(graft.operators.TextOps.withQualityZ(batch)) { scored =>
+      writeConcurrently(batch.sparkSession)(
+        scored.filter(col("z") >= minZ)
+          .write.mode("overwrite").parquet(s"$acceptDir/batch=$id"),
+        scored.filter(col("z") < minZ)
+          .write.mode("overwrite").parquet(s"$quarantineDir/batch=$id"))
+    }
   }
 
   /** Composed streaming CORPUS CLEANER — dedup → quality → route in
@@ -497,10 +502,11 @@ object EventPipeline {
     * a replayed micro-batch rewrites its own directory). */
   def annIngestBatch(centroids: Seq[(Long, Seq[Double])], keepers: DataFrame,
       outDir: String)(batch: DataFrame, id: Long): Unit =
-    if (!batch.isEmpty) // P9 empty-batch guard
+    guardedSink(batch) { batch =>
       assignAnn(batch, centroids, keepers)
         .withColumn("batch_id", lit(id))
         .write.mode("overwrite").parquet(s"$outDir/batch=$id")
+    }
 
   /** Streaming ANN INGEST — the stream twin of q_sim_ivf's assignment
     * stage, composed with the embedding dedup gate exactly the way
@@ -540,7 +546,7 @@ object EventPipeline {
     * idempotent-overwrite trade, so a replayed micro-batch rewrites
     * its own sketch instead of double-counting. */
   def cmsIngestBatch(keyCol: String, outDir: String)(batch: DataFrame, id: Long): Unit =
-    if (!batch.isEmpty) { // P9 empty-batch guard
+    guardedSink(batch) { batch =>
       graft.functions.CmsExpressions.register(batch.sparkSession)
       val bytes = batch.agg(expr(
         s"graft_cms_agg($keyCol, CAST($FreqEps AS DOUBLE), CAST($FreqConf AS DOUBLE), 42)"))
@@ -597,7 +603,7 @@ object EventPipeline {
     * replayed micro-batch rewrites its own routes instead of
     * double-alerting. */
   def percolateRouteBatch(matchesDir: String)(batch: DataFrame, id: Long): Unit =
-    if (!batch.isEmpty) { // P9 empty-batch guard
+    guardedSink(batch) { batch =>
       graft.operators.TextOps.percolateMatchesDf(batch)
         .write.mode("overwrite").parquet(s"$matchesDir/batch=$id")
     }
@@ -675,9 +681,10 @@ object EventPipeline {
     * trade), holding the per-type drift rows for that batch. */
   def driftMetricsBatch(ref: DataFrame, metricsDir: String,
       alertTv: Double = 0.25)(batch: DataFrame, id: Long): Unit =
-    if (!batch.isEmpty) // P9 empty-batch guard
+    guardedSink(batch) { batch =>
       driftScores(batch, ref, alertTv).withColumn("batch_id", lit(id))
         .coalesce(1).write.mode("overwrite").parquet(s"$metricsDir/batch=$id")
+    }
 
   /** Streaming DRIFT MONITOR — the "is today's data still shaped like
     * the corpus we trust" gate a training pipeline runs on its ingest:

@@ -39,112 +39,47 @@ class OperatorsSpec extends SparkSpec {
     assert(degRows.forall(_._2 >= 1), "a node with degree 0")
   }
 
-  test("dedup_prefix shingle checkpoint and winnow fp-keyed checkpoint change nothing") {
-    // r16 continuation: pure materialization/keying variants — output
-    // must be row-identical incl. order (both queries end in a
-    // unique-key orderBy).
-    val pL = graft.operators.TextOps.dedupPrefixPlan(spark, Sf0001,
-      geVerify = true, shCkpt = false).collect().toSeq
-    val pC = graft.operators.TextOps.dedupPrefixPlan(spark, Sf0001,
-      geVerify = true, shCkpt = true).collect().toSeq
-    assert(pC == pL, "dedup_prefix differs")
-    val wP = graft.operators.TextOps.winnowPairsPlan(spark, Sf0001,
-      fpPart = false).collect().toSeq
-    val wF = graft.operators.TextOps.winnowPairsPlan(spark, Sf0001,
-      fpPart = true).collect().toSeq
-    assert(wF == wP, "winnow_pairs differs")
-    val nL = graft.operators.TextOps.dedupNgramPlan(spark, Sf0001,
-      keptCkpt = false).collect().toSeq
-    val nC = graft.operators.TextOps.dedupNgramPlan(spark, Sf0001,
-      keptCkpt = true).collect().toSeq
-    assert(nC == nL, "dedup_ngram differs")
-    val eL = graft.operators.TextOps.dedupEditPlan(spark, Sf0001,
-      keptCkpt = false).collect().toSeq
-    val eC = graft.operators.TextOps.dedupEditPlan(spark, Sf0001,
-      keptCkpt = true).collect().toSeq
-    assert(eC == eL, "dedup_edit differs")
-    for ((nm, f) <- Seq[(String, Boolean => org.apache.spark.sql.DataFrame)](
-      "dedup_minhash" -> (b => graft.operators.TextOps.dedupMinhashPlan(spark, Sf0001, b)),
-      "decontaminate_fuzzy" -> (b => graft.operators.TextOps.decontaminateFuzzyPlan(spark, Sf0001, b)),
-      "minhash_estimate" -> (b => graft.operators.TextOps.minhashEstimatePlan(spark, Sf0001, b)),
-      "minhash_recall" -> (b => graft.operators.TextOps.minhashRecallPlan(spark, Sf0001, b)))) {
-      assert(f(true).collect().toSeq == f(false).collect().toSeq, s"$nm differs")
-    }
-  }
-
-  test("conditional scan spread changes nothing") {
-    // r16: repartitioning an under-split doc scan before CPU-heavy
-    // extraction is partitioning-only; every consumer ends in a
-    // deterministic-key orderBy, so output must be row-identical.
-    for ((nm, f) <- Seq[(String, Boolean => org.apache.spark.sql.DataFrame)](
-      "winnow_pairs" -> (b => graft.operators.TextOps.winnowPairsPlan(spark, Sf0001, fpPart = true, spread = b)),
-      "dedup_prefix" -> (b => graft.operators.TextOps.dedupPrefixPlan(spark, Sf0001, geVerify = true, shCkpt = true, spread = b)),
-      "dedup_edit" -> (b => graft.operators.TextOps.dedupEditPlan(spark, Sf0001, keptCkpt = true, spread = b)),
-      "dedup_minhash" -> (b => graft.operators.TextOps.dedupMinhashPlan(spark, Sf0001, bandCkpt = true, spread = b)),
-      "minhash_estimate" -> (b => graft.operators.TextOps.minhashEstimatePlan(spark, Sf0001, bandCkpt = true, spread = b)),
-      "audio_stats" -> (b => graft.operators.Multimodal.audioStatsPlan(spark, Sf0001, spread = b)),
-      "audio_frames" -> (b => graft.operators.Multimodal.audioFramesPlan(spark, Sf0001, spread = b)),
-      "image_dedup" -> (b => graft.operators.Multimodal.imageDedupPlan(spark, Sf0001, spread = b)),
-      "image_ahash" -> (b => graft.operators.Multimodal.imageAhashPlan(spark, Sf0001, spread = b)),
-      "image_phash" -> (b => graft.operators.Multimodal.imagePhashPlan(spark, Sf0001, spread = b)),
-      "multimodal_features" -> (b => graft.operators.Multimodal.multimodalFeaturesPlan(spark, Sf0001, spread = b)))) {
-      assert(f(true).collect().toSeq == f(false).collect().toSeq, s"$nm differs")
-    }
-  }
-
   test("ImageIO stream-cache setting never changes codec output") {
-    // r16: the suite disables ImageIO's JDK-default disk-backed stream
-    // cache (Multimodal object init). The flag is stream plumbing only
-    // — encoded PNG bytes and decoded features must be byte-identical
+    // Multimodal's object initializer disables ImageIO's JDK-default
+    // disk-backed stream cache. The flag is stream plumbing only —
+    // encoded PNG bytes and decoded features must be byte-identical
     // under both settings, for the full synth→encode→decode→feature
     // path of all three extractors. Pure-JVM check (no Spark).
+    import graft.operators.Multimodal
+    import javax.imageio.ImageIO
     val ids = (0L until 64L) ++ Seq(1000003L, 987654321L)
+    def media(id: Long) = Multimodal.MediaRow(id, Multimodal.synthPng(id))
     try {
-      graft.operators.Multimodal.setImgDiskCache(true)
-      val pngD = ids.map(graft.operators.Multimodal.synthPng)
-      val featD = ids.map(id => graft.operators.Multimodal.decode(
-        graft.operators.Multimodal.MediaRow(id, graft.operators.Multimodal.synthPng(id))))
-      val aD = ids.map(id => graft.operators.Multimodal.ahash(
-        graft.operators.Multimodal.MediaRow(id, graft.operators.Multimodal.synthPng(id))))
-      val pD = ids.map(id => graft.operators.Multimodal.phash(
-        graft.operators.Multimodal.MediaRow(id, graft.operators.Multimodal.synthPng(id))))
-      graft.operators.Multimodal.setImgDiskCache(false)
-      val pngM = ids.map(graft.operators.Multimodal.synthPng)
-      val featM = ids.map(id => graft.operators.Multimodal.decode(
-        graft.operators.Multimodal.MediaRow(id, graft.operators.Multimodal.synthPng(id))))
-      val aM = ids.map(id => graft.operators.Multimodal.ahash(
-        graft.operators.Multimodal.MediaRow(id, graft.operators.Multimodal.synthPng(id))))
-      val pM = ids.map(id => graft.operators.Multimodal.phash(
-        graft.operators.Multimodal.MediaRow(id, graft.operators.Multimodal.synthPng(id))))
+      // in-memory leg first: its first codec call runs the initializer
+      val pngM = ids.map(Multimodal.synthPng)
+      assert(!ImageIO.getUseCache, "Multimodal's initializer left the disk cache on")
+      val featM = ids.map(id => Multimodal.decode(media(id)))
+      val aM = ids.map(id => Multimodal.ahash(media(id)))
+      val pM = ids.map(id => Multimodal.phash(media(id)))
+      ImageIO.setUseCache(true)
+      val pngD = ids.map(Multimodal.synthPng)
+      val featD = ids.map(id => Multimodal.decode(media(id)))
+      val aD = ids.map(id => Multimodal.ahash(media(id)))
+      val pD = ids.map(id => Multimodal.phash(media(id)))
       assert(pngD.zip(pngM).forall { case (a, b) => java.util.Arrays.equals(a, b) },
         "encoded PNG bytes differ across cache settings")
       assert(featD == featM, "decoded features differ across cache settings")
       assert(aD == aM, "ahash differs across cache settings")
       assert(pD == pM, "phash differs across cache settings")
-    } finally graft.operators.Multimodal.setImgDiskCache(false)
+    } finally ImageIO.setUseCache(false)
   }
 
-  test("ann_recall shared cells/codes frames equal the solo chains") {
-    // r16: inside one q_ann_recall execution the four chains share the
-    // narrow scoring/codes checkpoints instead of recomputing them.
-    // Row-identical incl. order vs the solo-chain composition.
-    val solo = graft.operators.VectorOps.annRecallPlan(spark, Sf0001,
-      shared = false).collect().toSeq
+  test("ann_recall model memo depends only on the dataset") {
+    // models are memoized by (kind, dataset), so whichever consumer
+    // trains first fills the entry: q_sim_ivf and q_sim_pq fill
+    // lloyd/pqcb here, and q_ann_recall must not see the difference
     graft.operators.VectorOps.clearModelCache()
-    val shared = graft.operators.VectorOps.annRecallPlan(spark, Sf0001,
-      shared = true).collect().toSeq
-    assert(shared == solo)
-  }
-
-  test("ann_recall model memo changes nothing but the training count") {
-    val dup =
-      try {
-        graft.operators.VectorOps.modelMemoEnabled = false
-        q("q_ann_recall").collect().toSeq
-      } finally graft.operators.VectorOps.modelMemoEnabled = true
+    q("q_sim_ivf").collect()
+    q("q_sim_pq").collect()
+    val warm = q("q_ann_recall").collect().toSeq
     graft.operators.VectorOps.clearModelCache()
-    val memo = q("q_ann_recall").collect().toSeq
-    assert(memo == dup)
+    val cold = q("q_ann_recall").collect().toSeq
+    assert(warm == cold)
   }
 
   test("edit-distance gate precondition: corpus is ASCII; Spark counts code points") {

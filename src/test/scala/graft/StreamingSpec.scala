@@ -193,6 +193,48 @@ class StreamingSpec extends SparkSpec {
     assert(dimRowsRead.value == dimRows, s"${dimRowsRead.value / dimRows.toDouble} dimension scans")
   }
 
+  test("foreachBatch sinks evaluate their micro-batch's upstream once per row") {
+    // every row the sink's input produces passes this counter, placed
+    // after the upstream's last operator (for ANN ingest, the stateful
+    // dedup); the empty guard and the write must share one evaluation
+    val evaluated = spark.sparkContext.longAccumulator("upstream rows evaluated")
+    val pass = udf { (id: Long) => evaluated.add(1L); id }.asNondeterministic()
+    def runOnce(input: DataFrame, sink: (DataFrame, Long) => Unit): Unit = {
+      val q = input.withColumn("counted_id", pass(col(input.columns.head)))
+        .writeStream.trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", tmp("once-chk"))
+        .foreachBatch(sink).start()
+      q.awaitTermination(120000)
+      assert(q.recentProgress.count(_.numInputRows > 0) == 1) // one micro-batch
+    }
+    def fileStream(df: DataFrame): DataFrame = {
+      val dir = tmp("once-src")
+      df.coalesce(1).write.mode("overwrite").parquet(dir)
+      spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir)
+    }
+    // ANN ingest: stateful embedding dedup upstream
+    graft.functions.VectorExpressions.register(spark)
+    val corpus = Tables.embeddings(spark, Sf0001).filter($"vec_id" < 60)
+      .select($"vec_id", $"embedding".cast("array<double>").as("vec"))
+    val model = graft.operators.VectorOps.lloydModel(spark, corpus)
+    val keepers = EventPipeline.assignCells(corpus, model)
+      .select($"cell", $"vec_id".as("k_id"), $"vec".as("k_vec")).localCheckpoint()
+    val annOut = tmp("once-ann-out")
+    runOnce(EventPipeline.nearDedupedEmbeddings(fileStream(
+        corpus.withColumn("ingest_ts", lit(ts("2024-01-01 10:00:00")))
+          .select("vec_id", "ingest_ts", "vec"))),
+      EventPipeline.annIngestBatch(model, keepers, annOut))
+    val annRows = spark.read.parquet(annOut).count()
+    assert(annRows > 0)
+    assert(evaluated.value == annRows, s"ANN ingest: ${evaluated.value} evaluations of $annRows rows")
+    // percolate router: stateless upstream
+    evaluated.reset()
+    val docs = Tables.documents(spark, Sf0001).filter($"doc_id" < 60).select($"doc_id", $"text")
+    val nDocs = docs.count()
+    runOnce(fileStream(docs), EventPipeline.percolateRouteBatch(tmp("once-perc-out")))
+    assert(evaluated.value == nDocs, s"percolate router: ${evaluated.value} evaluations of $nDocs rows")
+  }
+
   test("watermarked tumbling window: closed windows emit, late data dropped (T8)") {
     implicit val ctx = spark.sqlContext
     val ms = MemoryStream[EvIn]
