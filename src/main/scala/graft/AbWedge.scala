@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Interleaved same-JVM timing of registered queries — the
   * measurement protocol the host's cross-run variance forces: two
   * back-to-back `graft.Bench` runs of UNCHANGED queries have differed
@@ -24,22 +22,12 @@ import org.apache.spark.sql.SparkSession
 object AbWedge {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = args.headOption.map(_.toInt).getOrElse(5)
     val names = args.drop(1).headOption.map(_.split(",").toSeq).getOrElse(Seq.empty)
     require(names.nonEmpty, "usage: AbWedge [passes] q_a,q_b,… (names from SparkEntry.queries)")
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"not registered in SparkEntry.queries: ${unknown.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession()
 
     def timed(name: String): Double = {
       Bench.clearResidue(spark)
@@ -61,14 +49,8 @@ object AbWedge {
       }
     }
     println(names.map { n =>
-      val ts = times(n).sorted
-      // even pass counts average the two middle elements — an
-      // upper-middle pick would bias the stat high exactly when the
-      // user asks for an even number of passes
-      val med =
-        if (ts.size % 2 == 1) ts(ts.size / 2)
-        else (ts(ts.size / 2 - 1) + ts(ts.size / 2)) / 2.0
-      f""""$n":{"median":$med%.3f,"min":${ts.head}%.3f,"max":${ts.last}%.3f}"""
+      val ts = times(n)
+      f""""$n":{"median":${Bench.median(ts)}%.3f,"min":${ts.min}%.3f,"max":${ts.max}%.3f}"""
     }.mkString("{", ",", "}"))
     spark.stop()
   }

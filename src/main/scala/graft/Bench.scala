@@ -70,14 +70,14 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   /** The cold-pass barrier every timed pass starts behind (Bench,
-    * AbWedge, ScaleProbe). It drops cross-query residue BEFORE the
+    * AbWedge, ScaleProbe, PrefixDecompose). It drops cross-query residue BEFORE the
     * clock starts: the queries using localCheckpoint leave their
     * blocks registered until the ContextCleaner catches up, and ~200
     * executions of residue in one JVM turn into GC churn that lands on
     * whichever query runs when the heap fills (measured: a 1.3 s query
-    * spiking to 16 s mid-suite). The memos go FIRST: unpersisting
-    * would orphan their localCheckpoint blocks anyway, and clearing
-    * them keeps every timed repetition COLD-path — the cross-query
+    * spiking to 16 s mid-suite). The memo goes FIRST: unpersisting
+    * would orphan its localCheckpoint blocks anyway, and clearing
+    * it keeps every timed repetition COLD-path — the cross-query
     * sharing speeds up pipeline runs (graft.Verify), never the
     * published numbers.
     *
@@ -90,20 +90,17 @@ object Bench {
     * mid-flight (the documented ±30%-plus swing class on the heavy
     * graph lines: same binary, 15 vs 31 s across artifacts). */
   private[graft] def clearResidue(spark: SparkSession, settle: Boolean = true): Unit = {
-    graft.operators.TextOps.clearGraphCache()
-    graft.operators.GraphOps.clearGraphCache()
-    graft.operators.VectorOps.clearModelCache()
+    graft.operators.Policy.clearMemo()
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     if (settle) { System.gc(); Thread.sleep(150); System.gc() }
   }
 
-  def main(args: Array[String]): Unit = {
-    val wall0 = System.nanoTime()
-    def wallSec: Double = (System.nanoTime() - wall0) / 1e9
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** The session every main runs in: `local[SPARK_GRAFT_CPUS]` (default
+    * 4) with as many shuffle partitions, UTC, AQE with partition
+    * coalescing, a 64MB broadcast threshold, no UI, WARN logging. */
+  private[graft] def localSession(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val wallBudget = sys.env.getOrElse("SPARK_GRAFT_WALL_BUDGET", "3300").toDouble
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -114,6 +111,24 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Median of a non-empty sample; an even count averages the two
+    * middle elements (an upper-middle pick would bias two-sample
+    * estimates high). */
+  private[graft] def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2)
+    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+  }
+
+  def main(args: Array[String]): Unit = {
+    val wall0 = System.nanoTime()
+    def wallSec: Double = (System.nanoTime() - wall0) / 1e9
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val wallBudget = sys.env.getOrElse("SPARK_GRAFT_WALL_BUDGET", "3300").toDouble
+    val spark = localSession()
     // materialize through the noop sink, NOT count(): count() lets
     // Catalyst prune every projection and drop the sort, so parse and
     // derived-column work would never be evaluated — the timed plan
@@ -227,10 +242,8 @@ object Bench {
       ts.filter(_ <= 3 * m)
     }
     def stat(ts: Vector[Double]): Double = {
-      val k = kept(ts).sorted
-      if (k.size <= 2) k.head
-      else if (k.size % 2 == 1) k(k.size / 2)
-      else (k(k.size / 2 - 1) + k(k.size / 2)) / 2.0
+      val k = kept(ts)
+      if (k.size <= 2) k.min else median(k)
     }
     // one complete JSON line per finished (query, pass), headline
     // fields LAST: the driver's artifact keeps the TAIL of the stdout

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints `explain("formatted")` for the named queries
   * (or a default audit set) so scan pushdown (`PushedFilters` /
   * `ReadSchema`), join strategies (BroadcastHashJoin vs shuffle), and
@@ -50,15 +48,7 @@ object Explain {
         "q_kneser_ney", "q_skipping_stats", "q_training_manifest",
         "q_ann_recall", "q_sim_histogram", "q_token_median",
         "q_split_groupsafe", "q_profit_by_nation", "q_returned_customers")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.localSession()
     names.foreach { name =>
       println(s"\n=================== $name ===================")
       SparkEntry.queries(name)(spark, sfDir).explain("formatted")

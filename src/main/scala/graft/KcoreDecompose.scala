@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-level decomposition of q_kcore's scaling behavior — the
   * diagnostic behind SCALING.json's note on the path's measured
   * exponent (the file's highest ratio). For each corpus dir (default:
@@ -29,22 +27,12 @@ object KcoreDecompose {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
     else Seq("/tmp/graft-scale/x4", "/tmp/graft-scale/x16")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", "32,256")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession()
     for (dir <- dirs; p <- parts) {
       spark.conf.set("spark.sql.shuffle.partitions", p)
-      graft.operators.GraphOps.clearGraphCache()
+      graft.operators.Policy.clearMemo()
       System.gc()
       val t0 = System.nanoTime()
       val (n0, k, rounds) =

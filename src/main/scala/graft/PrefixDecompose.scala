@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
+
+import graft.operators.TextOps
 
 /** Stage-level decomposition of q_dedup_prefix's scaling behavior —
   * the diagnostic behind SCALING.json's note on the path's measured
@@ -25,42 +27,41 @@ import org.apache.spark.sql.SparkSession
   * deployment sizes partitions with data; the harness pins them to
   * CPU count by design.
   *
+  * Every stage is timed the same way: a noop-sink write behind
+  * [[Bench.clearResidue]], one untimed warm-up of all three stages,
+  * then [[Passes]] passes that interleave the stages, each reported as
+  * its median. The counts are taken outside the clock.
+  *
   * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.PrefixDecompose
   * [dir ...]"; SPARK_GRAFT_PARTS overrides the partition settings
   * swept (comma-separated, default "32,256").
   */
 object PrefixDecompose {
+  private val Passes = 3
+
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
     else Seq("/tmp/graft-scale/x4", "/tmp/graft-scale/x16")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", "32,256")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def time(f: => Unit): Double = {
-      System.gc()
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+    val spark = Bench.localSession()
+    def timed(stage: () => DataFrame): Double = {
+      Bench.clearResidue(spark)
+      val t0 = System.nanoTime()
+      stage().write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
     }
     for (dir <- dirs; p <- parts) {
       spark.conf.set("spark.sql.shuffle.partitions", p)
-      val sh = graft.operators.TextOps.prefixShingles(spark, dir)
-      val nSh = sh.count()
-      val tSh = time(sh.write.format("noop").mode("overwrite").save())
-      val cand = graft.operators.TextOps.ppjoinCandidates(sh)
-      var nCand = 0L
-      val tCand = time { nCand = cand.count() }
-      val tFull = time(graft.operators.TextOps.queries("q_dedup_prefix")(spark, dir)
-        .write.format("noop").mode("overwrite").save())
-      println(f"[prefix] dir=$dir parts=$p%-4d shingles=$nSh%,d cand=$nCand%,d " +
+      def shingles() = TextOps.prefixShingles(spark, dir)
+      def candidates() = TextOps.ppjoinCandidates(shingles())
+      val stages = Seq[() => DataFrame](
+        () => shingles(), () => candidates(), () => TextOps.queries("q_dedup_prefix")(spark, dir))
+      stages.foreach(timed)
+      val passes = Seq.fill(Passes)(stages.map(timed))
+      val Seq(tSh, tCand, tFull) = stages.indices.map(i => Bench.median(passes.map(_(i))))
+      println(f"[prefix] dir=$dir parts=$p%-4d shingles=${shingles().count()}%,d " +
+        f"cand=${candidates().count()}%,d " +
         f"t_shingles=$tSh%.2f t_cand=$tCand%.2f t_full=$tFull%.2f")
     }
     spark.stop()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling-exponent artifact: runs graft.operators.ScaleProbe at 4×
   * and 16× the base corpus and writes SCALING.json with per-path
   * times and the t(16×)/t(4×) ratio. Linear growth would show 4.0;
@@ -33,20 +31,10 @@ object Scaling {
 
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val workDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft-scale")
     val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession()
     val (lo, hi) = (4, 16)
     val res = graft.operators.ScaleProbe.run(spark, baseDir, workDir, Seq(lo, hi), only = only)
     val names = res(lo).keys.toSeq.sorted

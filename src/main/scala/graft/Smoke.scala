@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local stand-in for the driver's t1 smoke: run SparkEntry.entry on
   * sf0.001 and print the row count (driver requires rows > 0).
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession()
     val df = SparkEntry.entry(spark)
     println(s"ENTRY_ROWS=${df.count()}")
     df.show(5, truncate = false)

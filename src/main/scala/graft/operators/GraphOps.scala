@@ -36,27 +36,6 @@ import graft.sources.Tables
   */
 object GraphOps {
 
-  /** Cross-QUERY memo for the co-occurrence graph family — the twin of
-    * TextOps' md5 signature-graph memo: q_triangles, q_local_cc and
-    * q_kcore all start from the same (edges, degrees) frames and the
-    * two triangle queries each pay the same wedge join, so a
-    * pipeline-shaped run (graft.Verify, or a production multi-report
-    * job) builds each intermediate ONCE. Entries are localCheckpoint-
-    * materialized frames keyed by (session identity, data dir).
-    * graft.Bench and ScaleProbe CLEAR this memo before every timed
-    * repetition, so published per-query times stay COLD-path honest —
-    * the memo accelerates pipeline-shaped runs, never the benchmark. */
-  private val graphCache =
-    scala.collection.concurrent.TrieMap.empty[String, AnyRef]
-
-  /** Drop all memoized graph intermediates (bench/probe isolation). */
-  def clearGraphCache(): Unit = graphCache.clear()
-
-  private def cachedGraph[T <: AnyRef](s: SparkSession, d: String,
-      kind: String)(build: => T): T =
-    graphCache.getOrElseUpdate(
-      s"$kind|${System.identityHashCode(s)}|$d", build).asInstanceOf[T]
-
   /** Fused co-occurrence front half: ONE node-keyed exchange builds the
     * DIRECTED half-edge frame `dir` = every adjacent ordered pair
     * (a, b), a ≠ b, deduped — and edges, degrees and the doubled
@@ -111,7 +90,7 @@ object GraphOps {
     * graph — one fused build per (session, dataset). */
   private def coEdgesDegDirM(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) =
-    cachedGraph[(DataFrame, DataFrame, DataFrame)](s, d, "co") {
+    Policy.memo[(DataFrame, DataFrame, DataFrame)](s, d, "co") {
       coEdgesDegFused(s, d)
     }
 
@@ -130,7 +109,7 @@ object GraphOps {
   /** Memoized triangle rows — the ~36 M-row wedge-join product both
     * triangle queries consume. */
   private def triangleRowsM(s: SparkSession, d: String): DataFrame =
-    cachedGraph[DataFrame](s, d, "tri") {
+    Policy.memo[DataFrame](s, d, "tri") {
       val (e, deg) = coEdgesDegM(s, d)
       triangleRows(e, deg).localCheckpoint()
     }
@@ -258,9 +237,8 @@ object GraphOps {
     // (link scores ran first) count them for free; a cold run counts
     // via the row-free sum — never paying the O(T) checkpoint just to
     // produce one number
-    val tri = graphCache.get(s"tri|${System.identityHashCode(s)}|$d") match {
-      case Some(rows) => rows.asInstanceOf[DataFrame]
-        .agg(count(lit(1)).as("n_triangles"))
+    val tri = Policy.memoized[DataFrame](s, d, "tri") match {
+      case Some(rows) => rows.agg(count(lit(1)).as("n_triangles"))
       case None => triangleCount(e, deg)
     }
     census(deg, tri)
@@ -828,7 +806,7 @@ object GraphOps {
     * per-node sort. Labels are node ids ≥ 0, so −lbl cannot
     * overflow. */
   private[graft] def lpaLabels(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    cachedGraph[(DataFrame, DataFrame)](s, d, "lpa") {
+    Policy.memo[(DataFrame, DataFrame)](s, d, "lpa") {
       val li = Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
         .repartition(col("l_orderkey"))
         .dropDuplicates("l_orderkey", "l_partkey")
@@ -951,7 +929,7 @@ object GraphOps {
   // where a triangle subtree streamed into the agg plans blind — that
   // fused form measured slower (OPTIMIZATION_r15.md).
   private def linkScoresM(s: SparkSession, d: String): DataFrame =
-    cachedGraph[DataFrame](s, d, "links") {
+    Policy.memo[DataFrame](s, d, "links") {
       val (_, deg) = coEdgesDegM(s, d)
       val tri = triangleRowsM(s, d)
       val degT = deg.withColumn("term",

@@ -53,21 +53,6 @@ object Multimodal {
   private def docIds(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d).select(col("doc_id"))
 
-  /** Doc-id scan floored at the session's default parallelism (guide
-    * §2.5 — an input smaller than one split serializes the whole
-    * CPU-heavy codec map on one core; measured at sf0.1 the 594 KB
-    * documents.parquet yields ONE scan partition, so every encode+
-    * decode ran single-threaded). The repartition is CONDITIONAL on
-    * the scan actually under-splitting: at real corpus sizes the scan
-    * is already parallel and this is a no-op — no constant tuned for
-    * local mode, and the shuffled rows are bare 8-byte ids. */
-  private def docIdsSpread(s: SparkSession, d: String): DataFrame = {
-    val ids = docIds(s, d)
-    val want = s.sparkContext.defaultParallelism
-    if (ids.rdd.getNumPartitions < want) ids.repartition(want, col("doc_id"))
-    else ids
-  }
-
   /** Typed media row: the binary payload IS a decodable PNG image. */
   final case class MediaRow(doc_id: Long, media: Array[Byte])
 
@@ -194,7 +179,7 @@ object Multimodal {
   // the decode map is the whole cost and nothing loops behind it.
   private def qImageAhash(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val hashes = docIdsSpread(s, d).as[Long]
+    val hashes = Policy.spread(docIds(s, d)).as[Long]
       .mapPartitions(it => it.map(id => ahash(MediaRow(id, synthPng(id)))))
       .toDF()
     val byHash = org.apache.spark.sql.expressions.Window.partitionBy("ahash")
@@ -355,7 +340,7 @@ object Multimodal {
   // heaviest per-image map in the family.
   private def qMultimodalFeatures(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val media = docIdsSpread(s, d).as[Long]
+    val media = Policy.spread(docIds(s, d)).as[Long]
       .mapPartitions(it => it.map(id => MediaRow(id, synthPng(id))))
     media
       .mapPartitions(it => it.map(decode))
@@ -443,7 +428,7 @@ object Multimodal {
   // the project; the only ordering is the oracle-mandated final sort.
   private def qAudioStats(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val media = docIdsSpread(s, d).as[Long]
+    val media = Policy.spread(docIds(s, d)).as[Long]
       .mapPartitions(it => it.map(id => MediaRow(id, synthPcm(id))))
       .toDF()
     media
@@ -477,7 +462,7 @@ object Multimodal {
     * pack→parse roundtrip at frame granularity. */
   private def qAudioFrames(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val media = docIdsSpread(s, d).as[Long]
+    val media = Policy.spread(docIds(s, d)).as[Long]
       .mapPartitions(it => it.map(id => MediaRow(id, synthPcm(id))))
       .toDF()
     val byDoc = org.apache.spark.sql.expressions.Window

@@ -323,16 +323,7 @@ object ScaleProbe {
     * clean) but still trips on a genuine super-linear path, whose
     * growth inflates EVERY pass — including the minimum. */
   private[graft] def estimate(ts: Seq[Double], useMin: Boolean): Double =
-    if (useMin) ts.min
-    else {
-      // even pass counts average the two middle elements — the
-      // upper-middle pick biases 2-sample estimates high exactly when
-      // a budget truncation leaves an even sample (same rule as
-      // Bench.stat and AbWedge)
-      val s = ts.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
+    if (useMin) ts.min else graft.Bench.median(ts)
 
   /** Synthesize each multiplier under `workDir` and time every path
     * (or just the ones named by `only` — the Scaling merge mode and

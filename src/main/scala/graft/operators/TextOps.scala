@@ -40,20 +40,6 @@ object TextOps {
 
   private def tokens(c: String = "text") = split(col(c), " ")
 
-  /** Conditional scan spread (guide §2.5): floor a doc frame's
-    * partitioning at the session's default parallelism before
-    * CPU-heavy per-row extraction. The 594 KB sf0.1 documents.parquet
-    * yields ONE split per scan (the union in [[doubled]] gives two),
-    * so everything computed BELOW the first exchange — tokenize, md5
-    * sweeps, codec work — serializes on ≤2 cores. Conditional on the
-    * scan actually under-splitting: at real corpus sizes this is a
-    * no-op, so it is not a local-mode constant. */
-  private def spreadDocs(df: DataFrame): DataFrame = {
-    val want = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < want) df.repartition(want, col("doc_id"))
-    else df
-  }
-
   /** Corpus with a replayed copy (ids shifted by 1,000,000) — the
     * dedup fixture. Mirrored exactly in the oracle SQL CTE.
     */
@@ -767,7 +753,7 @@ object TextOps {
     * exchange-free (the q_dedup_prefix / q_winnow_pairs device).
     */
   def ngramCandidates(docs: DataFrame, dfCap: Int = ShingleDfCap): DataFrame = {
-    val kept = keptShingleHashes(spreadDocs(docs), dfCap)
+    val kept = keptShingleHashes(Policy.spread(docs), dfCap)
       .repartition(col("sh")).localCheckpoint()
     val a = kept.select(col("doc_id").as("a_id"), col("n_sh").as("a_n"), col("sh"))
     val b = kept.select(col("doc_id").as("b_id"), col("n_sh").as("b_n"), col("sh"))
@@ -828,7 +814,7 @@ object TextOps {
     * the PrefixDecompose diagnostic can price the PPJoin stages
     * (index, candidates, verify) separately against scaled corpora. */
   private[graft] def prefixShingles(s: SparkSession, d: String): DataFrame =
-    spreadDocs(doubled(s, d))
+    Policy.spread(doubled(s, d))
       .withColumn("toks", tokens())
       .select(col("doc_id"), explode(array_distinct(
         expr("transform(sequence(1, greatest(size(toks) - 2, 1)), i -> concat_ws(' ', slice(toks, i, 3)))")))
@@ -1057,10 +1043,10 @@ object TextOps {
     * sides) AND the verify-stage rejoins in every consumer
     * (q_dedup_minhash, q_decontaminate_fuzzy, q_minhash_recall) — without
     * materialization the shingle explode + window + agg would re-run
-    * per branch. The doc scan is spread (see [[spreadDocs]]): the
+    * per branch. The doc scan is spread (see [[Policy.spread]]): the
     * shingle extraction runs below the first exchange. */
   private def minhashSigFrame(s: SparkSession, d: String): DataFrame =
-    keptShingleHashes(spreadDocs(doubled(s, d)), ShingleDfCap)
+    keptShingleHashes(Policy.spread(doubled(s, d)), ShingleDfCap)
       .groupBy(col("doc_id"))
       .agg(array_sort(collect_list(col("sh"))).as("sh_hash"))
       .withColumn("sig",
@@ -1248,7 +1234,7 @@ object TextOps {
     * string slots per row, so a duplicated pass would be pricier here. */
   private def qMinhashEstimate(s: SparkSession, d: String): DataFrame = {
     val rows = MinhashSlots / MinhashBands
-    val kept = spreadDocs(doubled(s, d))
+    val kept = Policy.spread(doubled(s, d))
       .withColumn("toks", tokens())
       .withColumn("shingles", array_distinct(
         expr("transform(sequence(1, greatest(size(toks) - 2, 1)), i -> concat_ws(' ', slice(toks, i, 3)))")))
@@ -1415,38 +1401,11 @@ object TextOps {
         .agg(expr("graft_simhash_agg(h, w)").as("simhash"))
     }
 
-  /** Cross-QUERY memo for the md5-family signature graph: SIX queries
-    * (estimate, closure, sizes, degrees, pagerank, keeper_quality)
-    * consume the same
-    * signature frame / keeper groups / near-pair graph / CC labels
-    * over the same doubled corpus, and a pipeline run (graft.Verify,
-    * or a production multi-report job) should build each intermediate
-    * ONCE — exactly the sharing the round-4 review prescribed ("share
-    * the keeper-graph CC machinery's intermediate, keyed by hash
-    * family"). Entries are localCheckpoint-materialized frames keyed
-    * by (session identity, data dir); the session reference in the
-    * value keeps the key's identityHashCode stable. graft.Bench CLEARS
-    * this memo before every timed repetition (alongside its existing
-    * residue unpersist, which would orphan the checkpoint blocks
-    * anyway), so published per-query times stay COLD-path honest —
-    * the memo accelerates pipeline-shaped runs, never the benchmark.
-    */
-  private val graphCache =
-    scala.collection.concurrent.TrieMap.empty[String, AnyRef]
-
-  /** Drop all memoized graph intermediates (bench/test isolation). */
-  def clearGraphCache(): Unit = graphCache.clear()
-
-  private def cachedGraph[T <: AnyRef](s: SparkSession, d: String,
-      kind: String)(build: => T): T =
-    graphCache.getOrElseUpdate(
-      s"$kind|${System.identityHashCode(s)}|$d", build).asInstanceOf[T]
-
   /** Materialized (sigsM, groups) for the md5 family over `d`'s
     * doubled corpus — groups carry per-signature member stats so any
     * consumer can roll up without touching per-doc rows. */
   private def md5SigsGroups(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    cachedGraph[(DataFrame, DataFrame)](s, d, "sg") {
+    Policy.memo[(DataFrame, DataFrame)](s, d, "sg") {
       val sigsM = md5SimhashSigs(s, doubled(s, d)).localCheckpoint()
       val groups = sigsM.groupBy(col("simhash"))
         .agg(min(col("doc_id")).as("keeper_id"),
@@ -1458,13 +1417,13 @@ object TextOps {
 
   /** Hamming-≤3 DISTINCT-signature pairs (a_sig < b_sig). */
   private def md5SigPairs(s: SparkSession, d: String): DataFrame =
-    cachedGraph[DataFrame](s, d, "pairs") {
+    Policy.memo[DataFrame](s, d, "pairs") {
       nearSigPairs(md5SigsGroups(s, d)._2.select("simhash")).localCheckpoint()
     }
 
   /** Keeper-to-keeper near edges (src, dst), one per signature pair. */
   private def md5NearEdges(s: SparkSession, d: String): DataFrame =
-    cachedGraph[DataFrame](s, d, "edges") {
+    Policy.memo[DataFrame](s, d, "edges") {
       val groups = md5SigsGroups(s, d)._2
       md5SigPairs(s, d)
         .join(groups.select(col("simhash").as("a_sig"), col("keeper_id").as("src")), Seq("a_sig"))
@@ -1474,7 +1433,7 @@ object TextOps {
 
   /** CC labels over the md5 keeper graph (keeper_id, label). */
   private def md5KeeperLabels(s: SparkSession, d: String): DataFrame =
-    cachedGraph[DataFrame](s, d, "labels") {
+    Policy.memo[DataFrame](s, d, "labels") {
       val groups = md5SigsGroups(s, d)._2
       connectedComponents(
         groups.select(col("keeper_id").as("doc_id")), md5NearEdges(s, d))
@@ -3704,8 +3663,8 @@ object TextOps {
     // and both pair-join sides are already fp-partitioned (no further
     // exchange before the final (a_id, b_id) aggregate).
     // The md5 sweep runs BELOW the first exchange, i.e. on the raw
-    // scan's ≤2 partitions, hence the spread — see [[spreadDocs]].
-    val sel = winnowFrame(spreadDocs(doubled(s, d)))
+    // scan's ≤2 partitions, hence the spread — see [[Policy.spread]].
+    val sel = winnowFrame(Policy.spread(doubled(s, d)))
       .select(col("doc_id"), col("n_fps"), explode(col("fps")).as("fp"))
       .repartition(col("fp"))
       .localCheckpoint()

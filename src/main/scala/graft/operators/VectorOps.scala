@@ -23,48 +23,20 @@ import graft.sources.Tables
   */
 object VectorOps {
 
-  /** Cross-CONSUMER memo for the bounded TRAINED MODELS (Lloyd
-    * centroids, PQ codebooks — K×dim driver-side Seqs, never data):
-    * the twin of GraphOps' graph memo, but for model state. q_ann_recall
-    * alone trains the SAME Lloyd model twice (its ivf and ivfpq chains)
-    * and the SAME PQ codebook twice (pq and ivfpq) — each training is
-    * a driver-blocking collect ladder (seeds + LloydIters assign/mean
-    * rounds), so the duplicate rebuild is pure repeated work inside ONE
-    * query's clock (guide §1.2: don't compute things you throw away).
-    * Keyed by (kind, data dir); graft.Bench.clearResidue CLEARS this
-    * memo before every timed repetition (Bench, AbWedge, ScaleProbe),
-    * so each timed pass still trains cold — the memo dedups consumers
-    * WITHIN a pass, never across runs. */
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[String, AnyRef]
-
-  /** Drop all memoized models (bench/probe isolation). */
-  def clearModelCache(): Unit = modelCache.clear()
-
-  // keyed by (kind, dataset) ONLY: an identityHashCode(session)
-  // component could collide and a GC'd session's slot be reused, so it
-  // never actually isolated sessions. The invariant that makes the
-  // dataset key sufficient: the cached model depends ONLY on `d` —
-  // every caller projects the identical (vec_id, vec) corpus
-  // (OperatorsSpec pins it) — and the cache is cleared before every
-  // timed pass.
-  private def cachedModel[T <: AnyRef](s: SparkSession, d: String,
-      kind: String)(build: => T): T =
-    modelCache.getOrElseUpdate(s"$kind|$d", build).asInstanceOf[T]
-
   /** Memoized [[lloydModel]] over dataset `d`'s full embeddings corpus
-    * (all full-corpus consumers train the identical model — the model
-    * depends only on (vec_id, vec), which every caller projects the
-    * same way; qSemdedup's DOUBLED corpus deliberately does NOT use
-    * this). */
+    * ([[Policy.memo]] kind `lloyd`). The key names the dataset, not
+    * `vecs`: that is sound because the model depends only on
+    * (vec_id, vec), which every full-corpus caller projects the same
+    * way (OperatorsSpec pins it); qSemdedup's DOUBLED corpus
+    * deliberately does NOT use this. */
   private def lloydModelM(s: SparkSession, d: String,
       vecs: DataFrame): Seq[(Long, Seq[Double])] =
-    cachedModel[Seq[(Long, Seq[Double])]](s, d, "lloyd")(lloydModel(s, vecs))
+    Policy.memo[Seq[(Long, Seq[Double])]](s, d, "lloyd")(lloydModel(s, vecs))
 
   /** Memoized [[pqCodebook]] — same contract as [[lloydModelM]]. */
   private def pqCodebookM(s: SparkSession, d: String, e: DataFrame,
       sub: DataFrame): Seq[(Int, Long, Seq[Double])] =
-    cachedModel[Seq[(Int, Long, Seq[Double])]](s, d, "pqcb")(pqCodebook(s, e, sub))
+    Policy.memo[Seq[(Int, Long, Seq[Double])]](s, d, "pqcb")(pqCodebook(s, e, sub))
 
   /** Exact dot product of two double-array columns — the native
     * codegen'd DotProduct expression (graft.functions), same
@@ -455,7 +427,7 @@ object VectorOps {
   /** Cell assignment against a FIXED centroid model — every vector's
     * argmax-cosine cell with the exact Lloyd tie-break. The shared
     * core of q_ivf_assign and the streaming ANN ingest
-    * (EventPipeline.assignCells): same model, same tie-break, so a
+    * (EventPipeline.annIngestBatch): same model, same tie-break, so a
     * vector lands in the same cell on either surface. Extra input
     * columns pass through. */
   private[graft] def assignCells(vecs: DataFrame,

@@ -7,8 +7,9 @@ import scala.util.{Failure, Try}
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -223,37 +224,52 @@ object EventPipeline {
             s"not the batch's ${batch.schema.toDDL}")
         old.drop("bucket").withColumn("is_new", lit(0)).unionByName(incoming)
     }
-    // duplicate keys within one batch (an at-least-once replay inside
-    // the trigger) need a deterministic order, or the winner is
-    // whichever row the shuffle happened to order first: break ties on
-    // every payload column (name-sorted, desc = latest-ish wins)
-    val tieBreakers = unioned.columns
-      .filterNot(Set("event_id", "is_new"))
-      .sorted.map(col(_).desc_nulls_last)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_id"))
-      .orderBy((col("is_new").desc +: tieBreakers.toSeq): _*)
-    unioned
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn", "is_new")
+    latestPerKey(unioned, col("is_new").desc)
+      .drop("is_new")
       .withColumn("bucket", lit(0))
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket").parquet(viewDir)
   }
 
+  /** The latest row per `event_id`: ordered by `first`, then by every
+    * payload column, name-sorted, `desc_nulls_last`. Duplicate keys
+    * within one batch (an at-least-once replay inside the trigger)
+    * need that deterministic order, or the winner is whichever row the
+    * shuffle happened to order first. `is_new`, the keyed view's merge
+    * marker, is not payload. */
+  private def latestPerKey(df: DataFrame, first: Column*): DataFrame = {
+    val payload = df.columns.filterNot(Set("event_id", "is_new")).sorted.map(col(_).desc_nulls_last)
+    val w = Window.partitionBy(col("event_id")).orderBy(first ++ payload: _*)
+    df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
+  }
+
+  /** Starts `frame` as an append-mode query checkpointed under
+    * `checkpointDir` that hands each micro-batch to `sink`. */
+  private def start(frame: DataFrame, checkpointDir: String, trigger: Trigger)(
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    frame.writeStream
+      .outputMode(OutputMode.Append)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch(sink)
+      .start()
+
+  /** EP1's enrichment, started into `sink`. The dimension is a snapshot
+    * (reference T9, `stream-processor.py:265`): `dim` is persisted
+    * here, filled by the query's first micro-batch and read from memory
+    * by every later one instead of rescanned. Changes to the
+    * dimension's files are not seen while it stays cached. The cache
+    * belongs to the session, not the query: it outlives `stop()`, a
+    * restart with the same (or an equal) frame reuses it, and
+    * `dim.unpersist()` drops it so that the next start takes a fresh
+    * snapshot. */
+  private def startEnriched(events: DataFrame, dim: DataFrame, checkpointDir: String,
+      trigger: Trigger)(sink: (DataFrame, Long) => Unit): StreamingQuery =
+    start(Enrich.transform(events, dim.persist()), checkpointDir, trigger)(sink)
+
   /** EP1 as a continuously-running query: stream-static broadcast
-    * enrichment, 2 s trigger, checkpointed, dual sink.
-    *
-    * The dimension is a snapshot (reference T9, `stream-processor.py:265`):
-    * `dim` is persisted here, filled by the query's first micro-batch
-    * and read from memory by every later one instead of rescanned.
-    * Changes to the dimension's files are not seen while it stays
-    * cached. The cache belongs to the session, not the query: it
-    * outlives `stop()`, a restart with the same (or an equal) frame
-    * reuses it, and `dim.unpersist()` drops it so that the next start
-    * takes a fresh snapshot.
-    */
+    * enrichment against a dimension snapshot ([[startEnriched]]), 2 s
+    * trigger, checkpointed, dual sink. */
   def startEnrichment(
       events: DataFrame,
       dim: DataFrame,
@@ -261,53 +277,36 @@ object EventPipeline {
       viewDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("2 seconds")): StreamingQuery =
-    Enrich.transform(events, dim.persist())
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(writeBatch(historyDir, viewDir) _)
-      .start()
+    startEnriched(events, dim, checkpointDir, trigger)(writeBatch(historyDir, viewDir))
 
   /** K2/K3 against a REAL database: per micro-batch, reduce to the
-    * latest row per key (same deterministic tie order as
-    * [[upsertKeyedView]]), stringify the payload (the reference's
-    * KV-fallback projection), and idempotently upsert over JDBC into
-    * embedded Derby — the executable stand-in for the reference's
-    * Cassandra/Redis serving writes. At-least-once replays rewrite
+    * latest row per key ([[latestPerKey]], the keyed view's tie order),
+    * stringify the payload (the reference's KV-fallback projection),
+    * and idempotently upsert over JDBC into embedded Derby — the
+    * executable stand-in for the reference's Cassandra/Redis serving
+    * writes. At-least-once replays rewrite
     * identical rows, so the table converges (StreamingSpec proves it
     * against the live database).
     */
   def writeJdbcServing(url: String)(batch: DataFrame, batchId: Long): Unit =
     guardedSink(batch) { batch =>
-      val keyed = batch.filter(col("event_id").isNotNull)
-      val tieBreakers = keyed.columns.filterNot(_ == "event_id")
-        .sorted.map(col(_).desc_nulls_last)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("event_id")).orderBy(tieBreakers.toSeq: _*)
-      val latest = keyed
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
+      val latest = latestPerKey(batch.filter(col("event_id").isNotNull))
       val payloadCols = latest.columns.filterNot(_ == "event_id").sorted
       val kv = latest.select(col("event_id"),
         to_json(struct(payloadCols.map(col).toSeq: _*)).as("payload"))
       graft.sources.JdbcSource.upsertServing(kv, url)
     }
 
-  /** EP1 with the database serving sink: enrichment streamed straight
-    * into the Derby `serving_kv` table. */
+  /** EP1 with the database serving sink: enrichment against a
+    * dimension snapshot ([[startEnriched]]) streamed straight into the
+    * Derby `serving_kv` table. */
   def startJdbcServing(
       events: DataFrame,
       dim: DataFrame,
       url: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("2 seconds")): StreamingQuery =
-    Enrich.transform(events, dim)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(writeJdbcServing(url) _)
-      .start()
+    startEnriched(events, dim, checkpointDir, trigger)(writeJdbcServing(url))
 
   /** T8: watermarked tumbling-window aggregation (the capability gap
     * the reference's category demands — late data beyond 10 minutes is
@@ -463,47 +462,23 @@ object EventPipeline {
       quarantineDir: String, checkpointDir: String, minZ: Double = 0.0,
       watermarkDelay: String = "10 minutes",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    nearDedupedDocuments(docs, watermarkDelay)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(routeDocumentsBatch(acceptDir, quarantineDir, minZ) _)
-      .start()
+    start(nearDedupedDocuments(docs, watermarkDelay), checkpointDir, trigger)(
+      routeDocumentsBatch(acceptDir, quarantineDir, minZ))
 
-  /** Per-vector IVF cell assignment against a FIXED centroid model —
-    * the batch/stream-SHARED core of the ANN ingest: cosine to each of
-    * the K broadcast centroids, argmax cell with the exact Lloyd
-    * tie-break ((p_cos desc, cell) — VectorOps.scoreAgainst), so a
-    * vector lands in the SAME cell whether it arrives on the stream or
-    * sits in the batch corpus. `centroids` is the model a deployment
-    * persists from the batch build (VectorOps.lloydModel — K×dim,
-    * driver-held, broadcast). Input needs (vec_id, vec); extra
-    * columns pass through. */
-  def assignCells(vecs: DataFrame,
-      centroids: Seq[(Long, Seq[Double])]): DataFrame =
-    graft.operators.VectorOps.assignCells(vecs, centroids)
-
-  /** Full ANN assignment: cell (via [[assignCells]]) plus the nearest
-    * KEEPER within that cell by exact cosine (ties to the lowest
-    * keeper id) — the label a streaming corpus ingest attaches to
-    * every arriving vector so downstream consumers know which existing
-    * representative it is closest to (or NULL if its cell holds no
-    * keeper yet). `keepers` is the static (cell, k_id, k_vec) frame of
-    * corpus representatives — cell-keyed, so the join is an equi-join
-    * on cell followed by a per-vector top-1, never an all-pairs scan. */
-  def assignAnn(vecs: DataFrame, centroids: Seq[(Long, Seq[Double])],
-      keepers: DataFrame): DataFrame =
-    graft.operators.VectorOps.assignAnn(vecs, centroids, keepers)
-
-  /** foreachBatch sink for [[startAnnIngest]]: assign every survivor
-    * of the micro-batch and land the labels in an epoch-keyed
-    * directory ([[routeDocumentsBatch]]'s idempotent-overwrite trade —
-    * a replayed micro-batch rewrites its own directory). */
+  /** foreachBatch sink for [[startAnnIngest]]: label every survivor of
+    * the micro-batch with its IVF cell and nearest keeper
+    * (VectorOps.assignAnn, the batch assignment, so a vector lands in
+    * the same cell on either surface) and land the labels in an
+    * epoch-keyed directory ([[routeDocumentsBatch]]'s
+    * idempotent-overwrite trade — a replayed micro-batch rewrites its
+    * own directory). `centroids` is the model a deployment persists
+    * from the batch build (VectorOps.lloydModel — K×dim, driver-held,
+    * broadcast); `keepers` is the static (cell, k_id, k_vec) frame of
+    * corpus representatives. */
   def annIngestBatch(centroids: Seq[(Long, Seq[Double])], keepers: DataFrame,
       outDir: String)(batch: DataFrame, id: Long): Unit =
     guardedSink(batch) { batch =>
-      assignAnn(batch, centroids, keepers)
+      graft.operators.VectorOps.assignAnn(batch, centroids, keepers)
         .withColumn("batch_id", lit(id))
         .write.mode("overwrite").parquet(s"$outDir/batch=$id")
     }
@@ -525,13 +500,8 @@ object EventPipeline {
       keepers: DataFrame, outDir: String, checkpointDir: String,
       watermarkDelay: String = "10 minutes",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    nearDedupedEmbeddings(vecs, watermarkDelay)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(annIngestBatch(centroids, keepers, outDir) _)
-      .start()
+    start(nearDedupedEmbeddings(vecs, watermarkDelay), checkpointDir, trigger)(
+      annIngestBatch(centroids, keepers, outDir))
 
   /** CMS geometry for [[startFrequencyMonitor]] — the q_cms_watchlist
     * parameters (width 2000 × depth 10 ≈ 160 KB, fixed seed so every
@@ -588,12 +558,7 @@ object EventPipeline {
   def startFrequencyMonitor(events: DataFrame, keyCol: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(cmsIngestBatch(keyCol, outDir) _)
-      .start()
+    start(events, checkpointDir, trigger)(cmsIngestBatch(keyCol, outDir))
 
   /** foreachBatch sink for [[startPercolateRouter]]: match the
     * micro-batch's documents against the broadcast percolate registry
@@ -621,12 +586,7 @@ object EventPipeline {
   def startPercolateRouter(docs: DataFrame, matchesDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(percolateRouteBatch(matchesDir) _)
-      .start()
+    start(docs, checkpointDir, trigger)(percolateRouteBatch(matchesDir))
 
   /** 50-wide value bins over [0, 500), clamped into bin 9 — the fixed
     * binning shared by the drift monitor's batch and reference sides. */
@@ -697,12 +657,7 @@ object EventPipeline {
   def startDriftMonitor(events: DataFrame, ref: DataFrame,
       metricsDir: String, checkpointDir: String, alertTv: Double = 0.25,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(driftMetricsBatch(ref, metricsDir, alertTv) _)
-      .start()
+    start(events, checkpointDir, trigger)(driftMetricsBatch(ref, metricsDir, alertTv))
 
   /** Streaming counterpart of the batch q_dedup_incremental: the
     * NOVEL-ONLY firehose. Arrivals stream in; anything whose content

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window}
 
 /** Diagnostic main: walk every registered query's OPTIMIZED logical
@@ -10,15 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window}
   */
 object WindowSweep {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Bench.localSession()
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").toSet) else None

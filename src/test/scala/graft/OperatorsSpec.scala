@@ -70,16 +70,29 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("ann_recall model memo depends only on the dataset") {
-    // models are memoized by (kind, dataset), so whichever consumer
+    // models are memoized by (kind, session, dataset), so whichever consumer
     // trains first fills the entry: q_sim_ivf and q_sim_pq fill
     // lloyd/pqcb here, and q_ann_recall must not see the difference
-    graft.operators.VectorOps.clearModelCache()
+    graft.operators.Policy.clearMemo()
     q("q_sim_ivf").collect()
     q("q_sim_pq").collect()
     val warm = q("q_ann_recall").collect().toSeq
-    graft.operators.VectorOps.clearModelCache()
+    graft.operators.Policy.clearMemo()
     val cold = q("q_ann_recall").collect().toSeq
     assert(warm == cold)
+  }
+
+  test("scan spread floors an under-split frame at default parallelism and leaves a split one alone") {
+    import graft.operators.Policy
+    val want = spark.sparkContext.defaultParallelism
+    val docs = graft.sources.Tables.documents(spark, Sf0001).select("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.getLong(0))
+    val underSplit = docs.coalesce(1)
+    val spread = Policy.spread(underSplit)
+    assert(spread.rdd.getNumPartitions == want)
+    assert(rows(spread) == rows(underSplit))
+    val split = docs.repartition(want + 1, $"doc_id")
+    assert(Policy.spread(split) eq split)
   }
 
   test("edit-distance gate precondition: corpus is ASCII; Spark counts code points") {

@@ -6,7 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Enrich
 import graft.sources.Tables
@@ -184,13 +184,23 @@ class StreamingSpec extends SparkSpec {
     // every row the dimension's scan produces passes this counter
     val dimRowsRead = spark.sparkContext.longAccumulator("dimension rows read")
     val counted = udf { (name: String) => dimRowsRead.add(1L); name }
-    val dim = Enrich.customerDim(spark, Sf0001).withColumn("c_name", counted($"c_name"))
     val dimRows = Enrich.customerDim(spark, Sf0001).count()
-    val q = EventPipeline.startEnrichment(EventPipeline.readEventStream(spark, src), dim,
-      tmp("dhist"), tmp("dview"), tmp("dchk"), Trigger.AvailableNow())
-    try q.awaitTermination(120000) finally dim.unpersist()
-    assert(q.recentProgress.count(_.numInputRows > 0) == 3) // one file per micro-batch
-    assert(dimRowsRead.value == dimRows, s"${dimRowsRead.value / dimRows.toDouble} dimension scans")
+    val events = EventPipeline.readEventStream(spark, src)
+    val sinks = Seq[(String, DataFrame => StreamingQuery)](
+      "keyed view" -> (dim => EventPipeline.startEnrichment(events, dim,
+        tmp("dhist"), tmp("dview"), tmp("dchk"), Trigger.AvailableNow())),
+      "JDBC serving" -> (dim => EventPipeline.startJdbcServing(events, dim,
+        graft.sources.JdbcSource.derbyUrl(tmp("dderby") + "/db"), tmp("dchk"),
+        Trigger.AvailableNow())))
+    for ((sink, startQuery) <- sinks) {
+      dimRowsRead.reset()
+      val dim = Enrich.customerDim(spark, Sf0001).withColumn("c_name", counted($"c_name"))
+      val q = startQuery(dim)
+      try q.awaitTermination(120000) finally dim.unpersist()
+      assert(q.recentProgress.count(_.numInputRows > 0) == 3, sink) // one file per micro-batch
+      assert(dimRowsRead.value == dimRows,
+        s"$sink: ${dimRowsRead.value / dimRows.toDouble} dimension scans")
+    }
   }
 
   test("foreachBatch sinks evaluate their micro-batch's upstream once per row") {
@@ -217,7 +227,7 @@ class StreamingSpec extends SparkSpec {
     val corpus = Tables.embeddings(spark, Sf0001).filter($"vec_id" < 60)
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"))
     val model = graft.operators.VectorOps.lloydModel(spark, corpus)
-    val keepers = EventPipeline.assignCells(corpus, model)
+    val keepers = graft.operators.VectorOps.assignCells(corpus, model)
       .select($"cell", $"vec_id".as("k_id"), $"vec".as("k_vec")).localCheckpoint()
     val annOut = tmp("once-ann-out")
     runOnce(EventPipeline.nearDedupedEmbeddings(fileStream(
@@ -384,7 +394,7 @@ class StreamingSpec extends SparkSpec {
       .select("vec_id", "vec").localCheckpoint()
     // batch model + cell-keyed keepers (every corpus vector is a keeper)
     val model = VectorOps.lloydModel(spark, corpus)
-    val keepers = EventPipeline.assignCells(corpus, model)
+    val keepers = graft.operators.VectorOps.assignCells(corpus, model)
       .select($"cell", $"vec_id".as("k_id"), $"vec".as("k_vec"))
       .localCheckpoint()
     // stream input: the corpus arrives, then replays verbatim
@@ -404,7 +414,7 @@ class StreamingSpec extends SparkSpec {
     // replays collapsed: each corpus vector labeled exactly once
     assert(got.count() == corpus.count())
     // parity with the BATCH assignment, row for row
-    val expected = EventPipeline.assignAnn(corpus, model, keepers)
+    val expected = graft.operators.VectorOps.assignAnn(corpus, model, keepers)
       .collect().map(r => r.getAs[Long]("vec_id") ->
         (r.getAs[Long]("cell"), r.getAs[Long]("keeper_id"), r.getAs[Double]("keeper_cos"))).toMap
     val gotRows = got.collect()
@@ -1244,7 +1254,7 @@ class StreamingSpec extends SparkSpec {
     ms.addData(rows)
     val q = EventPipeline.startJdbcServing(
       ms.toDF(), dim, url, chk, Trigger.AvailableNow())
-    q.awaitTermination(120000)
+    try q.awaitTermination(120000) finally dim.unpersist()
 
     def served(): Map[Long, String] = spark.read.format("jdbc")
       .option("url", url)
