@@ -25,16 +25,10 @@ object AbWedge {
     val passes = args.headOption.map(_.toInt).getOrElse(5)
     val names = args.drop(1).headOption.map(_.split(",").toSeq).getOrElse(Seq.empty)
     require(names.nonEmpty, "usage: AbWedge [passes] q_a,q_b,… (names from SparkEntry.queries)")
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"not registered in SparkEntry.queries: ${unknown.mkString(", ")}")
+    val queries = SparkEntry.named(names).toMap
     val spark = Bench.localSession()
 
-    def timed(name: String): Double = {
-      Bench.clearResidue(spark)
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def timed(name: String): Double = Bench.timed(spark)(queries(name)(spark, sfDir))
 
     val times = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main. Prints ONE final JSON line with per-query stats,
   * and — crucially — a complete, parseable PARTIAL JSON line after
@@ -69,13 +69,13 @@ import org.apache.spark.sql.SparkSession
   * far — a clean artifact instead of a driver rc-124 kill.
   */
 object Bench {
-  /** The cold-pass barrier every timed pass starts behind (Bench,
-    * AbWedge, ScaleProbe, PrefixDecompose). It drops cross-query residue BEFORE the
-    * clock starts: the queries using localCheckpoint leave their
-    * blocks registered until the ContextCleaner catches up, and ~200
-    * executions of residue in one JVM turn into GC churn that lands on
-    * whichever query runs when the heap fills (measured: a 1.3 s query
-    * spiking to 16 s mid-suite). The memo goes FIRST: unpersisting
+  /** The cold-pass barrier every [[timed]] pass starts behind. It
+    * drops cross-query residue BEFORE the clock starts: the queries
+    * using localCheckpoint leave their blocks registered until the
+    * ContextCleaner catches up, and ~200 executions of residue in one
+    * JVM turn into GC churn that lands on whichever query runs when
+    * the heap fills (measured: a 1.3 s query spiking to 16 s
+    * mid-suite). The memo goes FIRST: unpersisting
     * would orphan its localCheckpoint blocks anyway, and clearing
     * it keeps every timed repetition COLD-path — the cross-query
     * sharing speeds up pipeline runs (graft.Verify), never the
@@ -94,6 +94,21 @@ object Bench {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     if (settle) { System.gc(); Thread.sleep(150); System.gc() }
+  }
+
+  /** One timed pass, the same in every timing main (Bench, AbWedge,
+    * ScaleProbe, PrefixDecompose): [[clearResidue]] outside the clock,
+    * then the clock covers building the frame and writing it to the
+    * noop sink. The noop sink, NOT count(): count() lets Catalyst
+    * prune every projection and drop the sort, so parse and derived-
+    * column work would never be evaluated — the timed plan must
+    * produce every output column. */
+  private[graft] def timed(spark: SparkSession, settle: Boolean = true)(
+      build: => DataFrame): Double = {
+    clearResidue(spark, settle)
+    val t0 = System.nanoTime()
+    build.write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
   }
 
   /** The session every main runs in: `local[SPARK_GRAFT_CPUS]` (default
@@ -128,46 +143,25 @@ object Bench {
     def wallSec: Double = (System.nanoTime() - wall0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val wallBudget = sys.env.getOrElse("SPARK_GRAFT_WALL_BUDGET", "3300").toDouble
+    // optional arg: comma-separated query-name filter (local iteration).
+    // Unknown names ABORT before the session starts: silently dropping
+    // a typo would overwrite BENCH_FULL.json with a misleading
+    // near-zero partial total.
+    val names = SparkEntry.named(args.headOption.toSeq.flatMap(_.split(","))).map(_._1)
     val spark = localSession()
-    // materialize through the noop sink, NOT count(): count() lets
-    // Catalyst prune every projection and drop the sort, so parse and
-    // derived-column work would never be evaluated — the timed plan
-    // must produce every output column
     // a throwing query must never land in the artifact as a plausible
     // small number (elapsed-until-throw LOWERS the total, and the
     // tripwire only fires on slower): record the failure, keep it out
     // of the JSON numbers, and exit nonzero at the end
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    def run(name: String, barrier: Boolean): Option[Double] = {
-      clearResidue(spark, settle = barrier)
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        Some((System.nanoTime() - t0) / 1e9)
-      } catch {
+    def run(name: String, barrier: Boolean): Option[Double] =
+      try Some(timed(spark, settle = barrier)(SparkEntry.queries(name)(spark, sfDir)))
+      catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           failed += name
           None
       }
-    }
-    // optional arg: comma-separated query-name filter (local iteration).
-    // Unknown names ABORT: silently dropping a typo would overwrite
-    // BENCH_FULL.json with a misleading near-zero partial total.
-    val names = args.headOption match {
-      case Some(f) =>
-        val asked = f.split(",").toSeq
-        val unknown = asked.filterNot(SparkEntry.queries.contains)
-        if (unknown.nonEmpty) {
-          System.err.println(
-            s"[bench] unknown queries: ${unknown.mkString(", ")} — aborting")
-          spark.stop()
-          sys.exit(1)
-        }
-        asked
-      case None => SparkEntry.queries.keys.toSeq.sorted
-    }
     // tripwire baseline: per-line HONEST RECORD, not the latest
     // artifact. BENCH_RECORD.json holds the min across the last K full
     // runs (seeded by tools/make_record.py from git history of

@@ -4,10 +4,12 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{CosineSimilarity, DotProduct, SimHash64, SimHashDoc}
+import graft.functions.NativeFunctions
 
-/** Session-extension entry point: installs the engine's native
-  * functions at session build time —
+/** Session-extension entry point: installs every function of the
+  * [[NativeFunctions]] table (the same set `NativeFunctions.register`
+  * installs) and the [[graft.plans.FuseCosine]] rule at session build
+  * time —
   *
   * {{{
   *   SparkSession.builder()
@@ -15,38 +17,17 @@ import graft.functions.{CosineSimilarity, DotProduct, SimHash64, SimHashDoc}
   *     ...
   * }}}
   *
-  * (or `.withExtensions(new GraftExtensions)`). The per-query
-  * `VectorExpressions.register` path covers driver-created sessions
-  * that did not opt in; this is the idiomatic deployment for a cluster
-  * where `graft_dot` should exist in every session from the start.
+  * (or `.withExtensions(new GraftExtensions)`). This is the idiomatic
+  * deployment for a cluster where the `graft_*` functions should exist
+  * in every session from the start; `NativeFunctions.register`, which
+  * [[SparkEntry.queries]] calls, covers sessions that did not opt in.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CosineSimilarity(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimHash64(exprs(0))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_simhash_doc_xx"),
-      new ExpressionInfo(classOf[SimHashDoc].getName, "graft_simhash_doc_xx"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimHashDoc(exprs.head, md5Family = false)))
-    e.injectFunction((
-      new FunctionIdentifier("graft_simhash_doc_md5"),
-      new ExpressionInfo(classOf[SimHashDoc].getName, "graft_simhash_doc_md5"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimHashDoc(exprs.head, md5Family = true)))
+    NativeFunctions.table.foreach { f =>
+      e.injectFunction((new FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name), f.build))
+    }
     // composed dot/(sqrt*sqrt) cosine → fused single-pass expression
     e.injectOptimizerRule(_ => graft.plans.FuseCosine)
   }

@@ -27,10 +27,10 @@ import graft.operators.TextOps
   * deployment sizes partitions with data; the harness pins them to
   * CPU count by design.
   *
-  * Every stage is timed the same way: a noop-sink write behind
-  * [[Bench.clearResidue]], one untimed warm-up of all three stages,
-  * then [[Passes]] passes that interleave the stages, each reported as
-  * its median. The counts are taken outside the clock.
+  * Every stage is timed the same way, by [[Bench.timed]]: one untimed
+  * warm-up of all three stages, then [[Passes]] passes that interleave
+  * the stages, each reported as its median. The counts are taken
+  * outside the clock.
   *
   * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.PrefixDecompose
   * [dir ...]"; SPARK_GRAFT_PARTS overrides the partition settings
@@ -45,18 +45,13 @@ object PrefixDecompose {
     val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", "32,256")
       .split(",").map(_.trim.toInt).toSeq
     val spark = Bench.localSession()
-    def timed(stage: () => DataFrame): Double = {
-      Bench.clearResidue(spark)
-      val t0 = System.nanoTime()
-      stage().write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def timed(stage: () => DataFrame): Double = Bench.timed(spark)(stage())
     for (dir <- dirs; p <- parts) {
       spark.conf.set("spark.sql.shuffle.partitions", p)
       def shingles() = TextOps.prefixShingles(spark, dir)
       def candidates() = TextOps.ppjoinCandidates(shingles())
       val stages = Seq[() => DataFrame](
-        () => shingles(), () => candidates(), () => TextOps.queries("q_dedup_prefix")(spark, dir))
+        () => shingles(), () => candidates(), () => SparkEntry.queries("q_dedup_prefix")(spark, dir))
       stages.foreach(timed)
       val passes = Seq.fill(Passes)(stages.map(timed))
       val Seq(tSh, tCand, tFull) = stages.indices.map(i => Bench.median(passes.map(_(i))))

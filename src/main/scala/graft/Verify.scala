@@ -6,13 +6,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [comma-separated query-name filter]
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val selected = SparkEntry.named(args.lift(2).toSeq.flatMap(_.split(",")))
     val spark = Bench.localSession()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -11,13 +10,13 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Misra–Gries frequent-items AGGREGATE — `graft_mg_agg(item, k)` —
   * the deterministic-memory heavy-hitter sketch beside the CMS grid
-  * ([[CmsExpressions]]): at most `k` counters live in the buffer
-  * however wide the key space is, updates are O(1) amortized, and the
-  * MERGE is the mergeable-summaries reduction (Agarwal et al., PODS
-  * 2012): pointwise counter addition followed by subtracting the
-  * (k+1)-th largest counter from every survivor. After ANY sequence
-  * of updates and merges over a stream of N items the summary
-  * guarantees, for EVERY item x:
+  * (`graft_cms_agg`, [[NativeFunctions]]): at most `k` counters live
+  * in the buffer however wide the key space is, updates are O(1)
+  * amortized, and the MERGE is the mergeable-summaries reduction
+  * (Agarwal et al., PODS 2012): pointwise counter addition followed
+  * by subtracting the (k+1)-th largest counter from every survivor.
+  * After ANY sequence of updates and merges over a stream of N items
+  * the summary guarantees, for EVERY item x:
   *
   *     est(x) ≤ count(x)            (never an overcount)
   *     count(x) − est(x) ≤ N/(k+1)  (bounded undercount)
@@ -167,11 +166,4 @@ case class MisraGriesAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): MisraGriesAgg =
     copy(child = newChildren(0), kExpr = newChildren(1))
-}
-
-object MisraGriesAgg {
-  /** Register `graft_mg_agg` (idempotent; called per query build). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_mg_agg", exprs => MisraGriesAgg(exprs(0), exprs(1)), "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -103,11 +102,4 @@ case class SimHashAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): SimHashAgg =
     copy(hash = newChildren(0), weight = newChildren(1))
-}
-
-object SimHashAgg {
-  /** Register `graft_simhash_agg` (idempotent; called per query build). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash_agg", exprs => SimHashAgg(exprs(0), exprs(1)), "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
@@ -150,15 +149,5 @@ object SimHashDoc {
       j += 1
     }
     java.lang.Long.valueOf(sig)
-  }
-
-  /** Register both family functions (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash_doc_xx", exprs => SimHashDoc(exprs.head, md5Family = false),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash_doc_md5", exprs => SimHashDoc(exprs.head, md5Family = true),
-      "scala_udf")
   }
 }

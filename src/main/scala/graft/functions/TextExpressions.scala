@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -99,11 +98,4 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
-}
-
-object TextExpressions {
-  /** Register `graft_simhash` (idempotent; called per query build). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", exprs => SimHash64(exprs(0)), "scala_udf")
 }

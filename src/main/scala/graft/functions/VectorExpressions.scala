@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -325,24 +324,4 @@ case class SortedIntersectGE(first: Expression, second: Expression,
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression): SortedIntersectGE =
     copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object VectorExpressions {
-  /** Register `graft_dot` / `graft_cosine` /
-    * `graft_sorted_intersect_count` in the session's function registry
-    * so plain SQL/expr strings can use them (idempotent; called per
-    * query build).
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_intersect_ge",
-      exprs => SortedIntersectGE(exprs(0), exprs(1), exprs(2)), "scala_udf")
-  }
 }

@@ -156,7 +156,7 @@ object GraphOps {
     * at 16× sf0.1 the row stream is ~10⁸ × 3 longs of checkpoint
     * traffic that a `sum(size(...))` never pays. */
   def triangleCount(edges: DataFrame, deg: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(edges.sparkSession)
+    graft.functions.NativeFunctions.register(edges.sparkSession)
     val (oriented, adj) = orientedAdj(edges, deg)
     // native two-pointer merge over the SORTED adjacency arrays
     // (orientedAdj sorts them): zero allocation, sequential access —

@@ -1359,7 +1359,6 @@ object Relational {
   // asserts the exact counts and TRUE/TRUE, so a sketch drifting out
   // of its guarantee is a hash FAILURE, not a silent estimate change.
   private def qCmsWatchlist(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CmsExpressions.register(s)
     val li = Tables.lineitem(s, d).select(col("l_partkey"))
     val sketchBytes = li.agg(expr(
       s"graft_cms_agg(l_partkey, CAST($CmsEps AS DOUBLE), CAST($CmsConf AS DOUBLE), 42)"))

@@ -852,7 +852,6 @@ object TextOps {
     * true count would) — survivors finish the merge and get the EXACT
     * count, with no per-row hash-set build. */
   private def qDedupPrefix(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
     val sh = prefixShingles(s, d).localCheckpoint()
     val cand = ppjoinCandidates(sh)
     val sets = sh.groupBy(col("doc_id")).agg(
@@ -1299,13 +1298,12 @@ object TextOps {
     * aggregate form stays as the reference the ScalaCheck bit-parity
     * property compares the one-pass form against. */
   private[graft] def simhashSigsPlan(docs: DataFrame,
-      onePass: Boolean): DataFrame =
+      onePass: Boolean): DataFrame = {
+    graft.functions.NativeFunctions.register(docs.sparkSession)
     if (onePass) {
-      graft.functions.SimHashDoc.register(docs.sparkSession)
       docs.select(col("doc_id"),
         call_function("graft_simhash_doc_xx", tokens()).as("simhash"))
     } else {
-      graft.functions.SimHashAgg.register(docs.sparkSession)
       docs
         .select(col("doc_id"), explode(tokens()).as("tok"))
         .groupBy(col("doc_id"), col("tok"))
@@ -1314,6 +1312,7 @@ object TextOps {
         .groupBy(col("doc_id"))
         .agg(expr("graft_simhash_agg(h, w)").as("simhash"))
     }
+  }
 
   /** Hamming-≤3 pairs over DISTINCT signatures via 4×16-bit band join
     * (pigeonhole: ≤3 differing bits leave ≥1 of the 4 bands
@@ -1383,13 +1382,12 @@ object TextOps {
     * DuckDB oracles recompute the weighted bit sums from tokens in
     * SQL, so the hash gate pins the one-pass form end-to-end. */
   private[graft] def md5SimhashSigsPlan(s: SparkSession, docs: DataFrame,
-      onePass: Boolean): DataFrame =
+      onePass: Boolean): DataFrame = {
+    graft.functions.NativeFunctions.register(s)
     if (onePass) {
-      graft.functions.SimHashDoc.register(s)
       docs.select(col("doc_id"),
         call_function("graft_simhash_doc_md5", tokens()).as("simhash"))
     } else {
-      graft.functions.SimHashAgg.register(s)
       docs
         .select(col("doc_id"), explode(tokens()).as("tok"))
         .groupBy(col("doc_id"), col("tok"))
@@ -1400,6 +1398,7 @@ object TextOps {
         .groupBy(col("doc_id"))
         .agg(expr("graft_simhash_agg(h, w)").as("simhash"))
     }
+  }
 
   /** Materialized (sigsM, groups) for the md5 family over `d`'s
     * doubled corpus — groups carry per-signature member stats so any
@@ -2041,7 +2040,6 @@ object TextOps {
     * summary's counters are merge-order-dependent (only the bounds
     * are invariant), and Spark does not fix combine order. */
   private def qFrequentItems(s: SparkSession, d: String): DataFrame = {
-    graft.functions.MisraGriesAgg.register(s)
     val tok = Tables.documents(s, d).select(explode(tokens()).as("token"))
     val model = tok.agg(
       expr("graft_mg_agg(token, 64)").as("mg"),
@@ -2322,7 +2320,7 @@ object TextOps {
     * (no false negatives; real pruning) that the exact-verified
     * output, by design, cannot reveal. */
   private[graft] def bloomFlagged(s: SparkSession, d: String): DataFrame = {
-    graft.functions.BloomExpressions.register(s)
+    graft.functions.NativeFunctions.register(s)
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val arrivals = docs.select(col("doc_id"),
       when(col("doc_id") % 5 === 0,
@@ -3354,7 +3352,6 @@ object TextOps {
     * per-partition top-k, no global sort) with the output rank
     * numbered over the 20 survivors only. */
   private def qHybridRrf(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
     // both per-doc score frames pinned once (multi-consumer rule:
     // ScaleRank's model passes would replay the scoring chains)
     val lexRank = ScaleRank.withGlobalRank(

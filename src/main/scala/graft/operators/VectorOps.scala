@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.VectorExpressions
+import graft.functions.NativeFunctions
 import graft.sources.Tables
 
 /** Vector similarity search over the `embeddings` table
@@ -66,7 +66,6 @@ object VectorOps {
   // Brute-force cosine top-k: query set = vec_id < 10 (broadcast),
   // ranked per query with a unique tiebreaker.
   private def qSimBruteforce(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.register(s)
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), asDouble("embedding").as("q_vec"))
@@ -94,7 +93,6 @@ object VectorOps {
     * shape: O(|probes|·n) with a broadcast probe side — the
     * q_sim_bruteforce pattern, never all-pairs. */
   private def qMrlRecall(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.register(s)
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), asDouble("embedding").as("q_vec"))
@@ -136,7 +134,6 @@ object VectorOps {
     * the fused sequential fold, so the forward score IS the backward
     * score and only ranks differ. */
   private def qMutualNn(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("label"), col("vec_id"), asDouble("embedding").as("vec"))
     val w = org.apache.spark.sql.expressions.Window
@@ -161,7 +158,6 @@ object VectorOps {
 
   // Per-vector L2 norm — deterministic per-row arithmetic, oracled.
   private def qEmbedNorms(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.register(s)
     Tables.embeddings(s, d)
       .withColumn("vec", asDouble("embedding"))
       .select(
@@ -208,7 +204,6 @@ object VectorOps {
     // the long-width cap applies per band, not to the total plane count
     require(bands >= 1 && planesPerBand >= 1 && planesPerBand <= 62)
     def nPlanes: Int = bands * planesPerBand
-    def bucketsPerBand: Long = 1L << planesPerBand
   }
 
   object LshParams {
@@ -323,7 +318,7 @@ object VectorOps {
     * that holds bucket width constant as n grows). */
   private[graft] def simLshTopK(s: SparkSession, d: String,
       p: LshParams): DataFrame = {
-    VectorExpressions.register(s)
+    NativeFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), asDouble("embedding").as("vec"))
     val bucketed = withBandBuckets(e, p)
@@ -445,7 +440,7 @@ object VectorOps {
     * determinism discipline. */
   private[graft] def assignAnn(vecs: DataFrame,
       cents: Seq[(Long, Seq[Double])], keepers: DataFrame): DataFrame = {
-    VectorExpressions.register(vecs.sparkSession)
+    NativeFunctions.register(vecs.sparkSession)
     val byK = org.apache.spark.sql.expressions.Window
       .partitionBy(col("vec_id")).orderBy(col("keeper_cos").desc, col("keeper_id"))
     assignCells(vecs.select(col("vec_id"), col("vec")), cents)
@@ -470,7 +465,6 @@ object VectorOps {
   // one broadcast score over the corpus, one cell hash agg
   // (model-sized output), two scalar broadcasts.
   private def qEmbedDrift(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.register(s)
     val e = Tables.embeddings(s, d).withColumn("vec", asDouble("embedding"))
       .select(col("vec_id"), col("vec"))
     val counts = assignCells(e, lloydModelM(s, d, e))
@@ -502,7 +496,6 @@ object VectorOps {
   // corpus, one cell-keyed equi-join against the (bounded) keeper
   // set, one per-vector top-1 window.
   private def qIvfAssign(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.register(s)
     val e = Tables.embeddings(s, d).withColumn("vec", asDouble("embedding"))
       .select(col("vec_id"), col("vec"))
     val model = lloydModelM(s, d, e)
@@ -512,7 +505,6 @@ object VectorOps {
   }
 
   private def qSimIvf(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.register(s)
     val e = Tables.embeddings(s, d).withColumn("vec", asDouble("embedding"))
     val scored = scoreAgainst(s, e, lloydModelM(s, d, e))
     val assigned = scored.filter(col("p_rank") === 1)
@@ -630,7 +622,6 @@ object VectorOps {
     (0 until PqM).map(m => col(s"p$m")).reduceLeft(_ + _)
 
   private def qSimPq(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.register(s)
     import s.implicits._
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), asDouble("embedding").as("vec"))
@@ -726,7 +717,7 @@ object VectorOps {
     * LshParams.forCorpus (the documented deployment override). */
   private[graft] def embedDedupAt(s: SparkSession, d: String,
       p: LshParams): DataFrame = {
-    VectorExpressions.register(s)
+    NativeFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"), asDouble("embedding").as("vec"))
     val dbl = e.union(e.withColumn("vec_id", col("vec_id") + lit(1000000L))
@@ -759,7 +750,6 @@ object VectorOps {
     * in-cell pairs, and keeper election all replay in generated
     * DuckDB SQL from the same constants. */
   private def qSemdedup(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), asDouble("embedding").as("vec"))
     val dbl = e.union(e.withColumn("vec_id", col("vec_id") + lit(1000000L))
@@ -830,7 +820,6 @@ object VectorOps {
   // Lloyd-mean tie limit), the exposed cosine is the exact
   // float×float fold.
   private def qSimIvfpq(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.register(s)
     import s.implicits._
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), asDouble("embedding").as("vec"))
@@ -909,7 +898,6 @@ object VectorOps {
   // model/graph memos are cleared before every timed pass); solo
   // q_sim_* queries keep their single-consumer plans.
   private def qAnnRecall(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.register(s)
     import s.implicits._
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), asDouble("embedding").as("vec"))
@@ -1051,7 +1039,6 @@ object VectorOps {
   // replacement for the crossJoin here (same refine contract as
   // q_sim_lsh → q_sim_bruteforce).
   private def qHardNegatives(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"), asDouble("embedding").as("vec"))
     val q = e.filter(col("vec_id") < 10)
@@ -1261,7 +1248,6 @@ object VectorOps {
   // broadcast-scan shape as q_sim_bruteforce; at corpus scale the
   // neighbor stage swaps to LSH/IVF/PQ like every ANN consumer.
   private def qKnnClassify(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"), asDouble("embedding").as("vec"))
     val q = e.filter(col("vec_id") < 50)

@@ -385,7 +385,7 @@ object EventPipeline {
     * streaming stage is the exact-signature filter in front of it. */
   def nearDedupedDocuments(docs: DataFrame,
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    graft.functions.SimHashDoc.register(docs.sparkSession)
+    graft.functions.NativeFunctions.register(docs.sparkSession)
     docs
       .withColumn("simhash", perRowSimhash())
       .withWatermark("ingest_ts", watermarkDelay)
@@ -410,7 +410,7 @@ object EventPipeline {
     */
   def nearDedupedEmbeddings(vecs: DataFrame,
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    graft.functions.VectorExpressions.register(vecs.sparkSession)
+    graft.functions.NativeFunctions.register(vecs.sparkSession)
     graft.operators.VectorOps
       .withBandSignature(vecs, graft.operators.VectorOps.DedupLsh)
       .withWatermark("ingest_ts", watermarkDelay)
@@ -517,7 +517,7 @@ object EventPipeline {
     * its own sketch instead of double-counting. */
   def cmsIngestBatch(keyCol: String, outDir: String)(batch: DataFrame, id: Long): Unit =
     guardedSink(batch) { batch =>
-      graft.functions.CmsExpressions.register(batch.sparkSession)
+      graft.functions.NativeFunctions.register(batch.sparkSession)
       val bytes = batch.agg(expr(
         s"graft_cms_agg($keyCol, CAST($FreqEps AS DOUBLE), CAST($FreqConf AS DOUBLE), 42)"))
         .head.getAs[Array[Byte]](0)

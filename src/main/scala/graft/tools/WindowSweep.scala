@@ -9,16 +9,12 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window}
   */
 object WindowSweep {
   def main(args: Array[String]): Unit = {
-    val spark = graft.Bench.localSession()
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val only: Option[Set[String]] =
-      if (args.length > 1) Some(args(1).split(",").toSet) else None
-    val names = graft.SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-    names.foreach { n =>
+    val selected = graft.SparkEntry.named(args.lift(1).toSeq.flatMap(_.split(",")))
+    val spark = graft.Bench.localSession()
+    selected.foreach { case (n, fn) =>
       try {
-        val lp = graft.SparkEntry.queries(n)(spark, dir)
-          .queryExecution.optimizedPlan
+        val lp = fn(spark, dir).queryExecution.optimizedPlan
         val global = lp.collect { case w: Window if w.partitionSpec.isEmpty => w }
         if (global.nonEmpty) {
           val tags = global.map { w =>

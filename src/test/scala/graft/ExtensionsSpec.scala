@@ -3,15 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GraftExtensions installs graft_dot into a fresh session via the
-  * spark.sql.extensions mechanism, and the native expression computes
-  * the exact sequential left fold.
+/** GraftExtensions installs the whole native-function table into a
+  * fresh session via the spark.sql.extensions mechanism, and the
+  * native expressions compute the exact sequential left fold.
   */
 class ExtensionsSpec extends AnyFunSuite {
 
-  test("graft_dot is available via SparkSessionExtensions in SQL") {
-    // the shared test session (if any) must step aside so the builder
-    // actually constructs a session with the extension applied
+  /** Run `body` in a session built with [[GraftExtensions]]. The shared
+    * test session (if any) steps aside so the builder actually
+    * constructs a session with the extension applied. */
+  private def withExtensionSession(body: SparkSession => Unit): Unit = {
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession()
@@ -23,7 +24,25 @@ class ExtensionsSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
-    try {
+    try body(s)
+    finally {
+      SparkSession.clearDefaultSession()
+      SparkSession.clearActiveSession()
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("GraftExtensions installs every function of the NativeFunctions table") {
+    withExtensionSession { s =>
+      val missing = graft.functions.NativeFunctions.table.map(_.name)
+        .filterNot(s.catalog.functionExists)
+      assert(missing.isEmpty, s"not installed by GraftExtensions: ${missing.mkString(", ")}")
+    }
+  }
+
+  test("graft_dot is available via SparkSessionExtensions in SQL") {
+    withExtensionSession { s =>
       val v = s.sql("SELECT graft_dot(array(1.0D, 2.0D, 3.0D), array(4.0D, 5.0D, 6.0D)) AS d")
         .collect()(0).getDouble(0)
       assert(v == 32.0)
@@ -76,11 +95,6 @@ class ExtensionsSpec extends AnyFunSuite {
         .collect()(0).getDouble(0)
       assert(java.lang.Double.doubleToRawLongBits(cv)
         == java.lang.Double.doubleToRawLongBits(direct))
-    } finally {
-      SparkSession.clearDefaultSession()
-      SparkSession.clearActiveSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
     }
   }
 }

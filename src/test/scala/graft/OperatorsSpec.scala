@@ -298,7 +298,7 @@ class OperatorsSpec extends SparkSpec {
     // the codegen'd one-pass signature must equal the 64-lambda-frame
     // aggregate formulation on real corpus term frequencies — same
     // strictly-positive bit rule, same weighted sums
-    graft.functions.TextExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val tf = spark.read.parquet(s"$Sf0001/documents.parquet")
       .select($"doc_id", explode(split($"text", " ")).as("tok"))
       .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("w"))
@@ -320,7 +320,7 @@ class OperatorsSpec extends SparkSpec {
     // must produce the same signature as collect_list + the scalar
     // graft_simhash fold over grouped term frequencies — the original
     // reference formulation
-    graft.functions.TextExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val tf = spark.read.parquet(s"$Sf0001/documents.parquet")
       .select($"doc_id", explode(split($"text", " ")).as("tok"))
       .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("w"))
@@ -477,7 +477,7 @@ class OperatorsSpec extends SparkSpec {
     // near-dups (twins always collide, so twin-only tests can't see
     // the gap); 4 bands × 4 planes must recall ≥ 90% of genuinely
     // perturbed pairs — the round-2 verdict's recall-quality fix
-    graft.functions.VectorExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     def unit(): Array[Double] = {
       val v = Array.fill(64)(rnd.nextGaussian())
@@ -535,7 +535,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("dedup blocking pair join is bounded by bands × bucket width, not corpus size") {
-    graft.functions.VectorExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val p = graft.operators.VectorOps.LshParams.forCorpus(1000L, 64L, bands = 4)
     val vecs = spark.read.parquet(s"$Sf0001/embeddings.parquet")
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"))
@@ -606,7 +606,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("misra-gries summary honors both MG bounds for EVERY token at any parallelism") {
     import spark.implicits._
-    graft.functions.MisraGriesAgg.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val tok = graft.sources.Tables.documents(spark, Sf0001)
       .select(explode(split(col("text"), " ")).as("token"))
     val exact = tok.groupBy("token").count().collect()

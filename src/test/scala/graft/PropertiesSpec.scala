@@ -100,7 +100,7 @@ class PropertiesSpec extends SparkSpec {
     // equal the textbook definition — Σ ((h>>j & 1)*2−1)·w per bit,
     // strictly-positive rule — for ANY multiset of (hash, weight)
     // rows, including negative hashes and multi-group frames
-    graft.functions.SimHashAgg.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     def reference(rows: Seq[(Long, Long)]): Long = {
       val sums = new Array[Long](64)
       rows.foreach { case (h, w) =>
@@ -201,7 +201,7 @@ class PropertiesSpec extends SparkSpec {
     // could legitimately produce. Unreachable from split() output
     // (split("") is [""]) — pinned so a future call site feeding
     // filter()-ed token arrays cannot silently diverge.
-    graft.functions.SimHashDoc.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val r = spark.sql(
       """SELECT graft_simhash_doc_xx(CAST(array() AS ARRAY<STRING>)) AS xx,
         |       graft_simhash_doc_md5(CAST(array() AS ARRAY<STRING>)) AS md5,
@@ -333,7 +333,7 @@ class PropertiesSpec extends SparkSpec {
   }
 
   test("graft_sorted_intersect_count == |array_intersect| on random sorted arrays") {
-    graft.functions.VectorExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val arrGen = for {
       na <- Gen.choose(0, 30)
       nb <- Gen.choose(0, 30)
@@ -354,7 +354,7 @@ class PropertiesSpec extends SparkSpec {
 
   test("graft_sorted_intersect_ge: exact count for pairs reaching alpha; any " +
       "early-exit value agrees with the truth on which side of alpha it falls") {
-    graft.functions.VectorExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val arrGen = for {
       na <- Gen.choose(0, 25)
       nb <- Gen.choose(0, 25)
@@ -393,7 +393,7 @@ class PropertiesSpec extends SparkSpec {
   }
 
   test("sorted-intersect expressions reject containsNull=true arrays at analysis") {
-    graft.functions.VectorExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     // Seq[String] / Option-element encodings produce
     // ArrayType(containsNull = true); the merge loops read elements
     // null-unsafely (getLong → garbage, getUTF8String → NPE), so the

@@ -223,7 +223,7 @@ class StreamingSpec extends SparkSpec {
       spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir)
     }
     // ANN ingest: stateful embedding dedup upstream
-    graft.functions.VectorExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val corpus = Tables.embeddings(spark, Sf0001).filter($"vec_id" < 60)
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"))
     val model = graft.operators.VectorOps.lloydModel(spark, corpus)
@@ -341,7 +341,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming embedding near-dup collapses replays and rescaled copies via the LSH signature") {
     implicit val ctx = spark.sqlContext
-    graft.functions.VectorExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     // deterministic 64-dim vectors: v1 and its 2x-rescaled copy share
     // every projection SIGN, hence every band bucket; v2 points at a
     // genuinely different direction
@@ -380,7 +380,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming ANN ingest: cell + keeper labels match the batch assignment across a restart") {
     import graft.operators.VectorOps
-    graft.functions.VectorExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val src = tmp("ann-src"); val out = tmp("ann-out"); val chk = tmp("ann-chk")
     // static corpus slice; drop any LSH-signature colliders so the
     // stream's first-arrival-wins dedup is deterministic id-for-id
@@ -436,7 +436,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("per-row streaming simhash is bit-identical to the batch signature path") {
-    graft.functions.SimHashDoc.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val docs = graft.sources.Tables.documents(spark, Sf0001)
       .select($"doc_id", $"text")
     val perRow = docs.select($"doc_id",
@@ -1082,8 +1082,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("composed corpus-clean stream: dedup → quality → route matches the batch composition, restart-safe") {
-    graft.functions.TextExpressions.register(spark)
-    graft.functions.SimHashDoc.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val src = tmp("cc-src")
     val acc = tmp("cc-acc")
     val quar = tmp("cc-quar")
@@ -1299,7 +1298,7 @@ class StreamingSpec extends SparkSpec {
       "stream should have chopped the input into >=2 micro-batch sketches")
     val merged = EventPipeline.mergedCms(out)
     // one-pass batch sketch over the same rows — must be byte-identical
-    graft.functions.CmsExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val oneShot = keys.agg(expr(
       "graft_cms_agg(user_id, CAST(0.001 AS DOUBLE), CAST(0.999 AS DOUBLE), 42)"))
       .head.getAs[Array[Byte]](0)
