@@ -49,97 +49,71 @@ object ScaleProbe {
       if ((h & 1) == 0) 1.0f else -1.0f
     }
 
-  /** Write documents.parquet + embeddings.parquet at m× the base
-    * corpus under `outDir` (copy 0 verbatim; copies 1..m−1 id-shifted
-    * by c·10⁷ — clear of the 10⁶ shift the dedup queries' internal
-    * doubling adds — and decorrelated as documented above). */
+  /** `df` and m−1 rewritten copies, unioned: copy 0 verbatim, copy
+    * c ≥ 1 as `copy(c, df)`. */
+  private def replicas(df: DataFrame, m: Int)(copy: (Int, DataFrame) => DataFrame): DataFrame =
+    (0 until m).map(c => if (c == 0) df else copy(c, df)).reduce(_ union _)
+
+  /** Copy c with each of `keys` shifted by c·10⁷. */
+  private def shifted(keys: Seq[String])(c: Int, df: DataFrame): DataFrame =
+    keys.foldLeft(df)((d, k) => d.withColumn(k, col(k) + lit(c * 10000000L)))
+
+  /** Write the probe's tables at m× the base corpus under `outDir`
+    * (copy 0 verbatim; copies 1..m−1 id-shifted by c·10⁷ — clear of
+    * the 10⁶ shift the dedup queries' internal doubling adds — and
+    * documents and embeddings decorrelated as documented above). */
   def writeScaled(s: SparkSession, srcDir: String, outDir: String,
       m: Int): Unit = {
     require(m >= 1)
     val docs = Tables.documents(s, srcDir)
       .select("doc_id", "text", "lang", "source", "n_chars")
-    val scaledDocs = (0 until m).map { c =>
-      if (c == 0) docs
-      else docs
-        .withColumn("doc_id", col("doc_id") + lit(c * 10000000L))
-        .withColumn("text",
-          concat(lit(s"c${c}x"), regexp_replace(col("text"), " ", s" c${c}x")))
-    }.reduce(_ union _)
-    scaledDocs.write.mode("overwrite").parquet(s"$outDir/documents.parquet")
     val emb = Tables.embeddings(s, srcDir).select("vec_id", "embedding", "label")
-    val scaledEmb = (0 until m).map { c =>
-      if (c == 0) emb
-      else emb
-        .withColumn("vec_id", col("vec_id") + lit(c * 10000000L))
+    def write(name: String, df: DataFrame): Unit =
+      df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
+    write("documents", replicas(docs, m) { (c, d) =>
+      shifted(Seq("doc_id"))(c, d).withColumn("text",
+        concat(lit(s"c${c}x"), regexp_replace(col("text"), " ", s" c${c}x")))
+    })
+    write("embeddings", replicas(emb, m) { (c, e) =>
+      shifted(Seq("vec_id"))(c, e)
         .withColumn("sgn", typedlit(signs(c, 64)))
         .withColumn("embedding",
-          zip_with(col("embedding"), col("sgn"),
-            (x, sg) => (x * sg).cast("float")))
+          zip_with(col("embedding"), col("sgn"), (x, sg) => (x * sg).cast("float")))
         .select("vec_id", "embedding", "label")
-    }.reduce(_ union _)
-    scaledEmb.write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-    // lineitem (for the co-occurrence graph path): copy c shifts BOTH
-    // l_orderkey and l_partkey into copy-disjoint key spaces, so the
-    // graph becomes m disjoint replicas — edges, wedges, and triangles
-    // all scale exactly m× while per-order widths (the pair-join
-    // fan-out bound) stay the base corpus's.
-    val li = Tables.lineitem(s, srcDir)
-    val scaledLi = (0 until m).map { c =>
-      if (c == 0) li
-      else li
-        .withColumn("l_orderkey", col("l_orderkey") + lit(c * 10000000L))
-        .withColumn("l_partkey", col("l_partkey") + lit(c * 10000000L))
-    }.reduce(_ union _)
-    scaledLi.write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
-    // orders (q_hits bipartite graph + q_stock_replay demand): copy c
-    // shifts o_orderkey in lockstep with lineitem (intra-copy joins
-    // stay intact, cross-copy joins impossible) and o_custkey into the
-    // same disjoint space — the purchase graph becomes m disjoint
-    // replicas. o_orderdate is kept verbatim: the stock-replay month
-    // spine (the recursion depth) stays FIXED while demand volume
-    // grows m× — exactly the 100-TB shape (more rows, same calendar).
-    val ord = Tables.orders(s, srcDir)
-    val scaledOrd = (0 until m).map { c =>
-      if (c == 0) ord
-      else ord
-        .withColumn("o_orderkey", col("o_orderkey") + lit(c * 10000000L))
-        .withColumn("o_custkey", col("o_custkey") + lit(c * 10000000L))
-    }.reduce(_ union _)
-    scaledOrd.write.mode("overwrite").parquet(s"$outDir/orders.parquet")
-    // customer replicas keep c_nationkey, so every copy's demand maps
-    // onto the SAME region set (the stock grid stays region × months);
+    })
+    Seq(
+      // lineitem (for the co-occurrence graph path): copy c shifts BOTH
+      // l_orderkey and l_partkey into copy-disjoint key spaces, so the
+      // graph becomes m disjoint replicas — edges, wedges, and triangles
+      // all scale exactly m× while per-order widths (the pair-join
+      // fan-out bound) stay the base corpus's.
+      ("lineitem", Tables.lineitem(s, srcDir), Seq("l_orderkey", "l_partkey")),
+      // orders (q_hits bipartite graph + q_stock_replay demand): copy c
+      // shifts o_orderkey in lockstep with lineitem (intra-copy joins
+      // stay intact, cross-copy joins impossible) and o_custkey into the
+      // same disjoint space — the purchase graph becomes m disjoint
+      // replicas. o_orderdate is kept verbatim: the stock-replay month
+      // spine (the recursion depth) stays FIXED while demand volume
+      // grows m× — exactly the 100-TB shape (more rows, same calendar).
+      ("orders", Tables.orders(s, srcDir), Seq("o_orderkey", "o_custkey")),
+      // customer replicas keep c_nationkey, so every copy's demand maps
+      // onto the SAME region set (the stock grid stays region × months).
+      ("customer", Tables.customer(s, srcDir), Seq("c_custkey")),
+      // part (q_brand_mixing brand labels): copy c shifts p_partkey in
+      // lockstep with lineitem's l_partkey shift; brand/size columns
+      // verbatim — every replica carries the base brand mix, so the
+      // co-purchase graph's degree-brand moments scale m× under an
+      // unchanged mixing matrix.
+      ("part", Tables.part(s, srcDir), Seq("p_partkey")),
+      // events (q_concurrency sweep line): copy c shifts user_id and
+      // event_id into disjoint spaces, timestamps verbatim — m× the
+      // users over the SAME day range, so per-day delta volume grows m×
+      // while the day-grain carry model stays constant-sized.
+      ("events", Tables.events(s, srcDir), Seq("event_id", "user_id"))
+    ).foreach { case (name, df, keys) => write(name, replicas(df, m)(shifted(keys))) }
     // nation/region are genuine dims — verbatim.
-    val cust = Tables.customer(s, srcDir)
-    val scaledCust = (0 until m).map { c =>
-      if (c == 0) cust
-      else cust.withColumn("c_custkey", col("c_custkey") + lit(c * 10000000L))
-    }.reduce(_ union _)
-    scaledCust.write.mode("overwrite").parquet(s"$outDir/customer.parquet")
-    Tables.nation(s, srcDir).write.mode("overwrite").parquet(s"$outDir/nation.parquet")
-    Tables.region(s, srcDir).write.mode("overwrite").parquet(s"$outDir/region.parquet")
-    // part (q_brand_mixing brand labels): copy c shifts p_partkey in
-    // lockstep with lineitem's l_partkey shift; brand/size columns
-    // verbatim — every replica carries the base brand mix, so the
-    // co-purchase graph's degree-brand moments scale m× under an
-    // unchanged mixing matrix.
-    val part = Tables.part(s, srcDir)
-    val scaledPart = (0 until m).map { c =>
-      if (c == 0) part
-      else part.withColumn("p_partkey", col("p_partkey") + lit(c * 10000000L))
-    }.reduce(_ union _)
-    scaledPart.write.mode("overwrite").parquet(s"$outDir/part.parquet")
-    // events (q_concurrency sweep line): copy c shifts user_id and
-    // event_id into disjoint spaces, timestamps verbatim — m× the
-    // users over the SAME day range, so per-day delta volume grows m×
-    // while the day-grain carry model stays constant-sized.
-    val ev = Tables.events(s, srcDir)
-    val scaledEv = (0 until m).map { c =>
-      if (c == 0) ev
-      else ev
-        .withColumn("event_id", col("event_id") + lit(c * 10000000L))
-        .withColumn("user_id", col("user_id") + lit(c * 10000000L))
-    }.reduce(_ union _)
-    scaledEv.write.mode("overwrite").parquet(s"$outDir/events.parquet")
+    write("nation", Tables.nation(s, srcDir))
+    write("region", Tables.region(s, srcDir))
   }
 
   /** The probed paths. Text-dedup paths run exactly the suite

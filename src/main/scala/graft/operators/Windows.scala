@@ -106,18 +106,9 @@ object Windows {
       .orderBy("event_id")
 
   // T8 capability the reference lacks: tumbling event-time window
-  // aggregation — the batch shape of the streaming windowed query
-  // (graft.streaming.EventPipeline uses the same grouping).
+  // aggregation — the streaming windowed query run as a batch.
   private def qWindowTumbling(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(
-        count(lit(1)).as("n"),
-        expr("CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)").as("sum_value"))
-      .select(
-        col("window.start").as("win_start"),
-        col("window.end").as("win_end"),
-        col("event_type"), col("n"), col("sum_value"))
+    graft.streaming.EventPipeline.windowedCounts(Tables.events(s, d))
       .orderBy("win_start", "event_type")
 
   // Sessionization (gap > 30 min) via lag + cumulative flag — the
@@ -541,12 +532,7 @@ object Windows {
     * the expansion as a two-branch UNION ALL of hour-truncations.
     */
   private def qWindowSliding(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        expr("CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)").as("sum_value"))
-      .select(col("window.start").as("win_start"), col("window.end").as("win_end"),
-        col("event_type"), col("n"), col("sum_value"))
+    graft.streaming.EventPipeline.slidingCounts(Tables.events(s, d))
       .orderBy("win_start", "event_type")
 
   // Outer conversion funnel — the batch shape of the stream-stream

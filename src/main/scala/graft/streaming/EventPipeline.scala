@@ -197,7 +197,9 @@ object EventPipeline {
     * is written, when its columns or types differ from the batch's
     * (nullability aside), or when it holds partitions other than
     * `bucket=0` (e.g. from a key-hash layout): merging into `bucket=0`
-    * alone would leave their stale keys behind.
+    * alone would leave their stale keys behind. Only a missing
+    * `viewDir` is an empty view; a view that cannot be listed or read
+    * fails the upsert and is left as it was.
     */
   def upsertKeyedView(batch: DataFrame, viewDir: String): Unit = {
     val spark = batch.sparkSession
@@ -205,8 +207,14 @@ object EventPipeline {
     // history sink only; the parse chain deliberately lets malformed
     // rows survive with nulls
     val incoming = batch.filter(col("event_id").isNotNull).withColumn("is_new", lit(1))
-    val stored = Try(spark.read.schema(batch.schema.add("bucket", IntegerType)).parquet(viewDir))
-      .toOption.filter(_.inputFiles.nonEmpty)
+    // only a missing directory means "no view yet": any other failure
+    // to read it propagates, since read as empty the overwrite below
+    // would replace every stored key with this batch alone
+    val root = new Path(viewDir)
+    val stored =
+      if (!root.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(root)) None
+      else Some(spark.read.schema(batch.schema.add("bucket", IntegerType)).parquet(viewDir))
+        .filter(_.inputFiles.nonEmpty)
     val unioned = stored match {
       case None => incoming
       case Some(old) =>
@@ -308,19 +316,26 @@ object EventPipeline {
       trigger: Trigger = Trigger.ProcessingTime("2 seconds")): StreamingQuery =
     startEnriched(events, dim, checkpointDir, trigger)(writeJdbcServing(url))
 
-  /** T8: watermarked tumbling-window aggregation (the capability gap
-    * the reference's category demands — late data beyond 10 minutes is
-    * dropped, state is bounded). Matches q_window_tumbling's grouping.
-    */
-  def windowedCounts(events: DataFrame): DataFrame =
+  /** T8: watermarked event-time window counts per event_type — `width`
+    * wide, one window starting every `slide` — with late data beyond
+    * 10 minutes dropped and state bounded. On a batch frame the
+    * watermark is a no-op (the optimizer removes it), so the batch
+    * queries q_window_tumbling and q_window_sliding are these functions
+    * plus their ordering. */
+  private def windowCounts(events: DataFrame, width: String, slide: String): DataFrame =
     events
       .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .groupBy(window(col("ts"), width, slide), col("event_type"))
       .agg(
         count(lit(1)).as("n"),
         expr("CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)").as("sum_value"))
       .select(col("window.start").as("win_start"), col("window.end").as("win_end"),
         col("event_type"), col("n"), col("sum_value"))
+
+  /** T8: watermarked tumbling 1 h windows ([[windowCounts]]); batch
+    * twin q_window_tumbling. */
+  def windowedCounts(events: DataFrame): DataFrame =
+    windowCounts(events, "1 hour", "1 hour")
 
   /** T7→T8: streaming dedup under at-least-once replay — state bounded
     * by the watermark horizon. */
@@ -675,16 +690,11 @@ object EventPipeline {
       .join(corpusDigests.select(col("text_md5")).distinct(),
         Seq("text_md5"), "left_anti")
 
-  /** T8: watermarked SLIDING window (2 h wide, 1 h slide) — each event
-    * counts toward two overlapping windows; batch analog is
-    * q_window_sliding (oracled). */
+  /** T8: watermarked SLIDING window (2 h wide, 1 h slide,
+    * [[windowCounts]]) — each event counts toward two overlapping
+    * windows; batch twin q_window_sliding (oracled). */
   def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("win_start"), col("window.end").as("win_end"),
-        col("event_type"), col("n"))
+    windowCounts(events, "2 hours", "1 hour")
 
   /** T8: sliding-window DISTINCT active users (streaming WAU) — the
     * stream twin of q_rolling_distinct, composed from TWO chained

@@ -182,7 +182,7 @@ class PropertiesSpec extends SparkSpec {
       val docs = texts.zipWithIndex
         .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       def sigs(family: String, onePass: Boolean): Map[Long, Option[Long]] =
-        graft.operators.TextOps.sigBuildPlanForTest(spark, docs, family, onePass)
+        graft.operators.TextOps.simhashSigsPlan(docs, family, onePass)
           .collect()
           .map(r => r.getLong(0) ->
             (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap

@@ -150,6 +150,56 @@ class ScalingSpec extends SparkSpec {
     assert(mism == 0L, s"$mism rows rank differently from the global sort")
   }
 
+  test("ScaleProbe.writeScaled at m = 2: copy 0 is the base, shifted keys clear it, " +
+      "in-copy cosines kept exactly") {
+    import org.apache.spark.sql.functions._
+    import graft.sources.Tables
+    val out = java.nio.file.Files.createTempDirectory("graft-synth").toString
+    graft.operators.ScaleProbe.writeScaled(spark, Sf0001, out, 2)
+    val shift = 10000000L
+    // table → (base rows as written for copy 0, shifted keys; the first
+    // key tells the copies apart)
+    val tables = Seq(
+      "documents" -> (Tables.documents(spark, Sf0001)
+        .select("doc_id", "text", "lang", "source", "n_chars"), Seq("doc_id")),
+      "embeddings" -> (Tables.embeddings(spark, Sf0001)
+        .select("vec_id", "embedding", "label"), Seq("vec_id")),
+      "lineitem" -> (Tables.lineitem(spark, Sf0001), Seq("l_orderkey", "l_partkey")),
+      "orders" -> (Tables.orders(spark, Sf0001), Seq("o_orderkey", "o_custkey")),
+      "customer" -> (Tables.customer(spark, Sf0001), Seq("c_custkey")),
+      "part" -> (Tables.part(spark, Sf0001), Seq("p_partkey")),
+      "events" -> (Tables.events(spark, Sf0001), Seq("event_id", "user_id")))
+    tables.foreach { case (name, (base, keys)) =>
+      val all = spark.read.parquet(s"$out/$name.parquet")
+      val copy0 = all.filter(col(keys.head) < shift)
+      val copy1 = all.filter(col(keys.head) >= shift)
+      assert(all.count() == 2 * base.count(), name)
+      assert(copy0.exceptAll(base).isEmpty && base.exceptAll(copy0).isEmpty,
+        s"$name: copy 0 differs from the base")
+      keys.foreach { k =>
+        def ks(df: org.apache.spark.sql.DataFrame) = df.select(col(k)).distinct()
+        assert(ks(copy1).intersect(ks(copy0)).isEmpty, s"$name.$k: copies share keys")
+        assert(ks(copy1).select(col(k) - shift).exceptAll(ks(copy0)).isEmpty &&
+          ks(copy0).exceptAll(ks(copy1).select(col(k) - shift)).isEmpty,
+          s"$name.$k: copy 1 is not copy 0 shifted by $shift")
+      }
+    }
+    // copy 1 flips each embedding's signs by one pattern, which cancels
+    // in every dot product: the cosine of any two copy-1 vectors is
+    // bit-identical to that of their copy-0 originals
+    val emb = spark.read.parquet(s"$out/embeddings.parquet")
+      .select(col("vec_id"), col("embedding")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
+    def cos(u: Array[Float], v: Array[Float]): Double = {
+      val dot = u.indices.map(j => u(j).toDouble * v(j)).sum
+      dot / math.sqrt(u.map(x => x.toDouble * x).sum * v.map(x => x.toDouble * x).sum)
+    }
+    val ids = emb.keys.filter(_ < shift).toSeq.sorted.take(30)
+    assert(ids.size >= 2)
+    for (a <- ids; b <- ids if a < b)
+      assert(cos(emb(a + shift), emb(b + shift)) == cos(emb(a), emb(b)), s"vectors $a, $b")
+  }
+
   test("Scaling merge mode parses its own artifact and refuses a base-dir mismatch") {
     val f = java.nio.file.Files.createTempFile("scaling", ".json")
     val json = """{"base":"/data/sf0.1","multipliers":[4,16],"linear_ratio":4.0,""" +

@@ -156,6 +156,24 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("keyed view upsert fails on a failed view listing and keeps the stored keys") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set(s"fs.${ListFailingFs.Scheme}.impl", classOf[ListFailingFs].getName)
+    conf.setBoolean(s"fs.${ListFailingFs.Scheme}.impl.disable.cache", true)
+    val root = tmp("view")
+    val view = s"${ListFailingFs.Scheme}://$root"
+    EventPipeline.upsertKeyedView(
+      Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("event_id", "event_type", "value"), view)
+    val update = Seq((3L, "c", 30.0)).toDF("event_id", "event_type", "value")
+    ListFailingFs.failOn = Some(root)
+    // a listing failure is not a missing view: read as "no view yet",
+    // the overwrite would replace keys 1 and 2 with the batch alone
+    try intercept[Exception](EventPipeline.upsertKeyedView(update, view))
+    finally ListFailingFs.failOn = None
+    assert(spark.read.parquet(root).select("event_id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L))
+  }
+
   test("concurrent sinks: a failed history append fails the batch, leaves nothing cached, " +
       "and a replay converges") {
     val dim = Enrich.customerDim(spark, Sf0001)
@@ -1481,6 +1499,23 @@ class StreamingSpec extends SparkSpec {
       case None => spark.conf.unset(key)
     }
   }
+}
+
+/** A local file system under its own scheme whose `listStatus` of one
+  * directory throws: an existing directory that cannot be listed. */
+class ListFailingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${ListFailingFs.Scheme}:///")
+  override def getScheme: String = ListFailingFs.Scheme
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] =
+    if (ListFailingFs.failOn.contains(f.toUri.getPath.stripSuffix("/")))
+      throw new java.io.IOException(s"listing failed: $f")
+    else super.listStatus(f)
+}
+
+object ListFailingFs {
+  val Scheme = "listfail"
+  /** The local path whose listing fails, if any. */
+  @volatile var failOn: Option[String] = None
 }
 
 object StreamingSpec {
