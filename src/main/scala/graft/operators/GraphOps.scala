@@ -999,6 +999,23 @@ object GraphOps {
       |  FROM lineitem a JOIN lineitem b
       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey""".stripMargin
 
+  /** Per-node degree over the `pairs` CTE ([[pairsSql]]). */
+  private val degSql =
+    """deg AS (
+      |  SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
+      |    SELECT u AS node FROM pairs UNION ALL SELECT v AS node FROM pairs
+      |  ) GROUP BY node
+      |)""".stripMargin
+
+  /** Every triangle of the `pairs` CTE once, as (n1 < n2 < n3). */
+  private val triSql =
+    """tri AS (
+      |  SELECT e1.u AS n1, e1.v AS n2, e2.v AS n3
+      |  FROM pairs e1
+      |  JOIN pairs e2 ON e2.u = e1.u AND e2.v > e1.v
+      |  JOIN pairs e3 ON e3.u = e1.v AND e3.v = e2.v
+      |)""".stripMargin
+
   /** The unrolled peel chain: e0 = the co-occurrence edges, kk = the
     * derived threshold ⌊CoreFrac·median-degree⌋, then `rounds`
     * iterations of (degrees of e_i) → (e_{i+1} = edges whose BOTH
@@ -1148,11 +1165,7 @@ object GraphOps {
     "q_ppr" ->
       s"""WITH pairs AS (
          |$pairsSql
-         |), deg AS (
-         |  SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-         |    SELECT u AS node FROM pairs UNION ALL SELECT v AS node FROM pairs
-         |  ) GROUP BY node
-         |), sym AS (
+         |), $degSql, sym AS (
          |  SELECT u AS src, v AS dst FROM pairs
          |  UNION ALL SELECT v AS src, u AS dst FROM pairs
          |), seeds AS (SELECT node FROM deg ORDER BY deg DESC, node LIMIT 4),
@@ -1193,11 +1206,7 @@ object GraphOps {
     "q_assortativity" ->
       s"""WITH pairs AS (
          |$pairsSql
-         |), deg AS (
-         |  SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-         |    SELECT u AS node FROM pairs UNION ALL SELECT v AS node FROM pairs
-         |  ) GROUP BY node
-         |), j AS (
+         |), $degSql, j AS (
          |  SELECT du.deg AS du, dv.deg AS dv
          |  FROM pairs JOIN deg du ON du.node = u JOIN deg dv ON dv.node = v
          |), agg AS (
@@ -1214,16 +1223,7 @@ object GraphOps {
     "q_adamic_adar" ->
       s"""WITH pairs AS (
          |$pairsSql
-         |), deg AS (
-         |  SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-         |    SELECT u AS node FROM pairs UNION ALL SELECT v AS node FROM pairs
-         |  ) GROUP BY node
-         |), tri AS (
-         |  SELECT e1.u AS n1, e1.v AS n2, e2.v AS n3
-         |  FROM pairs e1
-         |  JOIN pairs e2 ON e2.u = e1.u AND e2.v > e1.v
-         |  JOIN pairs e3 ON e3.u = e1.v AND e3.v = e2.v
-         |), sides AS (
+         |), $degSql, $triSql, sides AS (
          |  SELECT least(n1, n2) AS u, greatest(n1, n2) AS v, n3 AS w FROM tri
          |  UNION ALL SELECT least(n1, n3), greatest(n1, n3), n2 FROM tri
          |  UNION ALL SELECT least(n2, n3), greatest(n2, n3), n1 FROM tri
@@ -1240,16 +1240,7 @@ object GraphOps {
     "q_link_scores" ->
       s"""WITH pairs AS (
          |$pairsSql
-         |), deg AS (
-         |  SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-         |    SELECT u AS node FROM pairs UNION ALL SELECT v AS node FROM pairs
-         |  ) GROUP BY node
-         |), tri AS (
-         |  SELECT e1.u AS n1, e1.v AS n2, e2.v AS n3
-         |  FROM pairs e1
-         |  JOIN pairs e2 ON e2.u = e1.u AND e2.v > e1.v
-         |  JOIN pairs e3 ON e3.u = e1.v AND e3.v = e2.v
-         |), sides AS (
+         |), $degSql, $triSql, sides AS (
          |  SELECT least(n1, n2) AS u, greatest(n1, n2) AS v, n3 AS w FROM tri
          |  UNION ALL SELECT least(n1, n3), greatest(n1, n3), n2 FROM tri
          |  UNION ALL SELECT least(n2, n3), greatest(n2, n3), n1 FROM tri
@@ -1274,16 +1265,7 @@ object GraphOps {
     "q_link_jaccard" ->
       s"""WITH pairs AS (
          |$pairsSql
-         |), deg AS (
-         |  SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-         |    SELECT u AS node FROM pairs UNION ALL SELECT v AS node FROM pairs
-         |  ) GROUP BY node
-         |), tri AS (
-         |  SELECT e1.u AS n1, e1.v AS n2, e2.v AS n3
-         |  FROM pairs e1
-         |  JOIN pairs e2 ON e2.u = e1.u AND e2.v > e1.v
-         |  JOIN pairs e3 ON e3.u = e1.v AND e3.v = e2.v
-         |), tedges AS (
+         |), $degSql, $triSql, tedges AS (
          |  SELECT n1 AS u, n2 AS v FROM tri
          |  UNION ALL SELECT n1 AS u, n3 AS v FROM tri
          |  UNION ALL SELECT n2 AS u, n3 AS v FROM tri
@@ -1359,16 +1341,7 @@ object GraphOps {
     "q_local_cc" ->
       s"""WITH pairs AS (
          |$pairsSql
-         |), deg AS (
-         |  SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-         |    SELECT u AS node FROM pairs UNION ALL SELECT v AS node FROM pairs
-         |  ) GROUP BY node
-         |), tri AS (
-         |  SELECT e1.u AS n1, e1.v AS n2, e2.v AS n3
-         |  FROM pairs e1
-         |  JOIN pairs e2 ON e2.u = e1.u AND e2.v > e1.v
-         |  JOIN pairs e3 ON e3.u = e1.v AND e3.v = e2.v
-         |), corners AS (
+         |), $degSql, $triSql, corners AS (
          |  SELECT node, CAST(COUNT(*) AS BIGINT) AS n_tri FROM (
          |    SELECT n1 AS node FROM tri
          |    UNION ALL SELECT n2 AS node FROM tri

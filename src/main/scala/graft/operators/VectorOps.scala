@@ -63,21 +63,52 @@ object VectorOps {
       "array(127.0 / aggregate(vec, CAST(0 AS DOUBLE), (acc, x) -> greatest(acc, abs(x)))), " +
       "sc -> transform(vec, x -> CAST(floor(x * sc + 0.5d) AS BIGINT))), 1)"
 
+  // ---- ANN stages ---------------------------------------------------
+  //
+  // Every top-5 similarity query below is candidate generation followed
+  // by one exact refine. Each stage has one builder, and the builders
+  // take frames and constants only: the solo q_sim_* queries pass
+  // freshly derived frames, q_ann_recall passes its checkpointed ones,
+  // and both run the same chain. Stage builders: probeSplit and
+  // ivfSplit (probe/corpus split), ivfCandidates, lshCandidates,
+  // pqLut + adcShortlist (PQ lookup table and ADC shortlist), and
+  // refineTop5 (exact-cosine refine).
+
+  /** The embeddings corpus as (vec_id, vec: array<double>). */
+  private def vectors(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d).select(col("vec_id"), asDouble("embedding").as("vec"))
+
+  /** Probe/corpus split of a (vec_id[, vec], …) frame: the probe rows
+    * (vec_id < 10) with vec_id/vec renamed q_id/q_vec, and every row
+    * renamed c_id/c_vec; other columns ride along. */
+  private def probeSplit(rows: DataFrame): (DataFrame, DataFrame) =
+    (rows.filter(col("vec_id") < 10)
+      .withColumnsRenamed(Map("vec_id" -> "q_id", "vec" -> "q_vec")),
+      rows.withColumnsRenamed(Map("vec_id" -> "c_id", "vec" -> "c_vec")))
+
+  /** (q_id, c_id, …) pairs with both vectors re-attached from the
+    * (vec_id, vec) corpus `e`. */
+  private def withVectors(pairs: DataFrame, e: DataFrame): DataFrame =
+    pairs.join(e.select(col("vec_id").as("q_id"), col("vec").as("q_vec")), Seq("q_id"))
+      .join(e.select(col("vec_id").as("c_id"), col("vec").as("c_vec")), Seq("c_id"))
+
+  /** Exact-cosine refine of (q_id, q_vec, c_id, c_vec, …) candidate
+    * pairs to each probe's top 5 by (cosine desc, c_id), a unique
+    * tie-break. `keep` columns ride between c_id and cosine. */
+  private def refineTop5(pairs: DataFrame, keep: String*): DataFrame = {
+    val byCos = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id"))
+    pairs.withColumn("cosine", cosine("q_vec", "c_vec"))
+      .withColumn("rank", row_number().over(byCos))
+      .filter(col("rank") <= 5)
+      .select("q_id", Seq("rank", "c_id") ++ keep :+ "cosine": _*)
+  }
+
   // Brute-force cosine top-k: query set = vec_id < 10 (broadcast),
   // ranked per query with a unique tiebreaker.
   private def qSimBruteforce(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d)
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), asDouble("embedding").as("q_vec"))
-    val c = e.select(col("vec_id").as("c_id"), asDouble("embedding").as("c_vec"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id"))
-    broadcast(q).join(c, col("q_id") =!= col("c_id"))
-      .withColumn("cosine", cosine("q_vec", "c_vec"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select("q_id", "rank", "c_id", "cosine")
-      .orderBy("q_id", "rank")
+    val (q, c) = probeSplit(vectors(s, d))
+    refineTop5(broadcast(q).join(c, col("q_id") =!= col("c_id"))).orderBy("q_id", "rank")
   }
 
   /** Matryoshka (MRL) prefix-dimension retrieval audit — how much of
@@ -93,10 +124,7 @@ object VectorOps {
     * shape: O(|probes|·n) with a broadcast probe side — the
     * q_sim_bruteforce pattern, never all-pairs. */
   private def qMrlRecall(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d)
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), asDouble("embedding").as("q_vec"))
-    val c = e.select(col("vec_id").as("c_id"), asDouble("embedding").as("c_vec"))
+    val (q, c) = probeSplit(vectors(s, d))
     val scored = broadcast(q).join(c, col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"),
         cosine("q_vec", "c_vec").as("cos_full"),
@@ -319,9 +347,15 @@ object VectorOps {
   private[graft] def simLshTopK(s: SparkSession, d: String,
       p: LshParams): DataFrame = {
     NativeFunctions.register(s)
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), asDouble("embedding").as("vec"))
-    val bucketed = withBandBuckets(e, p)
+    refineTop5(lshCandidates(vectors(s, d), p)).orderBy("q_id", "rank")
+  }
+
+  /** LSH band candidates over a (vec_id, vec) frame: every corpus
+    * vector in a probe's own bucket or a Hamming-1 neighbour of it, in
+    * any band, self-pairs dropped; a pair found through several bands
+    * or probes counts once. */
+  private def lshCandidates(vecs: DataFrame, p: LshParams): DataFrame = {
+    val bucketed = withBandBuckets(vecs, p)
     val q = bucketed.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("vec").as("q_vec"), col("band"),
         explode(expr(s"""array_union(array(bucket),
@@ -329,16 +363,9 @@ object VectorOps {
           .as("bucket"))
     val c = bucketed
       .select(col("band"), col("bucket"), col("vec_id").as("c_id"), col("vec").as("c_vec"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id"))
     broadcast(q).join(c, Seq("band", "bucket")).filter(col("q_id") =!= col("c_id"))
       .select("q_id", "q_vec", "c_id", "c_vec")
       .dropDuplicates("q_id", "c_id")
-      .withColumn("cosine", cosine("q_vec", "c_vec"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select("q_id", "rank", "c_id", "cosine")
-      .orderBy("q_id", "rank")
   }
 
   // IVF-style ANN — the second scale path beside LSH. Coarse quantizer
@@ -496,30 +523,32 @@ object VectorOps {
   // corpus, one cell-keyed equi-join against the (bounded) keeper
   // set, one per-vector top-1 window.
   private def qIvfAssign(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d).withColumn("vec", asDouble("embedding"))
-      .select(col("vec_id"), col("vec"))
+    val e = vectors(s, d)
     val model = lloydModelM(s, d, e)
     val keepers = assignCells(e.filter(col("vec_id") % 7 === 0), model)
       .select(col("cell"), col("vec_id").as("k_id"), col("vec").as("k_vec"))
     assignAnn(e, model, keepers).orderBy("vec_id")
   }
 
+  /** IVF probe/corpus split of a (vec_id[, vec], cell, p_rank) scoring
+    * frame: each probe's top-[[IvfProbes]] cells, and every vector's
+    * own (p_rank 1) cell. */
+  private def ivfSplit(scored: DataFrame): (DataFrame, DataFrame) = {
+    val (q, c) = probeSplit(scored)
+    (q.filter(col("p_rank") <= IvfProbes).drop("p_rank"),
+      c.filter(col("p_rank") === 1).drop("p_rank"))
+  }
+
+  /** IVF candidates: every (probe, vector) pair sharing a probed cell,
+    * self-pairs dropped. A vector has one cell, so pairs are distinct. */
+  private def ivfCandidates(probes: DataFrame, assigned: DataFrame): DataFrame =
+    probes.join(assigned, Seq("cell")).filter(col("q_id") =!= col("c_id"))
+
   private def qSimIvf(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d).withColumn("vec", asDouble("embedding"))
-    val scored = scoreAgainst(s, e, lloydModelM(s, d, e))
-    val assigned = scored.filter(col("p_rank") === 1)
-      .select(col("vec_id").as("c_id"), col("vec").as("c_vec"), col("cell"))
-    val probes = scored.filter(col("vec_id") < 10 && col("p_rank") <= IvfProbes)
-      .select(col("vec_id").as("q_id"), col("vec").as("q_vec"), col("cell"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id"))
-    probes.join(assigned, Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cosine", cosine("q_vec", "c_vec"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select("q_id", "rank", "c_id", "cell", "cosine")
-      .orderBy("q_id", "rank")
+    val e = vectors(s, d)
+    val (probes, assigned) = ivfSplit(scoreAgainst(s, e, lloydModelM(s, d, e))
+      .select("vec_id", "vec", "cell", "p_rank"))
+    refineTop5(ivfCandidates(probes, assigned), "cell").orderBy("q_id", "rank")
   }
 
   // ---- Product quantization (PQ) ANN — the third scale path --------
@@ -613,53 +642,55 @@ object VectorOps {
     codebook
   }
 
-  /** The PqM per-subspace ADC addends collected into pinned columns —
-    * sum() over doubles would be partition-order-dependent; with
-    * exactly one row per subspace these are exact. */
-  private def adcPartialCols: Seq[Column] = (0 until PqM).map(m =>
-    sum(when(col("m") === m, col("pdot"))).as(s"p$m"))
-  private def adcSum: Column =
-    (0 until PqM).map(m => col(s"p$m")).reduceLeft(_ + _)
+  /** The corpus as PQ codes (c_id, m, code): each subvector's nearest
+    * cell of its subspace codebook. */
+  private def pqCodes(s: SparkSession, sub: DataFrame,
+      codebook: Seq[(Int, Long, Seq[Double])]): DataFrame =
+    pqAssign(s, sub, codebook).filter(col("rk") === 1)
+      .select(col("vec_id").as("c_id"), col("m"), col("cell").as("code"))
 
-  private def qSimPq(s: SparkSession, d: String): DataFrame = {
+  /** The probes' lookup table (q_id, m, code, pdot): the partial dot of
+    * each probe subvector against EVERY cell of its subspace codebook
+    * (PqM×PqK entries per probe — model-sized, not corpus-sized). */
+  private def pqLut(s: SparkSession, sub: DataFrame,
+      codebook: Seq[(Int, Long, Seq[Double])]): DataFrame = {
     import s.implicits._
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), asDouble("embedding").as("vec"))
-    val sub = pqSub(e)
-    val codebook = pqCodebookM(s, d, e, sub)
-    // corpus → codes (the 64×-compressed representation ADC scans)
-    val codes = pqAssign(s, sub, codebook).filter(col("rk") === 1)
-      .select(col("vec_id").as("c_id"), col("m"), col("cell"))
-    // query-side LUT: partial dot of each query subvector against
-    // EVERY cell of its subspace codebook (PqM×PqK entries per query)
-    val qd = sub.filter(col("vec_id") < 10)
-      .join(broadcast(codebook.toDF("m", "cell", "cent")), Seq("m"))
-      .select(col("vec_id").as("q_id"), col("m"), col("cell"),
+    sub.filter(col("vec_id") < 10)
+      .join(broadcast(codebook.toDF("m", "code", "cent")), Seq("m"))
+      .select(col("vec_id").as("q_id"), col("m"), col("code"),
         dot("sv", "cent").as("pdot"))
-    // ADC: each candidate's code picks exactly one LUT entry per
-    // subspace; collect the PqM addends into columns and add them in
-    // one pinned order (sum() over doubles would be partition-order-
-    // dependent — with exactly one row per subspace it is exact)
-    val adc = qd.join(codes, Seq("m", "cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .groupBy(col("q_id"), col("c_id"))
-      .agg(adcPartialCols.head, adcPartialCols.tail: _*)
-      .withColumn("approx", adcSum)
+  }
+
+  /** ADC shortlist of (q_id, c_id[, keep], m, pdot) rows, one LUT entry
+    * per candidate and subspace: the PqM addends are collected into
+    * columns and added in one pinned order (sum() over doubles would be
+    * partition-order-dependent — with exactly one row per subspace it
+    * is exact), and each probe keeps its top [[PqRefine]] candidates by
+    * (approx desc, c_id), as (q_id, c_id[, keep]). */
+  private def adcShortlist(addends: DataFrame, keep: String*): DataFrame = {
+    val key = (Seq("q_id", "c_id") ++ keep).map(col)
+    val partials = (0 until PqM).map(m => sum(when(col("m") === m, col("pdot"))).as(s"p$m"))
     val byApprox = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("approx").desc, col("c_id"))
-    val cand = adc.withColumn("ark", row_number().over(byApprox))
+    addends.groupBy(key: _*)
+      .agg(partials.head, partials.tail: _*)
+      .withColumn("approx", (0 until PqM).map(m => col(s"p$m")).reduceLeft(_ + _))
+      .withColumn("ark", row_number().over(byApprox))
       .filter(col("ark") <= PqRefine)
-      .select("q_id", "c_id")
-    // exact refine of the shortlist only
-    val byCos = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id"))
-    cand.join(e.select(col("vec_id").as("q_id"), col("vec").as("q_vec")), Seq("q_id"))
-      .join(e.select(col("vec_id").as("c_id"), col("vec").as("c_vec")), Seq("c_id"))
-      .withColumn("cosine", cosine("q_vec", "c_vec"))
-      .withColumn("rank", row_number().over(byCos))
-      .filter(col("rank") <= 5)
-      .select("q_id", "rank", "c_id", "cosine")
-      .orderBy("q_id", "rank")
+      .select(key: _*)
+  }
+
+  /** The PQ chain: a full ADC scan (each candidate's code picks one
+    * LUT entry per subspace), then the exact refine of the shortlist. */
+  private def pqTop5(e: DataFrame, lut: DataFrame, codes: DataFrame): DataFrame =
+    refineTop5(withVectors(adcShortlist(
+      lut.join(codes, Seq("m", "code")).filter(col("q_id") =!= col("c_id"))), e))
+
+  private def qSimPq(s: SparkSession, d: String): DataFrame = {
+    val e = vectors(s, d)
+    val sub = pqSub(e)
+    val codebook = pqCodebookM(s, d, e, sub)
+    pqTop5(e, pqLut(s, sub, codebook), pqCodes(s, sub, codebook)).orderBy("q_id", "rank")
   }
 
   // Embedding near-duplicate pairs — LSH-bucket blocking + exact
@@ -750,8 +781,7 @@ object VectorOps {
     * in-cell pairs, and keeper election all replay in generated
     * DuckDB SQL from the same constants. */
   private def qSemdedup(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), asDouble("embedding").as("vec"))
+    val e = vectors(s, d)
     val dbl = e.union(e.withColumn("vec_id", col("vec_id") + lit(1000000L))
       .select("vec_id", "vec"))
     val assigned = lloydScored(s, dbl).filter(col("p_rank") === 1)
@@ -820,50 +850,25 @@ object VectorOps {
   // Lloyd-mean tie limit), the exposed cosine is the exact
   // float×float fold.
   private def qSimIvfpq(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), asDouble("embedding").as("vec"))
-    // coarse stage: one cell per vector, IvfProbes cells per query
-    val scored = scoreAgainst(s, e, lloydModelM(s, d, e))
-    val assigned = scored.filter(col("p_rank") === 1)
-      .select(col("vec_id").as("c_id"), col("cell"))
-    val probes = scored.filter(col("vec_id") < 10 && col("p_rank") <= IvfProbes)
-      .select(col("vec_id").as("q_id"), col("cell"))
-    // fine stage: PQ codes for the corpus, LUT for the queries; the
-    // PQ cell id is renamed `code` so it cannot collide with the IVF
-    // cell key the candidate join runs on
+    val e = vectors(s, d)
+    val (probes, assigned) = ivfSplit(scoreAgainst(s, e, lloydModelM(s, d, e))
+      .select("vec_id", "cell", "p_rank"))
     val sub = pqSub(e)
     val codebook = pqCodebookM(s, d, e, sub)
-    val codes = pqAssign(s, sub, codebook).filter(col("rk") === 1)
-      .select(col("vec_id").as("c_id"), col("m"), col("cell").as("code"))
-    val qd = sub.filter(col("vec_id") < 10)
-      .join(broadcast(codebook.toDF("m", "code", "cent")), Seq("m"))
-      .select(col("vec_id").as("q_id"), col("m"), col("code"),
-        dot("sv", "cent").as("pdot"))
-    // candidates = corpus vectors whose IVF cell is probed by q; each
-    // c_id has exactly ONE cell so pairs are already distinct
-    val cand0 = probes.join(assigned, Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .select("q_id", "c_id", "cell")
-    val adc = cand0.join(codes, Seq("c_id"))
-      .join(broadcast(qd), Seq("q_id", "m", "code"))
-      .groupBy(col("q_id"), col("c_id"), col("cell"))
-      .agg(adcPartialCols.head, adcPartialCols.tail: _*)
-      .withColumn("approx", adcSum)
-    val byApprox = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("approx").desc, col("c_id"))
-    val cand = adc.withColumn("ark", row_number().over(byApprox))
-      .filter(col("ark") <= PqRefine)
-      .select("q_id", "c_id", "cell")
-    val byCos = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id"))
-    cand.join(e.select(col("vec_id").as("q_id"), col("vec").as("q_vec")), Seq("q_id"))
-      .join(e.select(col("vec_id").as("c_id"), col("vec").as("c_vec")), Seq("c_id"))
-      .withColumn("cosine", cosine("q_vec", "c_vec"))
-      .withColumn("rank", row_number().over(byCos))
-      .filter(col("rank") <= 5)
-      .select("q_id", "rank", "c_id", "cell", "cosine")
+    ivfpqTop5(e, probes, assigned, pqLut(s, sub, codebook), pqCodes(s, sub, codebook))
       .orderBy("q_id", "rank")
+  }
+
+  /** The IVF-PQ chain: the ADC scan runs only over the IVF candidates
+    * (each (q_id, c_id) pair already distinct, carrying c's cell), then
+    * the exact refine of the shortlist. The PQ code column is `code`,
+    * so it cannot collide with the IVF `cell` key. */
+  private def ivfpqTop5(e: DataFrame, probes: DataFrame, assigned: DataFrame,
+      lut: DataFrame, codes: DataFrame): DataFrame = {
+    val cand = ivfCandidates(probes, assigned).select("q_id", "c_id", "cell")
+    val shortlist = adcShortlist(cand.join(codes, Seq("c_id"))
+      .join(broadcast(lut), Seq("q_id", "m", "code")), "cell")
+    refineTop5(withVectors(shortlist, e), "cell")
   }
 
   // ---- ANN recall evaluation ---------------------------------------
@@ -872,12 +877,14 @@ object VectorOps {
   // top-5 — the acceptance metric an ANN deployment is actually judged
   // on, computed IN-ENGINE (the spec-level recall floors pin the same
   // quantity, but a pipeline wants it as a queryable table per
-  // index-build). Each method's candidate chain is exactly the solo
-  // query's; the left join + k-explode keep the comparison one pass
-  // over the model-sized top-5 lists. hits/total are exact ints, so
-  // recall is one exact IEEE division — fully hash-gated; the oracle
-  // embeds the SAME per-method SQL chains as the solo queries, so the
-  // recall table and the per-method results can never drift apart.
+  // index-build). Each method's chain is the solo query's: the same
+  // stage builders over the frames below (OperatorsSpec recomputes
+  // this table from the four solo queries' rows); the left join +
+  // k-explode keep the comparison one pass over the model-sized top-5
+  // lists. hits/total are exact ints, so recall is one exact IEEE
+  // division — fully hash-gated; the oracle embeds the SAME per-method
+  // SQL chains as the solo queries, so the recall table and the
+  // per-method results can never drift apart.
   //
   // The four chains share the frames they would otherwise each derive
   // from the shared model (the model memo already dedups TRAINING;
@@ -893,117 +900,28 @@ object VectorOps {
   //    vectors by joining the checkpointed corpus;
   //  - the PQ code assignment (4-subspace crossJoin + rank window) is
   //    needed by pq and ivfpq — it runs once, checkpointed as the
-  //    narrow (c_id, m, cell) codes frame.
+  //    narrow (c_id, m, code) codes frame.
   // Every checkpoint is built INSIDE this query's own clock (the
   // model/graph memos are cleared before every timed pass); solo
   // q_sim_* queries keep their single-consumer plans.
   private def qAnnRecall(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), asDouble("embedding").as("vec"))
-      .localCheckpoint()
-    val model = lloydModelM(s, d, e)
-    val cells = scoreAgainst(s, e, model)
+    val e = vectors(s, d).localCheckpoint()
+    val cells = scoreAgainst(s, e, lloydModelM(s, d, e))
       .filter(col("p_rank") <= IvfProbes)
       .select(col("vec_id"), col("cell"), col("p_rank"))
       .localCheckpoint()
     val sub = pqSub(e)
     val codebook = pqCodebookM(s, d, e, sub)
-    val codes = pqAssign(s, sub, codebook).filter(col("rk") === 1)
-      .select(col("vec_id").as("c_id"), col("m"), col("cell"))
-      .localCheckpoint()
-    // ---- ivf: same rows as qSimIvf, vectors re-attached from the
-    // checkpointed corpus instead of riding the fat scored frame
-    val assignedIvf = cells.filter(col("p_rank") === 1)
-      .join(e, Seq("vec_id"))
-      .select(col("vec_id").as("c_id"), col("vec").as("c_vec"), col("cell"))
-    val probesIvf = cells.filter(col("vec_id") < 10 && col("p_rank") <= IvfProbes)
-      .join(e, Seq("vec_id"))
-      .select(col("vec_id").as("q_id"), col("vec").as("q_vec"), col("cell"))
-    val wIvf = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id"))
-    val ivf = probesIvf.join(assignedIvf, Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cosine", cosine("q_vec", "c_vec"))
-      .withColumn("rank", row_number().over(wIvf))
-      .filter(col("rank") <= 5)
-      .select("q_id", "rank", "c_id", "cell", "cosine")
-    // ---- pq: qSimPq over the shared codes/sub frames
-    val qdPq = sub.filter(col("vec_id") < 10)
-      .join(broadcast(codebook.toDF("m", "cell", "cent")), Seq("m"))
-      .select(col("vec_id").as("q_id"), col("m"), col("cell"),
-        dot("sv", "cent").as("pdot"))
-    val adcPq = qdPq.join(codes, Seq("m", "cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .groupBy(col("q_id"), col("c_id"))
-      .agg(adcPartialCols.head, adcPartialCols.tail: _*)
-      .withColumn("approx", adcSum)
-    val byApproxPq = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("approx").desc, col("c_id"))
-    val candPq = adcPq.withColumn("ark", row_number().over(byApproxPq))
-      .filter(col("ark") <= PqRefine)
-      .select("q_id", "c_id")
-    val byCosPq = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id"))
-    val pq = candPq
-      .join(e.select(col("vec_id").as("q_id"), col("vec").as("q_vec")), Seq("q_id"))
-      .join(e.select(col("vec_id").as("c_id"), col("vec").as("c_vec")), Seq("c_id"))
-      .withColumn("cosine", cosine("q_vec", "c_vec"))
-      .withColumn("rank", row_number().over(byCosPq))
-      .filter(col("rank") <= 5)
-      .select("q_id", "rank", "c_id", "cosine")
-    // ---- ivfpq: qSimIvfpq over the shared cells/codes frames
-    val assignedPq = cells.filter(col("p_rank") === 1)
-      .select(col("vec_id").as("c_id"), col("cell"))
-    val probesPq = cells.filter(col("vec_id") < 10 && col("p_rank") <= IvfProbes)
-      .select(col("vec_id").as("q_id"), col("cell"))
-    val codesI = codes.select(col("c_id"), col("m"), col("cell").as("code"))
-    val qdI = sub.filter(col("vec_id") < 10)
-      .join(broadcast(codebook.toDF("m", "code", "cent")), Seq("m"))
-      .select(col("vec_id").as("q_id"), col("m"), col("code"),
-        dot("sv", "cent").as("pdot"))
-    val cand0 = probesPq.join(assignedPq, Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .select("q_id", "c_id", "cell")
-    val adcI = cand0.join(codesI, Seq("c_id"))
-      .join(broadcast(qdI), Seq("q_id", "m", "code"))
-      .groupBy(col("q_id"), col("c_id"), col("cell"))
-      .agg(adcPartialCols.head, adcPartialCols.tail: _*)
-      .withColumn("approx", adcSum)
-    val byApproxI = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("approx").desc, col("c_id"))
-    val candI = adcI.withColumn("ark", row_number().over(byApproxI))
-      .filter(col("ark") <= PqRefine)
-      .select("q_id", "c_id", "cell")
-    val byCosI = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id"))
-    val ivfpq = candI
-      .join(e.select(col("vec_id").as("q_id"), col("vec").as("q_vec")), Seq("q_id"))
-      .join(e.select(col("vec_id").as("c_id"), col("vec").as("c_vec")), Seq("c_id"))
-      .withColumn("cosine", cosine("q_vec", "c_vec"))
-      .withColumn("rank", row_number().over(byCosI))
-      .filter(col("rank") <= 5)
-      .select("q_id", "rank", "c_id", "cell", "cosine")
-    // ---- lsh: qSimLsh over the checkpointed corpus
-    val bucketed = withBandBuckets(e, AnnLsh)
-    val qLsh = bucketed.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("vec").as("q_vec"), col("band"),
-        explode(expr(s"""array_union(array(bucket),
-          transform(sequence(0, ${AnnLsh.planesPerBand - 1}), j -> bucket ^ shiftleft(1L, j)))"""))
-          .as("bucket"))
-    val cLsh = bucketed
-      .select(col("band"), col("bucket"), col("vec_id").as("c_id"), col("vec").as("c_vec"))
-    val wLsh = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id"))
-    val lsh = broadcast(qLsh).join(cLsh, Seq("band", "bucket"))
-      .filter(col("q_id") =!= col("c_id"))
-      .select("q_id", "q_vec", "c_id", "c_vec")
-      .dropDuplicates("q_id", "c_id")
-      .withColumn("cosine", cosine("q_vec", "c_vec"))
-      .withColumn("rank", row_number().over(wLsh))
-      .filter(col("rank") <= 5)
-      .select("q_id", "rank", "c_id", "cosine")
-    val methods = Seq("ivf" -> ivf, "ivfpq" -> ivfpq, "lsh" -> lsh, "pq" -> pq)
+    val codes = pqCodes(s, sub, codebook).localCheckpoint()
+    val lut = pqLut(s, sub, codebook)
+    val (probes, assigned) = ivfSplit(cells.join(e, Seq("vec_id"))
+      .select("vec_id", "vec", "cell", "p_rank"))
+    val (cellProbes, cellAssigned) = ivfSplit(cells)
+    val methods = Seq(
+      "ivf" -> refineTop5(ivfCandidates(probes, assigned), "cell"),
+      "ivfpq" -> ivfpqTop5(e, cellProbes, cellAssigned, lut, codes),
+      "lsh" -> refineTop5(lshCandidates(e, AnnLsh)),
+      "pq" -> pqTop5(e, lut, codes))
     // pin the ground truth ONCE: the union has four branches and each
     // would otherwise replay the full brute-force chain (the same
     // multi-consumer trap as the winnowing fingerprint stream)
@@ -1509,6 +1427,19 @@ object VectorOps {
        |)$chain""".stripMargin
   }
 
+  /** Every vector's cells ranked by cosine to the final centroids
+    * `c{LloydIters}` (p_rank 1 = its own cell), with the Lloyd
+    * tie-break — the SQL twin of [[scoreAgainst]] over the model that
+    * [[ivfSeedChainSql]] trains, shared by the five IVF oracles. */
+  private val ivfScoredSql: String =
+    s"""scored AS (
+       |  SELECT v.vec_id, v.vec, c.cell,
+       |         ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
+       |           ${cosSql("v.vec", "c.cent")} DESC,
+       |           c.cell) AS p_rank
+       |  FROM v CROSS JOIN c$LloydIters c
+       |)""".stripMargin
+
   private val oracleBase: Map[String, String] = Map(
     "q_embed_project" ->
       """WITH signs AS (
@@ -1647,17 +1578,10 @@ object VectorOps {
       // the same Lloyd chain, then the integer-exact TV arithmetic
       // over even/odd vec_id halves — counts and terms all BIGINTs,
       // one IEEE division at the end
-      val cFinal = s"c$LloydIters"
       s"""WITH v AS (
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings
          |), $ivfSeedChainSql,
-         |scored AS (
-         |  SELECT v.vec_id, v.vec, c.cell,
-         |         ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-         |           ${cosSql("v.vec", "c.cent")} DESC,
-         |           c.cell) AS p_rank
-         |  FROM v CROSS JOIN $cFinal c
-         |), assigned AS (
+         |$ivfScoredSql, assigned AS (
          |  SELECT vec_id, cell FROM scored WHERE p_rank = 1
          |), counts AS (
          |  SELECT cell,
@@ -1689,17 +1613,10 @@ object VectorOps {
       // cell-keyed join, exact-cosine top-1 (NULL when the cell holds
       // no keeper; no partition ever mixes NULL and non-NULL, so the
       // cross-engine null-ordering divergence cannot bite)
-      val cFinal = s"c$LloydIters"
       s"""WITH v AS (
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings
          |), $ivfSeedChainSql,
-         |scored AS (
-         |  SELECT v.vec_id, v.vec, c.cell,
-         |         ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-         |           ${cosSql("v.vec", "c.cent")} DESC,
-         |           c.cell) AS p_rank
-         |  FROM v CROSS JOIN $cFinal c
-         |), assigned AS (
+         |$ivfScoredSql, assigned AS (
          |  SELECT vec_id, vec, cell FROM scored WHERE p_rank = 1
          |), keepers AS (
          |  SELECT cell, vec_id AS k_id, vec AS k_vec
@@ -1725,17 +1642,10 @@ object VectorOps {
       // sums divided in double — the cross-engine AVG pin; empty cells
       // keep their centroid via the LEFT JOIN COALESCE) → probe top-3
       // cells → exact cosine refine, top-5
-      val cFinal = s"c$LloydIters"
       s"""WITH v AS (
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings
          |), $ivfSeedChainSql,
-         |scored AS (
-         |  SELECT v.vec_id, v.vec, c.cell,
-         |         ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-         |           ${cosSql("v.vec", "c.cent")} DESC,
-         |           c.cell) AS p_rank
-         |  FROM v CROSS JOIN $cFinal c
-         |), assigned AS (
+         |$ivfScoredSql, assigned AS (
          |  SELECT vec_id AS c_id, vec AS c_vec, cell FROM scored WHERE p_rank = 1
          |), probes AS (
          |  SELECT vec_id AS q_id, vec AS q_vec, cell FROM scored
@@ -1971,7 +1881,6 @@ object VectorOps {
       // (ivfSeedChainSql coarse cells + pqChainSql codebooks) plus the
       // candidate intersection — generated from the SAME constants as
       // the Spark side, so neither model can drift from its solo query
-      val cFinal = s"c$LloydIters"
       val pFinal = s"pc$PqLloyd"
       val pCols = (0 until PqM).map(m =>
         s"SUM(CASE WHEN q.m = $m THEN q.pdot END) AS p$m").mkString(",\n")
@@ -1980,13 +1889,7 @@ object VectorOps {
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings
          |), $ivfSeedChainSql,
          |$pqChainSql,
-         |scored AS (
-         |  SELECT v.vec_id, v.vec, c.cell,
-         |         ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-         |           ${cosSql("v.vec", "c.cent")} DESC,
-         |           c.cell) AS p_rank
-         |  FROM v CROSS JOIN $cFinal c
-         |), assigned AS (
+         |$ivfScoredSql, assigned AS (
          |  SELECT vec_id AS c_id, cell FROM scored WHERE p_rank = 1
          |), probes AS (
          |  SELECT vec_id AS q_id, cell FROM scored
@@ -2073,8 +1976,7 @@ object VectorOps {
         |         unnest(generate_series(1, copies)) AS copy
         |  FROM x)
         |ORDER BY label, vec_id, copy""".stripMargin,
-    "q_semdedup" -> {
-      val cFinal = s"c$LloydIters"
+    "q_semdedup" ->
       s"""WITH e0 AS (
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings
          |), v AS (
@@ -2082,13 +1984,7 @@ object VectorOps {
          |  UNION ALL
          |  SELECT vec_id + 1000000 AS vec_id, vec FROM e0
          |), $ivfSeedChainSql,
-         |scored AS (
-         |  SELECT v.vec_id, v.vec, c.cell,
-         |         ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-         |           ${cosSql("v.vec", "c.cent")} DESC,
-         |           c.cell) AS p_rank
-         |  FROM v CROSS JOIN $cFinal c
-         |), assigned AS (
+         |$ivfScoredSql, assigned AS (
          |  SELECT vec_id, vec, cell FROM scored WHERE p_rank = 1
          |), pairs AS (
          |  SELECT a.vec_id AS a_id, b.vec_id AS b_id
@@ -2102,13 +1998,8 @@ object VectorOps {
          |       COALESCE(m.keeper, s.vec_id) AS keeper_id
          |FROM assigned s LEFT JOIN mins m USING (vec_id)
          |ORDER BY s.vec_id""".stripMargin
-    }
   )
 
-  /** q_ann_recall's oracle embeds the SAME per-method SQL chains as
-    * the solo ANN queries (each published oracle becomes a derived
-    * table), so the recall table is recomputed end-to-end from the
-    * raw embeddings — it can never drift from the per-method rows. */
   /** The MMR oracle: candidates + pairwise sims, then MmrK unrolled
     * MATERIALIZED greedy rounds replaying the driver-side argmax with
     * the identical (score DESC, vec_id) order. */
@@ -2159,6 +2050,10 @@ object VectorOps {
        |ORDER BY q_id, rank""".stripMargin
   }
 
+  /** q_ann_recall's oracle embeds the SAME per-method SQL chains as
+    * the solo ANN queries (each published oracle becomes a derived
+    * table), so the recall table is recomputed end-to-end from the
+    * raw embeddings — it can never drift from the per-method rows. */
   val oracle: Map[String, String] = oracleBase + ("q_mmr" -> mmrOracle) + ("q_ann_recall" -> {
     val anns = Seq("ivf" -> "q_sim_ivf", "ivfpq" -> "q_sim_ivfpq",
       "lsh" -> "q_sim_lsh", "pq" -> "q_sim_pq")

@@ -111,11 +111,16 @@ object Windows {
     graft.streaming.EventPipeline.windowedCounts(Tables.events(s, d))
       .orderBy("win_start", "event_type")
 
-  // Sessionization (gap > 30 min) via lag + cumulative flag — the
-  // batch analog of session_window/flatMapGroupsWithState (M3).
-  private def qSessionize(s: SparkSession, d: String): DataFrame = {
+  /** `events` with each row's 30-min-gap session: `is_new` flags a
+    * user's first event and every event more than 30 min after the
+    * previous one in (ts, event_id) order, and `session_id` is the
+    * running count of those flags — the batch analog of
+    * session_window/flatMapGroupsWithState (M3). Shared by
+    * q_sessionize, q_concurrency and q_session_paths; their oracles
+    * share [[sessionedSql]]. */
+  private def withSessionIds(events: DataFrame): DataFrame = {
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    Tables.events(s, d)
+    events
       .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
       .withColumn("is_new",
         when(col("prev_ts").isNull
@@ -123,6 +128,11 @@ object Windows {
           .otherwise(0L))
       .withColumn("session_id", sum(col("is_new")).over(
         byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  }
+
+  // Sessionization (gap > 30 min) via lag + cumulative flag.
+  private def qSessionize(s: SparkSession, d: String): DataFrame =
+    withSessionIds(Tables.events(s, d))
       .groupBy(col("user_id"), col("session_id"))
       .agg(
         min(col("ts")).as("session_start"),
@@ -130,7 +140,6 @@ object Windows {
         count(lit(1)).as("n_events"),
         (unix_micros(max(col("ts"))) - unix_micros(min(col("ts")))).as("duration_us"))
       .orderBy("user_id", "session_id")
-  }
 
   /** Sweep-line peak concurrency — "how many sessions were open at
     * once", the capacity-planning twin of sessionization (the
@@ -155,15 +164,7 @@ object Windows {
     * so its single-partition window is free). peak = max(open at day
     * start, day max of carried running) — exact BIGINTs end to end. */
   private def qConcurrency(s: SparkSession, d: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val sessions = Tables.events(s, d)
-      .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
-      .withColumn("is_new",
-        when(col("prev_ts").isNull
-          || (unix_micros(col("ts")) - unix_micros(col("prev_ts"))) > lit(1800000000L), 1L)
-          .otherwise(0L))
-      .withColumn("session_id", sum(col("is_new")).over(
-        byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val sessions = withSessionIds(Tables.events(s, d))
       .groupBy(col("user_id"), col("session_id"))
       .agg(
         min(unix_micros(col("ts"))).as("start_us"),
@@ -360,15 +361,7 @@ object Windows {
     * orderBy+limit (TakeOrdered — no global sort), and only then does
     * a 50-row window stamp ranks. */
   private def qSessionPaths(s: SparkSession, d: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val sessions = Tables.events(s, d)
-      .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
-      .withColumn("is_new",
-        when(col("prev_ts").isNull
-          || (unix_micros(col("ts")) - unix_micros(col("prev_ts"))) > lit(1800000000L), 1L)
-          .otherwise(0L))
-      .withColumn("session_id", sum(col("is_new")).over(
-        byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val sessions = withSessionIds(Tables.events(s, d))
       .groupBy(col("user_id"), col("session_id"))
       .agg(
         count(lit(1)).as("n_events"),
@@ -868,6 +861,24 @@ object Windows {
     "q_top_movers" -> (qTopMovers _)
   )
 
+  /** The 30-min-gap sessions of `events` as two CTEs: `flagged` adds
+    * is_new, `sessioned` adds session_id — the SQL twin of
+    * [[withSessionIds]], shared by the four session oracles. */
+  private val sessionedSql: String =
+    """flagged AS (
+      |  SELECT *,
+      |         CASE WHEN LAG(ts, 1) OVER w IS NULL
+      |                OR epoch_us(ts) - epoch_us(LAG(ts, 1) OVER w) > 1800000000
+      |              THEN 1 ELSE 0 END AS is_new
+      |  FROM events
+      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+      |), sessioned AS (
+      |  SELECT *,
+      |         CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
+      |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+      |  FROM flagged
+      |)""".stripMargin
+
   val oracle: Map[String, String] = Map(
     "q_rolling_distinct" ->
       """WITH ud AS (
@@ -1135,19 +1146,7 @@ object Windows {
         |FROM words
         |ORDER BY user_id, week""".stripMargin,
     "q_session_paths" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |         CASE WHEN LAG(ts, 1) OVER w IS NULL
-        |                OR epoch_us(ts) - epoch_us(LAG(ts, 1) OVER w) > 1800000000
-        |              THEN 1 ELSE 0 END AS is_new
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), sessioned AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |         CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM flagged
-        |), paths AS (
+      s"""WITH $sessionedSql, paths AS (
         |  SELECT user_id, session_id, COUNT(*) AS n_events,
         |         array_to_string(list(event_type ORDER BY ts, event_id), '>') AS path
         |  FROM sessioned
@@ -1207,19 +1206,7 @@ object Windows {
         |GROUP BY user_id
         |ORDER BY user_id""".stripMargin,
     "q_concurrency" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id,
-        |         CASE WHEN LAG(ts, 1) OVER w IS NULL
-        |                OR epoch_us(ts) - epoch_us(LAG(ts, 1) OVER w) > 1800000000
-        |              THEN 1 ELSE 0 END AS is_new
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), sessioned AS (
-        |  SELECT user_id, ts,
-        |         CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM flagged
-        |), sess AS (
+      s"""WITH $sessionedSql, sess AS (
         |  SELECT user_id, session_id,
         |         CAST(MIN(epoch_us(ts)) AS BIGINT) AS start_us,
         |         CAST(MAX(epoch_us(ts)) + 1800000000 AS BIGINT) AS end_us
@@ -1255,18 +1242,7 @@ object Windows {
         |FROM carried
         |ORDER BY day_idx""".stripMargin,
     "q_sessionize" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id,
-        |         CASE WHEN LAG(ts, 1) OVER w IS NULL
-        |                OR epoch_us(ts) - epoch_us(LAG(ts, 1) OVER w) > 1800000000
-        |              THEN 1 ELSE 0 END AS is_new
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), sessioned AS (
-        |  SELECT user_id, ts,
-        |         CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM flagged)
+      s"""WITH $sessionedSql
         |SELECT user_id, session_id,
         |       MIN(ts) AS session_start, MAX(ts) AS session_end,
         |       COUNT(*) AS n_events,
@@ -1291,25 +1267,14 @@ object Windows {
         |WHERE rn <= 3
         |ORDER BY o_custkey, rn""".stripMargin,
     "q_session_window" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, value, event_id,
-        |         CASE WHEN LAG(ts, 1) OVER w IS NULL
-        |                OR epoch_us(ts) - epoch_us(LAG(ts, 1) OVER w) > 1800000000
-        |              THEN 1 ELSE 0 END AS is_new
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), sessioned AS (
-        |  SELECT user_id, ts, value,
-        |         CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sid
-        |  FROM flagged)
+      s"""WITH $sessionedSql
         |SELECT user_id,
         |       MIN(ts) AS session_start,
         |       MAX(ts) + INTERVAL 30 MINUTE AS session_end,
         |       COUNT(*) AS n_events,
         |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |FROM sessioned
-        |GROUP BY user_id, sid
+        |GROUP BY user_id, session_id
         |ORDER BY user_id, session_start""".stripMargin,
     "q_dedup_replay" ->
       """SELECT DISTINCT event_id, ts, user_id, event_type, value, props

@@ -197,9 +197,11 @@ object EventPipeline {
     * is written, when its columns or types differ from the batch's
     * (nullability aside), or when it holds partitions other than
     * `bucket=0` (e.g. from a key-hash layout): merging into `bucket=0`
-    * alone would leave their stale keys behind. Only a missing
-    * `viewDir` is an empty view; a view that cannot be listed or read
-    * fails the upsert and is left as it was.
+    * alone would leave their stale keys behind. A missing `viewDir`, or
+    * one holding no data files, is an empty view; a view that cannot be
+    * listed or read fails the upsert and is left as it was, and so does
+    * one whose only content is a `.spark-staging-*` directory (the
+    * state a crash between the overwrite's delete and rename leaves).
     */
   def upsertKeyedView(batch: DataFrame, viewDir: String): Unit = {
     val spark = batch.sparkSession
@@ -211,10 +213,19 @@ object EventPipeline {
     // to read it propagates, since read as empty the overwrite below
     // would replace every stored key with this batch alone
     val root = new Path(viewDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stored =
-      if (!root.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(root)) None
-      else Some(spark.read.schema(batch.schema.add("bucket", IntegerType)).parquet(viewDir))
-        .filter(_.inputFiles.nonEmpty)
+      if (!fs.exists(root)) None
+      else {
+        val old = spark.read.schema(batch.schema.add("bucket", IntegerType)).parquet(viewDir)
+        if (old.inputFiles.nonEmpty) Some(old)
+        // no committed file: an empty view, unless an overwrite was cut
+        // between deleting bucket=0 and renaming its staged copy in
+        else if (fs.listStatus(root).exists(_.getPath.getName.startsWith(".spark-staging-")))
+          throw refuseView(viewDir, "holds no committed partition, only an uncommitted " +
+            ".spark-staging-* directory (an overwrite interrupted before its rename)")
+        else None
+      }
     val unioned = stored match {
       case None => incoming
       case Some(old) =>

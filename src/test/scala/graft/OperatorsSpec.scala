@@ -82,6 +82,27 @@ class OperatorsSpec extends SparkSpec {
     assert(warm == cold)
   }
 
+  test("q_ann_recall equals hits and totals recomputed from the four solo ANN queries") {
+    // q_ann_recall runs each method's chain over its own shared frames;
+    // its table must be what the solo queries' top-5 rows give
+    def top5(name: String): Map[(Long, Long), Int] = q(name).collect().map(r =>
+      (r.getAs[Long]("q_id"), r.getAs[Long]("c_id")) -> r.getAs[Int]("rank")).toMap
+    val truth = top5("q_sim_bruteforce")
+    val want = Seq("ivf" -> "q_sim_ivf", "ivfpq" -> "q_sim_ivfpq",
+      "lsh" -> "q_sim_lsh", "pq" -> "q_sim_pq").flatMap { case (method, solo) =>
+      val ann = top5(solo)
+      Seq(1L, 3L, 5L).map { k =>
+        val relevant = truth.filter(_._2 <= k).keys
+        val hits = relevant.count(pair => ann.get(pair).exists(_ <= k)).toLong
+        (method, k, hits, relevant.size.toLong, hits.toDouble / relevant.size.toDouble)
+      }
+    }
+    val got = q("q_ann_recall").collect().map(r => (r.getAs[String]("method"),
+      r.getAs[Long]("k"), r.getAs[Long]("hits"), r.getAs[Long]("total"),
+      r.getAs[Double]("recall"))).toSeq
+    assert(got == want)
+  }
+
   test("scan spread floors an under-split frame at default parallelism and leaves a split one alone") {
     import graft.operators.Policy
     val want = spark.sparkContext.defaultParallelism

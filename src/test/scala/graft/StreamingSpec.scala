@@ -174,6 +174,28 @@ class StreamingSpec extends SparkSpec {
       Seq(1L, 2L))
   }
 
+  test("keyed view upsert refuses a view whose only partition sits in an uncommitted staging dir") {
+    def keys(from: Long, to: Long): DataFrame =
+      (from to to).map(k => (k, s"t$k", k.toDouble)).toDF("event_id", "event_type", "value")
+    val view = tmp("view")
+    EventPipeline.upsertKeyedView(keys(1L, 1000L), view)
+    EventPipeline.upsertKeyedView(keys(1001L, 1100L), view)
+    // the state a crash leaves between the dynamic overwrite's delete of
+    // bucket=0 and its rename of the staged partition into place
+    val committed = java.nio.file.Paths.get(view, "bucket=0")
+    val staged = java.nio.file.Paths.get(view, ".spark-staging-deadbeef", "bucket=0")
+    Files.createDirectories(staged.getParent)
+    Files.move(committed, staged)
+    // read as an empty view, the replay would leave 50 keys, not 1 150
+    val e = intercept[IllegalStateException](
+      EventPipeline.upsertKeyedView(keys(1101L, 1150L), view))
+    assert(e.getMessage.contains(".spark-staging-") && e.getMessage.contains("rebuild"),
+      e.getMessage)
+    // refused before writing: nothing committed, the staged keys intact
+    assert(!Files.exists(committed))
+    assert(spark.read.parquet(staged.toString).count() == 1100)
+  }
+
   test("concurrent sinks: a failed history append fails the batch, leaves nothing cached, " +
       "and a replay converges") {
     val dim = Enrich.customerDim(spark, Sf0001)
