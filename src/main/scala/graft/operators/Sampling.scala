@@ -142,7 +142,7 @@ object Sampling {
     * the oracle joins the strings themselves, so the counts are
     * cross-checked against a collision-free formulation.
     */
-  private val ChunkToks = 5
+  private[graft] val ChunkToks = 5
 
   private def qDecontaminate(s: SparkSession, d: String): DataFrame = {
     val k = ChunkToks
@@ -185,14 +185,11 @@ object Sampling {
     * documented there); the pair covers both formulations.
     */
   private def qDecontaminateSliding(s: SparkSession, d: String): DataFrame = {
-    val k = ChunkToks
     val grams = Tables.documents(s, d)
       .withColumn("split", splitOf(hexKey(col("doc_id"))))
       .withColumn("toks", split(col("text"), " "))
       .select(col("doc_id"), col("split"),
-        explode(expr(
-          s"""transform(sequence(0, greatest(size(toks) - $k, 0)),
-                i -> concat_ws(' ', slice(toks, i + 1, $k)))""")).as("gram"))
+        explode(TextOps.ngrams("toks", ChunkToks)).as("gram"))
     val train = grams.filter(col("split") === "train")
       .select(col("gram")).distinct().withColumn("hit", lit(1L))
     grams.filter(col("split") =!= "train")
@@ -607,10 +604,7 @@ object Sampling {
          |  SELECT doc_id, $splitSql AS split, string_split(text, ' ') AS toks
          |  FROM documents
          |), grams AS (
-         |  SELECT doc_id, split,
-         |         unnest(list_transform(
-         |           range(0, greatest(len(toks) - $ChunkToks, 0) + 1),
-         |           i -> array_to_string(toks[i+1 : i+$ChunkToks], ' '))) AS gram
+         |  SELECT doc_id, split, unnest(${TextOps.ngramsSql("toks", ChunkToks)}) AS gram
          |  FROM docs
          |), train AS (
          |  SELECT DISTINCT gram FROM grams WHERE split = 'train'

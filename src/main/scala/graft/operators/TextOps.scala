@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
@@ -43,7 +43,7 @@ object TextOps {
   /** Corpus with a replayed copy (ids shifted by 1,000,000) — the
     * dedup fixture. Mirrored exactly in the oracle SQL CTE.
     */
-  private def doubled(s: SparkSession, d: String): DataFrame = {
+  private[graft] def doubled(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select("doc_id", "text", "lang", "source", "n_chars")
     docs.union(docs.withColumn("doc_id", col("doc_id") + lit(1000000L))
       .select("doc_id", "text", "lang", "source", "n_chars"))
@@ -130,6 +130,55 @@ object TextOps {
        |  FROM bits GROUP BY doc_id
        |)""".stripMargin
 
+  /** DuckDB twin of [[ngrams]]: the n-gram list of the `toks` list
+    * expression. */
+  private[operators] def ngramsSql(toks: String, n: Int): String =
+    s"list_transform(range(1, greatest(len($toks) - ${n - 1}, 1) + 1), i -> array_to_string($toks[i:i+${n - 1}], ' '))"
+
+  /** The 3-shingle list of a `text` column. */
+  private val shingleListSql = ngramsSql("string_split(text, ' ')", 3)
+
+  /** Shared oracle CTE: each doubled doc's distinct 3-shingles,
+    * `ex(doc_id, s)`. */
+  private val shinglesSql =
+    s"""$doubledSql,
+       |ex AS (
+       |  SELECT doc_id, unnest(list_distinct($shingleListSql)) AS s FROM doubled
+       |)""".stripMargin
+
+  /** [[shinglesSql]] after the DF cap, `kept(doc_id, s, n_sh)` — the
+    * twin of [[dfCapped]] over string shingles. */
+  private lazy val keptSql =
+    s"""$shinglesSql, dfd AS (
+       |  SELECT doc_id, s, COUNT(*) OVER (PARTITION BY s) AS df FROM ex
+       |), kept AS (
+       |  SELECT doc_id, s, COUNT(*) OVER (PARTITION BY doc_id) AS n_sh
+       |  FROM dfd WHERE df <= $ShingleDfCap
+       |)""".stripMargin
+
+  /** [[keptSql]] plus the capped shingle pair join, `pairs(a_id, b_id,
+    * a_n, b_n, common, jaccard)` — the twin of [[ngramCandidates]]. */
+  private lazy val ngramPairsSql =
+    s"""$keptSql, pairs AS (
+       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.n_sh AS a_n, b.n_sh AS b_n,
+       |         COUNT(*) AS common,
+       |         CAST(COUNT(*) AS DOUBLE)
+       |           / CAST(a.n_sh + b.n_sh - COUNT(*) AS DOUBLE) AS jaccard
+       |  FROM kept a JOIN kept b ON a.s = b.s AND a.doc_id < b.doc_id
+       |  GROUP BY a.doc_id, b.doc_id, a.n_sh, b.n_sh
+       |)""".stripMargin
+
+  /** Shared oracle CTE `bigrams(doc_id, w1, w2)` — the twin of
+    * [[docBigrams]]. */
+  private val docBigramsSql =
+    """bigrams AS (
+      |  SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM (
+      |    SELECT doc_id, unnest(list_transform(range(1, len(t)), i ->
+      |             struct_pack(w1 := t[i], w2 := t[i+1]))) AS b
+      |    FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents
+      |          WHERE len(string_split(text, ' ')) >= 2))
+      |)""".stripMargin
+
   /** Shared oracle CTE chain: PRODUCTION-family (xxhash64) MinHash
     * state over the doubled corpus — DF-capped shingle hashes
     * (`kept(doc_id, h, hu, n_sh)`, `docn`), the 32 mixed signature
@@ -139,16 +188,7 @@ object TextOps {
     * q_dedup_minhash and q_decontaminate_fuzzy so the two oracles can
     * never drift apart. Requires the [[XxOracleSql.prelude]] macros. */
   private lazy val xxMinhashSql =
-    s"""$doubledSql,
-       |sh AS (
-       |  SELECT doc_id,
-       |         list_distinct(list_transform(
-       |           range(1, greatest(len(string_split(text, ' ')) - 2, 1) + 1),
-       |           i -> array_to_string(string_split(text, ' ')[i:i+2], ' '))) AS shingles
-       |  FROM doubled
-       |), ex AS (
-       |  SELECT doc_id, unnest(shingles) AS s FROM sh
-       |), shset AS (SELECT DISTINCT s FROM ex),
+    s"""$shinglesSql, shset AS (SELECT DISTINCT s FROM ex),
        |  ${XxOracleSql.stages("shset", "s", "s", "h64", 96, "g")},
        |exh AS (
        |  SELECT ex.doc_id, gfin.h64 AS h, gxx_ub(gfin.h64) AS hu FROM ex JOIN gfin USING (s)
@@ -604,8 +644,7 @@ object TextOps {
   private def qRepetition(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .withColumn("toks", tokens())
-      .withColumn("tris", expr(
-        "transform(sequence(1, greatest(size(toks) - 2, 1)), i -> concat_ws(' ', slice(toks, i, 3)))"))
+      .withColumn("tris", ngrams("toks", 3))
       .select(
         col("doc_id"),
         size(col("tris")).cast("long").as("n_tri"),
@@ -723,26 +762,39 @@ object TextOps {
     */
   val ShingleDfCap = 16
 
-  /** (doc_id, sh, n_sh) shingle-hash rows after the DF cap: hot
-    * shingles removed, n_sh recomputed over the kept set. Both windows
-    * partition on the same keys the downstream join/agg use.
-    */
-  private def keptShingleHashes(docs: DataFrame, dfCap: Int): DataFrame = {
-    // join on the 64-bit shingle hash, not the string — less than half
-    // the shuffle bytes and integer key compares; a hash collision
-    // would need two of the ~10^5 distinct shingles to collide in 64
-    // bits (p ≈ 3e-10) and would only perturb one pair's common-count
-    val ex = docs
-      .withColumn("toks", tokens())
-      .withColumn("shingles", array_distinct(
-        expr("transform(sequence(1, greatest(size(toks) - 2, 1)), i -> concat_ws(' ', slice(toks, i, 3)))")))
+  /** The token n-grams of the `toks` array column, stride 1, each
+    * joined by single spaces. A document shorter than n tokens yields
+    * ONE short n-gram (all of its tokens), never an empty list.
+    * [[ngramsSql]] is the DuckDB twin. */
+  private[graft] def ngrams(toks: String, n: Int): Column =
+    expr(s"transform(sequence(1, greatest(size($toks) - ${n - 1}, 1)), i -> concat_ws(' ', slice($toks, i, $n)))")
+
+  /** (doc_id, sh): each document's distinct 3-shingles. `docs` needs
+    * (doc_id, text). */
+  private def shingles(docs: DataFrame): DataFrame =
+    docs.withColumn("toks", tokens())
+      .select(col("doc_id"), explode(array_distinct(ngrams("toks", 3))).as("sh"))
+
+  /** (doc_id, sh): each document's distinct 3-shingles as 64-bit
+    * hashes. Joins on the hash, not the string, move less than half
+    * the shuffle bytes and compare integer keys; a hash collision would
+    * need two of the ~10^5 distinct shingles to collide in 64 bits
+    * (p ≈ 3e-10) and would only perturb one pair's common-count. */
+  private def shingleHashes(docs: DataFrame): DataFrame =
+    docs.withColumn("toks", tokens())
+      .withColumn("shingles", array_distinct(ngrams("toks", 3)))
       .select(col("doc_id"),
         explode(expr("transform(shingles, s -> xxhash64(s))")).as("sh"))
-    ex.withColumn("df", count(lit(1)).over(Window.partitionBy(col("sh"))))
+
+  /** The DF cap over a (doc_id, sh) shingle stream: shingles held by
+    * more than `dfCap` documents are dropped and n_sh is recounted over
+    * the kept set. Both windows partition on the same keys the
+    * downstream join/agg use. [[keptSql]] is the DuckDB twin. */
+  private def dfCapped(sh: DataFrame, dfCap: Int = ShingleDfCap): DataFrame =
+    sh.withColumn("df", count(lit(1)).over(Window.partitionBy(col("sh"))))
       .filter(col("df") <= lit(dfCap))
       .withColumn("n_sh", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
       .select("doc_id", "sh", "n_sh")
-  }
 
   /** Candidate pairs of the shingle join (pre-Jaccard-threshold),
     * exposed so the skew guard test can prove the DF cap bounds the
@@ -751,9 +803,10 @@ object TextOps {
     * + both windows run ONCE per execution instead of once per join
     * side, and both pair-join sides read the preserved sh partitioning
     * exchange-free (the q_dedup_prefix / q_winnow_pairs device).
+    * [[ngramPairsSql]] is the DuckDB twin.
     */
   def ngramCandidates(docs: DataFrame, dfCap: Int = ShingleDfCap): DataFrame = {
-    val kept = keptShingleHashes(Policy.spread(docs), dfCap)
+    val kept = dfCapped(shingleHashes(Policy.spread(docs)), dfCap)
       .repartition(col("sh")).localCheckpoint()
     val a = kept.select(col("doc_id").as("a_id"), col("n_sh").as("a_n"), col("sh"))
     val b = kept.select(col("doc_id").as("b_id"), col("n_sh").as("b_n"), col("sh"))
@@ -770,7 +823,7 @@ object TextOps {
   // sharing a kept shingle (never the full cross product), compute
   // |A∩B| / |A∪B| from exact counts over the kept sets.
   private def qDedupNgram(s: SparkSession, d: String): DataFrame =
-    ngramCandidates(doubled(s, d), ShingleDfCap)
+    ngramCandidates(doubled(s, d))
       .filter(col("jaccard") >= 0.5)
       .select("a_id", "b_id", "common", "jaccard")
       .orderBy("a_id", "b_id")
@@ -787,7 +840,7 @@ object TextOps {
     * the threshold is load-bearing. Same shuffle shape and cost
     * envelope as the dedup query it tunes. */
   private def qSimHistogram(s: SparkSession, d: String): DataFrame = {
-    val cand = ngramCandidates(doubled(s, d), ShingleDfCap)
+    val cand = ngramCandidates(doubled(s, d))
       .withColumn("bin", least(floor(col("jaccard") * 10).cast("long"), lit(9L)))
     // pin the ≤10-row bin table: its LINEAGE is the full candidate
     // join, and both the totals aggregate and the final select would
@@ -814,11 +867,7 @@ object TextOps {
     * the PrefixDecompose diagnostic can price the PPJoin stages
     * (index, candidates, verify) separately against scaled corpora. */
   private[graft] def prefixShingles(s: SparkSession, d: String): DataFrame =
-    Policy.spread(doubled(s, d))
-      .withColumn("toks", tokens())
-      .select(col("doc_id"), explode(array_distinct(
-        expr("transform(sequence(1, greatest(size(toks) - 2, 1)), i -> concat_ws(' ', slice(toks, i, 3)))")))
-        .as("sh"))
+    shingles(Policy.spread(doubled(s, d)))
 
   /** Prefix-filtered set-similarity join (PPJoin-style) — the LOSSLESS
     * alternative to q_dedup_ngram's DF cap: sort every doc's distinct
@@ -960,7 +1009,7 @@ object TextOps {
     * q_dedup_ngram — no extra shuffle, just a different final ratio —
     * so the sub-quadratic blocking analysis carries over unchanged. */
   private def qContainment(s: SparkSession, d: String): DataFrame =
-    ngramCandidates(doubled(s, d), ShingleDfCap)
+    ngramCandidates(doubled(s, d))
       .withColumn("containment",
         col("common").cast("double") / least(col("a_n"), col("b_n")).cast("double"))
       .filter(col("containment") >= 0.6)
@@ -1007,7 +1056,7 @@ object TextOps {
     // 4.1 s at sf0.1 (the residual is the shared candidate blocking,
     // which q_dedup_ngram prices identically). The frame is id pairs
     // + two short prefixes, trivially small next to the DP it guards.
-    val cand = ngramCandidates(doubled(s, d), ShingleDfCap)
+    val cand = ngramCandidates(doubled(s, d))
       .filter(col("jaccard") >= 0.5)
       .join(docs.select(col("doc_id").as("a_id"), col("pfx").as("a_pfx")), Seq("a_id"))
       .join(docs.select(col("doc_id").as("b_id"), col("pfx").as("b_pfx")), Seq("b_id"))
@@ -1024,13 +1073,6 @@ object TextOps {
       .orderBy("a_id", "b_id")
   }
 
-  // MinHash + LSH near-dup detection — the sub-quadratic scale path.
-  // 32 hash functions (seeded xxhash64 of each shingle), banded into
-  // 8 bands × 4 rows; only band-bucket collisions become candidate
-  // pairs, which are then verified with exact Jaccard. Oracled since
-  // round 8 (XxOracleSql replays the exact hash family in DuckDB);
-  // ScalaTest additionally pins recall of the planted duplicates and
-  // precision of the verify stage.
   /** DF-capped per-doc MinHash state over the doubled corpus:
     * (doc_id, sh_hash sorted 64-bit shingle hashes, sig 32 slots).
     * Hash each shingle ONCE, then derive the 32 signature slots by
@@ -1045,7 +1087,7 @@ object TextOps {
     * per branch. The doc scan is spread (see [[Policy.spread]]): the
     * shingle extraction runs below the first exchange. */
   private def minhashSigFrame(s: SparkSession, d: String): DataFrame =
-    keptShingleHashes(Policy.spread(doubled(s, d)), ShingleDfCap)
+    dfCapped(shingleHashes(Policy.spread(doubled(s, d))))
       .groupBy(col("doc_id"))
       .agg(array_sort(collect_list(col("sh"))).as("sh_hash"))
       .withColumn("sig",
@@ -1056,7 +1098,7 @@ object TextOps {
       .select("doc_id", "sh_hash", "sig")
       .localCheckpoint()
 
-  /** 8×4 banded signature rows (doc_id, band, band_hash) off the
+  /** 8×4 banded signature rows (doc_id, band, band_key) off the
     * signature frame — band join + distinct downstream move ID PAIRS
     * ONLY (16-byte rows): a pair colliding in k bands would otherwise
     * ship its two ~100-long shingle-hash arrays k times through the
@@ -1065,7 +1107,25 @@ object TextOps {
     sigs.select(
       col("doc_id"),
       posexplode(expr("transform(sequence(0, 7), b -> xxhash64(concat_ws(',', slice(sig, b * 4 + 1, 4))))")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
+
+  /** Distinct (a_id, b_id) pairs, a_id < b_id, that share a bucket in
+    * some band of the (doc_id, band, band_key) rows. The rows feed BOTH
+    * join sides, so they are keyed by (band, band_key) and
+    * checkpointed: the banding runs once and the self-join reads the
+    * preserved partitioning exchange-free. */
+  private def bandPairs(banded: DataFrame): DataFrame = {
+    val keyed = banded.repartition(col("band"), col("band_key")).localCheckpoint()
+    keyed.select(col("band"), col("band_key"), col("doc_id").as("a_id"))
+      .join(keyed.select(col("band"), col("band_key"), col("doc_id").as("b_id")),
+        Seq("band", "band_key"))
+      .filter(col("a_id") < col("b_id"))
+      .select("a_id", "b_id").distinct()
+  }
+
+  /** Exact Jaccard of two distinct-element arrays. */
+  private def arrayJaccard(a: Column, b: Column): Column =
+    size(array_intersect(a, b)).cast("double") / size(array_union(a, b)).cast("double")
 
   /** LSH-banding quality diagnostic — the text-dedup twin of
     * q_ann_recall: for a deterministic probe set (the 16 lowest
@@ -1103,10 +1163,10 @@ object TextOps {
         greatest(col("p_id"), col("o_id")).as("b"))
       .distinct().localCheckpoint() // two consumers: count + hits semi-join
     val banded = minhashBands(docs)
-      .repartition(col("band"), col("band_hash")).localCheckpoint()
+      .repartition(col("band"), col("band_key")).localCheckpoint()
     val pBand = banded.join(broadcast(probes), Seq("doc_id"))
-      .select(col("doc_id").as("p_id"), col("band"), col("band_hash"))
-    val cand = banded.join(broadcast(pBand), Seq("band", "band_hash"))
+      .select(col("doc_id").as("p_id"), col("band"), col("band_key"))
+    val cand = banded.join(broadcast(pBand), Seq("band", "band_key"))
       .filter(col("doc_id") =!= col("p_id"))
       .select(least(col("p_id"), col("doc_id")).as("a"),
         greatest(col("p_id"), col("doc_id")).as("b"))
@@ -1122,24 +1182,18 @@ object TextOps {
         col("n_hits").cast("double") / col("n_cand").cast("double"))
   }
 
-  /** The banded rows feed BOTH candidate-join sides, so they are keyed
-    * by (band, band_hash) and checkpointed: the banding runs once and
-    * the self-join reads the preserved partitioning exchange-free. */
+  /** MinHash + LSH near-dup detection — the sub-quadratic scale path:
+    * 32 signature slots banded into 8 bands × 4 rows; only band-bucket
+    * collisions become candidate pairs, which are then verified with
+    * exact Jaccard. Oracled via XxOracleSql (the exact hash family in
+    * DuckDB); ScalaTest additionally pins recall of the planted
+    * duplicates and precision of the verify stage. */
   private def qDedupMinhash(s: SparkSession, d: String): DataFrame = {
     val docs = minhashSigFrame(s, d)
-    val banded = minhashBands(docs)
-      .repartition(col("band"), col("band_hash")).localCheckpoint()
-    val cand = banded.select(col("band"), col("band_hash"), col("doc_id").as("a_id"))
-      .join(banded.select(col("band"), col("band_hash"), col("doc_id").as("b_id")),
-        Seq("band", "band_hash"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
-    cand
+    bandPairs(minhashBands(docs))
       .join(docs.select(col("doc_id").as("a_id"), col("sh_hash").as("a_sh")), Seq("a_id"))
       .join(docs.select(col("doc_id").as("b_id"), col("sh_hash").as("b_sh")), Seq("b_id"))
-      .withColumn("jaccard",
-        size(array_intersect(col("a_sh"), col("b_sh"))).cast("double")
-          / size(array_union(col("a_sh"), col("b_sh"))).cast("double"))
+      .withColumn("jaccard", arrayJaccard(col("a_sh"), col("b_sh")))
       .filter(col("jaccard") >= 0.8)
       .select("a_id", "b_id", "jaccard")
       .orderBy("a_id", "b_id")
@@ -1172,17 +1226,15 @@ object TextOps {
     val bands = minhashBands(sigs.select("doc_id", "sig"))
       .join(sigs.select("doc_id", "split"), Seq("doc_id"))
     val evalB = bands.filter(col("split") =!= "train")
-      .select(col("doc_id").as("eval_id"), col("band"), col("band_hash"))
+      .select(col("doc_id").as("eval_id"), col("band"), col("band_key"))
     val trainB = bands.filter(col("split") === "train")
-      .select(col("doc_id").as("train_id"), col("band"), col("band_hash"))
-    val cand = evalB.join(trainB, Seq("band", "band_hash"))
+      .select(col("doc_id").as("train_id"), col("band"), col("band_key"))
+    val cand = evalB.join(trainB, Seq("band", "band_key"))
       .select("eval_id", "train_id").distinct()
     val verified = cand
       .join(sigs.select(col("doc_id").as("eval_id"), col("sh_hash").as("e_sh")), Seq("eval_id"))
       .join(sigs.select(col("doc_id").as("train_id"), col("sh_hash").as("t_sh")), Seq("train_id"))
-      .withColumn("jaccard",
-        size(array_intersect(col("e_sh"), col("t_sh"))).cast("double")
-          / size(array_union(col("e_sh"), col("t_sh"))).cast("double"))
+      .withColumn("jaccard", arrayJaccard(col("e_sh"), col("t_sh")))
       .filter(col("jaccard") >= 0.8)
       .localCheckpoint() // feeds the count agg AND the top-1 window
     val wTop = Window.partitionBy(col("eval_id"))
@@ -1204,49 +1256,29 @@ object TextOps {
       .orderBy("eval_id")
   }
 
-  // SimHash dedup: 64-bit frequency-weighted signature (Charikar) per
-  // document, then SIGNATURE-GROUP collapse — group by exact signature
-  // (keeper = min id), and count near-groups (Hamming ≤ 3) by
-  // band-joining only the DISTINCT signatures. Listing all near-dup
-  // doc pairs is inherently quadratic when a corpus clusters (every
-  // long doc here shares one topic distribution, so signatures
-  // concentrate); grouping first bounds every stage by the number of
-  // distinct signatures — the formulation that survives 100 TB.
-  // Oracled since round 8 via XxOracleSql (exact hash-family replay).
-  /** Cross-engine MinHash accuracy audit — the sketch-vs-truth
-    * comparison a pipeline runs before trusting signature Jaccard as a
-    * dedup threshold at scale. 16 signature slots, slot k =
-    * lexicographic min over the doc's DF-capped shingles of the
-    * 15-hex-char prefix of md5(k ':' shingle); md5 is computable
-    * identically in both engines (unlike q_dedup_minhash's
-    * xxhash64-bitmix family, which trades oracle-ability for hashing
-    * throughput — that stays the production path), so signatures,
-    * the 4×4 banded candidate generation, AND the estimate-vs-exact
-    * deltas all sit under the hash gate. est_jaccard = matches/16 is
-    * IEEE-exact (16 = 2⁴), so every compared column is deterministic.
-    */
   private val MinhashSlots = 16
   private val MinhashBands = 4
 
-  /** The banded stream is keyed by (band, band_key) and checkpointed —
-    * q_dedup_minhash's device; the md5-family banding concatenates
-    * string slots per row, so a duplicated pass would be pricier here. */
+  /** Cross-engine MinHash accuracy audit — the sketch-vs-truth
+    * comparison a pipeline runs before trusting signature Jaccard as a
+    * dedup threshold at scale. Slot k is the lexicographic min over the
+    * doc's DF-capped shingles of the 15-hex-char prefix of
+    * md5(k ':' shingle); md5 is computable identically in both engines
+    * (unlike q_dedup_minhash's xxhash64-bitmix family, which trades
+    * oracle-ability for hashing throughput — that stays the production
+    * path), so signatures, the banded candidates AND the
+    * estimate-vs-exact deltas all sit under the hash gate.
+    * est_jaccard = matches/16 is IEEE-exact (16 = 2⁴). The md5-family
+    * banding concatenates string slots per row, so [[bandPairs]]'
+    * checkpoint saves a pricier pass here than in q_dedup_minhash. */
   private def qMinhashEstimate(s: SparkSession, d: String): DataFrame = {
     val rows = MinhashSlots / MinhashBands
-    val kept = Policy.spread(doubled(s, d))
-      .withColumn("toks", tokens())
-      .withColumn("shingles", array_distinct(
-        expr("transform(sequence(1, greatest(size(toks) - 2, 1)), i -> concat_ws(' ', slice(toks, i, 3)))")))
-      .select(col("doc_id"), explode(col("shingles")).as("sng"))
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("sng"))))
-      .filter(col("df") <= lit(ShingleDfCap))
-      .withColumn("n_sh", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
-      .select("doc_id", "sng", "n_sh")
     // localCheckpoint: sigs feed the band join (both sides) and both
     // pair rejoins — without materialization the shingle explode and
     // the 16-slot md5 sweep would re-run for every consumer
-    val sigs = kept.groupBy(col("doc_id"), col("n_sh"))
-      .agg(array_sort(collect_list(col("sng"))).as("shs"))
+    val sigs = dfCapped(shingles(Policy.spread(doubled(s, d))))
+      .groupBy(col("doc_id"), col("n_sh"))
+      .agg(array_sort(collect_list(col("sh"))).as("shs"))
       .withColumn("sig", expr(
         s"""transform(sequence(0, ${MinhashSlots - 1}),
               k -> array_min(transform(shs,
@@ -1256,17 +1288,11 @@ object TextOps {
       s"""transform(sequence(0, ${MinhashBands - 1}),
             b -> concat_ws('|', slice(sig, b * $rows + 1, $rows)))""")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
-      .repartition(col("band"), col("band_key")).localCheckpoint()
-    val cand = banded.select(col("band"), col("band_key"), col("doc_id").as("a_id"))
-      .join(banded.select(col("band"), col("band_key"), col("doc_id").as("b_id")),
-        Seq("band", "band_key"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").dropDuplicates("a_id", "b_id")
     val a = sigs.select(col("doc_id").as("a_id"), col("sig").as("a_sig"),
       col("shs").as("a_shs"), col("n_sh").as("a_n"))
     val b = sigs.select(col("doc_id").as("b_id"), col("sig").as("b_sig"),
       col("shs").as("b_shs"), col("n_sh").as("b_n"))
-    cand.join(a, Seq("a_id")).join(b, Seq("b_id"))
+    bandPairs(banded).join(a, Seq("a_id")).join(b, Seq("b_id"))
       .withColumn("matches",
         expr("size(filter(zip_with(a_sig, b_sig, (x, y) -> x = y), v -> v))").cast("long"))
       .withColumn("common",
@@ -1412,6 +1438,15 @@ object TextOps {
       .orderBy("simhash")
   }
 
+  /** SimHash dedup: 64-bit frequency-weighted signature (Charikar) per
+    * document, then SIGNATURE-GROUP collapse — group by exact signature
+    * (keeper = min id), and count near-groups (Hamming ≤ 3) by
+    * band-joining only the DISTINCT signatures. Listing all near-dup
+    * doc pairs is inherently quadratic when a corpus clusters (every
+    * long doc here shares one topic distribution, so signatures
+    * concentrate); grouping first bounds every stage by the number of
+    * distinct signatures — the formulation that survives 100 TB.
+    * Oracled via XxOracleSql (exact hash-family replay). */
   private def qDedupSimhash(s: SparkSession, d: String): DataFrame = {
     val groups = sigGroups(simhashSigs(doubled(s, d)))
     nearCountsBySig(groups, nearSigPairs(groups))
@@ -2019,6 +2054,16 @@ object TextOps {
       .orderBy(col("exact_count").desc, col("token"))
   }
 
+  /** (doc_id, w1, w2): every adjacent token pair of each document with
+    * at least two tokens. [[docBigramsSql]] is the DuckDB twin. */
+  private def docBigrams(docs: DataFrame): DataFrame =
+    docs.withColumn("toks", tokens())
+      .filter(size(col("toks")) >= 2)
+      .select(col("doc_id"), explode(expr(
+        """transform(sequence(1, size(toks) - 1),
+             i -> struct(toks[i-1] AS w1, toks[i] AS w2))""")).as("b"))
+      .select(col("doc_id"), col("b.w1"), col("b.w2"))
+
   /** PMI collocation mining — the bigram-association table a tokenizer
     * or phrase-vocabulary builder reads: for adjacent token pairs,
     * pmi = ln(P(w1,w2) / (P(w1)·P(w2))) over the bigram stream's
@@ -2028,14 +2073,8 @@ object TextOps {
     * N. The ln goes through the DECIMAL(18,9) pin (q_doc_entropy's
     * technique) so ranking and values are engine-exact. */
   private def qCollocations(s: SparkSession, d: String): DataFrame = {
-    val bigrams = Tables.documents(s, d)
-      .withColumn("toks", tokens())
-      .filter(size(col("toks")) >= 2)
-      .select(explode(expr(
-        """transform(sequence(1, size(toks) - 1),
-             i -> struct(toks[i-1] AS w1, toks[i] AS w2))""")).as("b"))
-      .select(col("b.w1"), col("b.w2"))
-    val pair = bigrams.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
+    val pair = docBigrams(Tables.documents(s, d))
+      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
       .localCheckpoint() // feeds the w1/w2 marginals AND the final join
     val left = pair.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
     val right = pair.groupBy(col("w2")).agg(sum(col("c12")).as("c2"))
@@ -2065,18 +2104,12 @@ object TextOps {
     * partitioning (one shuffle pair), V and nothing else broadcasts.
     */
   private def qLmScore(s: SparkSession, d: String): DataFrame = {
-    val docBigrams = Tables.documents(s, d)
-      .withColumn("toks", tokens())
-      .filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        """transform(sequence(1, size(toks) - 1),
-             i -> struct(toks[i-1] AS w1, toks[i] AS w2))""")).as("b"))
-      .select(col("doc_id"), col("b.w1"), col("b.w2"))
-    val pair = docBigrams.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
+    val bigrams = docBigrams(Tables.documents(s, d))
+    val pair = bigrams.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
       .localCheckpoint()
     val left = pair.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
     val vocab = pair.agg(countDistinct(col("w2")).as("v"))
-    docBigrams
+    bigrams
       .join(pair, Seq("w1", "w2"))
       .join(left, Seq("w1"))
       .crossJoin(broadcast(vocab))
@@ -2110,20 +2143,14 @@ object TextOps {
     * model-sized diversity aggs, key-shuffled joins back to the doc
     * bigram stream, one scalar broadcast — no all-pairs anything. */
   private def qKneserNey(s: SparkSession, d: String): DataFrame = {
-    val docBigrams = Tables.documents(s, d)
-      .withColumn("toks", tokens())
-      .filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        """transform(sequence(1, size(toks) - 1),
-             i -> struct(toks[i-1] AS w1, toks[i] AS w2))""")).as("b"))
-      .select(col("doc_id"), col("b.w1"), col("b.w2"))
-    val pair = docBigrams.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
+    val bigrams = docBigrams(Tables.documents(s, d))
+    val pair = bigrams.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
       .localCheckpoint()
     val ctx = pair.groupBy(col("w1"))
       .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1f"))
     val pred = pair.groupBy(col("w2")).agg(count(lit(1)).as("n1p"))
     val types = pair.agg(count(lit(1)).as("t"))
-    docBigrams
+    bigrams
       .join(pair, Seq("w1", "w2"))
       .join(ctx, Seq("w1"))
       .join(pred, Seq("w2"))
@@ -3090,9 +3117,7 @@ object TextOps {
   private def qSourceOverlap(s: SparkSession, d: String): DataFrame = {
     val st = Tables.documents(s, d)
       .withColumn("toks", tokens())
-      .select(col("source"), explode(expr(
-        """array_distinct(transform(sequence(1, greatest(size(toks) - 2, 1)),
-             i -> concat_ws(' ', slice(toks, i, 3))))""")).as("sh"))
+      .select(col("source"), explode(array_distinct(ngrams("toks", 3))).as("sh"))
       .distinct()
     val sizes = st.groupBy("source").agg(count(lit(1)).as("n_sh"))
     val inter = st.select(col("source").as("src_a"), col("sh"))
@@ -3121,11 +3146,7 @@ object TextOps {
   // Scale shape: one shingle-keyed min-agg (map-side combine), one
   // join back, one per-doc agg — all linear, no pair joins.
   private def qNoveltyCurve(s: SparkSession, d: String): DataFrame = {
-    val sh = Tables.documents(s, d)
-      .withColumn("toks", tokens())
-      .select(col("doc_id"), explode(array_distinct(
-        expr("""transform(sequence(1, greatest(size(toks) - 2, 1)),
-                 i -> concat_ws(' ', slice(toks, i, 3)))"""))).as("sh"))
+    val sh = shingles(Tables.documents(s, d))
     val first = sh.groupBy("sh").agg(min(col("doc_id")).as("first_doc"))
     sh.join(first, Seq("sh"))
       .groupBy("doc_id")
@@ -3877,11 +3898,8 @@ object TextOps {
          |WHERE r.rk <= b.target
          |ORDER BY r.lang, r.rk""".stripMargin,
     "q_repetition" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |         list_transform(
-        |           range(1, greatest(len(string_split(text, ' ')) - 2, 1) + 1),
-        |           i -> array_to_string(string_split(text, ' ')[i:i+2], ' ')) AS tris
+      s"""WITH sh AS (
+        |  SELECT doc_id, $shingleListSql AS tris
         |  FROM documents)
         |SELECT doc_id,
         |       CAST(len(tris) AS BIGINT) AS n_tri,
@@ -4219,31 +4237,11 @@ object TextOps {
          |FROM f
          |ORDER BY doc_id""".stripMargin,
     "q_sim_histogram" ->
-      s"""WITH $doubledSql,
-         |sh AS (
-         |  SELECT doc_id,
-         |         list_distinct(list_transform(
-         |           range(1, greatest(len(string_split(text, ' ')) - 2, 1) + 1),
-         |           i -> array_to_string(string_split(text, ' ')[i:i+2], ' '))) AS shingles
-         |  FROM doubled
-         |), ex AS (
-         |  SELECT doc_id, unnest(shingles) AS s FROM sh
-         |), dfd AS (
-         |  SELECT doc_id, s, COUNT(*) OVER (PARTITION BY s) AS df FROM ex
-         |), kept AS (
-         |  SELECT doc_id, s, COUNT(*) OVER (PARTITION BY doc_id) AS n_sh
-         |  FROM dfd WHERE df <= $ShingleDfCap
-         |), cand AS (
-         |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-         |         CAST(COUNT(*) AS DOUBLE)
-         |           / CAST(a.n_sh + b.n_sh - COUNT(*) AS DOUBLE) AS jaccard
-         |  FROM kept a JOIN kept b ON a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY a.doc_id, b.doc_id, a.n_sh, b.n_sh
-         |), binned AS (
+      s"""WITH $ngramPairsSql, binned AS (
          |  SELECT least(CAST(floor(jaccard * 10) AS BIGINT), 9) AS bin,
          |         CAST(COUNT(*) AS BIGINT) AS n_pairs,
          |         MIN(jaccard) AS j_min, MAX(jaccard) AS j_max
-         |  FROM cand GROUP BY 1
+         |  FROM pairs GROUP BY 1
          |), tot AS (
          |  SELECT CAST(SUM(n_pairs) AS BIGINT) AS total FROM binned
          |)
@@ -4252,39 +4250,12 @@ object TextOps {
          |FROM binned, tot
          |ORDER BY bin""".stripMargin,
     "q_dedup_ngram" ->
-      s"""WITH $doubledSql,
-         |sh AS (
-         |  SELECT doc_id,
-         |         list_distinct(list_transform(
-         |           range(1, greatest(len(string_split(text, ' ')) - 2, 1) + 1),
-         |           i -> array_to_string(string_split(text, ' ')[i:i+2], ' '))) AS shingles
-         |  FROM doubled
-         |), ex AS (
-         |  SELECT doc_id, unnest(shingles) AS s FROM sh
-         |), dfd AS (
-         |  SELECT doc_id, s, COUNT(*) OVER (PARTITION BY s) AS df FROM ex
-         |), kept AS (
-         |  SELECT doc_id, s, COUNT(*) OVER (PARTITION BY doc_id) AS n_sh
-         |  FROM dfd WHERE df <= $ShingleDfCap
-         |)
-         |SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS common,
-         |       CAST(COUNT(*) AS DOUBLE)
-         |         / CAST(a.n_sh + b.n_sh - COUNT(*) AS DOUBLE) AS jaccard
-         |FROM kept a JOIN kept b ON a.s = b.s AND a.doc_id < b.doc_id
-         |GROUP BY a.doc_id, b.doc_id, a.n_sh, b.n_sh
-         |HAVING CAST(COUNT(*) AS DOUBLE) / CAST(a.n_sh + b.n_sh - COUNT(*) AS DOUBLE) >= 0.5
+      s"""WITH $ngramPairsSql
+         |SELECT a_id, b_id, common, jaccard FROM pairs
+         |WHERE jaccard >= 0.5
          |ORDER BY a_id, b_id""".stripMargin,
     "q_dedup_prefix" ->
-      s"""WITH $doubledSql,
-         |shl AS (
-         |  SELECT doc_id,
-         |         list_distinct(list_transform(
-         |           range(1, greatest(len(string_split(text, ' ')) - 2, 1) + 1),
-         |           i -> array_to_string(string_split(text, ' ')[i:i+2], ' '))) AS shingles
-         |  FROM doubled
-         |), ex AS (
-         |  SELECT doc_id, unnest(shingles) AS s FROM shl
-         |), dft AS (
+      s"""WITH $shinglesSql, dft AS (
          |  SELECT s, CAST(COUNT(*) AS BIGINT) AS df FROM ex GROUP BY s
          |), ord AS (
          |  SELECT e.doc_id, e.s,
@@ -5022,11 +4993,8 @@ object TextOps {
         |       h_lang + h_source - h_joint AS mi
         |FROM nn, hl, hs, hj""".stripMargin,
     "q_novelty_curve" ->
-      """WITH ex AS (
-        |  SELECT doc_id,
-        |         unnest(list_distinct(list_transform(
-        |           range(1, greatest(len(string_split(text, ' ')) - 2, 1) + 1),
-        |           i -> array_to_string(string_split(text, ' ')[i:i+2], ' ')))) AS sh
+      s"""WITH ex AS (
+        |  SELECT doc_id, unnest(list_distinct($shingleListSql)) AS sh
         |  FROM documents
         |), fo AS (
         |  SELECT sh, MIN(doc_id) AS first_doc FROM ex GROUP BY sh
@@ -5040,11 +5008,8 @@ object TextOps {
         |GROUP BY ex.doc_id
         |ORDER BY doc_id""".stripMargin,
     "q_source_overlap" ->
-      """WITH ex AS (
-        |  SELECT source,
-        |         unnest(list_distinct(list_transform(
-        |           range(1, greatest(len(string_split(text, ' ')) - 2, 1) + 1),
-        |           i -> array_to_string(string_split(text, ' ')[i:i+2], ' ')))) AS sh
+      s"""WITH ex AS (
+        |  SELECT source, unnest(list_distinct($shingleListSql)) AS sh
         |  FROM documents
         |), st AS (
         |  SELECT DISTINCT source, sh FROM ex
@@ -5141,15 +5106,8 @@ object TextOps {
          |GROUP BY doc_id
          |ORDER BY doc_id""".stripMargin,
     "q_kneser_ney" ->
-      """WITH db AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(t)), i ->
-        |           struct_pack(w1 := t[i], w2 := t[i+1]))) AS b
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents
-        |        WHERE len(string_split(text, ' ')) >= 2)
-        |), dbf AS (
-        |  SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM db
-        |), pair AS (
-        |  SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c12 FROM dbf GROUP BY w1, w2
+      s"""WITH $docBigramsSql, pair AS (
+        |  SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c12 FROM bigrams GROUP BY w1, w2
         |), ctx AS (
         |  SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1,
         |         CAST(COUNT(*) AS BIGINT) AS n1f
@@ -5165,7 +5123,7 @@ object TextOps {
         |           + ((0.75 * CAST(c.n1f AS DOUBLE) / CAST(c.c1 AS DOUBLE))
         |              * (CAST(r.n1p AS DOUBLE) / CAST(ty.t AS DOUBLE)))
         |         ) AS DECIMAL(18,9)) AS logp
-        |  FROM dbf d JOIN pair p USING (w1, w2) JOIN ctx c USING (w1)
+        |  FROM bigrams d JOIN pair p USING (w1, w2) JOIN ctx c USING (w1)
         |       JOIN pred r USING (w2) CROSS JOIN ty
         |)
         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
@@ -5175,15 +5133,8 @@ object TextOps {
         |GROUP BY doc_id
         |ORDER BY doc_id""".stripMargin,
     "q_lm_score" ->
-      """WITH db AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(t)), i ->
-        |           struct_pack(w1 := t[i], w2 := t[i+1]))) AS b
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents
-        |        WHERE len(string_split(text, ' ')) >= 2)
-        |), dbf AS (
-        |  SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM db
-        |), pair AS (
-        |  SELECT w1, w2, COUNT(*) AS c12 FROM dbf GROUP BY w1, w2
+      s"""WITH $docBigramsSql, pair AS (
+        |  SELECT w1, w2, COUNT(*) AS c12 FROM bigrams GROUP BY w1, w2
         |), l AS (
         |  SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM pair GROUP BY w1
         |), v AS (
@@ -5192,7 +5143,7 @@ object TextOps {
         |  SELECT d.doc_id,
         |         CAST(ln(CAST(p.c12 + 1 AS DOUBLE) / CAST(l.c1 + v.v AS DOUBLE))
         |           AS DECIMAL(18,9)) AS logp
-        |  FROM dbf d JOIN pair p USING (w1, w2) JOIN l USING (w1) CROSS JOIN v
+        |  FROM bigrams d JOIN pair p USING (w1, w2) JOIN l USING (w1) CROSS JOIN v
         |)
         |SELECT doc_id, COUNT(*) AS n_bigrams,
         |       CAST(SUM(logp) AS DOUBLE) AS sum_logp,
@@ -5202,15 +5153,8 @@ object TextOps {
         |GROUP BY doc_id
         |ORDER BY doc_id""".stripMargin,
     "q_collocations" ->
-      """WITH toks AS (
-        |  SELECT string_split(text, ' ') AS t FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 2
-        |), bi AS (
-        |  SELECT unnest(list_transform(range(1, len(t)), i ->
-        |           struct_pack(w1 := t[i], w2 := t[i+1]))) AS b
-        |  FROM toks
-        |), pair AS (
-        |  SELECT b.w1 AS w1, b.w2 AS w2, COUNT(*) AS c12 FROM bi GROUP BY b.w1, b.w2
+      s"""WITH $docBigramsSql, pair AS (
+        |  SELECT w1, w2, COUNT(*) AS c12 FROM bigrams GROUP BY w1, w2
         |), l AS (
         |  SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM pair GROUP BY w1
         |), r AS (
@@ -5230,49 +5174,15 @@ object TextOps {
         |ORDER BY rank
         |LIMIT 50""".stripMargin,
     "q_containment" ->
-      s"""WITH $doubledSql,
-         |sh AS (
-         |  SELECT doc_id,
-         |         list_distinct(list_transform(
-         |           range(1, greatest(len(string_split(text, ' ')) - 2, 1) + 1),
-         |           i -> array_to_string(string_split(text, ' ')[i:i+2], ' '))) AS shingles
-         |  FROM doubled
-         |), ex AS (
-         |  SELECT doc_id, unnest(shingles) AS s FROM sh
-         |), dfd AS (
-         |  SELECT doc_id, s, COUNT(*) OVER (PARTITION BY s) AS df FROM ex
-         |), kept AS (
-         |  SELECT doc_id, s, COUNT(*) OVER (PARTITION BY doc_id) AS n_sh
-         |  FROM dfd WHERE df <= $ShingleDfCap
-         |)
-         |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-         |       a.n_sh AS a_n, b.n_sh AS b_n, COUNT(*) AS common,
-         |       CAST(COUNT(*) AS DOUBLE) / CAST(least(a.n_sh, b.n_sh) AS DOUBLE) AS containment
-         |FROM kept a JOIN kept b ON a.s = b.s AND a.doc_id < b.doc_id
-         |GROUP BY a.doc_id, b.doc_id, a.n_sh, b.n_sh
-         |HAVING CAST(COUNT(*) AS DOUBLE) / CAST(least(a.n_sh, b.n_sh) AS DOUBLE) >= 0.6
+      s"""WITH $ngramPairsSql
+         |SELECT a_id, b_id, a_n, b_n, common,
+         |       CAST(common AS DOUBLE) / CAST(least(a_n, b_n) AS DOUBLE) AS containment
+         |FROM pairs
+         |WHERE CAST(common AS DOUBLE) / CAST(least(a_n, b_n) AS DOUBLE) >= 0.6
          |ORDER BY a_id, b_id""".stripMargin,
     "q_dedup_edit" ->
-      s"""WITH $doubledSql,
-         |sh AS (
-         |  SELECT doc_id,
-         |         list_distinct(list_transform(
-         |           range(1, greatest(len(string_split(text, ' ')) - 2, 1) + 1),
-         |           i -> array_to_string(string_split(text, ' ')[i:i+2], ' '))) AS shingles
-         |  FROM doubled
-         |), ex AS (
-         |  SELECT doc_id, unnest(shingles) AS s FROM sh
-         |), dfd AS (
-         |  SELECT doc_id, s, COUNT(*) OVER (PARTITION BY s) AS df FROM ex
-         |), kept AS (
-         |  SELECT doc_id, s, COUNT(*) OVER (PARTITION BY doc_id) AS n_sh
-         |  FROM dfd WHERE df <= $ShingleDfCap
-         |), cand AS (
-         |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS common,
-         |         a.n_sh AS a_n, b.n_sh AS b_n
-         |  FROM kept a JOIN kept b ON a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY a.doc_id, b.doc_id, a.n_sh, b.n_sh
-         |  HAVING CAST(COUNT(*) AS DOUBLE) / CAST(a.n_sh + b.n_sh - COUNT(*) AS DOUBLE) >= 0.5
+      s"""WITH $ngramPairsSql, cand AS (
+         |  SELECT a_id, b_id FROM pairs WHERE jaccard >= 0.5
          |), lv AS (
          |  SELECT c.a_id, c.b_id,
          |         CAST(levenshtein(substring(da.text, 1, $EditPrefix),
@@ -5438,21 +5348,7 @@ object TextOps {
          |ORDER BY eval_id""".stripMargin,
     "q_minhash_estimate" -> {
       val rows = MinhashSlots / MinhashBands
-      s"""WITH $doubledSql,
-         |sh AS (
-         |  SELECT doc_id,
-         |         list_distinct(list_transform(
-         |           range(1, greatest(len(string_split(text, ' ')) - 2, 1) + 1),
-         |           i -> array_to_string(string_split(text, ' ')[i:i+2], ' '))) AS shingles
-         |  FROM doubled
-         |), ex AS (
-         |  SELECT doc_id, unnest(shingles) AS s FROM sh
-         |), dfd AS (
-         |  SELECT doc_id, s, COUNT(*) OVER (PARTITION BY s) AS df FROM ex
-         |), kept AS (
-         |  SELECT doc_id, s, COUNT(*) OVER (PARTITION BY doc_id) AS n_sh
-         |  FROM dfd WHERE df <= $ShingleDfCap
-         |), sigs AS (
+      s"""WITH $keptSql, sigs AS (
          |  SELECT doc_id, n_sh, list(s ORDER BY s) AS shs FROM kept GROUP BY doc_id, n_sh
          |), sigs2 AS (
          |  SELECT doc_id, n_sh, shs,

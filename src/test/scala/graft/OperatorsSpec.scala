@@ -103,6 +103,36 @@ class OperatorsSpec extends SparkSpec {
     assert(got == want)
   }
 
+  test("ngrams equals a plain-Scala reference on short and long documents") {
+    // a document shorter than n tokens yields ONE short n-gram; an
+    // empty token from a doubled space is a token like any other
+    import graft.operators.{Sampling, TextOps}
+    def reference(text: String, n: Int): Seq[String] = {
+      val toks = text.split(" ", -1).toSeq
+      (0 until math.max(toks.size - (n - 1), 1)).map(i => toks.slice(i, i + n).mkString(" "))
+    }
+    val words = (1 to 6).map(i => s"w$i")
+    for (n <- Seq(2, 3, Sampling.ChunkToks)) {
+      val texts = Seq("", "w1", words.take(n - 1).mkString(" "),
+        words.take(n).mkString(" "), words.mkString(" "), "w1  w2 w3  w4")
+      val got = texts.toDF("text")
+        .withColumn("toks", split($"text", " "))
+        .select($"text", TextOps.ngrams("toks", n))
+        .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+      texts.foreach(t => assert(got(t) == reference(t, n), s"n=$n text='$t'"))
+    }
+  }
+
+  test("q_sim_histogram's bins count ngramCandidates; bins 5-9 count q_dedup_ngram") {
+    // the histogram and the dedup query read the same capped pair join;
+    // Jaccards are small-integer ratios, so bin >= 5 iff jaccard >= 0.5
+    import graft.operators.TextOps
+    val bins = q("q_sim_histogram").collect()
+      .map(r => r.getAs[Long]("bin") -> r.getAs[Long]("n_pairs")).toMap
+    assert(bins.values.sum == TextOps.ngramCandidates(TextOps.doubled(spark, Sf0001)).count())
+    assert(bins.filter(_._1 >= 5L).values.sum == q("q_dedup_ngram").count())
+  }
+
   test("scan spread floors an under-split frame at default parallelism and leaves a split one alone") {
     import graft.operators.Policy
     val want = spark.sparkContext.defaultParallelism

@@ -35,13 +35,13 @@ class ScalingSpec extends SparkSpec {
   // exact_quantiles' two-level prefix sum) — and the FULL probe stays
   // runnable as `graft.Scaling`, whose committed SCALING.json carries
   // the all-path exponents.
-  // (q_dedup_minhash and q_exact_quantiles were in the first r16 cut;
-  // dropped for wall margin — the banded-join class stays triple-
-  // covered by dedup_prefix/embed_dedup/winnow_pairs, and the ScaleRank
-  // two-level prefix-sum family's exponent is carried by the committed
-  // SCALING.json from graft.Scaling.)
+  // (q_exact_quantiles was in the first r16 cut and was dropped for
+  // wall margin; the ScaleRank two-level prefix-sum family's exponent
+  // is carried by the committed SCALING.json from graft.Scaling.
+  // q_dedup_minhash, dropped with it, is back: it gates the banded
+  // self-join that q_minhash_estimate shares.)
   private val GatePaths: Set[String] = Set(
-    "q_dedup_prefix", "q_embed_dedup", "q_winnow_pairs",
+    "q_dedup_prefix", "q_dedup_minhash", "q_embed_dedup", "q_winnow_pairs",
     "q_ann_recall", "q_adamic_adar", "q_kcore", "q_modularity",
     "q_closeness", "q_kneser_ney", "q_simhash_closure")
 
